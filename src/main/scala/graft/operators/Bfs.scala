@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Single-source BFS as iterative DataFrame rounds.
   *
@@ -33,7 +32,7 @@ import org.apache.spark.storage.StorageLevel
   *     dist=null via [[withUnreachable]].
   *
   * Scale notes (100 TB / 1000 executors):
-  *   - Edges are hash-partitioned by `src` ONCE up front and persisted;
+  *   - Edges are hash-partitioned by `src` ONCE up front and checkpointed;
   *     every round's expansion join reuses that partitioning, so only the
   *     (small) frontier moves when the join shuffles — and per-round work
   *     runs at full parallelism rather than the raw scan's partition count.
@@ -41,63 +40,41 @@ import org.apache.spark.storage.StorageLevel
   *     is a broadcast-hash join — the edge table never shuffles at all.
   *     For web-scale frontiers the join degrades gracefully to
   *     shuffle-hash/sort-merge on the co-partitioned edge table.
-  *   - Lineage is truncated with `localCheckpoint` every
-  *     `checkpointInterval` rounds — without this, plan nesting makes
-  *     round N re-derive rounds 1..N-1 and planning time blows up
-  *     (Catalyst has no fixpoint operator; the loop lives on the driver,
-  *     one action per round, same barrier structure as the reference's
-  *     `ray.get`).
-  *   - The per-round action is the `count()` on the new frontier, which
-  *     doubles as the convergence test — exactly one job per round.
+  *   - Every round's state is a lazy `localCheckpoint` — without it,
+  *     plan nesting makes round N re-derive rounds 1..N-1 and planning
+  *     time blows up (Catalyst has no fixpoint operator; the loop lives
+  *     on the driver in [[Bsp]], one barrier per round, the same
+  *     structure as the reference's `ray.get`).
+  *   - The per-round probe is the `count()` on the new frontier: it
+  *     materializes the checkpoint and doubles as the convergence
+  *     test. A round costs two jobs — that count, plus the broadcast
+  *     build of a (gated-small) frontier; `JobCountSpec` pins it.
   */
 object Bfs {
 
   /** @param maxIterations hard stop (defense against adversarial inputs;
     *                      BFS rounds = eccentricity(source) + 1)
-    * @param checkpointInterval truncate lineage every k rounds. Default 1:
-    *        measured on sf0.01, plan nesting makes round k's driver-side
-    *        optimization cost grow super-linearly (round 7 took 5s with
-    *        only persist), while an eager per-round localCheckpoint keeps
-    *        every round flat (~0.4s) — the materialization it forces is
-    *        work the convergence count does anyway
     * @param broadcastFrontierRows frontier row-count below which the
     *        expansion join broadcasts the frontier
     * @param withPaths also compute the lexicographically-smallest
     *        shortest path (costs an array column through every shuffle;
-    *        off for distance-only analytics at scale)
-    * @param keepAqe leave AQE on inside the round loop (see
-    *        [[GraphOps.withLoopAqeDisabled]] — off by default: each
-    *        round is a fixed-shape job and AQE's per-stage scheduling
-    *        costs ~20-30% of loop wall-clock) */
+    *        off for distance-only analytics at scale) */
   final case class Config(
       maxIterations: Int = 200,
-      checkpointInterval: Int = 1,
       broadcastFrontierRows: Long = 4000000L,
-      withPaths: Boolean = false,
-      keepAqe: Boolean = false)
+      withPaths: Boolean = false)
 
   /** BFS over a DIRECTED edge table (columns `src`, `dst`). For an
     * undirected graph pass `GraphOps.symmetrize(edges)`.
     *
-    * Each round runs exactly ONE shuffle and ONE job: the frontier
-    * (broadcast while small) expands over the co-partitioned edge
-    * table, the candidates are unioned with the running state and
-    * min-merged per id (`state ∪ candidates → groupBy(id).min` — the
-    * reference's whole reduce semilattice as one partial-aggregated
-    * exchange), and the next frontier falls out of the cached state as
+    * Each round runs exactly ONE shuffle: the frontier (broadcast
+    * while small) expands over the co-partitioned edge table, the
+    * candidates are unioned with the running state and min-merged per
+    * id (`state ∪ candidates → groupBy(id).min` — the reference's
+    * whole reduce semilattice as one partial-aggregated exchange), and
+    * the next frontier falls out of the checkpointed state as
     * `dist == round` — no separate anti-join/visited bookkeeping, which
     * would cost a second shuffle per round.
-    *
-    * Cache lifetime: when the final round lands on a checkpoint
-    * interval the result is a flat handle and every loop-internal
-    * block (including the partitioned edge table) is released before
-    * returning. When it lands on a persist interval the result still
-    * RECOMPUTES through the edge cache on block loss, so those blocks
-    * are deliberately left alive — long-lived callers issuing many
-    * runs should drop them after materializing the result (e.g.
-    * `spark.sparkContext.getPersistentRDDs.values.foreach(
-    * _.unpersist())`, the harness sweep) or size `checkpointInterval`
-    * to divide the graph's eccentricity so the last round checkpoints.
     *
     * @return DataFrame(id LONG, dist LONG [, path ARRAY<LONG>]) — reached
     *         vertices only; join [[withUnreachable]] for the full set. */
@@ -107,124 +84,87 @@ object Bfs {
   /** Multi-source BFS: distance (and path) to the NEAREST of the given
     * sources — same semilattice, multi-seed init (a capability
     * extension; the reference hardcodes source 0,
-    * `BFS_map_reduce.py:109`). */
+    * `BFS_map_reduce.py:109`). AQE is off inside the loop: each round
+    * is a fixed-shape job and AQE's per-stage scheduling costs ~20-30%
+    * of loop wall-clock (see [[GraphOps.withLoopAqeDisabled]]). */
   def runMulti(edges: DataFrame, sources: Seq[Long],
                cfg: Config = Config()): DataFrame = {
     require(sources.nonEmpty, "at least one source vertex required")
     val spark = edges.sparkSession
-    GraphOps.withLoopAqeDisabled(spark, cfg.keepAqe) {
-      runMultiLoop(edges, sources, cfg)
-    }
-  }
-
-  private def runMultiLoop(edges: DataFrame, sources: Seq[Long],
-                           cfg: Config): DataFrame = {
-    val spark = edges.sparkSession
     import spark.implicits._
+    Bsp.loop("bfs", spark, aqeOff = true) { bsp =>
+      // Partition the (big) edge table by src once, upfront. Measured
+      // tradeoff: deferring this exchange until a frontier outgrows the
+      // broadcast threshold LOOKS cheaper, but a compact parquet scan
+      // yields very few partitions and every round's join then runs at
+      // that parallelism — the one-time exchange both co-locates the
+      // join key for non-broadcast rounds AND spreads the per-round work
+      // across the cluster.
+      // LOCAL CHECKPOINT, not persist (r17, measured loop-wide): the
+      // columnar cache pays a decode on EVERY round's read of this
+      // table; checkpoint row blocks skip both codecs. Lazy — the first
+      // round's job materializes it, so the job count is unchanged.
+      val e = bsp.hold(edges.select($"src", $"dst")
+        .repartition($"src")
+        .localCheckpoint(false))
 
-    // Partition the (big) edge table by src once, upfront. Measured
-    // tradeoff: deferring this exchange until a frontier outgrows the
-    // broadcast threshold LOOKS cheaper, but a compact parquet scan
-    // yields very few partitions and every round's join then runs at
-    // that parallelism — the one-time exchange both co-locates the
-    // join key for non-broadcast rounds AND spreads the per-round work
-    // across the cluster.
-    // LOCAL CHECKPOINT, not persist (r17, measured loop-wide): the
-    // columnar cache pays a decode on EVERY round's read of this
-    // table; checkpoint row blocks skip both codecs. Lazy — the first
-    // round's job materializes it, so the job count is unchanged.
-    val e = edges.select($"src", $"dst")
-      .repartition($"src")
-      .localCheckpoint(false)
-
-    val initCols =
-      if (cfg.withPaths)
-        Seq($"id", lit(0L).as("dist"), array($"id").as("path"))
-      else Seq($"id", lit(0L).as("dist"))
-
-    var state = sources.distinct.toDF("id").select(initCols: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var frontier = state
-    // actual seed count — a large multi-source seed set must not slip
-    // under the broadcast guard on round 1
-    var frontierRows = sources.distinct.size.toLong
-    var iter = 0
-    val toUnpersist = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-    while (frontierRows > 0 && iter < cfg.maxIterations) {
-      iter += 1
-      val tRound = System.nanoTime()
-      // Expansion (reference map phase, `BFS_map_reduce.py:25-42`):
-      // emit (dst, f.dist+1[, path :+ dst]) per frontier-adjacent edge.
-      // `f.dist + 1` (== the round number for every frontier row, which
-      // is exactly the dist==round-1 slice) rather than `lit(round)`:
-      // a literal that changes every round makes each round's generated
-      // code unique — a whole-stage-codegen recompilation per round —
-      // while the column form keeps the plan byte-identical across
-      // rounds so Janino's cache hits (measured ~20% of loop time).
-      // Alias both sides: the frontier's lineage contains the edge
-      // table, so unqualified refs would be ambiguous.
-      val f0 =
-        if (frontierRows <= cfg.broadcastFrontierRows) broadcast(frontier)
-        else frontier
-      val f = f0.as("f")
-      val ea = e.as("e")
-      val candidates =
+      val initCols =
         if (cfg.withPaths)
-          f.join(ea, col("f.id") === col("e.src"))
-            .select(col("e.dst").as("id"), (col("f.dist") + 1L).as("dist"),
-                    concat(col("f.path"), array(col("e.dst"))).as("path"))
-        else
-          f.join(ea, col("f.id") === col("e.src"))
-            .select(col("e.dst").as("id"), (col("f.dist") + 1L).as("dist"))
+          Seq($"id", lit(0L).as("dist"), array($"id").as("path"))
+        else Seq($"id", lit(0L).as("dist"))
+      // lazy: round 1's jobs materialize it
+      val init = sources.distinct.toDF("id").select(initCols: _*)
+        .localCheckpoint(false)
+      var frontier = init
+      // actual seed count — a large multi-source seed set must not slip
+      // under the broadcast guard on round 1
+      var frontierRows = sources.distinct.size.toLong
 
-      // Merge (reference reduce, `BFS_map_reduce.py:50-56`): per id keep
-      // the min (dist, path) — struct-min = argmin with deterministic
-      // lexicographic tie-break (reference hazards H2/H6 impossible by
-      // construction). Previously-settled vertices win automatically
-      // (their dist < round), so no anti-join is needed.
-      var newState =
+      bsp.rounds(init, cfg.maxIterations) { (state, _) =>
+        // Expansion (reference map phase, `BFS_map_reduce.py:25-42`):
+        // emit (dst, f.dist+1[, path :+ dst]) per frontier-adjacent edge.
+        // `f.dist + 1` (== the round number for every frontier row, which
+        // is exactly the dist==round-1 slice) rather than `lit(round)`:
+        // a literal that changes every round makes each round's generated
+        // code unique — a whole-stage-codegen recompilation per round —
+        // while the column form keeps the plan byte-identical across
+        // rounds so Janino's cache hits (measured ~20% of loop time).
+        // Alias both sides: the frontier's lineage contains the edge
+        // table, so unqualified refs would be ambiguous.
+        val f0 =
+          if (frontierRows <= cfg.broadcastFrontierRows) broadcast(frontier)
+          else frontier
+        val f = f0.as("f")
+        val ea = e.as("e")
+        val candidates =
+          if (cfg.withPaths)
+            f.join(ea, col("f.id") === col("e.src"))
+              .select(col("e.dst").as("id"), (col("f.dist") + 1L).as("dist"),
+                      concat(col("f.path"), array(col("e.dst"))).as("path"))
+          else
+            f.join(ea, col("f.id") === col("e.src"))
+              .select(col("e.dst").as("id"), (col("f.dist") + 1L).as("dist"))
+
+        // Merge (reference reduce, `BFS_map_reduce.py:50-56`): per id keep
+        // the min (dist, path) — struct-min = argmin with deterministic
+        // lexicographic tie-break (reference hazards H2/H6 impossible by
+        // construction). Previously-settled vertices win automatically
+        // (their dist < round), so no anti-join is needed.
         if (cfg.withPaths)
           state.union(candidates).groupBy($"id")
             .agg(min(struct($"dist", $"path")).as("m"))
             .select($"id", $"m.dist".as("dist"), $"m.path".as("path"))
         else
           state.union(candidates).groupBy($"id").agg(min($"dist").as("dist"))
-      // LAZY checkpoint: the frontier count below materializes the
-      // blocks in the SAME job (localCheckpoint persists-at-mark and
-      // truncates lineage at that job's end) — the eager form paid a
-      // second cached-scan job per round for nothing (r17, the q_msf
-      // fuse applied loop-wide)
-      newState =
-        if (iter % cfg.checkpointInterval == 0) newState.localCheckpoint(false)
-        else newState.persist(StorageLevel.MEMORY_AND_DISK)
-
-      // Next frontier = vertices first reached this round; counting it
-      // is the one action per round and doubles as the convergence test.
-      frontier = newState.filter($"dist" === iter)
-      frontierRows = frontier.count()
-
-      // One stderr line per BSP round. The loop's per-round fixed cost
-      // (job scheduling + checkpoint materialization) is invisible in a
-      // whole-query timing; when a bench host reports the loop 4x slower
-      // with byte-identical code, these lines say whether every round
-      // inflated uniformly (machine) or one round dominates (plan/skew).
-      System.err.println(
-        f"[bfs] round $iter frontier=$frontierRows " +
-          f"${(System.nanoTime() - tRound) / 1e9}%.2fs")
-
-      toUnpersist += state
-      state = newState
+      } { (next, round) =>
+        // Next frontier = vertices first reached this round; counting it
+        // materializes the round's checkpoint in the same job and
+        // doubles as the convergence test.
+        frontier = next.filter($"dist" === round)
+        frontierRows = frontier.count()
+        Bsp.Probe(frontierRows == 0, s"frontier=$frontierRows")
+      }
     }
-    toUnpersist.foreach(_.unpersist(false))
-    // e's blocks are freed only when the returned state's own lineage
-    // is truncated (last round landed on a checkpoint interval). A
-    // persist()-round result still RECOMPUTES through e on block loss
-    // — freeing e would turn a recoverable eviction into a hard
-    // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND; leave e to the harness
-    // getPersistentRDDs sweep instead (r17 ADVICE).
-    if (GraphOps.isFlatCheckpoint(state)) GraphOps.releaseCheckpointedFrame(e)
-    state
   }
 
   /** Full vertex report in the reference's output shape: unreachable

@@ -37,15 +37,7 @@ object Dag {
     *        diameter-cap contract
     * @return DataFrame(id LONG, layer LONG) over src ∪ dst, layer =
     *         longest directed path length ending at id */
-  def longestPathLayers(edges: DataFrame, maxRounds: Int = 64,
-                        keepAqe: Boolean = true): DataFrame = {
-    val spark = edges.sparkSession
-    GraphOps.withLoopAqeDisabled(spark, keepAqe) {
-      runLayers(edges, maxRounds)
-    }
-  }
-
-  private def runLayers(edges: DataFrame, maxRounds: Int): DataFrame = {
+  def longestPathLayers(edges: DataFrame, maxRounds: Int = 64): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select($"src", $"dst")

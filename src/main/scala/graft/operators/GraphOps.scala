@@ -26,11 +26,9 @@ object GraphOps {
     * storage, not CacheManager entries; outside a harness
     * getPersistentRDDs sweep they otherwise wait for the
     * ContextCleaner). ONLY safe when nothing can recompute through the
-    * frame again — i.e. its successor is itself eagerly checkpointed
-    * (lineage truncated). A loop that PERSISTS some rounds must keep
-    * its ContextCleaner discipline instead: the final frame's lineage
-    * reaches back to the last checkpoint, and releasing that
-    * checkpoint's blocks would make a later eviction unrecoverable.
+    * frame again — i.e. its successor is itself a materialized
+    * checkpoint (lineage truncated). [[Bsp]] applies this rule for
+    * every iterative loop.
     *
     * CONTRACT (r18, hardened from a comment into a throw): the frame
     * MUST be a flat checkpoint HANDLE — its analyzed plan exactly one
@@ -58,8 +56,7 @@ object GraphOps {
 
   /** True iff the frame is a flat checkpoint handle (analyzed plan is a
     * single `LogicalRDD` leaf) — the only shape
-    * [[releaseCheckpointedFrame]] accepts. Loops whose round frames
-    * alternate persist/checkpoint use this to route release. */
+    * [[releaseCheckpointedFrame]] accepts. */
   private[graft] def isFlatCheckpoint(df: DataFrame): Boolean =
     df.queryExecution.analyzed
       .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
@@ -303,14 +300,17 @@ object GraphOps {
     * session's setting afterwards.
     *
     * Why: AQE plans each shuffle as a separate query stage with a
-    * scheduling round-trip between stages. For the BSP loops here
-    * ([[Bfs]], [[ConnectedComponents]], [[PageRank]]) every round is a
-    * small, fixed-shape job over an already-partitioned cached edge
-    * table — there is nothing for AQE to adapt (the one skew-prone
+    * scheduling round-trip between stages. For the fixed-shape BSP
+    * loops ([[Bfs]], [[Sssp]], [[ConnectedComponents.run]]) every
+    * round is a small job over an already-partitioned checkpointed
+    * edge table — there is nothing for AQE to adapt (the one skew-prone
     * exchange was handled up front), and the per-stage overhead is paid
     * once per ROUND, measured ~20-30% of total BFS wall-clock at sf0.1.
-    * Callers that want AQE back inside the loop (e.g. genuinely skewed
-    * non-broadcast frontiers) pass keepAqe = true.
+    * Loops whose frames shrink round over round ([[KCore]],
+    * [[PageRank]], [[LabelPropagation]], star contraction) keep AQE on
+    * instead: its coalescing of near-empty late-round partitions is
+    * worth more there. Each loop's policy is a measured constant at its
+    * [[Bsp.loop]] call.
     *
     * Concurrency contract: the flip is SESSION-scoped (AQE is a
     * session conf read at planning), so UNRELATED queries planned on
@@ -321,29 +321,26 @@ object GraphOps {
     * first entry saves the caller's setting, the last exit restores
     * it — so nested/concurrent loops can't corrupt the restore value. */
   private[operators] def withLoopAqeDisabled[T](
-      spark: org.apache.spark.sql.SparkSession, keepAqe: Boolean)(f: => T): T = {
-    if (keepAqe) f
-    else {
-      val key = "spark.sql.adaptive.enabled"
-      AqeFlip.synchronized {
-        val st = AqeFlip.states.getOrElseUpdate(spark, new AqeFlip.State)
-        if (st.depth == 0) {
-          st.saved = spark.conf.getOption(key)
-          spark.conf.set(key, "false")
-        }
-        st.depth += 1
+      spark: org.apache.spark.sql.SparkSession)(f: => T): T = {
+    val key = "spark.sql.adaptive.enabled"
+    AqeFlip.synchronized {
+      val st = AqeFlip.states.getOrElseUpdate(spark, new AqeFlip.State)
+      if (st.depth == 0) {
+        st.saved = spark.conf.getOption(key)
+        spark.conf.set(key, "false")
       }
-      try f
-      finally AqeFlip.synchronized {
-        val st = AqeFlip.states(spark)
-        st.depth -= 1
-        if (st.depth == 0) {
-          st.saved match {
-            case Some(v) => spark.conf.set(key, v)
-            case None => spark.conf.unset(key)
-          }
-          AqeFlip.states.remove(spark)
+      st.depth += 1
+    }
+    try f
+    finally AqeFlip.synchronized {
+      val st = AqeFlip.states(spark)
+      st.depth -= 1
+      if (st.depth == 0) {
+        st.saved match {
+          case Some(v) => spark.conf.set(key, v)
+          case None => spark.conf.unset(key)
         }
+        AqeFlip.states.remove(spark)
       }
     }
   }

@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * lineage, so late rounds cost proportionally less. No driver-side
   * state beyond the convergence counter.
   *
-  * AQE stays ON by default in both faces (r17, measured — the
+  * AQE stays ON in both faces (r17, measured — the
   * [[SpanningForest.boruvka]] finding applied here): the surviving
   * edge set SHRINKS monotonically, so at the session's scan-sized
   * shuffle.partitions every late-round exchange writes a full set of
@@ -65,22 +65,16 @@ object KCore {
     * @param edges SYMMETRIZED edge table (`src`, `dst`)
     * @return DataFrame(id LONG, deg LONG): surviving vertices with
     *         their degree INSIDE the surviving subgraph. */
-  def peelBounded(edges: DataFrame, k: Int, rounds: Int,
-                  keepAqe: Boolean = true): DataFrame = {
+  def peelBounded(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k > 0 && rounds > 0, s"need k>0, rounds>0; got k=$k rounds=$rounds")
-    GraphOps.withLoopAqeDisabled(edges.sparkSession, keepAqe) {
-      runPeel(edges, k, maxRounds = rounds, toConvergence = false)
-    }
+    runPeel(edges, k, maxRounds = rounds, toConvergence = false)
   }
 
   /** Peel to the fixed point: the true k-core. `maxRounds` bounds the
     * loop (the cascade depth is ≤ |V| but tiny in practice). */
-  def peel(edges: DataFrame, k: Int, maxRounds: Int = 100,
-           keepAqe: Boolean = true): DataFrame = {
+  def peel(edges: DataFrame, k: Int, maxRounds: Int = 100): DataFrame = {
     require(k > 0 && maxRounds > 0)
-    GraphOps.withLoopAqeDisabled(edges.sparkSession, keepAqe) {
-      runPeel(edges, k, maxRounds, toConvergence = true)
-    }
+    runPeel(edges, k, maxRounds, toConvergence = true)
   }
 
   /** One peel round: keep edges whose BOTH endpoints have degree ≥ k
@@ -117,61 +111,43 @@ object KCore {
                       toConvergence: Boolean): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-
-    // NOTE (r21, measured negative — don't retry without new evidence):
-    // the AQE-staging partitioning fix shipped for PageRank/Louvain
-    // (plan the repartition+checkpoint AQE-off so the rounds reuse
-    // HashPartitioning(src) instead of re-exchanging) was tried here —
-    // the executed plans DO show 62 staged-scan re-exchanges under AQE
-    // and the fix removes them (shuffle 191 → 132 MB, jobs 77 → 27) —
-    // but warm wall/CPU got decisively WORSE (IsoBench ×4:
-    // q_kcore_converged 6.5-7.0 s @ 25-27 CPU-s → 7.8-10 @ 127-231;
-    // q_kcore 2.3 @ 9 → 3.1 @ 47): lazy checkpoints fix their whole
-    // round plan at call time, so AQE-off staging also runs every
-    // shrinking peel round at full shuffle.partitions — the exact
-    // tiny-task storm the r17 AQE-on doctrine cured. For KCore the
-    // coalescing is worth more than the partitioning. At cluster scale
-    // re-evaluate with a stats-preserving staging that keeps AQE in
-    // the rounds.
-    var e = edges.select($"src", $"dst")
-      .repartition($"src")
-      .localCheckpoint(true)
-    var lastEdges = -1L
-
-    var round = 0
-    var done = false
-    while (round < maxRounds && !done) {
-      round += 1
-      val tRound = System.nanoTime()
-      // lazy: the convergence count materializes the checkpoint in the
-      // same job (the Bfs round fuse)
-      val next = peelRound(e, k).localCheckpoint(false)
-      // Convergence probe: the EDGE count of the eagerly checkpointed
-      // survivor set — no exchange (vs r15's distinct().count() vertex
-      // probe, one full shuffle of the survivor edges per round).
-      // Equivalent fixpoint test: a peel round removes an edge iff it
-      // removes a vertex from the keep set (an edge dies only when an
-      // endpoint dies; a dead vertex kills all its incident edges), so
-      // the edge set is unchanged exactly when the vertex set is —
-      // same stop round, same result. In bounded mode the count buys
-      // the same per-round attribution line the other iterative ops
-      // emit (a bench host that inflates the query reads round-by-round).
-      val ne = next.count()
-      if (toConvergence) {
-        if (ne == lastEdges) done = true
+    Bsp.loop("kcore", spark, aqeOff = false) { bsp =>
+      // NOTE (r21, measured negative — don't retry without new evidence):
+      // the AQE-staging partitioning fix shipped for PageRank/Louvain
+      // (plan the repartition+checkpoint AQE-off so the rounds reuse
+      // HashPartitioning(src) instead of re-exchanging) was tried here —
+      // the executed plans DO show 62 staged-scan re-exchanges under AQE
+      // and the fix removes them (shuffle 191 → 132 MB, jobs 77 → 27) —
+      // but warm wall/CPU got decisively WORSE (IsoBench ×4:
+      // q_kcore_converged 6.5-7.0 s @ 25-27 CPU-s → 7.8-10 @ 127-231;
+      // q_kcore 2.3 @ 9 → 3.1 @ 47): lazy checkpoints fix their whole
+      // round plan at call time, so AQE-off staging also runs every
+      // shrinking peel round at full shuffle.partitions — the exact
+      // tiny-task storm the r17 AQE-on doctrine cured. For KCore the
+      // coalescing is worth more than the partitioning. At cluster scale
+      // re-evaluate with a stats-preserving staging that keeps AQE in
+      // the rounds.
+      val init = edges.select($"src", $"dst")
+        .repartition($"src")
+        .localCheckpoint(true)
+      var lastEdges = -1L
+      bsp.rounds(init, maxRounds)((e, _) => peelRound(e, k)) { (next, _) =>
+        // Convergence probe: the EDGE count of the checkpointed survivor
+        // set — no exchange (vs r15's distinct().count() vertex probe,
+        // one full shuffle of the survivor edges per round), and it
+        // materializes the round's lazy checkpoint in the same job.
+        // Equivalent fixpoint test: a peel round removes an edge iff it
+        // removes a vertex from the keep set (an edge dies only when an
+        // endpoint dies; a dead vertex kills all its incident edges), so
+        // the edge set is unchanged exactly when the vertex set is —
+        // same stop round, same result. In bounded mode the count buys
+        // the same per-round attribution line the other iterative ops
+        // emit (a bench host that inflates the query reads round-by-round).
+        val ne = next.count()
+        val done = toConvergence && ne == lastEdges
         lastEdges = ne
-      }
-      // Release the superseded round frame: next is already
-      // materialized (eager checkpoint), so the previous round's
-      // blocks are dead weight — r15's leak kept every round's edge
-      // snapshot in storage memory for the whole query, the
-      // suite-pressure sensitivity the r15 driver bench surfaced
-      // (every other iterative loop already released; KCore didn't).
-      GraphOps.releaseCheckpointedFrame(e)
-      System.err.println(f"[kcore] round $round edges=$ne " +
-        f"${(System.nanoTime() - tRound) / 1e9}%.2fs")
-      e = next
+        Bsp.Probe(done, s"edges=$ne")
+      }.groupBy($"src".as("id")).agg(count(lit(1)).as("deg"))
     }
-    e.groupBy($"src".as("id")).agg(count(lit(1)).as("deg"))
   }
 }

@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   *
   * Beyond-reference capability on the engine's iterative BSP core
   * (same round structure as [[Bfs]]/[[ConnectedComponents]]/
-  * [[PageRank]]: cached pre-partitioned edge table, eager
-  * localCheckpoint per round for flat lineage, AQE off inside the
-  * loop so every round reuses one plan).
+  * [[PageRank]]: checkpointed pre-partitioned edge table, eager
+  * localCheckpoint per round for flat lineage; AQE stays on, see the
+  * staging note in [[run]]).
   *
   * Determinism (the property that makes the query hash-exact against
   * a SQL oracle): ties on the neighbor-label frequency are broken by
@@ -45,10 +45,25 @@ object LabelPropagation {
     * @return DataFrame(id LONG, label LONG): the community label of
     *         every vertex after `rounds` updates (labels start as the
     *         vertex's own id). */
-  def run(edges: DataFrame, rounds: Int, keepAqe: Boolean = true): DataFrame = {
+  def run(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds > 0, s"rounds must be positive, got $rounds")
-    GraphOps.withLoopAqeDisabled(edges.sparkSession, keepAqe) {
-      runLoop(edges, rounds)
+    val spark = edges.sparkSession
+    import spark.implicits._
+    Bsp.loop("labelprop", spark, aqeOff = false) { bsp =>
+      // NOTE (r21, measured negative — the KCore verdict applies here
+      // too): AQE-off staging removes this table's per-round
+      // re-exchanges (shuffle 72 → 48 MB) but costs warm wall/CPU
+      // (IsoBench ×4: 2.0-2.3 s @ 12-17 CPU-s → 2.2-2.5 @ 23-26) — the
+      // staged exchange materializes un-coalesced at full
+      // shuffle.partitions and four fixed rounds of tiny tasks outweigh
+      // the removed exchange at bench scale. See KCore.runPeel's note.
+      val e = bsp.hold(edges.select($"src", $"dst")
+        .repartition($"src")
+        .localCheckpoint(true))
+      val init = GraphOps.vertices(e)
+        .select($"id", $"id".as("label"))
+        .localCheckpoint(true)
+      bsp.fixedRounds(init, rounds)((state, _) => lpRound(e, state))
     }
   }
 
@@ -76,43 +91,6 @@ object LabelPropagation {
       .groupBy($"id")
       .agg(min(struct((-$"c").as("nc"), $"lbl".as("l"))).as("m"))
       .select($"id", $"m.l".as("label"))
-  }
-
-  private def runLoop(edges: DataFrame, rounds: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-
-    // NOTE (r21, measured negative — the KCore verdict applies here
-    // too): AQE-off staging removes this table's per-round
-    // re-exchanges (shuffle 72 → 48 MB) but costs warm wall/CPU
-    // (IsoBench ×4: 2.0-2.3 s @ 12-17 CPU-s → 2.2-2.5 @ 23-26) — the
-    // staged exchange materializes un-coalesced at full
-    // shuffle.partitions and four fixed rounds of tiny tasks outweigh
-    // the removed exchange at bench scale. See KCore.runPeel's note.
-    val e = edges.select($"src", $"dst")
-      .repartition($"src")
-      .localCheckpoint(true)
-
-    var state: DataFrame = GraphOps.vertices(e)
-      .select($"id", $"id".as("label"))
-      .localCheckpoint(true)
-
-    val toRelease = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var round = 0
-    while (round < rounds) {
-      round += 1
-      val tRound = System.nanoTime()
-      val newState = lpRound(e, state).localCheckpoint(true)
-      System.err.println(
-        f"[labelprop] round $round ${(System.nanoTime() - tRound) / 1e9}%.2fs")
-      toRelease += state
-      state = newState
-    }
-    // superseded round states are checkpoint-backed; release their
-    // blocks like PageRank does (same convention across the BSP ops)
-    toRelease.foreach(GraphOps.releaseCheckpointedFrame(_))
-    GraphOps.releaseCheckpointedFrame(e)
-    state
   }
 
   /** Newman modularity of a community assignment — the EVAL face for

@@ -90,20 +90,17 @@ object Louvain {
     * as a first-class flat-sweep primitive. */
   def moveSteps(edges: DataFrame, steps: Int,
                 partialMoves: Boolean = false,
-                keepAqe: Boolean = true,
                 gammaNum: Long = 1L, gammaDen: Long = 1L): DataFrame = {
     require(steps > 0, s"steps must be positive, got $steps")
-    GraphOps.withLoopAqeDisabled(edges.sparkSession, keepAqe) {
-      // stage via stageCanonical (one exchange — r20) instead of
-      // letting runStepsCounted re-partition the distinct's output
-      val staged = stageCanonical(edges)
-      val out = runStepsCounted(staged, steps, partialMoves,
-        preStaged = true, gammaNum = gammaNum, gammaDen = gammaDen)._1
-      // out is an eager flat checkpoint — nothing recomputes through
-      // the staged table, so its blocks release here
-      GraphOps.releaseCheckpointedFrame(staged)
-      out
-    }
+    // stage via stageCanonical (one exchange — r20) instead of
+    // letting runStepsCounted re-partition the distinct's output
+    val staged = stageCanonical(edges)
+    val out = runStepsCounted(staged, steps, partialMoves,
+      preStaged = true, gammaNum = gammaNum, gammaDen = gammaDen)._1
+    // out is an eager flat checkpoint — nothing recomputes through
+    // the staged table, so its blocks release here
+    GraphOps.releaseCheckpointedFrame(staged)
+    out
   }
 
   /** [[moveSteps]] over an EXPLICITLY WEIGHTED simple graph — the
@@ -118,14 +115,11 @@ object Louvain {
     * total weight Long.MaxValue / max(γnum, γden), require-checked. */
   def moveStepsWeighted(wEdges: DataFrame, steps: Int,
                         partialMoves: Boolean = false,
-                        keepAqe: Boolean = true,
                         gammaNum: Long = 1L,
                         gammaDen: Long = 1L): DataFrame = {
     require(steps > 0, s"steps must be positive, got $steps")
-    GraphOps.withLoopAqeDisabled(wEdges.sparkSession, keepAqe) {
-      runStepsCounted(wEdges, steps, partialMoves,
-        gammaNum = gammaNum, gammaDen = gammaDen)._1
-    }
+    runStepsCounted(wEdges, steps, partialMoves,
+      gammaNum = gammaNum, gammaDen = gammaDen)._1
   }
 
   /** Two-level Louvain (phase 1 + ONE coarsening pass + phase 1 on
@@ -151,38 +145,35 @@ object Louvain {
     *
     * @return DataFrame(id, comm1, comm2): per vertex the phase-1
     *         community and its final (phase-2) community */
-  def twoLevel(edges: DataFrame, steps1: Int, steps2: Int,
-               keepAqe: Boolean = true): DataFrame = {
+  def twoLevel(edges: DataFrame, steps1: Int, steps2: Int): DataFrame = {
     require(steps1 > 0 && steps2 > 0,
       s"steps must be positive, got ($steps1, $steps2)")
-    GraphOps.withLoopAqeDisabled(edges.sparkSession, keepAqe) {
-      // ONE staged canonical edge table feeds phase 1 AND the
-      // contraction (r19: coarsen used to recompute the distinct
-      // exchange from the raw plan); vertex/community counts thread
-      // out of the sweeps, so no gate decision pays its own count()
-      // job (r18 ADVICE)
-      val simple = stageCanonical(edges)
-      val (a1, nV) = runStepsCounted(simple, steps1, preStaged = true)
-      val (a2, nC) = runStepsCounted(coarsen(simple, a1, nV), steps2,
-        partialMoves = true)
-      // the phase-2 map is |communities|-sized — gate like every other
-      // |V|-frame join (broadcast under the Bfs ceiling, else
-      // shuffle-hash)
-      val a2r =
-        if (nC <= 4000000L)
-          broadcast(a2.select(col("id").as("comm1"),
-            col("comm").as("comm2")))
-        else a2.select(col("id").as("comm1"), col("comm").as("comm2"))
-          .hint("shuffle_hash")
-      val out = a1.select(col("id"), col("comm").as("comm1"))
-        .join(a2r, "comm1")
-        .select(col("id"), col("comm1"), col("comm2"))
-        .localCheckpoint(true)
-      GraphOps.releaseCheckpointedFrame(a1)
-      GraphOps.releaseCheckpointedFrame(a2)
-      GraphOps.releaseCheckpointedFrame(simple)
-      out
-    }
+    // ONE staged canonical edge table feeds phase 1 AND the
+    // contraction (r19: coarsen used to recompute the distinct
+    // exchange from the raw plan); vertex/community counts thread
+    // out of the sweeps, so no gate decision pays its own count()
+    // job (r18 ADVICE)
+    val simple = stageCanonical(edges)
+    val (a1, nV) = runStepsCounted(simple, steps1, preStaged = true)
+    val (a2, nC) = runStepsCounted(coarsen(simple, a1, nV), steps2,
+      partialMoves = true)
+    // the phase-2 map is |communities|-sized — gate like every other
+    // |V|-frame join (broadcast under the Bfs ceiling, else
+    // shuffle-hash)
+    val a2r =
+      if (nC <= 4000000L)
+        broadcast(a2.select(col("id").as("comm1"),
+          col("comm").as("comm2")))
+      else a2.select(col("id").as("comm1"), col("comm").as("comm2"))
+        .hint("shuffle_hash")
+    val out = a1.select(col("id"), col("comm").as("comm1"))
+      .join(a2r, "comm1")
+      .select(col("id"), col("comm1"), col("comm2"))
+      .localCheckpoint(true)
+    GraphOps.releaseCheckpointedFrame(a1)
+    GraphOps.releaseCheckpointedFrame(a2)
+    GraphOps.releaseCheckpointedFrame(simple)
+    out
   }
 
   /** [[twoLevel]] plus its own evaluation, fused (r19, VERDICT r18
@@ -203,31 +194,28 @@ object Louvain {
     *
     * @return 2 rows: (level STRING ∈ {phase1, two_level},
     *         n_communities LONG, q_micro LONG) */
-  def twoLevelGain(edges: DataFrame, steps1: Int, steps2: Int,
-                   keepAqe: Boolean = true): DataFrame = {
+  def twoLevelGain(edges: DataFrame, steps1: Int, steps2: Int): DataFrame = {
     require(steps1 > 0 && steps2 > 0,
       s"steps must be positive, got ($steps1, $steps2)")
     val spark = edges.sparkSession
-    GraphOps.withLoopAqeDisabled(spark, keepAqe) {
-      val simple = stageCanonical(edges)
-      val (a1, nV) = runStepsCounted(simple, steps1, preStaged = true)
-      val g1 = coarsen(simple, a1, nV).localCheckpoint(true)
-      GraphOps.releaseCheckpointedFrame(simple)
-      GraphOps.releaseCheckpointedFrame(a1)
-      // phase-1 Q reads off the CONTRACTED graph's identity
-      // assignment (d_c = super-vertex degree, intra2_c = its
-      // self-loop mass) — one |E_contracted| pass instead of a full
-      // |E| assignment-join pass; bit-equal by the contraction
-      // invariants (2m preserved, intra mass on the diagonal)
-      val (n0, q0) = qEvalIdentity(g1)
-      val (a2, _) = runStepsCounted(g1, steps2, partialMoves = true)
-      val (n1, q1) = qEval(g1, a2, n0 <= 4000000L)
-      GraphOps.releaseCheckpointedFrame(a2)
-      GraphOps.releaseCheckpointedFrame(g1)
-      import spark.implicits._
-      Seq(("phase1", n0, q0), ("two_level", n1, q1))
-        .toDF("level", "n_communities", "q_micro")
-    }
+    val simple = stageCanonical(edges)
+    val (a1, nV) = runStepsCounted(simple, steps1, preStaged = true)
+    val g1 = coarsen(simple, a1, nV).localCheckpoint(true)
+    GraphOps.releaseCheckpointedFrame(simple)
+    GraphOps.releaseCheckpointedFrame(a1)
+    // phase-1 Q reads off the CONTRACTED graph's identity
+    // assignment (d_c = super-vertex degree, intra2_c = its
+    // self-loop mass) — one |E_contracted| pass instead of a full
+    // |E| assignment-join pass; bit-equal by the contraction
+    // invariants (2m preserved, intra mass on the diagonal)
+    val (n0, q0) = qEvalIdentity(g1)
+    val (a2, _) = runStepsCounted(g1, steps2, partialMoves = true)
+    val (n1, q1) = qEval(g1, a2, n0 <= 4000000L)
+    GraphOps.releaseCheckpointedFrame(a2)
+    GraphOps.releaseCheckpointedFrame(g1)
+    import spark.implicits._
+    Seq(("phase1", n0, q0), ("two_level", n1, q1))
+      .toDF("level", "n_communities", "q_micro")
   }
 
   /** [[twoLevel]] AND [[twoLevelGain]] in ONE run (r20, VERDICT r19
@@ -241,48 +229,45 @@ object Louvain {
     *
     * @return DataFrame(id, comm1, comm2, level, n_communities,
     *         q_micro) — one row per vertex plus 2 eval rows */
-  def twoLevelFull(edges: DataFrame, steps1: Int, steps2: Int,
-                   keepAqe: Boolean = true): DataFrame = {
+  def twoLevelFull(edges: DataFrame, steps1: Int, steps2: Int): DataFrame = {
     require(steps1 > 0 && steps2 > 0,
       s"steps must be positive, got ($steps1, $steps2)")
     val spark = edges.sparkSession
-    GraphOps.withLoopAqeDisabled(spark, keepAqe) {
-      val simple = stageCanonical(edges)
-      val (a1, nV) = runStepsCounted(simple, steps1, preStaged = true)
-      val g1 = coarsen(simple, a1, nV).localCheckpoint(true)
-      GraphOps.releaseCheckpointedFrame(simple)
-      val (n0, q0) = qEvalIdentity(g1)
-      val (a2, nC) = runStepsCounted(g1, steps2, partialMoves = true)
-      val (n1, q1) = qEval(g1, a2, n0 <= 4000000L)
-      GraphOps.releaseCheckpointedFrame(g1)
-      // the per-vertex compose join — twoLevel's tail, riding the SAME
-      // a1/a2 the evals just consumed
-      val a2r =
-        if (nC <= 4000000L)
-          broadcast(a2.select(col("id").as("comm1"),
-            col("comm").as("comm2")))
-        else a2.select(col("id").as("comm1"), col("comm").as("comm2"))
-          .hint("shuffle_hash")
-      val assign = a1.select(col("id"), col("comm").as("comm1"))
-        .join(a2r, "comm1")
-        .select(col("id"), col("comm1"), col("comm2"))
-        .localCheckpoint(true)
-      GraphOps.releaseCheckpointedFrame(a1)
-      GraphOps.releaseCheckpointedFrame(a2)
-      import spark.implicits._
-      val evals = Seq(("phase1", n0, q0), ("two_level", n1, q1))
-        .toDF("level", "n_communities", "q_micro")
-        .select(lit(null).cast("long").as("id"),
-          lit(null).cast("long").as("comm1"),
-          lit(null).cast("long").as("comm2"),
-          col("level"), col("n_communities"), col("q_micro"))
-      assign
-        .select(col("id"), col("comm1"), col("comm2"),
-          lit(null).cast("string").as("level"),
-          lit(null).cast("long").as("n_communities"),
-          lit(null).cast("long").as("q_micro"))
-        .unionAll(evals)
-    }
+    val simple = stageCanonical(edges)
+    val (a1, nV) = runStepsCounted(simple, steps1, preStaged = true)
+    val g1 = coarsen(simple, a1, nV).localCheckpoint(true)
+    GraphOps.releaseCheckpointedFrame(simple)
+    val (n0, q0) = qEvalIdentity(g1)
+    val (a2, nC) = runStepsCounted(g1, steps2, partialMoves = true)
+    val (n1, q1) = qEval(g1, a2, n0 <= 4000000L)
+    GraphOps.releaseCheckpointedFrame(g1)
+    // the per-vertex compose join — twoLevel's tail, riding the SAME
+    // a1/a2 the evals just consumed
+    val a2r =
+      if (nC <= 4000000L)
+        broadcast(a2.select(col("id").as("comm1"),
+          col("comm").as("comm2")))
+      else a2.select(col("id").as("comm1"), col("comm").as("comm2"))
+        .hint("shuffle_hash")
+    val assign = a1.select(col("id"), col("comm").as("comm1"))
+      .join(a2r, "comm1")
+      .select(col("id"), col("comm1"), col("comm2"))
+      .localCheckpoint(true)
+    GraphOps.releaseCheckpointedFrame(a1)
+    GraphOps.releaseCheckpointedFrame(a2)
+    import spark.implicits._
+    val evals = Seq(("phase1", n0, q0), ("two_level", n1, q1))
+      .toDF("level", "n_communities", "q_micro")
+      .select(lit(null).cast("long").as("id"),
+        lit(null).cast("long").as("comm1"),
+        lit(null).cast("long").as("comm2"),
+        col("level"), col("n_communities"), col("q_micro"))
+    assign
+      .select(col("id"), col("comm1"), col("comm2"),
+        lit(null).cast("string").as("level"),
+        lit(null).cast("long").as("n_communities"),
+        lit(null).cast("long").as("q_micro"))
+      .unionAll(evals)
   }
 
   /** Convergence-driven multi-level Louvain (r19, VERDICT r18 #5 —
@@ -310,11 +295,10 @@ object Louvain {
     *         q_micro LONG), ordered by level */
   def untilConverged(edges: DataFrame, stepsPerLevel: Int = 2,
                      maxLevels: Int = 3, minGainMicro: Long = 1000L,
-                     keepAqe: Boolean = true,
                      gammaNum: Long = 1L, gammaDen: Long = 1L): DataFrame = {
     val spark = edges.sparkSession
     val (rows, _) = runMultilevel(edges, stepsPerLevel, maxLevels,
-      minGainMicro, keepAqe, wantAssign = false,
+      minGainMicro, wantAssign = false,
       gammaNum = gammaNum, gammaDen = gammaDen)
     import spark.implicits._
     rows.toDF("level", "n_communities", "q_micro")
@@ -333,10 +317,9 @@ object Louvain {
     * @return DataFrame(id LONG, comm LONG) — one row per vertex */
   def untilConvergedAssign(edges: DataFrame, stepsPerLevel: Int = 2,
                            maxLevels: Int = 3, minGainMicro: Long = 1000L,
-                           keepAqe: Boolean = true,
                            gammaNum: Long = 1L, gammaDen: Long = 1L): DataFrame =
     runMultilevel(edges, stepsPerLevel, maxLevels, minGainMicro,
-      keepAqe, wantAssign = true,
+      wantAssign = true,
       gammaNum = gammaNum, gammaDen = gammaDen)._2.get
 
   /** The FULL multi-level alternation over an EXPLICITLY WEIGHTED
@@ -355,12 +338,11 @@ object Louvain {
     * q_micro bit-identical) is spec-pinned. */
   def untilConvergedWeighted(wEdges: DataFrame, stepsPerLevel: Int = 2,
                              maxLevels: Int = 3, minGainMicro: Long = 1000L,
-                             keepAqe: Boolean = true,
                              gammaNum: Long = 1L,
                              gammaDen: Long = 1L): DataFrame = {
     val spark = wEdges.sparkSession
     val (rows, flat) = runMultilevel(wEdges, stepsPerLevel, maxLevels,
-      minGainMicro, keepAqe, wantAssign = true,
+      minGainMicro, wantAssign = true,
       gammaNum = gammaNum, gammaDen = gammaDen, preWeighted = true)
     import spark.implicits._
     val traj = rows.toDF("level", "n_communities", "q_micro")
@@ -389,11 +371,10 @@ object Louvain {
     *         one row per vertex plus one row per level run */
   def untilConvergedFull(edges: DataFrame, stepsPerLevel: Int = 2,
                          maxLevels: Int = 3, minGainMicro: Long = 1000L,
-                         keepAqe: Boolean = true,
                          gammaNum: Long = 1L, gammaDen: Long = 1L): DataFrame = {
     val spark = edges.sparkSession
     val (rows, flat) = runMultilevel(edges, stepsPerLevel, maxLevels,
-      minGainMicro, keepAqe, wantAssign = true,
+      minGainMicro, wantAssign = true,
       gammaNum = gammaNum, gammaDen = gammaDen)
     import spark.implicits._
     val traj = rows.toDF("level", "n_communities", "q_micro")
@@ -416,84 +397,82 @@ object Louvain {
     *        canonicalizing with unit weights */
   private def runMultilevel(edges: DataFrame, stepsPerLevel: Int,
                             maxLevels: Int, minGainMicro: Long,
-                            keepAqe: Boolean, wantAssign: Boolean,
+                            wantAssign: Boolean,
                             gammaNum: Long = 1L, gammaDen: Long = 1L,
                             preWeighted: Boolean = false)
       : (Seq[(Int, Long, Long)], Option[DataFrame]) = {
     require(stepsPerLevel > 0, s"stepsPerLevel must be positive")
     require(maxLevels > 0, s"maxLevels must be positive")
     val spark = edges.sparkSession
-    GraphOps.withLoopAqeDisabled(spark, keepAqe) {
-      val rows = scala.collection.mutable.ArrayBuffer
-        .empty[(Int, Long, Long)]
-      var g =
-        if (preWeighted)
-          // AQE-off staging — see [[stageCanonical]]'s r21 note
-          GraphOps.withLoopAqeDisabled(spark, keepAqe = false) {
-            edges.select(col("src"), col("dst"), col("w"))
-              .repartition(col("src")).localCheckpoint(false)
-          }
-        else stageCanonical(edges)
-      var preStaged = true
-      var prevQ = Option.empty[Long]
-      var level = 0
-      var continue = true
-      var flat: DataFrame = null
-      while (continue && level < maxLevels) {
-        val (a, nV) = runStepsCounted(g, stepsPerLevel,
-          partialMoves = level > 0, preStaged = preStaged,
-          gammaNum = gammaNum, gammaDen = gammaDen)
-        // the level's Q reads off its CONTRACTED quotient's identity
-        // assignment (see twoLevelGain) — the contraction is the
-        // next level's input anyway, so the eval is one
-        // |E_contracted| pass and no assignment-join pass exists
-        val gNext = coarsen(g, a, nV).localCheckpoint(true)
-        var aAdopted = false
-        if (wantAssign) {
-          if (flat == null) {
-            // level 0: `a` already IS an eager flat checkpoint
-            // (runStepsCounted's contract) — adopt it as the running
-            // flat assignment instead of re-materializing a copy of
-            // the |V|-row state (r19 ADVICE); its release shifts to
-            // the next level's compose (or the loop tail)
-            flat = a
-            aAdopted = true
-          } else {
-            // compose the level map onto the running flat assignment:
-            // flat.comm values ARE this level's vertex ids
-            val gateA =
-              if (nV <= 4000000L)
-                broadcast(a.select(col("id").as("prev"),
-                  col("comm").as("next")))
-              else a.select(col("id").as("prev"), col("comm").as("next"))
-                .hint("shuffle_hash")
-            val flatNext = flat.select(col("id"), col("comm").as("prev"))
-              .join(gateA, "prev")
-              .select(col("id"), col("next").as("comm"))
-              .localCheckpoint(true)
-            GraphOps.releaseCheckpointedFrame(flat)
-            flat = flatNext
-          }
+    val rows = scala.collection.mutable.ArrayBuffer
+      .empty[(Int, Long, Long)]
+    var g =
+      if (preWeighted)
+        // AQE-off staging — see [[stageCanonical]]'s r21 note
+        GraphOps.withLoopAqeDisabled(spark) {
+          edges.select(col("src"), col("dst"), col("w"))
+            .repartition(col("src")).localCheckpoint(false)
         }
-        if (!aAdopted) GraphOps.releaseCheckpointedFrame(a)
-        GraphOps.releaseCheckpointedFrame(g)
-        val (nComm, q) = qEvalIdentity(gNext)
-        rows += ((level, nComm, q))
-        System.err.println(
-          s"[louvain] level $level communities=$nComm q_micro=$q")
-        // stop when the level's gain falls under the threshold (the
-        // q-gain rule), when contraction stops shrinking (the quotient
-        // would be the same graph), or at the level budget
-        continue = prevQ.forall(p => q - p >= minGainMicro) &&
-          nComm < nV && level + 1 < maxLevels
-        prevQ = Some(q)
-        g = gNext
-        preStaged = false
-        level += 1
+      else stageCanonical(edges)
+    var preStaged = true
+    var prevQ = Option.empty[Long]
+    var level = 0
+    var continue = true
+    var flat: DataFrame = null
+    while (continue && level < maxLevels) {
+      val (a, nV) = runStepsCounted(g, stepsPerLevel,
+        partialMoves = level > 0, preStaged = preStaged,
+        gammaNum = gammaNum, gammaDen = gammaDen)
+      // the level's Q reads off its CONTRACTED quotient's identity
+      // assignment (see twoLevelGain) — the contraction is the
+      // next level's input anyway, so the eval is one
+      // |E_contracted| pass and no assignment-join pass exists
+      val gNext = coarsen(g, a, nV).localCheckpoint(true)
+      var aAdopted = false
+      if (wantAssign) {
+        if (flat == null) {
+          // level 0: `a` already IS an eager flat checkpoint
+          // (runStepsCounted's contract) — adopt it as the running
+          // flat assignment instead of re-materializing a copy of
+          // the |V|-row state (r19 ADVICE); its release shifts to
+          // the next level's compose (or the loop tail)
+          flat = a
+          aAdopted = true
+        } else {
+          // compose the level map onto the running flat assignment:
+          // flat.comm values ARE this level's vertex ids
+          val gateA =
+            if (nV <= 4000000L)
+              broadcast(a.select(col("id").as("prev"),
+                col("comm").as("next")))
+            else a.select(col("id").as("prev"), col("comm").as("next"))
+              .hint("shuffle_hash")
+          val flatNext = flat.select(col("id"), col("comm").as("prev"))
+            .join(gateA, "prev")
+            .select(col("id"), col("next").as("comm"))
+            .localCheckpoint(true)
+          GraphOps.releaseCheckpointedFrame(flat)
+          flat = flatNext
+        }
       }
+      if (!aAdopted) GraphOps.releaseCheckpointedFrame(a)
       GraphOps.releaseCheckpointedFrame(g)
-      (rows.toSeq, Option(flat))
+      val (nComm, q) = qEvalIdentity(gNext)
+      rows += ((level, nComm, q))
+      System.err.println(
+        s"[louvain] level $level communities=$nComm q_micro=$q")
+      // stop when the level's gain falls under the threshold (the
+      // q-gain rule), when contraction stops shrinking (the quotient
+      // would be the same graph), or at the level budget
+      continue = prevQ.forall(p => q - p >= minGainMicro) &&
+        nComm < nV && level + 1 < maxLevels
+      prevQ = Some(q)
+      g = gNext
+      preStaged = false
+      level += 1
     }
+    GraphOps.releaseCheckpointedFrame(g)
+    (rows.toSeq, Option(flat))
   }
 
   /** Canonical staged edge table: simple-graph rows with unit weight,
@@ -518,7 +497,7 @@ object Louvain {
     // in q_louvain_twolevel's executed plans. AQE-off planning keeps
     // HashPartitioning(src, shuffle.partitions) on the checkpoint;
     // the loops themselves still run with the caller's AQE setting.
-    GraphOps.withLoopAqeDisabled(edges.sparkSession, keepAqe = false) {
+    GraphOps.withLoopAqeDisabled(edges.sparkSession) {
       edges.select(col("src"), col("dst"))
         .filter(col("src") =!= col("dst"))
         .repartition(col("src"))
@@ -675,7 +654,7 @@ object Louvain {
     val e =
       if (preStaged) wEdges
       // AQE-off staging — see [[stageCanonical]]'s r21 note
-      else GraphOps.withLoopAqeDisabled(wEdges.sparkSession, keepAqe = false) {
+      else GraphOps.withLoopAqeDisabled(wEdges.sparkSession) {
         wEdges.select($"src", $"dst", $"w")
           .repartition($"src")
           .localCheckpoint(false)

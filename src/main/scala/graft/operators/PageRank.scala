@@ -43,106 +43,83 @@ object PageRank {
   /** @param edges DIRECTED edge table (`src`, `dst`)
     * @return DataFrame(id LONG, rank DOUBLE) over all vertices */
   def run(edges: DataFrame, iterations: Int = 10,
-          damping: Double = 0.85, keepAqe: Boolean = true): DataFrame = {
+          damping: Double = 0.85): DataFrame = {
     require(iterations > 0)
     // damping outside [0,1) breaks the mass-≤-1 invariant that makes
     // the fixed-point Long sum overflow-free
     require(damping >= 0.0 && damping < 1.0,
       s"damping must be in [0, 1), got $damping")
     val spark = edges.sparkSession
-    GraphOps.withLoopAqeDisabled(spark, keepAqe) {
-      runLoop(edges, iterations, damping)
+    import spark.implicits._
+    Bsp.loop("pagerank", spark, aqeOff = false) { bsp =>
+      val e = bsp.hold(stageEdges(edges))
+      val degrees = e.groupBy($"src".as("id")).agg(count(lit(1)).as("outdeg"))
+      val verts = GraphOps.vertices(e)
+      // ONE materialization job builds (id, outdeg); its count supplies n
+      // (a separate verts.count() job costs a second distinct over the
+      // full edge set)
+      val stateBase = bsp.hold(verts.join(degrees, Seq("id"), "left_outer")
+        .select($"id", coalesce($"outdeg", lit(0L)).as("outdeg"))
+        .localCheckpoint(false))
+      val n = stateBase.count()
+      if (n == 0) stateBase.select($"id", lit(0.0).as("rank"))
+      else {
+        val base = (1.0 - damping) / n
+        bsp.fixedRounds(stateBase.withColumn("rank", lit(1.0 / n)),
+            iterations) { (state, _) =>
+          // ONE shuffle per round, and it carries ONLY the contribution
+          // stream (r20 — see the merge comment below).
+          // shuffle-hash (not sort-merge): SMJ would re-SORT the cached
+          // 2.4M-row edge table EVERY round; hashing the (much smaller)
+          // state side reuses the edge partitioning sort-free. Unlike the
+          // BFS frontier, the state is all |V| — broadcast is not the
+          // scale answer here.
+          val contribs = state.as("s").hint("shuffle_hash")
+            .join(e.as("e"), col("s.id") === col("e.src"))
+            .select(col("e.dst").as("id"),
+              // fixed-point BEFORE the sum: order-free exact aggregation
+              ($"s.rank" / $"s.outdeg" * Scale).cast("long").as("c"))
+          // r20 (the Bfs restructure — guide §2.3/§2.4): contributions
+          // partial-aggregate and exchange ALONE; the |V| carry rows merge
+          // by a partition-aligned LEFT join — the state is born
+          // hash(id)-partitioned (stateBase's vertices-distinct), a left
+          // outer join preserves that partitioning and so does each
+          // round's checkpoint, so the carry never crosses an exchange
+          // (the old union shape re-shuffled it every round, plus paid a
+          // max(outdeg) over |V|+|E| rows for the re-attach).
+          val contribAgg = contribs.groupBy($"id").agg(sum($"c").as("csum"))
+          state.select($"id", $"outdeg")
+            .join(contribAgg, Seq("id"), "left")
+            .select($"id", $"outdeg",
+              (lit(base) + lit(damping) *
+                (coalesce($"csum", lit(0L)).cast("double") / Scale)).as("rank"))
+        }.select($"id", $"rank")
+      }
     }
   }
 
-  private def runLoop(edges: DataFrame, iterations: Int,
-                      damping: Double): DataFrame = {
+  /** The edge table staged for the rounds: src-partitioned, eagerly
+    * checkpointed — with AQE OFF (r21, ExecProbe-diagnosed from the
+    * executed round plans): under AQE the staged repartition's final
+    * read is an AQEShuffleRead whose output partitioning is UNKNOWN, so
+    * the checkpoint's LogicalRDD loses the hash partitioning and EVERY
+    * round's shuffle_hash join re-exchanged the full edge table (one
+    * 12.9 MB exchange per round — ~130 MB of this query's 263 MB total
+    * shuffle at sf0.1; at scale it is a per-round shuffle of the BIG
+    * side). With the staging planned AQE-off the exchange itself is
+    * the plan root, `HashPartitioning(src, spark.sql.shuffle.partitions)`
+    * survives into the checkpoint, and the per-round join reads the
+    * blocks in place. Rounds still run with AQE ON (the r17 finding —
+    * coalesced small exchanges — is unchanged). Count stays
+    * conf-derived. */
+  private def stageEdges(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
-    import spark.implicits._
-
-    // Stage the edge checkpoint with AQE OFF (r21, ExecProbe-diagnosed
-    // from the executed round plans): under AQE the staged
-    // repartition's final read is an AQEShuffleRead whose output
-    // partitioning is UNKNOWN, so the checkpoint's LogicalRDD loses
-    // the hash partitioning and EVERY round's shuffle_hash join
-    // re-exchanged the full edge table (one 12.9 MB exchange per
-    // round — ~130 MB of this query's 263 MB total shuffle at sf0.1;
-    // at scale it is a per-round shuffle of the BIG side). With the
-    // staging planned AQE-off the exchange itself is the plan root,
-    // `HashPartitioning(src, spark.sql.shuffle.partitions)` survives
-    // into the checkpoint, and the per-round join reads the blocks in
-    // place. Rounds still run with AQE ON (the r17 finding — coalesced
-    // small exchanges — is unchanged). Count stays conf-derived.
-    val e = GraphOps.withLoopAqeDisabled(spark, keepAqe = false) {
-      edges.select($"src", $"dst")
+    GraphOps.withLoopAqeDisabled(spark) {
+      edges.select(col("src"), col("dst"))
         .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-          $"src")
+          col("src"))
         .localCheckpoint(true)
     }
-    val degrees = e.groupBy($"src".as("id")).agg(count(lit(1)).as("outdeg"))
-    val verts = GraphOps.vertices(e)
-    // ONE materialization job builds (id, outdeg); its count supplies n
-    // (a separate verts.count() job costs a second distinct over the
-    // full edge set)
-    val stateBase = verts.join(degrees, Seq("id"), "left_outer")
-      .select($"id", coalesce($"outdeg", lit(0L)).as("outdeg"))
-      .localCheckpoint(false)
-    val n = stateBase.count()
-    if (n == 0) {
-      GraphOps.releaseCheckpointedFrame(e)
-      return stateBase.select($"id", lit(0.0).as("rank"))
-    }
-
-    val base = (1.0 - damping) / n
-    var state: DataFrame = stateBase.withColumn("rank", lit(1.0 / n))
-
-    val toRelease = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var iter = 0
-    while (iter < iterations) {
-      iter += 1
-      val tRound = System.nanoTime()
-      // ONE shuffle per round, and it carries ONLY the contribution
-      // stream (r20 — see the merge comment below).
-      // shuffle-hash (not sort-merge): SMJ would re-SORT the cached
-      // 2.4M-row edge table EVERY round; hashing the (much smaller)
-      // state side reuses the edge partitioning sort-free. Unlike the
-      // BFS frontier, the state is all |V| — broadcast is not the
-      // scale answer here.
-      val contribs = state.as("s").hint("shuffle_hash")
-        .join(e.as("e"), col("s.id") === col("e.src"))
-        .select(col("e.dst").as("id"),
-          // fixed-point BEFORE the sum: order-free exact aggregation
-          ($"s.rank" / $"s.outdeg" * Scale).cast("long").as("c"))
-      // r20 (the Bfs restructure — guide §2.3/§2.4): contributions
-      // partial-aggregate and exchange ALONE; the |V| carry rows merge
-      // by a partition-aligned LEFT join — the state is born
-      // hash(id)-partitioned (stateBase's vertices-distinct), a left
-      // outer join preserves that partitioning and so does each
-      // round's checkpoint, so the carry never crosses an exchange
-      // (the old union shape re-shuffled it every round, plus paid a
-      // max(outdeg) over |V|+|E| rows for the re-attach).
-      val contribAgg = contribs.groupBy($"id").agg(sum($"c").as("csum"))
-      val newState = state.select($"id", $"outdeg")
-        .join(contribAgg, Seq("id"), "left")
-        .select($"id", $"outdeg",
-          (lit(base) + lit(damping) *
-            (coalesce($"csum", lit(0L)).cast("double") / Scale)).as("rank"))
-        .localCheckpoint(true)
-      // per-round attribution line (see Bfs loop): uniform inflation
-      // across rounds = machine; a dominant round = plan/skew
-      System.err.println(
-        f"[pagerank] round $iter ${(System.nanoTime() - tRound) / 1e9}%.2fs")
-      // round-1 state is a projection OVER stateBase — release the
-      // flat HANDLE, not the derived frame (the r18 release contract)
-      toRelease += (if (iter == 1) stateBase else state)
-      state = newState
-    }
-    // releaseCheckpointedFrame, not bare unpersist: checkpoint RDD
-    // blocks live at the RDD layer, which Dataset.unpersist alone
-    // never touches (the KCore r16 lesson applied here too).
-    toRelease.foreach(GraphOps.releaseCheckpointedFrame(_))
-    GraphOps.releaseCheckpointedFrame(e)
-    state.select($"id", $"rank")
   }
 
   /** Personalized PageRank (Jeh-Widom 2003 "random walk with
@@ -154,7 +131,7 @@ object PageRank {
     * contract as [[run]] (scaled-long contribution sums), same
     * dangling-mass simplification, same one-shuffle round shape (the
     * teleport flag rides the state rows like outdeg does — no extra
-    * join). A SEPARATE loop rather than a parameterized [[runLoop]]:
+    * join). A SEPARATE round body rather than a parameterized [[run]]:
     * the uniform face is bench-anchored and a conditional base column
     * would perturb its plan for no gain.
     *
@@ -163,8 +140,7 @@ object PageRank {
     *                a silently-absent source would skew all mass
     *                normalization) */
   def personalized(edges: DataFrame, sources: Seq[Long],
-                   iterations: Int = 10, damping: Double = 0.85,
-                   keepAqe: Boolean = true): DataFrame = {
+                   iterations: Int = 10, damping: Double = 0.85): DataFrame = {
     require(iterations > 0)
     require(damping >= 0.0 && damping < 1.0,
       s"damping must be in [0, 1), got $damping")
@@ -172,68 +148,38 @@ object PageRank {
     require(sources.distinct.size == sources.size,
       s"duplicate sources: $sources")
     val spark = edges.sparkSession
-    GraphOps.withLoopAqeDisabled(spark, keepAqe) {
-      personalizedLoop(edges, sources, iterations, damping)
-    }
-  }
-
-  private def personalizedLoop(edges: DataFrame, sources: Seq[Long],
-                               iterations: Int,
-                               damping: Double): DataFrame = {
-    val spark = edges.sparkSession
     import spark.implicits._
+    Bsp.loop("ppr", spark, aqeOff = false) { bsp =>
+      val e = bsp.hold(stageEdges(edges))
+      val degrees = e.groupBy($"src".as("id")).agg(count(lit(1)).as("outdeg"))
+      val stateBase = bsp.hold(GraphOps.vertices(e)
+        .join(degrees, Seq("id"), "left_outer")
+        .select($"id", coalesce($"outdeg", lit(0L)).as("outdeg"),
+          $"id".isin(sources: _*).cast("long").as("tele"))
+        .localCheckpoint(false))
+      val nSrc = stateBase.filter($"tele" === 1L).count()
+      require(nSrc == sources.size,
+        s"${sources.size - nSrc} source(s) absent from the graph: $sources")
 
-    // AQE-off staging so the checkpoint keeps its hash partitioning —
-    // see [[runLoop]]'s r21 note
-    val e = GraphOps.withLoopAqeDisabled(spark, keepAqe = false) {
-      edges.select($"src", $"dst")
-        .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-          $"src")
-        .localCheckpoint(true)
+      val baseMass = (1.0 - damping) / sources.size
+      val init = stateBase.withColumn("rank",
+        when($"tele" === 1L, lit(1.0 / sources.size)).otherwise(lit(0.0)))
+      bsp.fixedRounds(init, iterations) { (state, _) =>
+        val contribs = state.as("s").hint("shuffle_hash")
+          .join(e.as("e"), col("s.id") === col("e.src"))
+          .select(col("e.dst").as("id"),
+            ($"s.rank" / $"s.outdeg" * Scale).cast("long").as("c"))
+        // r20: partial-agg'd contributions + partition-aligned left join
+        // instead of the union-merge — see [[run]]'s round comment
+        // (the carry with its outdeg/tele payload never re-shuffles)
+        val contribAgg = contribs.groupBy($"id").agg(sum($"c").as("csum"))
+        state.select($"id", $"outdeg", $"tele")
+          .join(contribAgg, Seq("id"), "left")
+          .select($"id", $"outdeg", $"tele",
+            (when($"tele" === 1L, lit(baseMass)).otherwise(lit(0.0)) +
+              lit(damping) *
+                (coalesce($"csum", lit(0L)).cast("double") / Scale)).as("rank"))
+      }.select($"id", $"rank")
     }
-    val degrees = e.groupBy($"src".as("id")).agg(count(lit(1)).as("outdeg"))
-    val stateBase = GraphOps.vertices(e)
-      .join(degrees, Seq("id"), "left_outer")
-      .select($"id", coalesce($"outdeg", lit(0L)).as("outdeg"),
-        $"id".isin(sources: _*).cast("long").as("tele"))
-      .localCheckpoint(false)
-    val nSrc = stateBase.filter($"tele" === 1L).count()
-    require(nSrc == sources.size,
-      s"${sources.size - nSrc} source(s) absent from the graph: $sources")
-
-    val baseMass = (1.0 - damping) / sources.size
-    var state: DataFrame = stateBase.withColumn("rank",
-      when($"tele" === 1L, lit(1.0 / sources.size)).otherwise(lit(0.0)))
-
-    val toRelease = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var iter = 0
-    while (iter < iterations) {
-      iter += 1
-      val tRound = System.nanoTime()
-      val contribs = state.as("s").hint("shuffle_hash")
-        .join(e.as("e"), col("s.id") === col("e.src"))
-        .select(col("e.dst").as("id"),
-          ($"s.rank" / $"s.outdeg" * Scale).cast("long").as("c"))
-      // r20: partial-agg'd contributions + partition-aligned left join
-      // instead of the union-merge — see [[runLoop]]'s round comment
-      // (the carry with its outdeg/tele payload never re-shuffles)
-      val contribAgg = contribs.groupBy($"id").agg(sum($"c").as("csum"))
-      val newState = state.select($"id", $"outdeg", $"tele")
-        .join(contribAgg, Seq("id"), "left")
-        .select($"id", $"outdeg", $"tele",
-          (when($"tele" === 1L, lit(baseMass)).otherwise(lit(0.0)) +
-            lit(damping) *
-              (coalesce($"csum", lit(0L)).cast("double") / Scale)).as("rank"))
-        .localCheckpoint(true)
-      System.err.println(
-        f"[ppr] round $iter ${(System.nanoTime() - tRound) / 1e9}%.2fs")
-      // round-1 state is a projection OVER stateBase — release the
-      // flat HANDLE, not the derived frame (the r18 release contract)
-      toRelease += (if (iter == 1) stateBase else state)
-      state = newState
-    }
-    toRelease.foreach(GraphOps.releaseCheckpointedFrame(_))
-    GraphOps.releaseCheckpointedFrame(e)
-    state.select($"id", $"rank")
   }
 }

@@ -110,7 +110,7 @@ object RandomWalk {
     // bounded by `steps`; each step's blocks still cache for their two
     // readers (the next step's candidate join and its state join).
     val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    GraphOps.withLoopAqeDisabled(spark, keepAqe = false) {
+    GraphOps.withLoopAqeDisabled(spark) {
       for (i <- 1 to steps) {
         val tRound = System.nanoTime()
         val s = state.as("s")

@@ -48,16 +48,8 @@ object Scc {
     *                    (forward diameter of the remaining subgraph)
     * @return DataFrame(id LONG, comp LONG) — comp = max id of the
     *         vertex's SCC */
-  def run(edges: DataFrame, maxOuter: Int = 64, maxFixpoint: Int = 256,
-          keepAqe: Boolean = true): DataFrame = {
-    val spark = edges.sparkSession
-    GraphOps.withLoopAqeDisabled(spark, keepAqe) {
-      runLoop(edges, maxOuter, maxFixpoint)
-    }
-  }
-
-  private def runLoop(edges: DataFrame, maxOuter: Int,
-                      maxFixpoint: Int): DataFrame = {
+  def run(edges: DataFrame, maxOuter: Int = 64,
+          maxFixpoint: Int = 256): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // NO stats firewall here (r20, measured): GraphOps.freshStats

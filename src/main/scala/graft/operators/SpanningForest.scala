@@ -39,42 +39,30 @@ import org.apache.spark.storage.StorageLevel
   */
 object SpanningForest {
 
-  /** @param edges undirected weighted edges (`src`, `dst`, `weight`)
+  /** AQE stays ON here — the OPPOSITE of the fixed-shape loops
+    * ([[Bfs]], [[Sssp]]: rounds over a pre-partitioned edge table,
+    * nothing to adapt, per-stage latency only). Borůvka's contraction
+    * mints NEW exchanges every round over frames that shrink
+    * geometrically (components at least halve), and at the session's
+    * scan-sized shuffle.partitions each tiny exchange writes a full
+    * set of shuffle files — measured on the 6k-edge gate graph: CPU
+    * 150-175s of IndexShuffleBlockResolver metadata/file syscalls at
+    * 32 partitions vs 24-28s with AQE coalescing the same exchanges
+    * (wall 13.6s → 6.7s fresh-JVM warm). The same quadratic
+    * shuffle-file observation gated q_cc_star_deep onto a
+    * small-partition child session; AQE is the self-tuning version of
+    * that fix and also right at 100 TB, where round 1 is huge (AQE
+    * leaves it wide) and round 10 is tiny (AQE collapses it).
+    *
+    * @param edges undirected weighted edges (`src`, `dst`, `weight`)
     *              — one row per direction or per unordered pair, both
     *              accepted (canonicalized to src < dst, parallel
     *              edges keep the lightest).
-    * @param keepAqe AQE stays ON by default here — the OPPOSITE of
-    *              the other iterative loops ([[Bfs]], [[PageRank]]:
-    *              fixed-shape rounds over a pre-partitioned edge
-    *              table, nothing to adapt, per-stage latency only).
-    *              Borůvka's contraction mints NEW exchanges every
-    *              round over frames that shrink geometrically
-    *              (components at least halve), and at the session's
-    *              scan-sized shuffle.partitions each tiny exchange
-    *              writes a full set of shuffle files — measured on
-    *              the 6k-edge gate graph: CPU 150-175s of
-    *              IndexShuffleBlockResolver metadata/file syscalls at
-    *              32 partitions vs 24-28s with AQE coalescing the
-    *              same exchanges (wall 13.6s → 6.7s fresh-JVM warm).
-    *              The same quadratic shuffle-file observation gated
-    *              q_cc_star_deep onto a small-partition child
-    *              session; AQE is the self-tuning version of that fix
-    *              and also right at 100 TB, where round 1 is huge
-    *              (AQE leaves it wide) and round 10 is tiny (AQE
-    *              collapses it).
     * @return the unique MSF under (weight, src, dst): columns
     *         (`src`, `dst`, `weight`), src < dst.
     * @throws IllegalStateException if `maxRounds` is exhausted —
     *         returning a partial forest would silently under-span. */
-  def boruvka(edges: DataFrame, maxRounds: Int = 40,
-              keepAqe: Boolean = true): DataFrame = {
-    val spark = edges.sparkSession
-    GraphOps.withLoopAqeDisabled(spark, keepAqe) {
-      runLoop(edges, maxRounds)
-    }
-  }
-
-  private def runLoop(edges: DataFrame, maxRounds: Int): DataFrame = {
+  def boruvka(edges: DataFrame, maxRounds: Int = 40): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 

@@ -1,24 +1,24 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Weighted single-source shortest paths — Bellman-Ford as BSP rounds,
   * the weighted generalization of the reference's unweighted BFS
   * (`BFS_map_reduce.py:115-150`: same frontier/semilattice machinery,
   * min-plus instead of min-hop).
   *
-  * Round structure follows [[Bfs.run]] — ONE shuffle and ONE job per
-  * round — with the one structural difference weights force: BFS knows
-  * the newly-settled vertices by `dist == round`, but a weighted
-  * relaxation can IMPROVE an already-reached vertex, so each round's
-  * merge aggregates BOTH the new minimum and the previous state's
-  * minimum per id (`min(dist)` and `min(dist WHERE old)` in one
-  * partial-aggregated exchange) and the next frontier is the rows
-  * where the new minimum is strictly better. Rounds needed = hop count
-  * of the longest shortest path (≤ |V|-1, the Bellman-Ford bound);
-  * convergence is "no vertex improved".
+  * Round structure follows [[Bfs.run]] — ONE shuffle and one frontier
+  * count per round — with the one structural difference weights
+  * force: BFS knows the newly-settled vertices by `dist == round`, but
+  * a weighted relaxation can IMPROVE an already-reached vertex, so
+  * each round's merge aggregates BOTH the new minimum and the
+  * previous state's minimum per id (`min(dist)` and
+  * `min(dist WHERE old)` in one partial-aggregated exchange) and the
+  * next frontier is the rows where the new minimum is strictly
+  * better. Rounds needed = hop count of the longest shortest path
+  * (≤ |V|-1, the Bellman-Ford bound); convergence is "no vertex
+  * improved".
   *
   * Weights must be non-negative integers (`w` column, long-castable).
   * The guard rides the expansion projection as a codegen'd
@@ -27,8 +27,9 @@ import org.apache.spark.storage.StorageLevel
   * negative-cycle semantics are not this operator's contract).
   *
   * Scale notes: identical to [[Bfs]] — edges hash-partitioned on `src`
-  * once and persisted, frontier broadcast while small, eager
-  * localCheckpoint keeps lineage flat, AQE off inside the loop.
+  * once and checkpointed, frontier broadcast while small, a lazy
+  * per-round localCheckpoint (materialized by the frontier count)
+  * keeps lineage flat, AQE off inside the loop.
   */
 object Sssp {
 
@@ -38,27 +39,15 @@ object Sssp {
     * @see [[Bfs.Config]] for the shared knobs */
   final case class Config(
       maxIterations: Int = 200,
-      checkpointInterval: Int = 1,
-      broadcastFrontierRows: Long = 4000000L,
-      keepAqe: Boolean = false)
+      broadcastFrontierRows: Long = 4000000L)
 
   /** SSSP over a DIRECTED weighted edge table (columns `src`, `dst`,
     * `w`). For an undirected graph pass symmetrized edges with the
     * same weight in both directions.
     *
-    * Cache lifetime: as [[Bfs.run]] — a final round on a checkpoint
-    * interval releases every loop-internal block; a final round on a
-    * persist interval leaves the edge cache alive (the result would
-    * recompute through it on block loss), for the caller to drop
-    * after materializing (the harness getPersistentRDDs sweep).
-    *
     * @return DataFrame(id LONG, dist LONG) — reached vertices only. */
-  def run(edges: DataFrame, source: Long, cfg: Config = Config()): DataFrame = {
-    val spark = edges.sparkSession
-    GraphOps.withLoopAqeDisabled(spark, cfg.keepAqe) {
-      runLoop(edges, source, cfg, boundedHops = false)
-    }
-  }
+  def run(edges: DataFrame, source: Long, cfg: Config = Config()): DataFrame =
+    runLoop(edges, source, cfg, boundedHops = false)
 
   /** Hop-bounded SSSP: the cheapest cost to each vertex over paths of
     * AT MOST `hops` edges — after round h the state is exactly the
@@ -72,83 +61,58 @@ object Sssp {
     * trick). Early convergence before `hops` rounds returns the same
     * table the remaining rounds would (they'd be no-ops). */
   def runBounded(edges: DataFrame, source: Long, hops: Int,
-                 cfg: Config = Config()): DataFrame = {
-    val spark = edges.sparkSession
-    GraphOps.withLoopAqeDisabled(spark, cfg.keepAqe) {
-      runLoop(edges, source, cfg.copy(maxIterations = hops),
-        boundedHops = true)
-    }
-  }
+                 cfg: Config = Config()): DataFrame =
+    runLoop(edges, source, cfg.copy(maxIterations = hops),
+      boundedHops = true)
 
   private def runLoop(edges: DataFrame, source: Long, cfg: Config,
                       boundedHops: Boolean): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
+    Bsp.loop("sssp", spark, aqeOff = true) { bsp =>
+      val e = bsp.hold(edges.select($"src", $"dst",
+          when($"w" < 0, raise_error(lit(
+            "negative edge weight: Sssp requires non-negative weights")))
+            .otherwise($"w".cast("long")).as("w"))
+        .repartition($"src")
+        // local checkpoint, not persist: no columnar decode on the
+        // per-round reads (r17 loop-residency doctrine; see PageRank)
+        .localCheckpoint(false))
 
-    val e = edges.select($"src", $"dst",
-        when($"w" < 0, raise_error(lit(
-          "negative edge weight: Sssp requires non-negative weights")))
-          .otherwise($"w".cast("long")).as("w"))
-      .repartition($"src")
-      // local checkpoint, not persist: no columnar decode on the
-      // per-round reads (r17 loop-residency doctrine; see PageRank)
-      .localCheckpoint(false)
+      // lazy: round 1's jobs materialize it
+      val init = Seq(source).toDF("id").select($"id", lit(0L).as("dist"))
+        .localCheckpoint(false)
+      var frontier = init
+      var frontierRows = 1L
+      val capError = if (boundedHops) null else
+        s"SSSP did not converge in ${cfg.maxIterations} rounds — raise " +
+          "maxIterations (Bellman-Ford needs at most |V|-1)"
 
-    var state = Seq(source).toDF("id").select($"id", lit(0L).as("dist"))
-      .localCheckpoint(true)
-    var frontier = state
-    var frontierRows = 1L
-    var iter = 0
-    var stateTruncated = true // round-0 state is an eager checkpoint
-    val toUnpersist = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      bsp.rounds(init, cfg.maxIterations, capError) { (state, _) =>
+        val f0 =
+          if (frontierRows <= cfg.broadcastFrontierRows) broadcast(frontier)
+          else frontier
+        val candidates = f0.as("f").join(e.as("e"), col("f.id") === col("e.src"))
+          .select(col("e.dst").as("id"), (col("f.dist") + col("e.w")).as("dist"),
+            lit(false).as("old"))
 
-    while (frontierRows > 0 && iter < cfg.maxIterations) {
-      iter += 1
-      val tRound = System.nanoTime()
-      val f0 =
-        if (frontierRows <= cfg.broadcastFrontierRows) broadcast(frontier)
-        else frontier
-      val candidates = f0.as("f").join(e.as("e"), col("f.id") === col("e.src"))
-        .select(col("e.dst").as("id"), (col("f.dist") + col("e.w")).as("dist"),
-          lit(false).as("old"))
-
-      // ONE exchange merges state and relaxations AND detects
-      // improvement: newDist = min over both, oldDist = min over the
-      // previous state only — improved iff newDist < oldDist (or the
-      // vertex is newly reached). Both aggregates are plain mins on
-      // primitive buffers: the chain stays HashAggregate/codegen.
-      var merged = state.select($"id", $"dist", lit(true).as("old"))
-        .union(candidates)
-        .groupBy($"id")
-        .agg(min($"dist").as("dist"),
-          min(when($"old", $"dist")).as("old_dist"))
-      // lazy: the frontier count materializes the checkpoint in the
-      // same job (the Bfs round fuse)
-      stateTruncated = iter % cfg.checkpointInterval == 0
-      merged =
-        if (stateTruncated) merged.localCheckpoint(false)
-        else merged.persist(StorageLevel.MEMORY_AND_DISK)
-
-      frontier = merged
-        .filter($"old_dist".isNull || $"dist" < $"old_dist")
-        .select($"id", $"dist")
-      frontierRows = frontier.count()
-      System.err.println(
-        f"[sssp] round $iter improved=$frontierRows " +
-          f"${(System.nanoTime() - tRound) / 1e9}%.2fs")
-
-      toUnpersist += state
-      state = merged.select($"id", $"dist")
+        // ONE exchange merges state and relaxations AND detects
+        // improvement: newDist = min over both, oldDist = min over the
+        // previous state only — improved iff newDist < oldDist (or the
+        // vertex is newly reached). Both aggregates are plain mins on
+        // primitive buffers: the chain stays HashAggregate/codegen.
+        state.select($"id", $"dist", lit(true).as("old"))
+          .union(candidates)
+          .groupBy($"id")
+          .agg(min($"dist").as("dist"),
+            min(when($"old", $"dist")).as("old_dist"))
+      } { (merged, _) =>
+        frontier = merged
+          .filter($"old_dist".isNull || $"dist" < $"old_dist")
+          .select($"id", $"dist")
+        frontierRows = frontier.count()
+        Bsp.Probe(frontierRows == 0, s"improved=$frontierRows")
+      }.select($"id", $"dist")
     }
-    toUnpersist.foreach(_.unpersist(false))
-    // free e only when the returned state's lineage is truncated (last
-    // round checkpointed) — a persist()-round result recomputes through
-    // e on block loss, and freeing e would make that eviction fatal;
-    // otherwise leave e to the harness sweep (r17 ADVICE, as in Bfs)
-    if (stateTruncated) GraphOps.releaseCheckpointedFrame(e)
-    if (frontierRows > 0 && !boundedHops) throw new IllegalStateException(
-      s"SSSP did not converge in ${cfg.maxIterations} rounds — raise " +
-        "maxIterations (Bellman-Ford needs at most |V|-1)")
-    state
   }
 }

@@ -60,11 +60,10 @@ class BfsSpec extends AnyFunSuite with SparkTestBase {
     assert(result.toSeq == Seq((99L, 0L)))
   }
 
-  test("checkpoint interval does not change results (deep graph)") {
-    // path graph 0-1-2-...-14: 15 rounds, crosses checkpointInterval
+  test("deep graph: a 15-round chain under the default config") {
+    // path graph 0-1-2-...-14: 15 rounds, each one checkpointed
     val chain = (0L until 14L).map(i => (i, i + 1))
-    val result = Bfs.run(GraphOps.symmetrize(edgesDf(chain)), 0L,
-        Bfs.Config(checkpointInterval = 3))
+    val result = Bfs.run(GraphOps.symmetrize(edgesDf(chain)), 0L)
       .as[(Long, Long)].collect().sortBy(_._1)
     assert(result.toSeq == (0L to 14L).map(i => (i, i)))
   }

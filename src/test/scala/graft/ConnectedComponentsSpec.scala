@@ -92,4 +92,19 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
       .as[(Long, Long)].collect()
     assert(got.forall(_._2 == 0L) && got.length == 21)
   }
+
+  test("run throws when the round cap is hit, and leaks nothing") {
+    // a 200-vertex chain needs ~200 propagation rounds; Dedup's
+    // near-dup clustering falls back to star contraction on exactly
+    // this IllegalStateException
+    val chain = (0L until 199L).map(i => (i, i + 1))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val ex = intercept[IllegalStateException] {
+      ConnectedComponents.run(
+        GraphOps.symmetrize(chain.toDF("src", "dst")), maxIterations = 20)
+    }
+    assert(ex.getMessage.contains("did not converge in 20 rounds"))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"leaked persisted RDDs after the throw: $leaked")
+  }
 }

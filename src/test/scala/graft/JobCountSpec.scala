@@ -3,9 +3,10 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Bfs, GraphOps}
+import graft.operators.{Bfs, ConnectedComponents, GraphOps, KCore, Sssp}
 
 /** Institutionalizes the r17 one-job-per-round discipline: every BSP
   * round's lazy localCheckpoint is materialized by the SAME job that
@@ -72,5 +73,61 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
         "before the frontier count adds a job per round")
     assert(jobs >= 6, s"suspiciously few jobs ($jobs) — did the " +
       "convergence probe stop running per round?")
+  }
+
+  // The three loops below pin their whole-call job count on a small
+  // fixture. Budgets are the counts measured on this fixture with one
+  // job of slack, and every fixture runs more rounds than that slack:
+  // a loop that starts paying one extra job per round (an eager
+  // checkpoint before its probe, a second probe) trips its pin.
+
+  // measured before the loops moved onto the shared round driver:
+  // Sssp 18, ConnectedComponents 19, KCore 34 (the collect included)
+  private val SsspBudget = 19
+  private val CcBudget = 20
+  private val KCoreBudget = 35
+
+  /** 0 - 1 - ... - 7 symmetrized, plus the triangle 10 - 11 - 12. */
+  private def chainAndTriangle = GraphOps.symmetrize(
+    ((0L until 7L).map(i => (i, i + 1)) ++
+      Seq((10L, 11L), (11L, 12L), (12L, 10L))).toDF("src", "dst"))
+
+  private def pinned(name: String, rounds: Int, budget: Int)(
+      f: => Unit): Unit = {
+    f // warm once so codegen/planning one-offs don't ride the counter
+    val jobs = countJobs(f)
+    assert(jobs <= budget,
+      s"$name ($rounds rounds) submitted $jobs jobs — budget $budget; " +
+        "a loop change added work per round")
+    assert(jobs >= rounds, s"suspiciously few jobs ($jobs) for $name — " +
+      "did the per-round probe stop running?")
+  }
+
+  test("Sssp.run job count is pinned (chain: 8 rounds)") {
+    // unit weights from 0 along the chain: 7 improving rounds and the
+    // empty 8th; per round the fused checkpoint+count job and the
+    // broadcast build of the frontier
+    val edges = chainAndTriangle.withColumn("w", lit(1L))
+    pinned("Sssp.run", rounds = 8, budget = SsspBudget) {
+      Sssp.run(edges, 0L).collect()
+    }
+  }
+
+  test("ConnectedComponents.run job count is pinned (chain: 8 rounds)") {
+    // labels need 7 rounds to cross the chain, and the 8th sees the
+    // checksum unchanged
+    pinned("ConnectedComponents.run", rounds = 8, budget = CcBudget) {
+      ConnectedComponents.run(chainAndTriangle).collect()
+    }
+  }
+
+  test("KCore.peel job count is pinned (chain peels: 5 rounds)") {
+    // k = 2 peels the chain from both ends, two vertices a round, until
+    // the triangle alone survives (round 4) and round 5 sees the edge
+    // count unchanged. AQE stays on here, so each round's exchanges are
+    // their own jobs.
+    pinned("KCore.peel", rounds = 5, budget = KCoreBudget) {
+      KCore.peel(chainAndTriangle, 2).collect()
+    }
   }
 }

@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.GraphOps
+import graft.operators._
 
 /** Gates the r18 release contract: `releaseCheckpointedFrame` accepts
   * ONLY flat checkpoint handles. The hazard it makes impossible: the
@@ -49,5 +51,47 @@ class ReleaseContractSpec extends AnyFunSuite with SparkTestBase {
     assert(!GraphOps.isFlatCheckpoint(ckpt.select(col("id") + 1)))
     assert(!GraphOps.isFlatCheckpoint(spark.range(0, 4).toDF("id")))
     GraphOps.releaseCheckpointedFrame(ckpt)
+  }
+
+  /** Ids of the persisted RDDs a frame's plan reads directly: the
+    * blocks that must outlive the call that returned it. */
+  private def ownBlocks(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }
+      .toSet.intersect(spark.sparkContext.getPersistentRDDs.keySet)
+
+  test("every BSP loop leaves only its result's own blocks persisted") {
+    import spark.implicits._
+    // a chain (peels away under k = 2; 7 hops deep) and a triangle
+    val edges = GraphOps.symmetrize(
+      ((0L until 7L).map(i => (i, i + 1)) ++
+        Seq((10L, 11L), (11L, 12L), (12L, 10L))).toDF("src", "dst"))
+    val weighted = edges.withColumn("w", lit(1L))
+    val cases: Seq[(String, () => DataFrame)] = Seq(
+      "Bfs.runMulti" -> (() => Bfs.runMulti(edges, Seq(0L, 10L))),
+      "Sssp.run" -> (() => Sssp.run(weighted, 0L)),
+      "Sssp.runBounded" -> (() => Sssp.runBounded(weighted, 0L, 3)),
+      "ConnectedComponents.run" -> (() => ConnectedComponents.run(edges)),
+      "ConnectedComponents.runStarContraction" ->
+        (() => ConnectedComponents.runStarContraction(edges)),
+      "LabelPropagation.run" -> (() => LabelPropagation.run(edges, 3)),
+      "KCore.peel" -> (() => KCore.peel(edges, 2)),
+      "KCore.peelBounded" -> (() => KCore.peelBounded(edges, 2, 2)),
+      "PageRank.run" -> (() => PageRank.run(edges, 3)),
+      "PageRank.personalized" ->
+        (() => PageRank.personalized(edges, Seq(0L), 3)))
+    val leaks = cases.flatMap { case (name, op) =>
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val out = op()
+      out.collect()
+      val grown = sc.getPersistentRDDs.keySet -- before
+      val own = ownBlocks(out)
+      grown.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
+      if (grown == own) None
+      else Some(s"$name left ${(grown -- own).size} superseded RDD(s) " +
+        s"persisted (grew by ${grown.toSeq.sorted}, result reads " +
+        s"${own.toSeq.sorted})")
+    }
+    assert(leaks.isEmpty, leaks.mkString("; "))
   }
 }

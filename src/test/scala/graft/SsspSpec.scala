@@ -50,13 +50,27 @@ class SsspSpec extends AnyFunSuite with SparkTestBase {
 
   test("negative weight fails loudly inside the job") {
     val e = Seq((0L, 1L, -1L))
-    val ex = intercept[Exception] {
-      Sssp.run(df(e), 0L).collect()
-    }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x =>
         Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(ex).exists(_.contains("negative edge weight")))
+    // A driver-local input folds the guard at planning time; an
+    // RDD-backed one reaches it inside a task, after the edge table
+    // and the round-0 state are staged.
+    val inputs = Seq("local" -> (() => df(e)),
+      "rdd-backed" -> (() => spark.sparkContext.parallelize(e, 2)
+        .toDF("src", "dst", "w")))
+    for ((name, input) <- inputs) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val ex = intercept[Exception] {
+        Sssp.run(input(), 0L).collect()
+      }
+      assert(messages(ex).exists(_.contains("negative edge weight")), name)
+      // the throw left nothing behind: not the staged edge table, not
+      // any round's state
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"$name: leaked persisted RDDs after the " +
+        s"throw: $leaked")
+    }
   }
 
   private val graphGen: Gen[(Seq[(Long, Long, Long)], Long)] = for {
