@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.operators.{Bfs, GraphOps, MetricsSink}
@@ -65,6 +65,12 @@ object BfsApp {
       }
     }.getOrElse(default)
 
+  /** Whether `source` is a vertex of the SYMMETRIZED edge table: there
+    * every endpoint appears as a `src`, so a filtered scan answers it —
+    * no `vertices` distinct, no shuffle. */
+  private[graft] def hasSource(edges: DataFrame, source: Long): Boolean =
+    !edges.filter(col("src") === source).isEmpty
+
   def main(args: Array[String]): Unit = {
     val opts =
       try parseArgs(args)
@@ -90,7 +96,7 @@ object BfsApp {
     val edges = GraphOps.symmetrize(EdgeListSource.load(spark, path))
     // a seed outside the graph would silently vanish from the
     // vertices(edges)-driven report — fail like argparse would
-    if (GraphOps.vertices(edges).filter(col("id") === source).isEmpty) {
+    if (!hasSource(edges, source)) {
       System.err.println(s"source vertex $source does not appear in $path")
       sys.exit(2)
     }

@@ -54,6 +54,14 @@ class BfsSpec extends AnyFunSuite with SparkTestBase {
     assert(full.filter(_._2.isEmpty).forall(_._3 == "WHITE"))
   }
 
+  test("BfsApp source check on tinyG: a dst-only id is present, 99 is not") {
+    val sym = GraphOps.symmetrize(edgesDf(tinyG))
+    // 12 is never a src in tinyG's list; symmetrize makes it one
+    assert(!tinyG.exists(_._1 == 12L))
+    assert(BfsApp.hasSource(sym, 12L))
+    assert(!BfsApp.hasSource(sym, 99L))
+  }
+
   test("source with no edges returns just the source") {
     val result = Bfs.run(GraphOps.symmetrize(edgesDf(tinyG)), 99L)
       .as[(Long, Long)].collect()

@@ -53,6 +53,13 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
     Files.delete(f)
   }
 
+  test("vertices keeps dst-only vertices of a directed table") {
+    // 3 and 5 appear only as dst: a distinct over src alone loses them
+    val e = Seq((1L, 2L), (2L, 3L), (4L, 3L), (4L, 5L)).toDF("src", "dst")
+    val vs = GraphOps.vertices(e).as[Long].collect()
+    assert(vs.sorted.toSeq == Seq(1L, 2L, 3L, 4L, 5L))
+  }
+
   test("clusteringCoefficients: triangle+pendant and K4; agrees with " +
        "triangleCount") {
     // triangle {1,2,3} + pendant edge (3,4)

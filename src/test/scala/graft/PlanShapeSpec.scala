@@ -2,7 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.catalyst.expressions.StringSplit
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
 /** Physical-plan regression guard for the engineered plan shapes.
@@ -844,6 +846,41 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     assert(plan.collect { case f: FileSourceScanExec => f }.isEmpty,
       s"a consumer re-scans the corpus past the pin:\n$plan")
     graft.operators.Redaction.releaseCaches()
+  }
+
+  /** Runs `df`, then walks its executed plan through the AQE stages. */
+  private object Executed extends AdaptiveSparkPlanHelper {
+    def plan(df: DataFrame): SparkPlan = { df.collect(); df.queryExecution.executedPlan }
+    def fileScans(df: DataFrame): Seq[FileSourceScanExec] =
+      collect(plan(df)) { case s: FileSourceScanExec => s }
+  }
+
+  test("edge-list text is scanned once per vertices / withUnreachable, " +
+      "and parsed without a regex split") {
+    import graft.operators.{Bfs, GraphOps}
+    // tinyG plus a component {13, 14} that BFS from 0 cannot reach
+    val f = java.nio.file.Files.createTempFile("edges", ".txt")
+    java.nio.file.Files.writeString(f, Seq("0 5", "4 3", "0 1", "9 12",
+      "6 4", "5 4", "0 2", "11 12", "9 10", "0 6", "5 3", "0 7", "7 8",
+      "9 11", "0 9", "13 14").mkString("", "\n", "\n"))
+    try {
+      val edges = GraphOps.symmetrize(
+        graft.sources.EdgeListSource.load(spark, f.toString))
+      val vs = GraphOps.vertices(edges)
+      assert(Executed.fileScans(vs).size == 1,
+        s"vertices re-reads the text:\n${Executed.plan(vs)}")
+      val full = Bfs.withUnreachable(Bfs.run(edges, 0L), edges)
+      assert(Executed.fileScans(full).size == 1,
+        s"withUnreachable re-reads the text:\n${Executed.plan(full)}")
+      assert(full.filter("dist IS NULL").count() == 2)
+      val ingest = Executed.plan(edges)
+      val splits = Executed.flatMap(ingest)(_.expressions)
+        .filter(_.exists(_.isInstanceOf[StringSplit]))
+      assert(splits.isEmpty, s"the ingest projection splits by regex: $splits")
+      assert(Executed.collect(ingest) { case w: WholeStageCodegenExec => w }
+          .exists(_.child.exists(_.isInstanceOf[GenerateExec])),
+        s"the line parser fell out of whole-stage codegen:\n$ingest")
+    } finally java.nio.file.Files.delete(f)
   }
 
 }
