@@ -102,7 +102,10 @@ private[operators] object Bsp {
       (state, done)
     }
 
-    private def release(df: DataFrame): Unit = {
+    /** Drop `df` from the held set now, releasing its blocks if it is
+      * a flat checkpoint handle — for a frame the loop no longer needs
+      * before it ends. */
+    def release(df: DataFrame): Unit = {
       held -= df
       if (GraphOps.isFlatCheckpoint(df)) GraphOps.releaseCheckpointedFrame(df)
     }

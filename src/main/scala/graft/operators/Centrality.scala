@@ -42,79 +42,67 @@ object Centrality {
     * co-partitioned edge table and min-merges in one exchange.
     * Total exchanged rows are identical to the sequential form, but
     * rounds = max ecc(pivot) instead of Σ ecc — both the driver job
-    * count and the number of edge-table passes drop k-fold. Same
-    * per-round discipline as [[Bfs]]: lazy localCheckpoint fused with
-    * the frontier count, broadcast-while-small frontier, AQE off
-    * (fixed-shape rounds over the pre-partitioned table). */
+    * count and the number of edge-table passes drop k-fold. The rounds
+    * run on [[Bsp]] in the [[Bfs.runMulti]] shape: lazy checkpoint
+    * fused with the frontier count, broadcast-while-small frontier,
+    * AQE off (fixed-shape rounds over the pre-partitioned table). No
+    * round cap: every round's frontier holds only pairs first reached
+    * that round, so the loop ends within max ecc(pivot) + 1 rounds,
+    * and a cap would silently truncate distances. */
   def pivotHarmonic(edges: DataFrame, pivots: Seq[Long]): DataFrame = {
     require(pivots.nonEmpty, "need at least one pivot")
     require(pivots.distinct.size == pivots.size, s"duplicate pivots: $pivots")
-    GraphOps.withLoopAqeDisabled(edges.sparkSession) {
-      runPivotHarmonic(edges, pivots)
-    }
-  }
-
-  private def runPivotHarmonic(edges: DataFrame, pivots: Seq[Long]): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // vertex universe: on a symmetrized table `src` alone covers every
-    // endpoint — one distinct pass
-    val verts = edges.select($"src".as("id")).distinct()
-    // local checkpoint, not persist: no columnar decode on the
-    // per-round reads (r17 loop-residency doctrine; see PageRank)
-    val e = edges.select($"src", $"dst")
-      .repartition($"src")
-      .localCheckpoint(false)
-    val bcGate = 4000000L
-    // NOTE (r20, measured negative result — don't retry): replacing
-    // this union-merge with an all-pairs (pivot, vertex) state and a
-    // partition-aligned left join (the shape that removes the state
-    // from the per-round exchange) read 4.49 → 5.69s / CPU 57 → 98 on
-    // the closeness face at sf0.1 — the k·|V| join probe per round
-    // costs more than the state's share of the union exchange saves
-    // at bench scale. Same verdict on Bfs/Sssp/CC (see
-    // OPTIMIZATION_r20.md).
-    var state = pivots.zipWithIndex
-      .map { case (p, i) => (i.toLong, p) }.toDF("pv", "id")
-      .select($"pv", $"id", lit(0L).as("dist"))
-      .localCheckpoint(false)
-    var frontier = state
-    var frontierRows = pivots.size.toLong
-    var iter = 0
-    val toRelease = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    while (frontierRows > 0) {
-      iter += 1
-      val tRound = System.nanoTime()
-      val f0 = if (frontierRows <= bcGate) broadcast(frontier) else frontier
-      val cand = f0.as("f").join(e.as("e"), col("f.id") === col("e.src"))
-        .select(col("f.pv"), col("e.dst").as("id"),
-          (col("f.dist") + 1L).as("dist"))
-      val newState = state.union(cand)
-        .groupBy($"pv", $"id").agg(min($"dist").as("dist"))
+    Bsp.loop("harmonic", spark, aqeOff = true) { bsp =>
+      // vertex universe: on a symmetrized table `src` alone covers every
+      // endpoint — one distinct pass
+      val verts = edges.select($"src".as("id")).distinct()
+      // local checkpoint, not persist: no columnar decode on the
+      // per-round reads (r17 loop-residency doctrine; see PageRank)
+      val e = bsp.hold(edges.select($"src", $"dst")
+        .repartition($"src")
+        .localCheckpoint(false))
+      val bcGate = 4000000L
+      // NOTE (r20, measured negative result — don't retry): replacing
+      // this union-merge with an all-pairs (pivot, vertex) state and a
+      // partition-aligned left join (the shape that removes the state
+      // from the per-round exchange) read 4.49 → 5.69s / CPU 57 → 98 on
+      // the closeness face at sf0.1 — the k·|V| join probe per round
+      // costs more than the state's share of the union exchange saves
+      // at bench scale. Same verdict on Bfs/Sssp/CC (see
+      // OPTIMIZATION_r20.md).
+      val init = pivots.zipWithIndex
+        .map { case (p, i) => (i.toLong, p) }.toDF("pv", "id")
+        .select($"pv", $"id", lit(0L).as("dist"))
         .localCheckpoint(false)
-      frontier = newState.filter($"dist" === iter)
-      frontierRows = frontier.count()
-      System.err.println(
-        f"[harmonic] round $iter frontier=$frontierRows " +
-          f"${(System.nanoTime() - tRound) / 1e9}%.2fs")
-      toRelease += state
-      state = newState
+      var frontier = init
+      var frontierRows = pivots.size.toLong
+      val dists = bsp.rounds(init, Int.MaxValue) { (state, _) =>
+        val f0 = if (frontierRows <= bcGate) broadcast(frontier) else frontier
+        val cand = f0.as("f").join(e.as("e"), col("f.id") === col("e.src"))
+          .select(col("f.pv"), col("e.dst").as("id"),
+            (col("f.dist") + 1L).as("dist"))
+        state.union(cand).groupBy($"pv", $"id").agg(min($"dist").as("dist"))
+      } { (next, round) =>
+        frontier = next.filter($"dist" === round)
+        frontierRows = frontier.count()
+        Bsp.Probe(frontierRows == 0, s"frontier=$frontierRows")
+      }
+      // widen to the per-pivot distance columns the sequential form
+      // emitted — one |pivots|·|V| exchange keyed on id
+      val aggs = pivots.indices.map(i =>
+        max(when($"pv" === i, $"dist")).as(s"dist_$i"))
+      val wide = dists.groupBy($"id").agg(aggs.head, aggs.tail: _*)
+      val joined = verts.join(wide, Seq("id"), "left")
+      val harmonic = pivots.indices
+        .map(i => when(col(s"dist_$i") > 0, lit(1.0) / col(s"dist_$i"))
+          .otherwise(lit(0.0)))
+        .reduce(_ + _)
+      joined.select(
+        (col("id") +: pivots.indices.map(i => col(s"dist_$i"))) :+
+          harmonic.as("harmonic"): _*)
     }
-    toRelease.foreach(GraphOps.releaseCheckpointedFrame(_))
-    GraphOps.releaseCheckpointedFrame(e)
-    // widen to the per-pivot distance columns the sequential form
-    // emitted — one |pivots|·|V| exchange keyed on id
-    val aggs = pivots.indices.map(i =>
-      max(when($"pv" === i, $"dist")).as(s"dist_$i"))
-    val wide = state.groupBy($"id").agg(aggs.head, aggs.tail: _*)
-    val joined = verts.join(wide, Seq("id"), "left")
-    val harmonic = pivots.indices
-      .map(i => when(col(s"dist_$i") > 0, lit(1.0) / col(s"dist_$i"))
-        .otherwise(lit(0.0)))
-      .reduce(_ + _)
-    joined.select(
-      (col("id") +: pivots.indices.map(i => col(s"dist_$i"))) :+
-        harmonic.as("harmonic"): _*)
   }
 
   /** Register count, per-register value cap, and the shared

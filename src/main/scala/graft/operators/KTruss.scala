@@ -19,15 +19,14 @@ import org.apache.spark.sql.functions._
   * exchange keyed on (lo, hi) — 3·|triangles| rows, the inherent
   * output size of support counting. No all-pairs anywhere.
   *
-  * Loop discipline (the [[KCore]] peel contract): the edge set
-  * shrinks monotonically so AQE stays ON (the shrinking-frame
-  * doctrine — near-empty late exchanges would otherwise write full
-  * scan-sized shuffle-file sets); per round one lazy localCheckpoint
-  * fused with the edge-count convergence probe; superseded round
-  * frames release their blocks in-loop. Support is monotone
+  * Loop discipline (the [[KCore]] peel contract): the rounds run on
+  * [[Bsp]] with AQE ON — the edge set shrinks monotonically (the
+  * shrinking-frame doctrine: near-empty late exchanges would
+  * otherwise write full scan-sized shuffle-file sets); [[Bsp]]
+  * checkpoints each round lazily under the fused convergence probe
+  * and releases superseded rounds. Support is monotone
   * non-increasing under edge deletion, so peeling is confluent and
-  * "no edge removed" (equal edge count — removals are the only
-  * transition) is a valid fixpoint test.
+  * "no edge below threshold" is a valid fixpoint test.
   *
   * Stats firewall: [[supports]] derives degree, orientation and TWO
   * adjacency join probes from the round's checkpointed state — a
@@ -107,55 +106,44 @@ object KTruss {
   def truss(edges: DataFrame, k: Int, maxRounds: Int = 64): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     require(maxRounds > 0)
-    runTruss(edges, k, maxRounds)
-  }
-
-  private def runTruss(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // Loop state carries (lo, hi, sup): sup is computed ON the state's
-    // own edge set, so the fixpoint frame IS the final report — no
-    // extra triangle pass. The probe is fused (one job materializes
-    // the lazy checkpoint AND reads both counts) and asks "how many
-    // edges are BELOW threshold" — zero means the state is the truss,
-    // so the converging run never pays a support pass on an unchanged
-    // set (a count-equality probe would detect the fixpoint one full
-    // pass later).
-    def probe(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        coalesce(sum(when($"sup" < k - 2, 1L).otherwise(0L)), lit(0L)))
-        .as[(Long, Long)].head()
-      r
+    Bsp.loop("ktruss", spark, aqeOff = false) { bsp =>
+      // round-0 canonical set: eager checkpoint — supports() consumes its
+      // input four ways (deg's two union branches, oriented, the final
+      // left join), and the raw distinct-over-scan re-ran per consumer
+      // (r21; later rounds already read the cheap filter over the
+      // previous round's checkpoint blocks). Seeded with sup = k - 2, so
+      // round 1 keeps every edge and is the first support pass.
+      val canon0 = edges.filter($"src" =!= $"dst")
+        .select(least($"src", $"dst").cast("long").as("lo"),
+          greatest($"src", $"dst").cast("long").as("hi"))
+        .distinct()
+        .select($"lo", $"hi", lit(k - 2L).as("sup"))
+        .localCheckpoint(true)
+      // Loop state carries (lo, hi, sup): sup is computed ON the state's
+      // own edge set, so the fixpoint frame IS the final report — no
+      // extra triangle pass. The probe is fused (one job materializes
+      // the lazy checkpoint AND reads both counts) and asks "how many
+      // edges are BELOW threshold" — zero means the state is the truss,
+      // so the converging run never pays a support pass on an unchanged
+      // set (a count-equality probe would detect the fixpoint one full
+      // pass later). Round 1 is the support pass over canon0, so the
+      // cap is maxRounds peel rounds after it.
+      bsp.rounds(canon0, maxRounds + 1,
+        s"k-truss(k=$k) did not converge within $maxRounds " +
+          "rounds") { (e, round) =>
+        // round 1 reads canon0 as is: its stats are the distinct's own,
+        // not compounded, and the firewall's rebuilt frame cost 3 more
+        // jobs on the JobCountSpec fixture
+        val st = if (round == 1) e else GraphOps.freshStats(e)
+        supports(st.filter($"sup" >= k - 2).select($"lo", $"hi"))
+      } { (next, _) =>
+        val (ne, nf) = next.agg(count(lit(1)),
+          coalesce(sum(when($"sup" < k - 2, 1L).otherwise(0L)), lit(0L)))
+          .as[(Long, Long)].head()
+        Bsp.Probe(nf == 0, s"edges=$ne below=$nf")
+      }.select($"lo".as("src"), $"hi".as("dst"), $"sup".as("support"))
     }
-    // round-0 canonical set: eager checkpoint — supports() consumes its
-    // input four ways (deg's two union branches, oriented, the final
-    // left join), and the raw distinct-over-scan re-ran per consumer
-    // (r21; later rounds already read the cheap filter over the
-    // previous round's checkpoint blocks)
-    val canon0 = edges.filter($"src" =!= $"dst")
-      .select(least($"src", $"dst").cast("long").as("lo"),
-        greatest($"src", $"dst").cast("long").as("hi"))
-      .distinct()
-      .localCheckpoint(true)
-    var e = supports(canon0).localCheckpoint(false)
-    var (nEdges, failing) = probe(e)
-    GraphOps.releaseCheckpointedFrame(canon0)
-    var round = 0
-    while (round < maxRounds && failing > 0) {
-      round += 1
-      val tRound = System.nanoTime()
-      val kept = GraphOps.freshStats(e).filter($"sup" >= k - 2)
-      val next = supports(kept.select($"lo", $"hi")).localCheckpoint(false)
-      val (ne, nf) = probe(next)
-      GraphOps.releaseCheckpointedFrame(e)
-      e = next
-      nEdges = ne
-      failing = nf
-      System.err.println(f"[ktruss] round $round edges=$ne below=$nf " +
-        f"${(System.nanoTime() - tRound) / 1e9}%.2fs")
-    }
-    if (failing > 0) throw new IllegalStateException(
-      s"k-truss(k=$k) did not converge within $maxRounds rounds")
-    e.select($"lo".as("src"), $"hi".as("dst"), $"sup".as("support"))
   }
 }

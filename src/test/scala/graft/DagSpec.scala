@@ -41,10 +41,13 @@ class DagSpec extends AnyFunSuite with SparkTestBase {
 
   test("a cycle fails loudly at the round cap instead of hanging") {
     val edges = Seq[(Long, Long)]((1L, 2L), (2L, 3L), (3L, 1L))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val e = intercept[IllegalStateException] {
       Dag.longestPathLayers(edges.toDF("src", "dst"), maxRounds = 8)
     }
     assert(e.getMessage.contains("cycle"), e.getMessage)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"leaked persisted RDDs after the throw: $leaked")
   }
 
   test("empty edge table returns an empty layering") {

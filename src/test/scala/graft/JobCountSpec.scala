@@ -6,7 +6,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Bfs, ConnectedComponents, GraphOps, KCore, Sssp}
+import graft.operators.{Bfs, Centrality, ConnectedComponents, Dag, GraphOps,
+  KCore, KTruss, Scc, Sssp}
 
 /** Institutionalizes the r17 one-job-per-round discipline: every BSP
   * round's lazy localCheckpoint is materialized by the SAME job that
@@ -75,7 +76,7 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
       "convergence probe stop running per round?")
   }
 
-  // The three loops below pin their whole-call job count on a small
+  // The loops below pin their whole-call job count on a small
   // fixture. Budgets are the counts measured on this fixture with one
   // job of slack, and every fixture runs more rounds than that slack:
   // a loop that starts paying one extra job per round (an eager
@@ -86,6 +87,22 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
   private val SsspBudget = 19
   private val CcBudget = 20
   private val KCoreBudget = 35
+  // measured before these loops moved onto the shared round driver:
+  // Dag 38, KTruss 25-26, Scc 45, pivotHarmonic 20. Dag's budget also
+  // drops the pre-loop checksum and isEmpty jobs the driver form no
+  // longer runs (it measures 35 there). KTruss's fixture converges in 2
+  // rounds, so its pin trips on an extra job per round only when the
+  // call lands at the high end of its 25-26 spread.
+  private val DagBudget = 37
+  private val KTrussBudget = 27
+  private val SccBudget = 46
+  private val HarmonicBudget = 21
+
+  /** The triangle 10 -> 11 -> 12 -> 10 and the chain 0 -> ... -> 7,
+    * directed. */
+  private def directedChainAndTriangle =
+    ((0L until 7L).map(i => (i, i + 1)) ++
+      Seq((10L, 11L), (11L, 12L), (12L, 10L))).toDF("src", "dst")
 
   /** 0 - 1 - ... - 7 symmetrized, plus the triangle 10 - 11 - 12. */
   private def chainAndTriangle = GraphOps.symmetrize(
@@ -128,6 +145,41 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
     // their own jobs.
     pinned("KCore.peel", rounds = 5, budget = KCoreBudget) {
       KCore.peel(chainAndTriangle, 2).collect()
+    }
+  }
+
+  test("Dag.longestPathLayers job count is pinned (chain: 8 rounds)") {
+    // layer 7 reaches the chain's end in round 7; round 8 sees the
+    // checksum unchanged
+    val chain = (0L until 7L).map(i => (i, i + 1)).toDF("src", "dst")
+    pinned("Dag.longestPathLayers", rounds = 8, budget = DagBudget) {
+      Dag.longestPathLayers(chain).collect()
+    }
+  }
+
+  test("KTruss.truss job count is pinned (k = 3: 2 rounds)") {
+    // round 1 supports the whole graph (the chain edges close no
+    // triangle); round 2 supports the triangle alone and finds no
+    // edge below k - 2
+    pinned("KTruss.truss", rounds = 2, budget = KTrussBudget) {
+      KTruss.truss(chainAndTriangle, 3).collect()
+    }
+  }
+
+  test("Scc.run job count is pinned (one peel: 6 fixpoint rounds)") {
+    // one outer round assigns every vertex: the color fixpoint takes 3
+    // rounds (12 crosses the triangle), the reverse reach 3
+    pinned("Scc.run", rounds = 6, budget = SccBudget) {
+      Scc.run(directedChainAndTriangle).collect()
+    }
+  }
+
+  test("Centrality.pivotHarmonic job count is pinned (8 rounds)") {
+    // pivot 0 reaches the chain's end in round 7; round 8 sees both
+    // frontiers empty
+    pinned("Centrality.pivotHarmonic", rounds = 8,
+        budget = HarmonicBudget) {
+      Centrality.pivotHarmonic(chainAndTriangle, Seq(0L, 10L)).collect()
     }
   }
 }

@@ -80,8 +80,11 @@ class KTrussSpec extends AnyFunSuite with SparkTestBase {
 
   test("exceeding maxRounds throws instead of returning a partial truss") {
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     intercept[IllegalStateException] {
       truss(edges, k = 4, maxRounds = 1)
     }
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"leaked persisted RDDs after the throw: $leaked")
   }
 }

@@ -78,7 +78,14 @@ class ReleaseContractSpec extends AnyFunSuite with SparkTestBase {
       "KCore.peelBounded" -> (() => KCore.peelBounded(edges, 2, 2)),
       "PageRank.run" -> (() => PageRank.run(edges, 3)),
       "PageRank.personalized" ->
-        (() => PageRank.personalized(edges, Seq(0L), 3)))
+        (() => PageRank.personalized(edges, Seq(0L), 3)),
+      "Dag.longestPathLayers" ->
+        (() => Dag.longestPathLayers(
+          (0L until 7L).map(i => (i, i + 1)).toDF("src", "dst"))),
+      "KTruss.truss" -> (() => KTruss.truss(edges, 3)),
+      "Scc.run" -> (() => Scc.run(edges)),
+      "Centrality.pivotHarmonic" ->
+        (() => Centrality.pivotHarmonic(edges, Seq(0L, 10L))))
     val leaks = cases.flatMap { case (name, op) =>
       val sc = spark.sparkContext
       val before = sc.getPersistentRDDs.keySet

@@ -118,6 +118,20 @@ class SccSpec extends AnyFunSuite with SparkTestBase {
     assert(engine(edges) == tarjan(edges))
   }
 
+  test("a fixpoint that hits its cap throws, and leaks nothing") {
+    // the reversed chain 7 -> 6 -> ... -> 0 carries color 7 one hop a
+    // round: the color fixpoint needs 8 rounds, the cap allows 2
+    val chain = (0L until 7L).map(i => (i + 1, i))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val ex = intercept[IllegalStateException] {
+      Scc.run(chain.toDF("src", "dst"), maxFixpoint = 2)
+    }
+    assert(ex.getMessage.contains("color fixpoint did not converge"),
+      ex.getMessage)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"leaked persisted RDDs after the throw: $leaked")
+  }
+
   test("a pure DAG decomposes into all-trivial SCCs") {
     val dag = Seq[(Long, Long)]((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L))
     val out = engine(dag)
