@@ -242,35 +242,13 @@ object Bench {
       if (line.startsWith("[") && !line.startsWith("[bench]"))
         bspLines.synchronized { bspLines += ((benchPhase, line)) }
     }), true))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // event-time queries cast TIMESTAMP_NTZ parquet via the session
-      // TZ — pin UTC so bench plans match Verify's exactly
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus)
     val runsPerQuery =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
-    // release per-query leftovers: operators persist intermediates, and
-    // clearCache() misses localCheckpoint blocks (RDD storage, not the
-    // SQL cache) — the iterative ops' results are checkpoint-backed.
-    // BLOCKING unpersist: async removal would run concurrently with
-    // (and distort) the next timed query. The per-operator
-    // releaseCaches() calls also drain the CachePinning queues, so the
-    // driver doesn't accumulate plan references across 46+ queries.
-    def release(): Unit = {
-      graft.operators.Dedup.releaseCaches(blocking = true)
-      graft.operators.Similarity.releaseCaches(blocking = true)
-      graft.operators.CorpusOps.releaseCaches(blocking = true)
-      graft.operators.Redaction.releaseCaches(blocking = true)
-      graft.operators.Distributions.releaseCaches(blocking = true)
-      graft.operators.Ranking.releaseCaches(blocking = true)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    }
+    // release per-query leftovers. BLOCKING unpersist: async removal
+    // would run concurrently with (and distort) the next timed query.
+    def release(): Unit =
+      graft.operators.CachePinning.releaseAll(spark, blocking = true)
     // sorted by name: Map iteration is hash-ordered, so adding a query
     // would otherwise reshuffle the whole run order between rounds and
     // make per-query times incomparable across BENCH_r{N}.json files

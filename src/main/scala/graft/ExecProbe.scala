@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Throwaway executed-plan capture (not registered, not shipped):
   * registers a QueryExecutionListener, builds ONE query (whose eager
   * checkpoints execute at construction), noop-writes it, and dumps
@@ -11,12 +10,7 @@ object ExecProbe {
     val name = args(0)
     val out = args(1)
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("32")
     val w = new java.io.PrintWriter(out, "UTF-8")
     val lock = new Object
     spark.listenerManager.register(

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Throwaway isolated-measure harness (not registered, not shipped):
   * times N noop runs of ONE query on a fresh JVM. */
 object IsoBench {
@@ -7,12 +6,7 @@ object IsoBench {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("32")
     // comma-separated names run in sequence (same JVM) — lets a
     // suite-context interaction be reproduced pairwise
     def cpuSec(): Double =
@@ -28,14 +22,7 @@ object IsoBench {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       println(f"[iso] $n run$i ${(System.nanoTime() - t0) / 1e9}%.2f " +
         f"cpu=${cpuSec() - c0}%.1f")
-      graft.operators.Dedup.releaseCaches(blocking = true)
-      graft.operators.Similarity.releaseCaches(blocking = true)
-      graft.operators.CorpusOps.releaseCaches(blocking = true)
-      graft.operators.Redaction.releaseCaches(blocking = true)
-      graft.operators.Distributions.releaseCaches(blocking = true)
-      graft.operators.Ranking.releaseCaches(blocking = true)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      graft.operators.CachePinning.releaseAll(spark, blocking = true)
     }
     spark.stop()
   }

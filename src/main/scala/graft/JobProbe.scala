@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 /** Throwaway job-level telemetry harness (not registered, not
@@ -19,14 +18,7 @@ object JobProbe {
             s"malformed extra-conf token '$kv' (expected key=value)")
         }
       } else Seq.empty
-    val b = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    extra.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("32", extra)
     val jobStart = mutable.Map.empty[Int, Long]
     val jobTasks = mutable.Map.empty[Int, Int]
     val jobRun = mutable.Map.empty[Int, Long]

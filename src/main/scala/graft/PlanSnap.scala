@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 /** Throwaway plan-capture harness (not registered, not shipped): writes
   * `.explain("formatted")` of each named query to a file — the
@@ -12,12 +11,7 @@ object PlanSnap {
     val suffix = args(1)
     val names = args(2).split(',').toSeq
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("32")
     new java.io.File(outDir).mkdirs()
     for (n <- names) {
       val df = SparkEntry.queries(n)(spark, sfDir)
@@ -28,14 +22,7 @@ object PlanSnap {
       System.err.println(s"[plandump] wrote $p")
       // iterative operators materialize loop state while building the
       // frame — release between queries like the other harnesses
-      graft.operators.Dedup.releaseCaches()
-      graft.operators.Similarity.releaseCaches()
-      graft.operators.CorpusOps.releaseCaches()
-      graft.operators.Redaction.releaseCaches()
-      graft.operators.Distributions.releaseCaches()
-      graft.operators.Ranking.releaseCaches()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      graft.operators.CachePinning.releaseAll(spark, blocking = false)
     }
     spark.stop()
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 /** Throwaway streaming-telemetry harness (not registered, not
   * shipped): runs ONE query with a StreamingQueryListener that prints
@@ -12,12 +11,7 @@ object StreamProbe {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 1
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("32")
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(
           e: StreamingQueryListener.QueryStartedEvent): Unit =
@@ -43,14 +37,7 @@ object StreamProbe {
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       println(f"[stream] $name run$i total ${(System.nanoTime() - t0) / 1e9}%.2f")
-      graft.operators.Dedup.releaseCaches(blocking = true)
-      graft.operators.Similarity.releaseCaches(blocking = true)
-      graft.operators.CorpusOps.releaseCaches(blocking = true)
-      graft.operators.Redaction.releaseCaches(blocking = true)
-      graft.operators.Distributions.releaseCaches(blocking = true)
-      graft.operators.Ranking.releaseCaches(blocking = true)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      graft.operators.CachePinning.releaseAll(spark, blocking = true)
     }
     spark.stop()
   }

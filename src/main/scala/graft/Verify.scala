@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,14 +12,7 @@ object Verify {
       case _ => sys.error(s"usage: Verify <sfDir> <outDir> [names]")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -31,16 +23,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // operators persist; isolate queries (incl. localCheckpoint
-      // blocks, which clearCache does not release). releaseCaches also
+      // blocks, which clearCache does not release). releaseAll also
       // drains the CachePinning queues (driver-side plan references).
-      graft.operators.Dedup.releaseCaches()
-      graft.operators.Similarity.releaseCaches()
-      graft.operators.CorpusOps.releaseCaches()
-      graft.operators.Redaction.releaseCaches()
-      graft.operators.Distributions.releaseCaches()
-      graft.operators.Ranking.releaseCaches()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      graft.operators.CachePinning.releaseAll(spark, blocking = false)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

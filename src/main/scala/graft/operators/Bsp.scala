@@ -26,7 +26,16 @@ import org.apache.spark.sql.execution.LogicalRDD
   * — staged edge tables and the live state — is released unless the
   * returned frame's plan reads it, and on an exception all of them
   * are. Only flat checkpoint handles own blocks here; a held frame
-  * that is not one (a derived init) is simply dropped. */
+  * that is not one (a derived init) is simply dropped.
+  *
+  * The loops it runs: [[Bfs]], [[Sssp]], [[ConnectedComponents]]
+  * (label propagation and star contraction), [[LabelPropagation]],
+  * [[KCore]], [[PageRank]] (global and personalized), [[Dag]],
+  * [[KTruss]], [[Scc]], [[Centrality.pivotHarmonic]],
+  * [[SpanningForest]] (rounds and pointer-doubling hops) and every
+  * [[Louvain]] entry point (move steps and levels). The lazy persist
+  * chains of [[RandomWalk]], [[Centrality.neighborhoodFunction]] and
+  * the betweenness sweeps still run their own loops. */
 private[operators] object Bsp {
 
   /** A round's probe result: has the loop converged, and a short note

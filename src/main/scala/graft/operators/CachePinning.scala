@@ -2,7 +2,7 @@ package graft.operators
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Cache-lifetime tracking for operator families that persist
   * intermediate DataFrames (quantized embeddings, signature
@@ -35,7 +35,8 @@ import org.apache.spark.sql.DataFrame
   *
   * Callers that never invoke releaseCaches leak strong DataFrame
   * references into the queue — the graft harnesses (Bench, Verify)
-  * drain it after every query. For columnar [[pin]]s the block
+  * drain every family's queue after every query through
+  * [[CachePinning.releaseAll]]. For columnar [[pin]]s the block
   * storage still frees via LRU or `clearCache()` (only the plan
   * objects stay driver-resident); [[pinCkpt]] blocks are RDD-layer
   * checkpoint storage, NOT CacheManager entries — they are not
@@ -46,6 +47,7 @@ import org.apache.spark.sql.DataFrame
 private[graft] trait CachePinning {
 
   private val pins = new ConcurrentLinkedQueue[DataFrame]()
+  CachePinning.families.add(this)
 
   /** Persist `df`, MATERIALIZE it, and remember the handle for
     * [[releaseCaches]].
@@ -138,4 +140,22 @@ private[graft] trait CachePinning {
     * a GC, making the leak permanent. Strong refs + an explicit drain
     * is the correct shape. */
   private[graft] def pinnedCount: Int = pins.size()
+}
+
+private[graft] object CachePinning {
+
+  /** Every pinning family, registered when its object initializes —
+    * one that never initialized has pinned nothing. */
+  private val families = new ConcurrentLinkedQueue[CachePinning]()
+
+  /** The harnesses' one release point after each query: drain every
+    * family's pins ([[CachePinning.releaseCaches]]), clear the SQL
+    * cache, and unpersist every RDD still persisted — the iterative
+    * operators' results are localCheckpoint-backed, RDD-layer storage
+    * that `clearCache()` never touches. */
+  def releaseAll(spark: SparkSession, blocking: Boolean): Unit = {
+    families.forEach(_.releaseCaches(blocking))
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking))
+  }
 }

@@ -58,11 +58,30 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Louvain {
 
-  /** Gain arithmetic stays in Long while max(γnum, γden)·(2m)² fits
+  /** Gain arithmetic stays in Long as long as max(γnum, γden)·(2m)² fits
     * with ~2× headroom; past this the scorers switch to
     * decimal(38,0). */
   private def longScoreCeiling(maxPQ: Long): Long =
     math.floor(3.0e9 / math.sqrt(maxPQ.toDouble)).toLong
+
+  /** Every entry point runs in ONE [[Bsp.loop]]: move steps and
+    * levels are its rounds, and it releases every frame it holds — on
+    * a throw too — except those the result reads. AQE stays ON
+    * (measured, sf0.1: task CPU 223 -> 127 before the checkpoint swap;
+    * the per-step exchanges are candidate-stream-sized and pay
+    * scan-sized shuffle-file overhead without coalescing — the KCore
+    * shrinking-frame doctrine applies even though the frames here are
+    * steady-sized, because they are SMALL relative to
+    * shuffle.partitions); only the staging runs AQE-off (see
+    * [[stageCanonical]]). */
+  private def loop(edges: DataFrame)(body: Bsp.Loop => DataFrame): DataFrame =
+    Bsp.loop("louvain", edges.sparkSession, aqeOff = false)(body)
+
+  /** |V|-frame join gate: broadcast a side frame of up to `rows` rows
+    * under the Bfs broadcast ceiling; past it, shuffle-hash instead of
+    * OOMing the driver (the betweenness gate). */
+  private def gate(rows: Long)(df: DataFrame): DataFrame =
+    if (rows <= 4000000L) broadcast(df) else df.hint("shuffle_hash")
 
   /** @param edges SYMMETRIZED edge table (`src`, `dst`); self-loops
     *              and duplicate pairs are dropped (simple graph —
@@ -70,12 +89,6 @@ object Louvain {
     * @param steps fixed number of synchronous move steps (initial
     *              assignment: every vertex its own community)
     * @return DataFrame(id LONG, comm LONG) after `steps` steps */
-  /** AQE stays ON by default (measured, sf0.1: task CPU 223 -> 127
-    * before the checkpoint swap; the per-step exchanges are
-    * candidate-stream-sized and pay scan-sized shuffle-file overhead
-    * without coalescing — the KCore shrinking-frame doctrine applies
-    * even though the frames here are steady-sized, because they are
-    * SMALL relative to shuffle.partitions). */
   /** CAVEAT (r18, measured): the UNGATED (`partialMoves = false`)
     * synchronous sweep is the published BSP primitive, but its
     * simultaneous moves swap-oscillate — on the copurchase graph it
@@ -92,15 +105,13 @@ object Louvain {
                 partialMoves: Boolean = false,
                 gammaNum: Long = 1L, gammaDen: Long = 1L): DataFrame = {
     require(steps > 0, s"steps must be positive, got $steps")
-    // stage via stageCanonical (one exchange — r20) instead of
-    // letting runStepsCounted re-partition the distinct's output
-    val staged = stageCanonical(edges)
-    val out = runStepsCounted(staged, steps, partialMoves,
-      preStaged = true, gammaNum = gammaNum, gammaDen = gammaDen)._1
-    // out is an eager flat checkpoint — nothing recomputes through
-    // the staged table, so its blocks release here
-    GraphOps.releaseCheckpointedFrame(staged)
-    out
+    loop(edges) { bsp =>
+      // stage via stageCanonical (one exchange — r20) instead of
+      // letting runStepsCounted re-partition the distinct's output
+      runStepsCounted(bsp, bsp.hold(stageCanonical(edges)), steps,
+        partialMoves, preStaged = true,
+        gammaNum = gammaNum, gammaDen = gammaDen)._1
+    }
   }
 
   /** [[moveSteps]] over an EXPLICITLY WEIGHTED simple graph — the
@@ -118,8 +129,10 @@ object Louvain {
                         gammaNum: Long = 1L,
                         gammaDen: Long = 1L): DataFrame = {
     require(steps > 0, s"steps must be positive, got $steps")
-    runStepsCounted(wEdges, steps, partialMoves,
-      gammaNum = gammaNum, gammaDen = gammaDen)._1
+    loop(wEdges) { bsp =>
+      runStepsCounted(bsp, wEdges, steps, partialMoves,
+        gammaNum = gammaNum, gammaDen = gammaDen)._1
+    }
   }
 
   /** Two-level Louvain (phase 1 + ONE coarsening pass + phase 1 on
@@ -145,36 +158,10 @@ object Louvain {
     *
     * @return DataFrame(id, comm1, comm2): per vertex the phase-1
     *         community and its final (phase-2) community */
-  def twoLevel(edges: DataFrame, steps1: Int, steps2: Int): DataFrame = {
-    require(steps1 > 0 && steps2 > 0,
-      s"steps must be positive, got ($steps1, $steps2)")
-    // ONE staged canonical edge table feeds phase 1 AND the
-    // contraction (r19: coarsen used to recompute the distinct
-    // exchange from the raw plan); vertex/community counts thread
-    // out of the sweeps, so no gate decision pays its own count()
-    // job (r18 ADVICE)
-    val simple = stageCanonical(edges)
-    val (a1, nV) = runStepsCounted(simple, steps1, preStaged = true)
-    val (a2, nC) = runStepsCounted(coarsen(simple, a1, nV), steps2,
-      partialMoves = true)
-    // the phase-2 map is |communities|-sized — gate like every other
-    // |V|-frame join (broadcast under the Bfs ceiling, else
-    // shuffle-hash)
-    val a2r =
-      if (nC <= 4000000L)
-        broadcast(a2.select(col("id").as("comm1"),
-          col("comm").as("comm2")))
-      else a2.select(col("id").as("comm1"), col("comm").as("comm2"))
-        .hint("shuffle_hash")
-    val out = a1.select(col("id"), col("comm").as("comm1"))
-      .join(a2r, "comm1")
-      .select(col("id"), col("comm1"), col("comm2"))
-      .localCheckpoint(true)
-    GraphOps.releaseCheckpointedFrame(a1)
-    GraphOps.releaseCheckpointedFrame(a2)
-    GraphOps.releaseCheckpointedFrame(simple)
-    out
-  }
+  def twoLevel(edges: DataFrame, steps1: Int, steps2: Int): DataFrame =
+    loop(edges) { bsp =>
+      runTwoLevel(bsp, edges, steps1, steps2, withEvals = false).assignment
+    }
 
   /** [[twoLevel]] plus its own evaluation, fused (r19, VERDICT r18
     * #4): per level the Newman Q (micro, integer-exact) and community
@@ -194,29 +181,13 @@ object Louvain {
     *
     * @return 2 rows: (level STRING ∈ {phase1, two_level},
     *         n_communities LONG, q_micro LONG) */
-  def twoLevelGain(edges: DataFrame, steps1: Int, steps2: Int): DataFrame = {
-    require(steps1 > 0 && steps2 > 0,
-      s"steps must be positive, got ($steps1, $steps2)")
-    val spark = edges.sparkSession
-    val simple = stageCanonical(edges)
-    val (a1, nV) = runStepsCounted(simple, steps1, preStaged = true)
-    val g1 = coarsen(simple, a1, nV).localCheckpoint(true)
-    GraphOps.releaseCheckpointedFrame(simple)
-    GraphOps.releaseCheckpointedFrame(a1)
-    // phase-1 Q reads off the CONTRACTED graph's identity
-    // assignment (d_c = super-vertex degree, intra2_c = its
-    // self-loop mass) — one |E_contracted| pass instead of a full
-    // |E| assignment-join pass; bit-equal by the contraction
-    // invariants (2m preserved, intra mass on the diagonal)
-    val (n0, q0) = qEvalIdentity(g1)
-    val (a2, _) = runStepsCounted(g1, steps2, partialMoves = true)
-    val (n1, q1) = qEval(g1, a2, n0 <= 4000000L)
-    GraphOps.releaseCheckpointedFrame(a2)
-    GraphOps.releaseCheckpointedFrame(g1)
-    import spark.implicits._
-    Seq(("phase1", n0, q0), ("two_level", n1, q1))
-      .toDF("level", "n_communities", "q_micro")
-  }
+  def twoLevelGain(edges: DataFrame, steps1: Int, steps2: Int): DataFrame =
+    loop(edges) { bsp =>
+      val spark = edges.sparkSession
+      import spark.implicits._
+      runTwoLevel(bsp, edges, steps1, steps2, withEvals = true).evals
+        .toDF("level", "n_communities", "q_micro")
+    }
 
   /** [[twoLevel]] AND [[twoLevelGain]] in ONE run (r20, VERDICT r19
     * #3): the two faces shared every stage (phase 1, contraction,
@@ -229,54 +200,85 @@ object Louvain {
     *
     * @return DataFrame(id, comm1, comm2, level, n_communities,
     *         q_micro) — one row per vertex plus 2 eval rows */
-  def twoLevelFull(edges: DataFrame, steps1: Int, steps2: Int): DataFrame = {
+  def twoLevelFull(edges: DataFrame, steps1: Int, steps2: Int): DataFrame =
+    loop(edges) { bsp =>
+      val spark = edges.sparkSession
+      import spark.implicits._
+      val run = runTwoLevel(bsp, edges, steps1, steps2, withEvals = true)
+      val evals = run.evals.toDF("level", "n_communities", "q_micro")
+        .select(lit(null).cast("long").as("id"),
+          lit(null).cast("long").as("comm1"),
+          lit(null).cast("long").as("comm2"),
+          col("level"), col("n_communities"), col("q_micro"))
+      run.assignment
+        .select(col("id"), col("comm1"), col("comm2"),
+          lit(null).cast("string").as("level"),
+          lit(null).cast("long").as("n_communities"),
+          lit(null).cast("long").as("q_micro"))
+        .unionAll(evals)
+    }
+
+  /** What [[runTwoLevel]] leaves: the phase-1 map `a1` (vertex →
+    * community), the phase-2 map `a2` (community → community) with its
+    * row count `nC`, and the evaluation rows when they were asked
+    * for. */
+  private final case class TwoLevelRun(a1: DataFrame, a2: DataFrame,
+                                       nC: Long,
+                                       evals: Seq[(String, Long, Long)]) {
+    /** The per-vertex (id, comm1, comm2) composition, as an eager flat
+      * checkpoint. The phase-2 map is |communities|-sized — gated like
+      * every other |V|-frame join. */
+    def assignment: DataFrame =
+      a1.select(col("id"), col("comm").as("comm1"))
+        .join(gate(nC)(a2.select(col("id").as("comm1"),
+          col("comm").as("comm2"))), "comm1")
+        .select(col("id"), col("comm1"), col("comm2"))
+        .localCheckpoint(true)
+  }
+
+  /** Phase 1 → contraction → parity-gated phase 2: the one pipeline
+    * behind [[twoLevel]], [[twoLevelGain]] and [[twoLevelFull]].
+    * `withEvals` adds the (phase1, two_level) evaluation rows. */
+  private def runTwoLevel(bsp: Bsp.Loop, edges: DataFrame, steps1: Int,
+                          steps2: Int, withEvals: Boolean): TwoLevelRun = {
     require(steps1 > 0 && steps2 > 0,
       s"steps must be positive, got ($steps1, $steps2)")
-    val spark = edges.sparkSession
-    val simple = stageCanonical(edges)
-    val (a1, nV) = runStepsCounted(simple, steps1, preStaged = true)
-    val g1 = coarsen(simple, a1, nV).localCheckpoint(true)
-    GraphOps.releaseCheckpointedFrame(simple)
-    val (n0, q0) = qEvalIdentity(g1)
-    val (a2, nC) = runStepsCounted(g1, steps2, partialMoves = true)
-    val (n1, q1) = qEval(g1, a2, n0 <= 4000000L)
-    GraphOps.releaseCheckpointedFrame(g1)
-    // the per-vertex compose join — twoLevel's tail, riding the SAME
-    // a1/a2 the evals just consumed
-    val a2r =
-      if (nC <= 4000000L)
-        broadcast(a2.select(col("id").as("comm1"),
-          col("comm").as("comm2")))
-      else a2.select(col("id").as("comm1"), col("comm").as("comm2"))
-        .hint("shuffle_hash")
-    val assign = a1.select(col("id"), col("comm").as("comm1"))
-      .join(a2r, "comm1")
-      .select(col("id"), col("comm1"), col("comm2"))
-      .localCheckpoint(true)
-    GraphOps.releaseCheckpointedFrame(a1)
-    GraphOps.releaseCheckpointedFrame(a2)
-    import spark.implicits._
-    val evals = Seq(("phase1", n0, q0), ("two_level", n1, q1))
-      .toDF("level", "n_communities", "q_micro")
-      .select(lit(null).cast("long").as("id"),
-        lit(null).cast("long").as("comm1"),
-        lit(null).cast("long").as("comm2"),
-        col("level"), col("n_communities"), col("q_micro"))
-    assign
-      .select(col("id"), col("comm1"), col("comm2"),
-        lit(null).cast("string").as("level"),
-        lit(null).cast("long").as("n_communities"),
-        lit(null).cast("long").as("q_micro"))
-      .unionAll(evals)
+    // ONE staged canonical edge table feeds phase 1 AND the
+    // contraction (r19: coarsen used to recompute the distinct
+    // exchange from the raw plan); vertex/community counts thread
+    // out of the sweeps, so no gate decision pays its own count()
+    // job (r18 ADVICE)
+    val simple = bsp.hold(stageCanonical(edges))
+    val (a1, nV) = runStepsCounted(bsp, simple, steps1, preStaged = true)
+    val coarse = coarsen(simple, a1, nV)
+    // the evals read the contracted graph twice more: hold it as a
+    // LAZY checkpoint, which the phase-1 eval's job materializes
+    val g1 =
+      if (withEvals) bsp.hold(coarse.localCheckpoint(false)) else coarse
+    // phase-1 Q reads off the CONTRACTED graph's identity
+    // assignment (d_c = super-vertex degree, intra2_c = its
+    // self-loop mass) — one |E_contracted| pass instead of a full
+    // |E| assignment-join pass; bit-equal by the contraction
+    // invariants (2m preserved, intra mass on the diagonal)
+    val phase1 = if (withEvals) Some(qEvalIdentity(g1)) else None
+    val (a2, nC) = runStepsCounted(bsp, g1, steps2, partialMoves = true)
+    // phase 2 staged its input from the contraction, so nothing reads
+    // the |E|-sized staged table any more
+    bsp.release(simple)
+    val evals = phase1.toSeq.flatMap { case (n0, q0) =>
+      val (n1, q1) = qEval(g1, a2, n0)
+      Seq(("phase1", n0, q0), ("two_level", n1, q1))
+    }
+    TwoLevelRun(a1, a2, nC, evals)
   }
 
   /** Convergence-driven multi-level Louvain (r19, VERDICT r18 #5 —
     * Blondel 2008 §2's REAL alternation): move-steps → evaluate Q →
-    * coarsen, looping while each level's modularity gain clears
-    * `minGainMicro`, the contraction still shrinks the graph
-    * (n_communities < |V_level|), and `maxLevels` is not exhausted.
-    * Level 0 runs the ungated sweep from the |V|-singleton init (the
-    * established phase-1 dynamics); every deeper level runs
+    * coarsen, level after level for as long as each level's modularity
+    * gain clears `minGainMicro`, the contraction still shrinks the
+    * graph (n_communities < |V_level|), and `maxLevels` is not
+    * exhausted. Level 0 runs the ungated sweep from the |V|-singleton
+    * init (the established phase-1 dynamics); every deeper level runs
     * parity-gated (the ungated sweep swap-oscillates from a
     * contracted singleton init — measured r18). Q per level is
     * evaluated on that level's OWN graph, which equals the flattened
@@ -288,21 +290,22 @@ object Louvain {
     * community-contracted quotient — the |E| work collapses
     * geometrically after level 0, which is why real Louvain
     * alternates instead of running more flat sweeps. Per-level state
-    * is flat-checkpointed and contract-released; the returned
-    * trajectory is `maxLevels`-bounded driver rows.
+    * is flat-checkpointed and released once the next level has
+    * materialized; the returned trajectory is `maxLevels`-bounded
+    * driver rows.
     *
     * @return one row per level RUN: (level INT, n_communities LONG,
     *         q_micro LONG), ordered by level */
   def untilConverged(edges: DataFrame, stepsPerLevel: Int = 2,
                      maxLevels: Int = 3, minGainMicro: Long = 1000L,
-                     gammaNum: Long = 1L, gammaDen: Long = 1L): DataFrame = {
-    val spark = edges.sparkSession
-    val (rows, _) = runMultilevel(edges, stepsPerLevel, maxLevels,
-      minGainMicro, wantAssign = false,
-      gammaNum = gammaNum, gammaDen = gammaDen)
-    import spark.implicits._
-    rows.toDF("level", "n_communities", "q_micro")
-  }
+                     gammaNum: Long = 1L, gammaDen: Long = 1L): DataFrame =
+    loop(edges) { bsp =>
+      val spark = edges.sparkSession
+      import spark.implicits._
+      runMultilevel(bsp, edges, stepsPerLevel, maxLevels, minGainMicro,
+        wantAssign = false, gammaNum = gammaNum, gammaDen = gammaDen)._1
+        .toDF("level", "n_communities", "q_micro")
+    }
 
   /** [[untilConverged]]'s USER-FACING output: the flattened
     * per-vertex community of the final level — what "run Louvain on
@@ -318,9 +321,10 @@ object Louvain {
   def untilConvergedAssign(edges: DataFrame, stepsPerLevel: Int = 2,
                            maxLevels: Int = 3, minGainMicro: Long = 1000L,
                            gammaNum: Long = 1L, gammaDen: Long = 1L): DataFrame =
-    runMultilevel(edges, stepsPerLevel, maxLevels, minGainMicro,
-      wantAssign = true,
-      gammaNum = gammaNum, gammaDen = gammaDen)._2.get
+    loop(edges) { bsp =>
+      runMultilevel(bsp, edges, stepsPerLevel, maxLevels, minGainMicro,
+        wantAssign = true, gammaNum = gammaNum, gammaDen = gammaDen)._2.get
+    }
 
   /** The FULL multi-level alternation over an EXPLICITLY WEIGHTED
     * simple graph (r20 — completes the wide-gain story: a 100 TB
@@ -339,23 +343,9 @@ object Louvain {
   def untilConvergedWeighted(wEdges: DataFrame, stepsPerLevel: Int = 2,
                              maxLevels: Int = 3, minGainMicro: Long = 1000L,
                              gammaNum: Long = 1L,
-                             gammaDen: Long = 1L): DataFrame = {
-    val spark = wEdges.sparkSession
-    val (rows, flat) = runMultilevel(wEdges, stepsPerLevel, maxLevels,
-      minGainMicro, wantAssign = true,
-      gammaNum = gammaNum, gammaDen = gammaDen, preWeighted = true)
-    import spark.implicits._
-    val traj = rows.toDF("level", "n_communities", "q_micro")
-      .select(lit(null).cast("long").as("id"),
-        lit(null).cast("long").as("comm"),
-        col("level"), col("n_communities"), col("q_micro"))
-    flat.get
-      .select(col("id"), col("comm"),
-        lit(null).cast("int").as("level"),
-        lit(null).cast("long").as("n_communities"),
-        lit(null).cast("long").as("q_micro"))
-      .unionAll(traj)
-  }
+                             gammaDen: Long = 1L): DataFrame =
+    multilevelFull(wEdges, stepsPerLevel, maxLevels, minGainMicro,
+      gammaNum, gammaDen, preWeighted = true)
 
   /** [[untilConverged]] AND [[untilConvergedAssign]] in ONE loop run
     * (r20, VERDICT r19 #3): `runMultilevel` has always computed both
@@ -371,31 +361,47 @@ object Louvain {
     *         one row per vertex plus one row per level run */
   def untilConvergedFull(edges: DataFrame, stepsPerLevel: Int = 2,
                          maxLevels: Int = 3, minGainMicro: Long = 1000L,
-                         gammaNum: Long = 1L, gammaDen: Long = 1L): DataFrame = {
-    val spark = edges.sparkSession
-    val (rows, flat) = runMultilevel(edges, stepsPerLevel, maxLevels,
-      minGainMicro, wantAssign = true,
-      gammaNum = gammaNum, gammaDen = gammaDen)
-    import spark.implicits._
-    val traj = rows.toDF("level", "n_communities", "q_micro")
-      .select(lit(null).cast("long").as("id"),
-        lit(null).cast("long").as("comm"),
-        col("level"), col("n_communities"), col("q_micro"))
-    flat.get
-      .select(col("id"), col("comm"),
-        lit(null).cast("int").as("level"),
-        lit(null).cast("long").as("n_communities"),
-        lit(null).cast("long").as("q_micro"))
-      .unionAll(traj)
-  }
+                         gammaNum: Long = 1L, gammaDen: Long = 1L): DataFrame =
+    multilevelFull(edges, stepsPerLevel, maxLevels, minGainMicro,
+      gammaNum, gammaDen, preWeighted = false)
+
+  /** The body [[untilConvergedFull]] and [[untilConvergedWeighted]]
+    * share: the trajectory rows and the flattened per-vertex rows as
+    * one NULL-disjoint result set. */
+  private def multilevelFull(edges: DataFrame, stepsPerLevel: Int,
+                             maxLevels: Int, minGainMicro: Long,
+                             gammaNum: Long, gammaDen: Long,
+                             preWeighted: Boolean): DataFrame =
+    loop(edges) { bsp =>
+      val spark = edges.sparkSession
+      import spark.implicits._
+      val (rows, flat) = runMultilevel(bsp, edges, stepsPerLevel,
+        maxLevels, minGainMicro, wantAssign = true,
+        gammaNum = gammaNum, gammaDen = gammaDen, preWeighted = preWeighted)
+      val traj = rows.toDF("level", "n_communities", "q_micro")
+        .select(lit(null).cast("long").as("id"),
+          lit(null).cast("long").as("comm"),
+          col("level"), col("n_communities"), col("q_micro"))
+      flat.get
+        .select(col("id"), col("comm"),
+          lit(null).cast("int").as("level"),
+          lit(null).cast("long").as("n_communities"),
+          lit(null).cast("long").as("q_micro"))
+        .unionAll(traj)
+    }
 
   /** Shared multi-level loop behind [[untilConverged]] (trajectory)
-    * and [[untilConvergedAssign]] (flattened assignment). */
+    * and [[untilConvergedAssign]] (flattened assignment). Each level
+    * is one [[Bsp]] round: the step runs the level's move steps and
+    * plans the contraction, the next level's graph; the driver
+    * checkpoints that LAZILY, and the probe's Q evaluation
+    * materializes it in its own job. */
   /** @param preWeighted the input already carries (`src`, `dst`, `w`)
     *        per the [[moveStepsWeighted]] contract — stage it as-is
     *        (src-partitioned flat checkpoint) instead of
     *        canonicalizing with unit weights */
-  private def runMultilevel(edges: DataFrame, stepsPerLevel: Int,
+  private def runMultilevel(bsp: Bsp.Loop, edges: DataFrame,
+                            stepsPerLevel: Int,
                             maxLevels: Int, minGainMicro: Long,
                             wantAssign: Boolean,
                             gammaNum: Long = 1L, gammaDen: Long = 1L,
@@ -403,75 +409,59 @@ object Louvain {
       : (Seq[(Int, Long, Long)], Option[DataFrame]) = {
     require(stepsPerLevel > 0, s"stepsPerLevel must be positive")
     require(maxLevels > 0, s"maxLevels must be positive")
-    val spark = edges.sparkSession
-    val rows = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, Long, Long)]
-    var g =
+    val g0 = bsp.hold(
       if (preWeighted)
         // AQE-off staging — see [[stageCanonical]]'s r21 note
-        GraphOps.withLoopAqeDisabled(spark) {
+        GraphOps.withLoopAqeDisabled(edges.sparkSession) {
           edges.select(col("src"), col("dst"), col("w"))
             .repartition(col("src")).localCheckpoint(false)
         }
-      else stageCanonical(edges)
-    var preStaged = true
-    var prevQ = Option.empty[Long]
-    var level = 0
-    var continue = true
+      else stageCanonical(edges))
+    val rows = scala.collection.mutable.ArrayBuffer
+      .empty[(Int, Long, Long)]
+    // the level's map (vertex → community) and vertex count, handed
+    // from its step to its probe
+    var a: DataFrame = null
+    var nV = 0L
     var flat: DataFrame = null
-    while (continue && level < maxLevels) {
-      val (a, nV) = runStepsCounted(g, stepsPerLevel,
-        partialMoves = level > 0, preStaged = preStaged,
+    bsp.rounds(g0, maxLevels) { (g, round) =>
+      val (aLevel, nLevel) = runStepsCounted(bsp, g, stepsPerLevel,
+        partialMoves = round > 1, preStaged = round == 1,
         gammaNum = gammaNum, gammaDen = gammaDen)
+      a = aLevel
+      nV = nLevel
+      coarsen(g, a, nV)
+    } { (gNext, round) =>
       // the level's Q reads off its CONTRACTED quotient's identity
       // assignment (see twoLevelGain) — the contraction is the
       // next level's input anyway, so the eval is one
       // |E_contracted| pass and no assignment-join pass exists
-      val gNext = coarsen(g, a, nV).localCheckpoint(true)
-      var aAdopted = false
-      if (wantAssign) {
-        if (flat == null) {
-          // level 0: `a` already IS an eager flat checkpoint
-          // (runStepsCounted's contract) — adopt it as the running
-          // flat assignment instead of re-materializing a copy of
-          // the |V|-row state (r19 ADVICE); its release shifts to
-          // the next level's compose (or the loop tail)
-          flat = a
-          aAdopted = true
-        } else {
-          // compose the level map onto the running flat assignment:
-          // flat.comm values ARE this level's vertex ids
-          val gateA =
-            if (nV <= 4000000L)
-              broadcast(a.select(col("id").as("prev"),
-                col("comm").as("next")))
-            else a.select(col("id").as("prev"), col("comm").as("next"))
-              .hint("shuffle_hash")
-          val flatNext = flat.select(col("id"), col("comm").as("prev"))
-            .join(gateA, "prev")
-            .select(col("id"), col("next").as("comm"))
-            .localCheckpoint(true)
-          GraphOps.releaseCheckpointedFrame(flat)
-          flat = flatNext
-        }
-      }
-      if (!aAdopted) GraphOps.releaseCheckpointedFrame(a)
-      GraphOps.releaseCheckpointedFrame(g)
       val (nComm, q) = qEvalIdentity(gNext)
-      rows += ((level, nComm, q))
-      System.err.println(
-        s"[louvain] level $level communities=$nComm q_micro=$q")
+      if (!wantAssign) bsp.release(a)
+      // level 0: `a` already IS an eager flat checkpoint
+      // (runStepsCounted's contract) — adopt it as the running
+      // flat assignment instead of re-materializing a copy of
+      // the |V|-row state (r19 ADVICE)
+      else if (flat == null) flat = a
+      else {
+        // compose the level map onto the running flat assignment:
+        // flat.comm values ARE this level's vertex ids
+        val prev = flat
+        flat = bsp.hold(prev.select(col("id"), col("comm").as("prev"))
+          .join(gate(nV)(a.select(col("id").as("prev"),
+            col("comm").as("next"))), "prev")
+          .select(col("id"), col("next").as("comm"))
+          .localCheckpoint(true))
+        Seq(prev, a).foreach(bsp.release)
+      }
       // stop when the level's gain falls under the threshold (the
-      // q-gain rule), when contraction stops shrinking (the quotient
-      // would be the same graph), or at the level budget
-      continue = prevQ.forall(p => q - p >= minGainMicro) &&
-        nComm < nV && level + 1 < maxLevels
-      prevQ = Some(q)
-      g = gNext
-      preStaged = false
-      level += 1
+      // q-gain rule) or when contraction stops shrinking (the quotient
+      // would be the same graph); the level budget is the round cap
+      val gained = rows.lastOption.forall(r => q - r._3 >= minGainMicro)
+      rows += ((round - 1, nComm, q))
+      Bsp.Probe(!gained || nComm >= nV,
+        s"level=${round - 1} communities=$nComm q_micro=$q")
     }
-    GraphOps.releaseCheckpointedFrame(g)
     (rows.toSeq, Option(flat))
   }
 
@@ -511,17 +501,16 @@ object Louvain {
     * over the weighted graph `g` (`src`, `dst`, `w`; symmetric,
     * self-loop rows carry their full mass): d_c = Σ_{src∈c} w,
     * intra2_c = Σ_{src∈c ∧ dst∈c} w, Q·(2m)² = m2·Σintra2 − Σd² —
-    * one |E_g| pass with both assignment joins gated, one 1-row
-    * collect. Same truncating sign-safe micro division (and the same
-    * overflow guard) as [[LabelPropagation.modularity]]. */
+    * one |E_g| pass with both assignment joins gated (`assignRows`:
+    * `assign`'s row count), one 1-row collect. Same truncating
+    * sign-safe micro division (and the same overflow guard) as
+    * [[LabelPropagation.modularity]]. */
   private def qEval(g: DataFrame, assign: DataFrame,
-                    small: Boolean): (Long, Long) = {
-    def gate(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df.hint("shuffle_hash")
+                    assignRows: Long): (Long, Long) = {
     val st = g
-      .join(gate(assign.select(col("id").as("src"),
+      .join(gate(assignRows)(assign.select(col("id").as("src"),
         col("comm").as("cs"))), "src")
-      .join(gate(assign.select(col("id").as("dst"),
+      .join(gate(assignRows)(assign.select(col("id").as("dst"),
         col("comm").as("cd"))), "dst")
       .groupBy(col("cs"))
       .agg(sum(col("w")).as("d"),
@@ -594,14 +583,11 @@ object Louvain {
     *        job); -1 falls back to counting */
   private[graft] def coarsen(wEdges: DataFrame, assign: DataFrame,
                              assignRows: Long = -1L): DataFrame = {
-    val small =
-      (if (assignRows >= 0L) assignRows else assign.count()) <= 4000000L
-    def gate(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df.hint("shuffle_hash")
+    val rows = if (assignRows >= 0L) assignRows else assign.count()
     wEdges
-      .join(gate(assign.select(col("id").as("src"),
+      .join(gate(rows)(assign.select(col("id").as("src"),
         col("comm").as("cs"))), "src")
-      .join(gate(assign.select(col("id").as("dst"),
+      .join(gate(rows)(assign.select(col("id").as("dst"),
         col("comm").as("cd"))), "dst")
       .groupBy(col("cs").as("src"), col("cd").as("dst"))
       .agg(sum(col("w")).as("w"))
@@ -628,12 +614,14 @@ object Louvain {
     *        the |V|-singleton init measurably ascend. */
   /** [[moveSteps]]' core, also returning the vertex count of the input graph
     * (= the returned state's row count) so callers reuse it for gate
-    * decisions instead of paying another count job (r18 ADVICE).
+    * decisions instead of paying another count job (r18 ADVICE). The
+    * steps are `bsp`'s fixed rounds: each step's state is an eager
+    * flat checkpoint, and the returned state stays held by `bsp`.
     * @param preStaged the input already IS the staged canonical shape
     *        ([[stageCanonical]]: src-partitioned flat checkpoint with
     *        `w`) — skip re-staging AND leave its release to the
     *        caller, who is sharing it across consumers */
-  private def runStepsCounted(wEdges: DataFrame, steps: Int,
+  private def runStepsCounted(bsp: Bsp.Loop, wEdges: DataFrame, steps: Int,
                               partialMoves: Boolean = false,
                               preStaged: Boolean = false,
                               gammaNum: Long = 1L,
@@ -654,11 +642,11 @@ object Louvain {
     val e =
       if (preStaged) wEdges
       // AQE-off staging — see [[stageCanonical]]'s r21 note
-      else GraphOps.withLoopAqeDisabled(wEdges.sparkSession) {
+      else bsp.hold(GraphOps.withLoopAqeDisabled(spark) {
         wEdges.select($"src", $"dst", $"w")
           .repartition($"src")
           .localCheckpoint(false)
-      }
+      })
     // Pre-loop fusion (r20, guide §1.2 "remove passes you don't
     // need"): the init state IS the degree table with comm = id, so
     // build it directly as the one eager checkpoint (its job also
@@ -668,13 +656,13 @@ object Louvain {
     // included: a super-vertex's internal mass is part of its
     // degree). Was: an |E| sum job for 2m + a deg checkpoint job + a
     // deg count job + a state checkpoint job.
-    var state = e.groupBy($"src".as("id")).agg(sum($"w").as("k"))
+    val init = bsp.hold(e.groupBy($"src".as("id")).agg(sum($"w").as("k"))
       .select($"id", $"id".as("comm"), $"k")
-      .localCheckpoint(true)
-    val nvRow = state.agg(count(lit(1)), coalesce(sum($"k"), lit(0L))).head()
+      .localCheckpoint(true))
+    val nvRow = init.agg(count(lit(1)), coalesce(sum($"k"), lit(0L))).head()
     val nV = nvRow.getLong(0)
     val twoM = nvRow.getLong(1)
-    // scoring width (r20): Long while max(γ)·(2m)² fits with headroom,
+    // scoring width (r20): Long when max(γ)·(2m)² fits with headroom,
     // decimal(38,0) past it — every factor is Long-ranged (cast to
     // decimal(19,0)), so each product fits 38 digits exactly and the
     // argmax stays bit-exact; no require-refusal, no rescaled-degree
@@ -701,12 +689,7 @@ object Louvain {
     // self-loops feed degrees, never messages
     val eMsg = e.filter($"src" =!= $"dst")
     // the per-vertex side tables (state, Σtot — all ≤ |V| rows) join
-    // the |E|-sized score stream map-side while |V| is under the Bfs
-    // broadcast ceiling; past it every gated join degrades to
-    // shuffle-hash instead of OOMing the driver (the betweenness gate)
-    val small = nV <= 4000000L
-    def gated(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df.hint("shuffle_hash")
+    // the |E|-sized score stream map-side under the |V|-frame gate
     // the STATIC per-vertex degree rides the loop state (id, comm, k)
     // instead of joining in per step (r19): Σtot needs no join at all
     // (state self-aggregates), the candidate scorers each drop their
@@ -714,10 +697,7 @@ object Louvain {
     // every step already ends with — 2-3 fewer gated |V| joins (and
     // deg broadcast builds) per step for one extra Long in the
     // checkpoint row
-    var step = 0
-    while (step < steps) {
-      step += 1
-      val tStep = System.nanoTime()
+    val out = bsp.fixedRounds(init, steps) { (state, step) =>
       // k_{v,c}: per vertex, edge weight into each neighboring
       // community — the LP message shape: each vertex's comm joins on
       // e.SRC (riding the cached src partitioning exchange-free, the
@@ -736,8 +716,8 @@ object Louvain {
       // neighbor-community candidates: score rides kin MAP-SIDE (two
       // gated |V|-frame joins — no further |E| exchange)
       val nbrCand = kin
-        .join(gated(cur), "id")
-        .join(gated(tot), "comm")
+        .join(gate(nV)(cur), "id")
+        .join(gate(nV)(tot), "comm")
         .select($"id", $"comm",
           scoreOf($"kvc", $"k",
             $"tot" - when($"comm" === $"cur", $"k").otherwise(lit(0L)))
@@ -750,7 +730,7 @@ object Louvain {
       // comm) — the argmax dedupes them for free, which is what lets
       // this avoid the distinct-candidate-set exchange entirely.
       val ownCand = state
-        .join(gated(tot), "comm")
+        .join(gate(nV)(tot), "comm")
         .select($"id", $"comm",
           scoreOf(lit(0L), $"k", $"tot" - $"k").as("score"))
       // argmax by (score DESC, comm ASC) — min(struct), order-free;
@@ -763,21 +743,17 @@ object Louvain {
       // The LAST step emits the caller-facing (id, comm) shape — no
       // trailing projection over the checkpoint (release contract).
       val last = step == steps
-      val joined = argmax.join(gated(cur), "id")
+      val joined = argmax.join(gate(nV)(cur), "id")
       val kept =
         if (partialMoves)
           when((($"id" + step) % 2) === 0, $"comm").otherwise($"cur")
         else $"comm"
-      val newState =
-        (if (last) joined.select($"id", kept.as("comm"))
-         else joined.select($"id", kept.as("comm"), $"k"))
-          .localCheckpoint(true)
-      System.err.println(
-        f"[louvain] step $step ${(System.nanoTime() - tStep) / 1e9}%.2fs")
-      GraphOps.releaseCheckpointedFrame(state)
-      state = newState
+      if (last) joined.select($"id", kept.as("comm"))
+      else joined.select($"id", kept.as("comm"), $"k")
     }
-    if (!preStaged) GraphOps.releaseCheckpointedFrame(e)
-    (state, nV)
+    // the last state is an eager checkpoint: nothing recomputes
+    // through a restaged table any more
+    if (!preStaged) bsp.release(e)
+    (out, nV)
   }
 }

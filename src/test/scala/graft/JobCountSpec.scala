@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Bfs, Centrality, ConnectedComponents, Dag, GraphOps,
-  KCore, KTruss, Scc, Sssp}
+  KCore, KTruss, Louvain, Scc, SpanningForest, Sssp}
 
 /** Institutionalizes the r17 one-job-per-round discipline: every BSP
   * round's lazy localCheckpoint is materialized by the SAME job that
@@ -97,6 +97,16 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
   private val KTrussBudget = 27
   private val SccBudget = 46
   private val HarmonicBudget = 21
+  // measured before these loops moved onto the shared round driver
+  // (warm): boruvka 42-43, moveSteps(2) 20, twoLevelFull(2, 2) 50,
+  // untilConvergedFull 78. On the driver the contracted graphs are
+  // LAZY checkpoints that their Q evaluation materializes, one job
+  // fewer per contraction: twoLevelFull 49, untilConvergedFull 75
+  // (3 levels).
+  private val MsfBudget = 44
+  private val MoveStepsBudget = 21
+  private val TwoLevelFullBudget = 50
+  private val MultilevelBudget = 76
 
   /** The triangle 10 -> 11 -> 12 -> 10 and the chain 0 -> ... -> 7,
     * directed. */
@@ -180,6 +190,36 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
     pinned("Centrality.pivotHarmonic", rounds = 8,
         budget = HarmonicBudget) {
       Centrality.pivotHarmonic(chainAndTriangle, Seq(0L, 10L)).collect()
+    }
+  }
+
+  test("SpanningForest.boruvka job count is pinned (2 rounds)") {
+    // unit weights: round 1 merges the chain and the triangle whole,
+    // round 2 finds no edge between components
+    val edges = chainAndTriangle.withColumn("weight", lit(1L))
+    pinned("SpanningForest.boruvka", rounds = 2, budget = MsfBudget) {
+      SpanningForest.boruvka(edges).collect()
+    }
+  }
+
+  test("Louvain.moveSteps job count is pinned (2 steps)") {
+    pinned("Louvain.moveSteps", rounds = 2, budget = MoveStepsBudget) {
+      Louvain.moveSteps(chainAndTriangle, 2).collect()
+    }
+  }
+
+  test("Louvain.twoLevelFull job count is pinned (2 + 2 steps)") {
+    pinned("Louvain.twoLevelFull", rounds = 4,
+        budget = TwoLevelFullBudget) {
+      Louvain.twoLevelFull(chainAndTriangle, 2, 2).collect()
+    }
+  }
+
+  test("Louvain.untilConvergedFull job count is pinned (defaults)") {
+    // at least one level of 2 steps and its evaluation
+    pinned("Louvain.untilConvergedFull", rounds = 3,
+        budget = MultilevelBudget) {
+      Louvain.untilConvergedFull(chainAndTriangle).collect()
     }
   }
 }

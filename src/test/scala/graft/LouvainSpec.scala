@@ -231,10 +231,26 @@ class LouvainSpec extends AnyFunSuite with SparkTestBase {
 
   test("empty graph: a clear contract error, not an NPE (r19 ADVICE)") {
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
-    val e = intercept[IllegalArgumentException] {
-      Louvain.untilConverged(empty, stepsPerLevel = 1, maxLevels = 1)
+    val sc = spark.sparkContext
+    // the error also leaves nothing persisted behind: returns the RDDs
+    // `op` left, after unpersisting them
+    def leftBy(op: => Any): collection.Set[Int] = {
+      val before = sc.getPersistentRDDs.keySet
+      val e = intercept[IllegalArgumentException](op)
+      assert(e.getMessage.contains("empty or zero-weight"), e.getMessage)
+      val left = sc.getPersistentRDDs.keySet -- before
+      left.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
+      left
     }
-    assert(e.getMessage.contains("empty or zero-weight"), e.getMessage)
+    val leaks = Seq(
+      "untilConverged" -> leftBy(
+        Louvain.untilConverged(empty, stepsPerLevel = 1, maxLevels = 1)),
+      "untilConvergedFull" -> leftBy(Louvain.untilConvergedFull(empty)),
+      "twoLevelGain" -> leftBy(Louvain.twoLevelGain(empty, 1, 1)),
+      "twoLevelFull" -> leftBy(Louvain.twoLevelFull(empty, 1, 1)))
+      .collect { case (name, left) if left.nonEmpty =>
+        s"$name left ${left.size} persisted RDD(s)" }
+    assert(leaks.isEmpty, leaks.mkString("; "))
   }
 
   test("twoLevelFull equals twoLevel ∪ twoLevelGain — the fused face " +

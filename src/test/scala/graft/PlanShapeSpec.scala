@@ -23,18 +23,11 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
   // building the dedup/similarity plans registers their persist()s in
   // the shared session's CacheManager — clear them so later suites'
   // plan/scan assertions can't silently hit a cached relation. The
-  // per-operator releaseCaches drain the CachePinning queues populated
-  // at plan-construction time; without it a later same-JVM
+  // release also drains the CachePinning queues populated at
+  // plan-construction time; without it a later same-JVM
   // releaseCaches would re-unpersist this suite's stale frames.
   override def afterAll(): Unit = {
-    graft.operators.Dedup.releaseCaches()
-    graft.operators.Redaction.releaseCaches()
-    graft.operators.Similarity.releaseCaches()
-    graft.operators.CorpusOps.releaseCaches()
-    graft.operators.Ranking.releaseCaches()
-    graft.operators.Distributions.releaseCaches()
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    graft.operators.CachePinning.releaseAll(spark, blocking = false)
     super.afterAll()
   }
 

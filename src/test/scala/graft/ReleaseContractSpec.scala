@@ -85,7 +85,22 @@ class ReleaseContractSpec extends AnyFunSuite with SparkTestBase {
       "KTruss.truss" -> (() => KTruss.truss(edges, 3)),
       "Scc.run" -> (() => Scc.run(edges)),
       "Centrality.pivotHarmonic" ->
-        (() => Centrality.pivotHarmonic(edges, Seq(0L, 10L))))
+        (() => Centrality.pivotHarmonic(edges, Seq(0L, 10L))),
+      "SpanningForest.boruvka" ->
+        (() => SpanningForest.boruvka(edges.withColumn("weight", lit(1L)))),
+      "Louvain.moveSteps" -> (() => Louvain.moveSteps(edges, 2)),
+      "Louvain.moveStepsWeighted" ->
+        (() => Louvain.moveStepsWeighted(weighted, 2)),
+      "Louvain.twoLevel" -> (() => Louvain.twoLevel(edges, 2, 2)),
+      "Louvain.twoLevelGain" -> (() => Louvain.twoLevelGain(edges, 2, 2)),
+      "Louvain.twoLevelFull" -> (() => Louvain.twoLevelFull(edges, 2, 2)),
+      "Louvain.untilConverged" -> (() => Louvain.untilConverged(edges)),
+      "Louvain.untilConvergedAssign" ->
+        (() => Louvain.untilConvergedAssign(edges)),
+      "Louvain.untilConvergedFull" ->
+        (() => Louvain.untilConvergedFull(edges)),
+      "Louvain.untilConvergedWeighted" ->
+        (() => Louvain.untilConvergedWeighted(weighted)))
     val leaks = cases.flatMap { case (name, op) =>
       val sc = spark.sparkContext
       val before = sc.getPersistentRDDs.keySet

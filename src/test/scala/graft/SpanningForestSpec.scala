@@ -4,7 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.operators.SpanningForest
+import org.apache.spark.sql.functions.lit
+
+import graft.operators.{GraphOps, SpanningForest}
 
 class SpanningForestSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -80,5 +82,21 @@ class SpanningForestSpec extends AnyFunSuite with SparkTestBase {
     val chain = (0L until 60L).map(i => (i, i + 1, (i % 9) + 1))
     assert(engine(chain) ==
       chain.map(e => (e._1, e._2, e._3)).toSet)
+  }
+
+  test("a round cap that is hit throws, and leaks nothing") {
+    // a 40-hop chain with unit weights merges into one component in
+    // round 1, so the converging empty round 2 lies past a cap of 1
+    val chain = GraphOps.symmetrize(
+      (0L until 40L).map(i => (i, i + 1)).toDF("src", "dst"))
+      .withColumn("weight", lit(1L))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val ex = intercept[IllegalStateException] {
+      SpanningForest.boruvka(chain, maxRounds = 1)
+    }
+    assert(ex.getMessage.contains("did not converge in 1 rounds"),
+      ex.getMessage)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"leaked persisted RDDs after the throw: $leaked")
   }
 }
