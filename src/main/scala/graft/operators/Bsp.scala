@@ -4,6 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** The one BSP (bulk-synchronous parallel) round driver behind the
   * iterative graph operators — the reference's whole algorithm
@@ -19,23 +20,29 @@ import org.apache.spark.sql.execution.LogicalRDD
   * end) and answers the convergence test. Fixed-round loops have no
   * probe, so their checkpoint is eager. Either way a round costs one
   * materializing job, never two — `JobCountSpec` pins the totals.
+  * Fixed-length lazy chains ([[Loop.chain]]) persist their rounds
+  * instead and leave the materializing job to the caller's output
+  * checkpoint.
   *
   * Release, in one place: a superseded state handle is released as
   * soon as its successor has materialized (nothing can recompute
   * through it again); when the loop ends, every frame it still holds
   * — staged edge tables and the live state — is released unless the
   * returned frame's plan reads it, and on an exception all of them
-  * are. Only flat checkpoint handles own blocks here; a held frame
-  * that is not one (a derived init) is simply dropped.
+  * are. Only flat checkpoint handles and the frames a chain persisted
+  * own blocks here; any other held frame (a derived init) is simply
+  * dropped.
   *
-  * The loops it runs: [[Bfs]], [[Sssp]], [[ConnectedComponents]]
-  * (label propagation and star contraction), [[LabelPropagation]],
-  * [[KCore]], [[PageRank]] (global and personalized), [[Dag]],
-  * [[KTruss]], [[Scc]], [[Centrality.pivotHarmonic]],
-  * [[SpanningForest]] (rounds and pointer-doubling hops) and every
-  * [[Louvain]] entry point (move steps and levels). The lazy persist
-  * chains of [[RandomWalk]], [[Centrality.neighborhoodFunction]] and
-  * the betweenness sweeps still run their own loops. */
+  * The loops it runs — every iterative operator: [[Bfs]], [[Sssp]],
+  * [[ConnectedComponents]] (label propagation and star contraction),
+  * [[LabelPropagation]], [[KCore]], [[PageRank]] (global and
+  * personalized), [[Dag]], [[KTruss]], [[Scc]],
+  * [[Centrality.pivotHarmonic]], [[SpanningForest]] (rounds and
+  * pointer-doubling hops), every [[Louvain]] entry point (move steps
+  * and levels), the lazy chains of [[RandomWalk.walks]] and
+  * [[Centrality.neighborhoodFunction]], both sweeps of
+  * [[Centrality.betweennessSample]] and the four [[Indexing]] BPE
+  * learners. */
 private[operators] object Bsp {
 
   /** A round's probe result: has the loop converged, and a short note
@@ -43,9 +50,9 @@ private[operators] object Bsp {
   final case class Probe(done: Boolean, note: String = "")
 
   /** Run one iterative operator: `body` stages its inputs through
-    * [[Loop.hold]] and runs its rounds through [[Loop.rounds]] or
-    * [[Loop.fixedRounds]]. `aqeOff` plans the whole loop, staging
-    * included, with AQE disabled (see
+    * [[Loop.hold]] and runs its rounds through [[Loop.rounds]],
+    * [[Loop.fixedRounds]] or [[Loop.chain]]. `aqeOff` plans the whole
+    * loop, staging included, with AQE disabled (see
     * [[GraphOps.withLoopAqeDisabled]] for which loops want that). */
   def loop(tag: String, spark: SparkSession, aqeOff: Boolean)(
       body: Loop => DataFrame): DataFrame = {
@@ -60,6 +67,7 @@ private[operators] object Bsp {
 
   final class Loop private[Bsp] (tag: String) {
     private val held = mutable.LinkedHashSet.empty[DataFrame]
+    private val persisted = mutable.Set.empty[DataFrame]
 
     /** Keep `df` (typically a staged, checkpointed edge table) until
       * the loop ends; returns it. */
@@ -85,6 +93,31 @@ private[operators] object Bsp {
         step: (DataFrame, Int) => DataFrame): DataFrame =
       run(init, n, step, None)._1
 
+    /** `n` rounds of a fixed-length LAZY chain, for loops with no
+      * convergence test: each round's frame is persisted, and its
+      * blocks fill in the first job that computes through it — with
+      * no eager checkpoint in the chain, that is the caller's output
+      * checkpoint, one job for every round. With `ckptEvery > 0`
+      * every `ckptEvery`-th round and the last are eagerly
+      * checkpointed instead, which bounds the plan depth of a long
+      * chain at that many rounds. Returns `init` followed by every
+      * round's frame; all of them stay held until the loop ends. */
+    def chain(init: DataFrame, n: Int, ckptEvery: Int = 0)(
+        step: (DataFrame, Int) => DataFrame): Vector[DataFrame] =
+      (1 to n).foldLeft(Vector(hold(init))) { (frames, round) =>
+        val t0 = System.nanoTime()
+        val planned = step(frames.last, round)
+        val next =
+          if (ckptEvery > 0 && (round % ckptEvery == 0 || round == n))
+            planned.localCheckpoint(true)
+          else {
+            persisted += planned
+            planned.persist(StorageLevel.MEMORY_AND_DISK)
+          }
+        report(round, "", t0)
+        frames :+ hold(next)
+      }
+
     private def run(init: DataFrame, maxRounds: Int,
                     step: (DataFrame, Int) => DataFrame,
                     probe: Option[(DataFrame, Int) => Probe])
@@ -103,20 +136,24 @@ private[operators] object Bsp {
         }
         release(state)
         state = next
-        // One stderr line per round: uniform inflation across rounds
-        // points at the machine, one dominant round at plan or skew.
-        System.err.println(f"[$tag] round $round$note " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2fs")
+        report(round, note, t0)
       }
       (state, done)
     }
 
+    // One stderr line per round: uniform inflation across rounds
+    // points at the machine, one dominant round at plan or skew.
+    private def report(round: Int, note: String, t0: Long): Unit =
+      System.err.println(f"[$tag] round $round$note " +
+        f"${(System.nanoTime() - t0) / 1e9}%.2fs")
+
     /** Drop `df` from the held set now, releasing its blocks if it is
-      * a flat checkpoint handle — for a frame the loop no longer needs
-      * before it ends. */
+      * a flat checkpoint handle or a frame [[chain]] persisted — for a
+      * frame the loop no longer needs before it ends. */
     def release(df: DataFrame): Unit = {
       held -= df
       if (GraphOps.isFlatCheckpoint(df)) GraphOps.releaseCheckpointedFrame(df)
+      else if (persisted.remove(df)) df.unpersist(false)
     }
 
     /** Release everything still held, except the handles `out`'s plan

@@ -119,8 +119,9 @@ object Centrality {
   /** Backward-sweep checkpoint interval for [[betweennessSample]]:
     * levels between materialization points chain lazily through
     * persist(), bounding plan depth at this many nested joins while
-    * cutting per-level jobs to 1/interval. */
-  /** NOTE (r21, measured negative — don't retry without new
+    * cutting per-level jobs to 1/interval.
+    *
+    * NOTE (r21, measured negative — don't retry without new
     * evidence): widening the forward sweep to 4 levels/probe and this
     * interval to 8 (VERDICT r20 item 3's projection) REGRESSED the
     * face 9.36 → 10.62 s across three consistent bench runs (CPU
@@ -178,51 +179,47 @@ object Centrality {
       .foldRight(lit(cap): Column) { case ((c, v), els) =>
         when(c, v).otherwise(els)
       }
-    // LAZY round chain (r20; the q_msf/q_effective_diameter job-count
-    // lesson applied to the sketch loop): rounds persist() lazily and
-    // the ONE result checkpoint at the tail materializes the whole
-    // chain in a single job — the eager per-round localCheckpoint paid
-    // one driver job per round for a fixed-depth loop with no
-    // convergence probe to serve. Plan depth is bounded by `iters`
-    // (≤ 8), so there is no lineage blow-up to truncate; each round's
-    // blocks still cache (both its consumers — the next round and the
-    // output fold — read the cached frame).
-    val state0 = verts.select(col("id") +:
-      (0 until m).map(k =>
-        when(j === k, rho).otherwise(lit(0)).cast("int").as(s"r$k")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // union-with-self rides the join input as explicit self-loops —
-    // one join + one grouped max per round, the Bfs exchange shape
-    val withSelf = edges.select(col("src"), col("dst"))
-      .unionByName(verts.select(col("id").as("src"), col("id").as("dst")))
-      .localCheckpoint(false)
-    var states = Vector(state0)
-    for (_ <- 1 to iters) {
-      val prev = states.last.withColumnRenamed("id", "src")
-      val next = withSelf.join(prev, "src")
-        .groupBy(col("dst").as("id"))
-        .agg(max(col("r0")).as("r0"),
-          (1 until m).map(k => max(col(s"r$k")).as(s"r$k")): _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      states :+= next
+    Bsp.loop("hyperball", spark, aqeOff = false) { bsp =>
+      // LAZY round chain (r20; the q_msf/q_effective_diameter job-count
+      // lesson applied to the sketch loop): rounds persist and the ONE
+      // result checkpoint at the tail materializes the whole chain in
+      // a single job — an eager per-round checkpoint would pay one
+      // driver job per round for a fixed-depth loop with no
+      // convergence probe to serve. Plan depth is bounded by `iters`
+      // (≤ 8), so there is no lineage blow-up to truncate; each
+      // round's blocks still cache (both its consumers — the next
+      // round and the output fold — read the cached frame). The seed
+      // sketch is a lazy checkpoint that the same tail job fills.
+      val state0 = verts.select(col("id") +:
+        (0 until m).map(k =>
+          when(j === k, rho).otherwise(lit(0)).cast("int").as(s"r$k")): _*)
+        .localCheckpoint(false)
+      // union-with-self rides the join input as explicit self-loops —
+      // one join + one grouped max per round, the Bfs exchange shape
+      val withSelf = bsp.hold(edges.select(col("src"), col("dst"))
+        .unionByName(verts.select(col("id").as("src"), col("id").as("dst")))
+        .localCheckpoint(false))
+      val states = bsp.chain(state0, iters) { (state, _) =>
+        withSelf.join(state.withColumnRenamed("id", "src"), "src")
+          .groupBy(col("dst").as("id"))
+          .agg(max(col("r0")).as("r0"),
+            (1 until m).map(k => max(col(s"r$k")).as(s"r$k")): _*)
+      }
+      def packed(t: Int): Column = (0 until m).map(k =>
+        states(t)(s"r$k").cast("long") * lit(1L << (4 * k))).reduce(_ + _)
+      val zT = (0 until m).map(k =>
+        expr(s"cast(shiftleft(1, $cap - r$k) as bigint)")).reduce(_ + _)
+      val numer = 1000L * m * m * (1L << cap)
+      val out = (1 until states.size).foldLeft(
+          states.head.select(col("id"))) { (acc, t) =>
+        acc.join(states(t).select(col("id"), packed(t).as(s"regs_$t")), "id")
+      }.join(states(iters).withColumn("z", zT)
+          .withColumn("est_milli", expr(s"$numer div z"))
+          .select(col("id"), col("est_milli")), "id")
+      // the ONE materialization job of the whole loop — every lazily
+      // persisted round (and the staged withSelf) computes inside it
+      out.localCheckpoint(true)
     }
-    def packed(t: Int): Column = (0 until m).map(k =>
-      states(t)(s"r$k").cast("long") * lit(1L << (4 * k))).reduce(_ + _)
-    val zT = (0 until m).map(k =>
-      expr(s"cast(shiftleft(1, $cap - r$k) as bigint)")).reduce(_ + _)
-    val numer = 1000L * m * m * (1L << cap)
-    val out = (1 until states.size).foldLeft(
-        states.head.select(col("id"))) { (acc, t) =>
-      acc.join(states(t).select(col("id"), packed(t).as(s"regs_$t")), "id")
-    }.join(states(iters).withColumn("z", zT)
-        .withColumn("est_milli", expr(s"$numer div z"))
-        .select(col("id"), col("est_milli")), "id")
-    // the ONE materialization job of the whole loop — every lazily
-    // persisted round (and the staged withSelf) computes inside it
-    val result = out.localCheckpoint(true)
-    states.foreach(_.unpersist(false))
-    GraphOps.releaseCheckpointedFrame(withSelf)
-    result
   }
 
   /** Pivot-sampled betweenness (Brandes, 2001; pivot sampling per
@@ -253,10 +250,14 @@ object Centrality {
     * shortest-path DAG). The DAG is built ONCE per pivot (one join of
     * the edge table against the |V|-sized distance map) and each
     * level sweep touches only that level's DAG slice — per-pivot cost
-    * is O(|E|) exchanged rows total, never all-pairs. Level frames
-    * are frontier-sized and eagerly checkpointed; superseded levels
-    * release their blocks in-loop (the [[RandomWalk]] discipline). */
-  /** AQE stays ON (r17, measured): the per-level frames
+    * is O(|E|) exchanged rows total, never all-pairs. Both sweeps run
+    * on [[Bsp]]: the forward sweep's state is the settled set
+    * `(pv, id, sigma, dist)`, checkpointed per round and released
+    * when its successor lands; the backward sweep is a lazy chain of
+    * frontier-sized level frames, checkpointed every
+    * [[BwCkptInterval]] levels and released when the loop ends.
+    *
+    * AQE stays ON (r17, measured): the per-level frames
     * are frontier-sized, so at scan-sized shuffle.partitions the
     * level exchanges pay the shuffle-file overhead AQE coalescing
     * removes — fresh-JVM [13.5 @ CPU 44] with AQE vs [16.0 @ 96]
@@ -266,180 +267,147 @@ object Centrality {
                         scale: Long = 1000000L): DataFrame = {
     require(pivots.nonEmpty, "need at least one pivot")
     require(pivots.distinct.size == pivots.size, s"duplicate pivots: $pivots")
-    runBetweenness(edges, pivots, scale)
-  }
-
-  private def runBetweenness(edges: DataFrame, pivots: Seq[Long],
-                             scale: Long): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val verts = edges.select(col("src").as("id")).distinct()
-    // the symmetrized edge table feeds every level of every pivot —
-    // checkpoint ONCE (a plain `edges` would re-scan parquet and
-    // re-explode per level; measured as the dominant cost class)
-    val edgesC = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    // every pivot-tagged map (frontier, σ, each δ level) is
-    // <= k·|V| rows of small longs — broadcast-gated at the Bfs
-    // frontier ceiling, ONE |V| count decides for all of them. A
-    // graph past the gate degrades every map-side join below to the
-    // shuffled form instead of OOMing the driver.
-    val bcGate = 4000000L
-    val small = verts.count() * pivots.size <= bcGate
-    def gated(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    // ALL pivots advance in ONE pivot-tagged frontier loop — k
-    // sequential loops would pay the per-level job latency k times
-    // for the same total rows (measured: the wall cost is job count,
-    // not compute, once the sweeps are map-side). A pivot whose
-    // frontier exhausts early simply contributes no rows to deeper
-    // levels.
-    //
-    // FUSED forward sweep: dist AND σ in one loop (a separate Bfs
-    // pass + σ sweep would walk the graph twice — the sum over
-    // predecessors rides the same frontier expansion the min-dist
-    // BFS does, and never collides because each vertex settles at
-    // exactly one level per pivot). Per level: one broadcast join of
-    // the cached edges with the tagged frontier, one frontier-sized
-    // partial-agged exchange, one broadcast anti-join against the
-    // settled set. Levels are tiny — eagerly checkpointed so the
-    // loop plans stay flat; the settled set is a lazy union of
-    // checkpointed levels (never re-derived).
-    val pivotDf = pivots.zipWithIndex
-      .map { case (p, i) => (i.toLong, p) }.toDF("pv", "pivot")
-    var levels = Vector(pivotDf
-      .select(col("pv"), col("pivot").as("id"), lit(1L).as("sigma"))
-      .localCheckpoint(true))
-    var seen = levels.head.select(col("pv"), col("id"))
-    var depth = 0L
-    var frontierNonEmpty = true
-    // one level expansion: lazy checkpoint — blocks materialize when
-    // the BATCH probe below (or a deeper level's plan) first computes
-    // through it. The frontier rides a gated BROADCAST join (r18
-    // re-measured: the shuffle_hash-against-src-partitioned-edges
-    // form — the Louvain pattern — read 16.3s @ CPU 113 vs 12.8 @ 66
-    // here; on THIS face the per-level frontier is tiny and the
-    // broadcast build is cheaper than hashing 32 partitions of the
-    // candidate stream). `seen` joins SHUFFLED (r17): it grows toward
-    // k·|V| — broadcasting it re-collects the whole set to the driver
-    // every level.
-    def expand(prev: DataFrame, seenSoFar: DataFrame): DataFrame = edgesC
-      .join(gated(prev
-        .select(col("pv"), col("id").as("src"), col("sigma"))), "src")
-      .groupBy(col("pv"), col("dst").as("id"))
-      .agg(sum(col("sigma")).as("sigma"))
-      .join(seenSoFar, Seq("pv", "id"), "left_anti")
-      .localCheckpoint(false)
-    // TWO levels per probe (r17 verdict punch #2): the probe result is
-    // only consumed as "frontier empty", and an empty level's
-    // expansion is empty by BFS monotonicity — so advancing two levels
-    // lazily and counting only the deeper one halves the forward
-    // sweep's job count (this face is latency-bound on per-level probe
-    // jobs at quiet-window CPU ≪ cores, the same disease the r17
-    // loop-wide fuse cured in Bfs/Msf). One count materializes BOTH
-    // levels' checkpoint blocks (b's plan computes through a's). The
-    // overshoot cost is one empty expansion at the fixpoint; the tail
-    // count(a) on already-materialized blocks is metadata-cheap.
-    while (frontierNonEmpty) {
-      val a = expand(levels.last, seen)
-      val seenA = seen.unionByName(a.select(col("pv"), col("id")))
-      val b = expand(a, seenA)
-      if (b.count() == 0L) {
-        frontierNonEmpty = false
-        if (a.count() > 0L) {
-          levels :+= a
-          seen = seenA
-          depth += 1
-          GraphOps.releaseCheckpointedFrame(b)
-        } else {
-          GraphOps.releaseCheckpointedFrame(a)
-          GraphOps.releaseCheckpointedFrame(b)
-        }
-      } else {
-        levels :+= a
-        levels :+= b
-        seen = seenA.unionByName(b.select(col("pv"), col("id")))
-        depth += 2
+    Bsp.loop("betweenness", spark, aqeOff = false) { bsp =>
+      val verts = edges.select(col("src").as("id")).distinct()
+      // the symmetrized edge table feeds every level of every pivot —
+      // checkpoint ONCE (a plain `edges` would re-scan parquet and
+      // re-explode per level; measured as the dominant cost class)
+      val edgesC = bsp.hold(
+        edges.select(col("src"), col("dst")).localCheckpoint(true))
+      // every pivot-tagged map (frontier, σ, each δ level) is
+      // <= k·|V| rows of small longs — broadcast-gated at the Bfs
+      // frontier ceiling, ONE |V| count decides for all of them. A
+      // graph past the gate degrades every map-side join below to the
+      // shuffled form instead of OOMing the driver.
+      val bcGate = 4000000L
+      val small = verts.count() * pivots.size <= bcGate
+      def gated(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+      // ALL pivots advance in ONE pivot-tagged frontier loop — k
+      // sequential loops would pay the per-level job latency k times
+      // for the same total rows (measured: the wall cost is job count,
+      // not compute, once the sweeps are map-side). A pivot whose
+      // frontier exhausts early simply contributes no rows to deeper
+      // levels.
+      //
+      // FUSED forward sweep: dist AND σ in one loop (a separate Bfs
+      // pass + σ sweep would walk the graph twice — the sum over
+      // predecessors rides the same frontier expansion the min-dist
+      // BFS does, and never collides because each vertex settles at
+      // exactly one level per pivot). Per level: one broadcast join of
+      // the cached edges with the tagged frontier, one frontier-sized
+      // partial-agged exchange, one anti-join against the settled set.
+      // The loop state IS the settled set (pv, id, sigma, dist), so
+      // when the loop ends it is the σ map the DAG below reads.
+      val pivotDf = pivots.zipWithIndex
+        .map { case (p, i) => (i.toLong, p) }.toDF("pv", "pivot")
+      // one level expansion. The frontier rides a gated BROADCAST
+      // join (r18 re-measured: the shuffle_hash-against-src-
+      // partitioned-edges form — the Louvain pattern — read 16.3s @
+      // CPU 113 vs 12.8 @ 66 here; on THIS face the per-level frontier
+      // is tiny and the broadcast build is cheaper than hashing 32
+      // partitions of the candidate stream). `seen` joins SHUFFLED
+      // (r17): it grows toward k·|V| — broadcasting it re-collects the
+      // whole set to the driver every level.
+      def expand(prev: DataFrame, seen: DataFrame): DataFrame = edgesC
+        .join(gated(prev
+          .select(col("pv"), col("id").as("src"), col("sigma"))), "src")
+        .groupBy(col("pv"), col("dst").as("id"))
+        .agg(sum(col("sigma")).as("sigma"))
+        .join(seen, Seq("pv", "id"), "left_anti")
+      val init = pivotDf
+        .select(col("pv"), col("pivot").as("id"), lit(1L).as("sigma"),
+          lit(0L).as("dist"))
+        .localCheckpoint(false)
+      // TWO levels per round (r17 verdict punch #2): an empty level's
+      // expansion is empty by BFS monotonicity, so advancing two
+      // levels lazily and letting only the deeper one decide
+      // convergence halves the forward sweep's probe jobs (this face
+      // is latency-bound on per-level probe jobs at quiet-window
+      // CPU ≪ cores, the same disease the r17 loop-wide fuse cured in
+      // Bfs/Msf). The overshoot cost is one empty expansion at the
+      // fixpoint.
+      //
+      // The round's first (odd) level is a lazy checkpoint held until
+      // the probe has materialized the state that copies it: the even
+      // level reads it twice (its frontier and its seen set), and the
+      // (pv, id) projection of an UN-checkpointed level plans a pruned
+      // aggregate that cannot reuse the level's own exchange (the
+      // un-checkpointed form measured 84 jobs against 77 on
+      // JobCountSpec's fixture).
+      var maxD = 0L
+      var odd: DataFrame = null
+      val sigma = bsp.rounds(init, Int.MaxValue) { (settled, round) =>
+        val d = 2L * round
+        val ids = settled.select(col("pv"), col("id"))
+        odd = bsp.hold(expand(settled.filter(col("dist") === d - 2), ids)
+          .localCheckpoint(false))
+        val even =
+          expand(odd, ids.unionByName(odd.select(col("pv"), col("id"))))
+        settled
+          .unionByName(odd.withColumn("dist", lit(d - 1)))
+          .unionByName(even.withColumn("dist", lit(d)))
+      } { (next, round) =>
+        // one aggregate over the round's two levels: the deeper one
+        // decides convergence, the deepest non-empty one is the
+        // backward sweep's length
+        val deepest = next.filter(col("dist") > 2L * round - 2)
+          .agg(max(col("dist"))).head()
+        bsp.release(odd)
+        if (!deepest.isNullAt(0)) maxD = deepest.getLong(0)
+        Bsp.Probe(maxD < 2L * round, s"depth=$maxD")
       }
-    }
-    val maxD = depth
-    // (pv, id, dist, σ) for every (pivot, reached vertex)
-    val sigma = levels.zipWithIndex
-      .map { case (lv, dd) => lv.withColumn("dist", lit(dd.toLong)) }
-      .reduce(_ unionByName _)
-      .localCheckpoint(true)
-    // σ-annotated shortest-path DAG for all pivots, built ONCE via
-    // two map-side joins against the broadcast (dist, σ) map — the
-    // edge table never shuffles; per-pivot unreached vertices drop
-    // out (no map row for that pv)
-    val dagS = edgesC
-      .join(gated(sigma.select(col("pv"), col("id").as("src"),
-        col("dist").as("sd"), col("sigma").as("sv"))), "src")
-      .join(gated(sigma.select(col("pv"), col("id").as("dst"),
-        col("dist").as("dd"), col("sigma").as("sw"))), Seq("pv", "dst"))
-      .filter(col("dd") === col("sd") + 1)
-      .select(col("pv"), col("src"), col("dst"), col("sd"),
-        col("sv"), col("sw"))
-      .localCheckpoint(true)
-    levels.foreach(GraphOps.releaseCheckpointedFrame(_))
-    // backward sweep: δq from the deepest level up, all pivots per
-    // level — per level ONE broadcast left join (δ of the level
-    // below) + one frontier-sized exchange. Levels have NO probe (the
-    // level count is known: maxD..0), so unlike the forward sweep the
-    // per-level job was pure latency — levels now chain LAZILY
-    // through persist() and a checkpoint+count lands every
-    // BwCkptInterval levels (and at level 0): one job materializes
-    // the whole persisted span (the caches populate as the chain
-    // computes), plan depth stays ≤ interval joins (never the
-    // O(maxD²) tree a fully-lazy chain hands Catalyst on a
-    // high-diameter graph), and the sweep costs ⌈maxD/interval⌉ jobs
-    // instead of maxD (r17; measured the eager form's per-level job
-    // as this query's dominant wall at CPU ≪ cores). Leaves (no DAG
-    // successors) have δq = 0 — the left join's coalesce.
-    var deltaNext = spark.emptyDataset[(Long, Long, Long)]
-      .toDF("pv", "id", "delta")
-    var deltas = Vector.empty[DataFrame]
-    var sinceCkpt = 0
-    for (d <- (maxD - 1) to 0L by -1L) {
-      // δ of the level below joins SHUFFLED (r17): a broadcast here
-      // costs one build job per level even inside the lazily-chained
-      // spans — the tiny exchange rides the span's single job instead
-      var lvl = dagS.filter(col("sd") === d)
-        .join(deltaNext.withColumnRenamed("id", "dst"),
-          Seq("pv", "dst"), "left")
-        .withColumn("num",
-          col("sv") * (lit(scale) + coalesce(col("delta"), lit(0L))))
-        .withColumn("term", expr("num div sw"))
-        .groupBy(col("pv"), col("src").as("id"))
-        .agg(sum(col("term")).as("delta"))
-      sinceCkpt += 1
-      if (sinceCkpt >= BwCkptInterval || d == 0L) {
-        lvl = lvl.localCheckpoint(false)
-        lvl.count()
-        sinceCkpt = 0
-      } else {
-        lvl = lvl.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // σ-annotated shortest-path DAG for all pivots, built ONCE via
+      // two map-side joins against the broadcast (dist, σ) map — the
+      // edge table never shuffles; per-pivot unreached vertices drop
+      // out (no map row for that pv)
+      val dagS = bsp.hold(edgesC
+        .join(gated(sigma.select(col("pv"), col("id").as("src"),
+          col("dist").as("sd"), col("sigma").as("sv"))), "src")
+        .join(gated(sigma.select(col("pv"), col("id").as("dst"),
+          col("dist").as("dd"), col("sigma").as("sw"))), Seq("pv", "dst"))
+        .filter(col("dd") === col("sd") + 1)
+        .select(col("pv"), col("src"), col("dst"), col("sd"),
+          col("sv"), col("sw"))
+        .localCheckpoint(true))
+      // backward sweep: δq from the deepest level up, all pivots per
+      // level — per level ONE left join (δ of the level below) + one
+      // frontier-sized exchange. Levels have NO probe (the level count
+      // is known: maxD..0), so a per-level job would be pure latency —
+      // levels chain LAZILY and a checkpoint lands every
+      // BwCkptInterval levels (and at level 0): one job materializes
+      // the whole persisted span (the caches populate as the chain
+      // computes), plan depth stays ≤ interval joins (never the
+      // O(maxD²) tree a fully-lazy chain hands Catalyst on a
+      // high-diameter graph), and the sweep costs ⌈maxD/interval⌉ jobs
+      // instead of maxD (r17; measured the eager form's per-level job
+      // as this query's dominant wall at CPU ≪ cores). Leaves (no DAG
+      // successors) have δq = 0 — the left join's coalesce.
+      val deltas = bsp.chain(
+          spark.emptyDataset[(Long, Long, Long)].toDF("pv", "id", "delta"),
+          maxD.toInt, BwCkptInterval) { (deltaNext, round) =>
+        // δ of the level below joins SHUFFLED (r17): a broadcast here
+        // costs one build job per level even inside the lazily-chained
+        // spans — the tiny exchange rides the span's single job instead
+        dagS.filter(col("sd") === maxD - round)
+          .join(deltaNext.withColumnRenamed("id", "dst"),
+            Seq("pv", "dst"), "left")
+          .withColumn("num",
+            col("sv") * (lit(scale) + coalesce(col("delta"), lit(0L))))
+          .withColumn("term", expr("num div sw"))
+          .groupBy(col("pv"), col("src").as("id"))
+          .agg(sum(col("term")).as("delta"))
       }
-      deltas :+= lvl
-      deltaNext = lvl
+      // Brandes: each pivot's own δ row is excluded; bc = Σ over pivots
+      val delta = deltas.reduce(_ unionByName _)
+        .join(gated(pivotDf), Seq("pv"))
+        .filter(col("id") =!= col("pivot"))
+        .groupBy(col("id"))
+        .agg(sum(col("delta")).as("bc"))
+      verts.join(delta, Seq("id"), "left")
+        .select(col("id"), coalesce(col("bc"), lit(0L)).as("bc_q"))
+        .localCheckpoint(true)
     }
-    // Brandes: each pivot's own δ row is excluded; bc = Σ over pivots
-    val delta = (if (deltas.isEmpty)
-        spark.emptyDataset[(Long, Long, Long)].toDF("pv", "id", "delta")
-      else deltas.reduce(_ unionByName _))
-      .join(gated(pivotDf), Seq("pv"))
-      .filter(col("id") =!= col("pivot"))
-      .groupBy(col("id"))
-      .agg(sum(col("delta")).as("bc"))
-    val out = verts.join(delta, Seq("id"), "left")
-      .select(col("id"), coalesce(col("bc"), lit(0L)).as("bc_q"))
-      .localCheckpoint(true)
-    // the backward sweep's interval levels are flat checkpoints; the
-    // in-between levels are plain persist()s whose plans EMBED those
-    // checkpoints — the release contract routes each to the right call
-    deltas.foreach { d =>
-      if (GraphOps.isFlatCheckpoint(d)) GraphOps.releaseCheckpointedFrame(d)
-      else d.unpersist(false)
-    }
-    Seq(sigma, dagS, edgesC).foreach(GraphOps.releaseCheckpointedFrame(_))
-    out
   }
 }

@@ -312,63 +312,22 @@ object Indexing {
     * table, not the corpus. The per-round argmax is a 1-row
     * TakeOrdered collected to the driver (the same BSP driver-loop
     * shape as the BFS convergence check); the merge application is a
-    * pure per-row array fold, no exchange. Each round's vocab is
-    * eagerly localCheckpoint'ed — the fold expression differs per
-    * round (its pair literals change), so lineage would otherwise
-    * stack `numMerges` interpreted folds onto every later round.
+    * pure per-row array fold, no exchange. Each round's vocab is a
+    * [[Bsp]] round state, checkpointed and released when its
+    * successor lands — the fold expression differs per round (its
+    * pair literals change), so lineage would otherwise stack
+    * `numMerges` folds onto every later round.
     *
     * The greedy fold merges non-overlapping occurrences left to
     * right ("aaaa" + (a,a) → [aa][aa]), matching the reference BPE
-    * formulation and the generated DuckDB oracle. */
+    * formulation and the generated DuckDB oracle. This is
+    * [[bpeLearnBatched]] at `batchK = 1, window = 1` — one merge per
+    * pass — without its pass column. */
   def bpeLearn(df: DataFrame, textCol: String,
                numMerges: Int): DataFrame = {
     require(numMerges > 0, s"numMerges must be positive, got $numMerges")
-    val spark = df.sparkSession
-    import org.apache.spark.sql.Column
-    var vocab = df.select(
-        explode(TextAnalysis.tokens(col(textCol))).as("word"))
-      .filter(length(col("word")) >= 2)
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .select(expr("transform(sequence(1, length(word)), " +
-        "i -> substring(word, i, 1))").as("syms"), col("freq"))
-      .localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, String, String, String, Long)]
-    var prev = vocab
-    var done = false
-    for (r <- 1 to numMerges if !done) {
-      val best = vocab
-        .select(col("freq"), explode(expr(
-          // slice-based pair walk: a word that fully merges to ONE
-          // symbol must yield an EMPTY pair list — sequence(1, 0)
-          // DESCENDS in Spark ([1, 0]) and element_at(syms, 2) then
-          // throws on the 1-element array (hit by batched merges;
-          // slice(_, 1, 0) is empty, and values are identical for
-          // every >= 2-symbol word)
-          "transform(slice(syms, 1, size(syms) - 1), " +
-            "(x, i) -> struct(x AS l, " +
-            "element_at(syms, i + 2) AS r))")).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("n"))
-        .orderBy(col("n").desc, col("l"), col("r"))
-        .limit(1).collect()
-      if (best.isEmpty) done = true
-      else {
-        val (l, rr, n) =
-          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        val m = l + rr
-        merges += ((r, l, rr, m, n))
-        prev = vocab
-        vocab = vocab.withColumn("syms",
-            graft.functions.BpeApplyExpr.bpe_apply(col("syms"),
-              Seq((l, rr, m))))
-          .localCheckpoint(true)
-        prev.unpersist(false)
-      }
-    }
-    vocab.unpersist(false)
-    import spark.implicits._
-    merges.toSeq.toDF("rank", "left", "right", "merged", "n")
+    bpeLearnBatched(df, textCol, numMerges, batchK = 1, window = 1)
+      .drop("pass")
   }
 
   /** Batched BPE merge learning (r19, VERDICT r18 #6): [[bpeLearn]]'s
@@ -391,71 +350,19 @@ object Indexing {
     * not merges, bound the driver-loop count, which is exactly the
     * property a 32k-merge production run needs.
     *
-    * The one-merge [[bpeLearn]] keeps its face: at `batchK = 1,
-    * window = 1` this reduces to it exactly (spec-pinned).
+    * At `batchK = 1, window = 1` this is the one-merge [[bpeLearn]]
+    * (spec-pinned).
     *
     * @return merge table (rank INT — global, dense; pass INT; left,
     *         right, merged; n — the PRE-pass pair count) */
   def bpeLearnBatched(df: DataFrame, textCol: String, passes: Int,
                       batchK: Int, window: Int = 64): DataFrame = {
-    require(passes > 0, s"passes must be positive, got $passes")
-    require(batchK > 0, s"batchK must be positive, got $batchK")
-    require(window >= batchK,
-      s"window ($window) must be >= batchK ($batchK)")
-    val spark = df.sparkSession
-    var vocab = df.select(
-        explode(TextAnalysis.tokens(col(textCol))).as("word"))
-      .filter(length(col("word")) >= 2)
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .select(expr("transform(sequence(1, length(word)), " +
-        "i -> substring(word, i, 1))").as("syms"), col("freq"))
-      .localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, Int, String, String, String, Long)]
-    var rank = 0
-    for (p <- 1 to passes) {
-      val cands = vocab
-        .select(col("freq"), explode(expr(
-          // slice-based pair walk: a word that fully merges to ONE
-          // symbol must yield an EMPTY pair list — sequence(1, 0)
-          // DESCENDS in Spark ([1, 0]) and element_at(syms, 2) then
-          // throws on the 1-element array (hit by batched merges;
-          // slice(_, 1, 0) is empty, and values are identical for
-          // every >= 2-symbol word)
-          "transform(slice(syms, 1, size(syms) - 1), " +
-            "(x, i) -> struct(x AS l, " +
-            "element_at(syms, i + 2) AS r))")).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("n"))
-        .orderBy(col("n").desc, col("l"), col("r"))
-        .limit(window).collect()
-      var used = Set.empty[String]
-      val picked = scala.collection.mutable.ArrayBuffer
-        .empty[(String, String, Long)]
-      for (row <- cands if picked.size < batchK) {
-        val (l, r) = (row.getString(0), row.getString(1))
-        val syms = Set(l, r, l + r)
-        if (syms.intersect(used).isEmpty) {
-          picked += ((l, r, row.getLong(2)))
-          used ++= syms
-        }
-      }
-      if (picked.nonEmpty) {
-        picked.foreach { case (l, r, n) =>
-          rank += 1
-          merges += ((rank, p, l, r, l + r, n))
-        }
-        val prev = vocab
-        vocab = vocab.withColumn("syms",
-            graft.functions.BpeApplyExpr.bpe_apply(col("syms"),
-              picked.toSeq.map { case (l, r, _) => (l, r, l + r) }))
-          .localCheckpoint(true)
-        prev.unpersist(false)
-      }
+    requirePasses(passes, batchK, window)
+    Bsp.loop("bpe", df.sparkSession, aqeOff = false) { bsp =>
+      learnMerges(bsp, charVocab(df, textCol).localCheckpoint(true),
+          passes, batchK, window, "", sharesSymbol)(
+        pairCounts, applyRules)
     }
-    vocab.unpersist(false)
-    import spark.implicits._
-    merges.toSeq.toDF("rank", "pass", "left", "right", "merged", "n")
   }
 
   /** Deep batched BPE over TOKEN sequences — vocabulary-depth phrase
@@ -504,64 +411,12 @@ object Indexing {
     *         right, merged; n — the PRE-pass pair count) */
   def bpeLearnPhrases(df: DataFrame, textCol: String, passes: Int,
                       batchK: Int, window: Int = 1024): DataFrame = {
-    require(passes > 0, s"passes must be positive, got $passes")
-    require(batchK > 0, s"batchK must be positive, got $batchK")
-    require(window >= batchK,
-      s"window ($window) must be >= batchK ($batchK)")
-    val spark = df.sparkSession
-    // the sequence table: one row per document, symbols = its token
-    // list (empty split artifacts dropped on BOTH engine and oracle
-    // sides); freq carries the grouped-duplicate count shape the
-    // char-level learners use, degenerate (1) for distinct docs
-    var vocab = df.select(
-        filter(TextAnalysis.tokens(col(textCol)),
-          x => x =!= lit("")).as("syms"))
-      .filter(size(col("syms")) >= 2)
-      .groupBy("syms").agg(count(lit(1)).as("freq"))
-      .localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, Int, String, String, String, Long)]
-    var rank = 0
-    for (p <- 1 to passes) {
-      val cands = vocab
-        .select(col("freq"), explode(expr(
-          "transform(slice(syms, 1, size(syms) - 1), " +
-            "(x, i) -> struct(x AS l, " +
-            "element_at(syms, i + 2) AS r))")).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("n"))
-        .orderBy(col("n").desc, col("l"), col("r"))
-        .limit(window).collect()
-      val ls = scala.collection.mutable.Set.empty[String]
-      val rs = scala.collection.mutable.Set.empty[String]
-      val ms = scala.collection.mutable.Set.empty[String]
-      val picked = scala.collection.mutable.ArrayBuffer
-        .empty[(String, String, Long)]
-      for (row <- cands if picked.size < batchK) {
-        val (l, r) = (row.getString(0), row.getString(1))
-        val m = l + " " + r
-        if (!ls(r) && !rs(l) &&
-            !ls(m) && !rs(m) && !ms(m) && !ms(l) && !ms(r)) {
-          picked += ((l, r, row.getLong(2)))
-          ls += l; rs += r; ms += m
-        }
-      }
-      if (picked.nonEmpty) {
-        picked.foreach { case (l, r, n) =>
-          rank += 1
-          merges += ((rank, p, l, r, l + " " + r, n))
-        }
-        val prev = vocab
-        vocab = vocab.withColumn("syms",
-            graft.functions.BpeApplyExpr.bpe_apply(col("syms"),
-              picked.toSeq.map { case (l, r, _) => (l, r, l + " " + r) }))
-          .localCheckpoint(true)
-        prev.unpersist(false)
-      }
+    requirePasses(passes, batchK, window)
+    Bsp.loop("bpe", df.sparkSession, aqeOff = false) { bsp =>
+      learnMerges(bsp, phraseVocab(df, textCol).localCheckpoint(true),
+          passes, batchK, window, " ", chainsOrTouchesMerged)(
+        pairCounts, applyRules)
     }
-    vocab.unpersist(false)
-    import spark.implicits._
-    merges.toSeq.toDF("rank", "pass", "left", "right", "merged", "n")
   }
 
   /** [[bpeLearnPhrases]] with INCREMENTAL pair-count maintenance —
@@ -587,105 +442,169 @@ object Indexing {
   def bpeLearnPhrasesIncremental(df: DataFrame, textCol: String,
                                  passes: Int, batchK: Int,
                                  window: Int = 1024): DataFrame = {
-    require(passes > 0, s"passes must be positive, got $passes")
-    require(batchK > 0, s"batchK must be positive, got $batchK")
-    require(window >= batchK,
-      s"window ($window) must be >= batchK ($batchK)")
-    val spark = df.sparkSession
-    // expression builders over a NAMED array column (matches the expr
-    // style of the sibling learners; the 0-based transform index i
-    // pairs slice element i with element_at(col, i + 2))
-    def pairStructs(c: String): Column = expr(
-      s"transform(slice($c, 1, size($c) - 1), " +
-        s"(x, i) -> struct(x AS l, element_at($c, i + 2) AS r))")
+    requirePasses(passes, batchK, window)
     // pair keys for the touched-row test, joined with chr(1) --
     // symbols are whitespace-joined token phrases, so 0x01 cannot
     // occur in one and the key is unambiguous
     def pairKeys(c: String): Column = expr(
       s"transform(slice($c, 1, size($c) - 1), " +
         s"(x, i) -> concat(x, chr(1), element_at($c, i + 2)))")
-    var vocab = df.select(
-        filter(TextAnalysis.tokens(col(textCol)),
-          x => x =!= lit("")).as("syms"))
-      .filter(size(col("syms")) >= 2)
-      .groupBy("syms").agg(count(lit(1)).as("freq"))
-      .localCheckpoint(true)
-    // the UNDERLYING checkpoint behind `vocab` (which from pass 1 on
-    // is a projection over the applied frame) -- tracked so each
-    // pass's blocks release when the next lands
-    var vocabCp = vocab
-    // seed: the ONE full pair-count exchange this path ever runs
-    var pc = vocab
-      .select(explode(pairStructs("syms")).as("p"), col("freq"))
-      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-      .agg(sum(col("freq")).as("n"))
-      .localCheckpoint(true)
+    Bsp.loop("bpe", df.sparkSession, aqeOff = false) { bsp =>
+      // the maintained pair-count table, held on the loop: pass 1
+      // seeds it with the ONE full pair-count exchange this path ever
+      // runs; each later pass folds in the delta of the rows the last
+      // pass's merges touched, and the superseded table is released
+      // once its successor has materialized
+      var pc = Option.empty[DataFrame]
+      learnMerges(bsp, phraseVocab(df, textCol).localCheckpoint(true),
+          passes, batchK, window, " ", chainsOrTouchesMerged)(
+        { vocab =>
+          val next = bsp.hold(pc.fold(pairCounts(vocab)) { counts =>
+            // the delta exchange carries only touched rows' pairs
+            val touched = vocab.filter(col("hit"))
+            val delta = touched
+              .select(explode(pairStructs("old")).as("p"),
+                (-col("freq")).as("d"))
+              .unionAll(touched
+                .select(explode(pairStructs("syms")).as("p"),
+                  col("freq").as("d")))
+              .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+              .agg(sum(col("d")).as("d"))
+            counts.join(delta, Seq("l", "r"), "full_outer")
+              .select(col("l"), col("r"),
+                (coalesce(col("n"), lit(0L)) +
+                  coalesce(col("d"), lit(0L))).as("n"))
+              .filter(col("n") > 0L)
+          }.localCheckpoint(true))
+          pc.foreach(bsp.release)
+          pc = Some(next)
+          next
+        },
+        { (vocab, rules) =>
+          val keys = rules.map { case (l, r, _) => l + "\u0001" + r }.toList
+          // ONE checkpointed frame carries (old syms, rewritten syms,
+          // touched?) so the next pass's delta reads both sides of the
+          // SAME row without a keyless self-join; untouched rows skip
+          // the fold
+          vocab.select(col("syms").as("old"), col("freq"))
+            .withColumn("hit",
+              arrays_overlap(pairKeys("old"), typedLit(keys)))
+            .withColumn("syms",
+              when(col("hit"), graft.functions.BpeApplyExpr
+                .bpe_apply(col("old"), rules))
+                .otherwise(col("old")))
+        })
+    }
+  }
+
+  /** A merge rule: (left, right, merged). */
+  private type Rule = (String, String, String)
+
+  /** The batched learners' argument checks. */
+  private def requirePasses(passes: Int, batchK: Int, window: Int): Unit = {
+    require(passes > 0, s"passes must be positive, got $passes")
+    require(batchK > 0, s"batchK must be positive, got $batchK")
+    require(window >= batchK,
+      s"window ($window) must be >= batchK ($batchK)")
+  }
+
+  /** The char-level vocabulary: one row per distinct word of >= 2
+    * chars, `syms` its characters, `freq` its corpus count. */
+  private def charVocab(df: DataFrame, textCol: String): DataFrame = df
+    .select(explode(TextAnalysis.tokens(col(textCol))).as("word"))
+    .filter(length(col("word")) >= 2)
+    .groupBy("word").agg(count(lit(1)).as("freq"))
+    .select(expr("transform(sequence(1, length(word)), " +
+      "i -> substring(word, i, 1))").as("syms"), col("freq"))
+
+  /** The phrase vocabulary: one row per distinct document token
+    * sequence of >= 2 tokens (empty split artifacts dropped on BOTH
+    * engine and oracle sides); freq carries the grouped-duplicate
+    * count shape the char-level learners use, degenerate (1) for
+    * distinct docs. */
+  private def phraseVocab(df: DataFrame, textCol: String): DataFrame = df
+    .select(filter(TextAnalysis.tokens(col(textCol)),
+      x => x =!= lit("")).as("syms"))
+    .filter(size(col("syms")) >= 2)
+    .groupBy("syms").agg(count(lit(1)).as("freq"))
+
+  /** The adjacent pairs of array column `c` as `struct(l, r)`s. The
+    * walk is slice-based: a word that fully merges to ONE symbol must
+    * yield an EMPTY pair list — sequence(1, 0) DESCENDS in Spark
+    * ([1, 0]) and element_at(syms, 2) then throws on the 1-element
+    * array (hit by batched merges; slice(_, 1, 0) is empty, and
+    * values are identical for every >= 2-symbol word). */
+  private def pairStructs(c: String): Column = expr(
+    s"transform(slice($c, 1, size($c) - 1), " +
+      s"(x, i) -> struct(x AS l, element_at($c, i + 2) AS r))")
+
+  /** The vocabulary's adjacent-pair counts `(l, r, n)`. */
+  private def pairCounts(vocab: DataFrame): DataFrame = vocab
+    .select(col("freq"), explode(pairStructs("syms")).as("p"))
+    .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+    .agg(sum(col("freq")).as("n"))
+
+  /** One native fold applies `rules` in rank order to every row. */
+  private def applyRules(vocab: DataFrame, rules: Seq[Rule]): DataFrame =
+    vocab.withColumn("syms",
+      graft.functions.BpeApplyExpr.bpe_apply(col("syms"), rules))
+
+  /** [[bpeLearnBatched]]'s strict rule: two picks of a pass may share
+    * no symbol among {left, right, merged}. */
+  private def sharesSymbol(a: Rule, b: Rule): Boolean =
+    Set(a._1, a._2, a._3).exists(Set(b._1, b._2, b._3))
+
+  /** [[bpeLearnPhrases]]' minimal rule: candidate `c` interacts with
+    * accepted pick `a` when it chains with it (c's right is a's left,
+    * or c's left a's right) or touches a's merged unit (c's merged
+    * unit is any of a's symbols, or c's left or right is a's merged
+    * unit). */
+  private def chainsOrTouchesMerged(a: Rule, c: Rule): Boolean = {
+    val (al, ar, am) = a
+    val (l, r, m) = c
+    r == al || l == ar || m == al || m == ar || m == am ||
+      l == am || r == am
+  }
+
+  /** The BPE learners' one pass loop, a [[Bsp]] round per pass: the
+    * step counts the vocabulary's adjacent pairs (`counts`), collects
+    * the top `window` to the driver (a TakeOrdered; count ties break
+    * on (left, right)), picks in count order up to `batchK` rules
+    * that `interacts` with no earlier pick of the pass, and returns
+    * the vocabulary with the picks applied (`fold`); the probe
+    * materializes that vocabulary's checkpoint, and a pass that picks
+    * nothing (no pair is left) ends the loop.
+    *
+    * @return merge table (rank INT — global, dense; pass INT; left,
+    *         right, merged; n — the PRE-pass pair count) */
+  private def learnMerges(bsp: Bsp.Loop, vocab0: DataFrame, passes: Int,
+      batchK: Int, window: Int, sep: String,
+      interacts: (Rule, Rule) => Boolean)(
+      counts: DataFrame => DataFrame,
+      fold: (DataFrame, Seq[Rule]) => DataFrame): DataFrame = {
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Int, Int, String, String, String, Long)]
-    var rank = 0
-    for (p <- 1 to passes) {
-      // selection reads the MAINTAINED table — no corpus scan here
-      val cands = pc.orderBy(col("n").desc, col("l"), col("r"))
+    var picked = Vector.empty[(Rule, Long)]
+    bsp.rounds(vocab0, passes) { (vocab, pass) =>
+      val cands = counts(vocab)
+        .orderBy(col("n").desc, col("l"), col("r"))
         .limit(window).collect()
-      val ls = scala.collection.mutable.Set.empty[String]
-      val rs = scala.collection.mutable.Set.empty[String]
-      val ms = scala.collection.mutable.Set.empty[String]
-      val picked = scala.collection.mutable.ArrayBuffer
-        .empty[(String, String, Long)]
-      for (row <- cands if picked.size < batchK) {
+      picked = cands.foldLeft(Vector.empty[(Rule, Long)]) { (acc, row) =>
         val (l, r) = (row.getString(0), row.getString(1))
-        val m = l + " " + r
-        if (!ls(r) && !rs(l) &&
-            !ls(m) && !rs(m) && !ms(m) && !ms(l) && !ms(r)) {
-          picked += ((l, r, row.getLong(2)))
-          ls += l; rs += r; ms += m
-        }
+        val rule = (l, r, l + sep + r)
+        if (acc.size < batchK && !acc.exists(p => interacts(p._1, rule)))
+          acc :+ (rule -> row.getLong(2))
+        else acc
       }
-      if (picked.nonEmpty) {
-        picked.foreach { case (l, r, n) =>
-          rank += 1
-          merges += ((rank, p, l, r, l + " " + r, n))
-        }
-        val keys = picked.toList.map { case (l, r, _) =>
-          l + "\u0001" + r }
-        val rules = picked.toSeq.map { case (l, r, _) =>
-          (l, r, l + " " + r) }
-        // ONE checkpointed frame carries (old syms, rewritten syms,
-        // touched?) so the delta reads both sides of the SAME row
-        // without a keyless self-join; untouched rows skip the fold
-        val applied = vocab
-          .withColumn("hit",
-            arrays_overlap(pairKeys("syms"), typedLit(keys)))
-          .withColumn("syms2",
-            when(col("hit"), graft.functions.BpeApplyExpr
-              .bpe_apply(col("syms"), rules))
-              .otherwise(col("syms")))
-          .localCheckpoint(true)
-        // the delta exchange carries only touched rows' pairs
-        val touched = applied.filter(col("hit"))
-        val delta = touched
-          .select(explode(pairStructs("syms")).as("p"),
-            (-col("freq")).as("d"))
-          .unionAll(touched
-            .select(explode(pairStructs("syms2")).as("p"),
-              col("freq").as("d")))
-          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-          .agg(sum(col("d")).as("d"))
-        val pcNext = pc.join(delta, Seq("l", "r"), "full_outer")
-          .select(col("l"), col("r"),
-            (coalesce(col("n"), lit(0L)) +
-              coalesce(col("d"), lit(0L))).as("n"))
-          .filter(col("n") > 0L)
-          .localCheckpoint(true)
-        pc.unpersist(false)
-        pc = pcNext
-        vocabCp.unpersist(false)
-        vocabCp = applied
-        vocab = applied.select(col("syms2").as("syms"), col("freq"))
-      }
+      for (((l, r, m), n) <- picked)
+        merges += ((merges.size + 1, pass, l, r, m, n))
+      if (picked.isEmpty) vocab else fold(vocab, picked.map(_._1))
+    } { (next, _) =>
+      // one job fills the merged vocabulary's checkpoint blocks
+      if (picked.nonEmpty) next.queryExecution.toRdd.count()
+      Bsp.Probe(picked.isEmpty, s"merges=${picked.size}")
     }
-    vocabCp.unpersist(false)
-    pc.unpersist(false)
+    val spark = vocab0.sparkSession
     import spark.implicits._
     merges.toSeq.toDF("rank", "pass", "left", "right", "merged", "n")
   }
@@ -708,12 +627,7 @@ object Indexing {
                 topK: Int = 30): DataFrame = {
     require(topK > 0, s"topK must be positive, got $topK")
     import org.apache.spark.sql.Column
-    val vocab = df.select(
-        explode(TextAnalysis.tokens(col(textCol))).as("word"))
-      .filter(length(col("word")) >= 2)
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .select(expr("transform(sequence(1, length(word)), " +
-        "i -> substring(word, i, 1))").as("syms"), col("freq"))
+    val vocab = charVocab(df, textCol)
     // ONE native pass applies the whole rule list in rank order (see
     // BpeApplyExpr — the 8-rule interpreted-fold chain measured 9s at
     // sf0.1; the codegen'd variant keeps the projection in WSCG)

@@ -27,9 +27,11 @@ import org.apache.spark.sql.functions._
   *    argmin is `min(struct(score, dst, …))` — the same semilattice
   *    reduce the BFS/SSSP family uses, so ties are impossible-by-
   *    construction deterministic (equal scores break by dst).
-  *  - each step localCheckpoints eagerly: bounded lineage, one job
-  *    per step, AQE disabled inside the loop (per-round re-planning
-  *    costs more than it saves at this shape — measured on BFS).
+  *  - the steps are a lazy [[Bsp]] chain: each step's state is
+  *    persisted and the output checkpoint materializes all of them
+  *    in one job; steps are planned with AQE disabled (per-round
+  *    re-planning costs more than it saves at this shape — measured
+  *    on BFS).
   *
   * Considered and rejected: indexing into a materialized adjacency
   * ARRAY (choice = neighbors[h(walk, step) mod deg]) would cut the
@@ -83,79 +85,67 @@ object RandomWalk {
       s"need walksPerVertex > 0 and steps >= 0, got $walksPerVertex/$steps")
     val spark = edges.sparkSession
     import spark.implicits._
-
-    // local checkpoint, not persist: no columnar decode on the
-    // per-step reads (r17 loop-residency doctrine; see PageRank)
-    val e = edges.select($"src", $"dst")
-      .repartition($"src")
-      .localCheckpoint(false)
-
-    var state = e.select($"src".as("seed")).distinct()
-      .select($"seed", explode(sequence(lit(0), lit(walksPerVertex - 1)))
-        .as("w"))
-      .select(($"seed" * walksPerVertex + $"w").as("walk_id"), $"seed",
-        $"seed".as("cur"), lit(0).as("step"),
-        $"seed".cast("string").as("path"))
-      // lazy flat checkpoint: materializes inside the chain's one tail
-      // job; released after the tail checkpoint lands (a flat handle
-      // contains only itself, so releasing it never frees e's blocks)
-      .localCheckpoint(false)
-    val state0 = state
-
-    // LAZY round chain (r20; the q_effective_diameter/neighborhood-
-    // function job-count lesson): a FIXED-step loop has no convergence
-    // probe to serve, so the per-step eager checkpoint job was pure
-    // driver latency — steps persist() lazily and ONE tail checkpoint
-    // materializes the whole chain in a single job. Plan depth is
-    // bounded by `steps`; each step's blocks still cache for their two
-    // readers (the next step's candidate join and its state join).
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    GraphOps.withLoopAqeDisabled(spark) {
-      for (i <- 1 to steps) {
-        val tRound = System.nanoTime()
-        val s = state.as("s")
-        // step derives from the carried column (`s.step + 1`), not
-        // lit(i): the per-step plan stays byte-identical, so codegen
-        // caches across steps (the Bfs `dist + 1` lesson)
-        // the candidate stream is Σ deg(cur) rows per step (~150× the
-        // walk count on this graph) — keep it NARROW: only
-        // (walk_id, score, dst) flow into the argmin; the seed/step/
-        // path payload is re-attached afterwards by a walk-keyed join
-        // of two |walks|-sized frames. Building the path string per
-        // CANDIDATE (the old shape) did ~150× the string work and
-        // dragged it through the aggregation sort. Tie behavior is
-        // unchanged: min(struct(score, dst)) breaks score ties on
-        // dst exactly as the wide struct did.
-        val cand = s.join(e.as("e"), col("s.cur") === col("e.src"))
-          .select(col("s.walk_id"),
-            walkScore(col("s.walk_id"), col("s.step") + 1, col("e.dst"))
-              .as("score"),
-            col("e.dst"))
-        val win = cand.groupBy($"walk_id")
-          .agg(min(struct($"score", $"dst")).as("m"))
-          .select($"walk_id", $"m.dst".as("nxt"))
-        val next = state.join(win, "walk_id")
-          .select($"walk_id", $"seed", $"nxt".as("cur"),
-            ($"step" + 1).as("step"),
-            concat($"path", lit(","), $"nxt".cast("string")).as("path"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        System.err.println(
-          f"[walk] step $i ${(System.nanoTime() - tRound) / 1e9}%.2fs")
-        persisted += next
-        state = next
+    Bsp.loop("walk", spark, aqeOff = false) { bsp =>
+      // local checkpoint, not persist: no columnar decode on the
+      // per-step reads (r17 loop-residency doctrine; see PageRank)
+      val e = bsp.hold(edges.select($"src", $"dst")
+        .repartition($"src")
+        .localCheckpoint(false))
+      val init = e.select($"src".as("seed")).distinct()
+        .select($"seed", explode(sequence(lit(0), lit(walksPerVertex - 1)))
+          .as("w"))
+        .select(($"seed" * walksPerVertex + $"w").as("walk_id"), $"seed",
+          $"seed".as("cur"), lit(0).as("step"),
+          $"seed".cast("string").as("path"))
+        // lazy flat checkpoint: materializes inside the chain's one
+        // tail job (a flat handle contains only itself, so releasing
+        // it never frees e's blocks)
+        .localCheckpoint(false)
+      // LAZY round chain (r20; the q_effective_diameter/neighborhood-
+      // function job-count lesson): a FIXED-step loop has no
+      // convergence probe to serve, so a per-step eager checkpoint job
+      // would be pure driver latency — steps persist and ONE tail
+      // checkpoint materializes the whole chain in a single job. Plan
+      // depth is bounded by `steps`; each step's blocks still cache
+      // for their two readers (the next step's candidate join and its
+      // state join). Steps plan with AQE off, as they always have; the
+      // staging above and the tail below plan with the session's AQE.
+      val states = GraphOps.withLoopAqeDisabled(spark) {
+        bsp.chain(init, steps) { (state, _) =>
+          val s = state.as("s")
+          // step derives from the carried column (`s.step + 1`), not
+          // the round number: the per-step plan stays byte-identical,
+          // so codegen caches across steps (the Bfs `dist + 1` lesson)
+          // the candidate stream is Σ deg(cur) rows per step (~150× the
+          // walk count on this graph) — keep it NARROW: only
+          // (walk_id, score, dst) flow into the argmin; the seed/step/
+          // path payload is re-attached afterwards by a walk-keyed join
+          // of two |walks|-sized frames. Building the path string per
+          // CANDIDATE (the old shape) did ~150× the string work and
+          // dragged it through the aggregation sort. Tie behavior is
+          // unchanged: min(struct(score, dst)) breaks score ties on
+          // dst exactly as the wide struct did.
+          val cand = s.join(e.as("e"), col("s.cur") === col("e.src"))
+            .select(col("s.walk_id"),
+              walkScore(col("s.walk_id"), col("s.step") + 1, col("e.dst"))
+                .as("score"),
+              col("e.dst"))
+          val win = cand.groupBy($"walk_id")
+            .agg(min(struct($"score", $"dst")).as("m"))
+            .select($"walk_id", $"m.dst".as("nxt"))
+          state.join(win, "walk_id")
+            .select($"walk_id", $"seed", $"nxt".as("cur"),
+              ($"step" + 1).as("step"),
+              concat($"path", lit(","), $"nxt".cast("string")).as("path"))
+        }
       }
+      // ONE materialization job for the whole chain; the loop then
+      // releases the step caches (walk-state-sized each, `steps` of
+      // them), the staged edges and the init
+      states.last
+        .select($"walk_id", $"seed", $"cur".as("final_vertex"), $"path")
+        .localCheckpoint(true)
     }
-    // ONE materialization job for the whole chain, then the
-    // intermediate step caches (walk-state-sized each, `steps` of
-    // them) release — bounded at steps × |walks| rows, and a flat
-    // handle is what long-walk callers would checkpoint anyway
-    val out = state
-      .select($"walk_id", $"seed", $"cur".as("final_vertex"), $"path")
-      .localCheckpoint(true)
-    persisted.foreach(_.unpersist(false))
-    GraphOps.releaseCheckpointedFrame(state0)
-    GraphOps.releaseCheckpointedFrame(e)
-    out
   }
 
   /** Skip-gram pair counts from a walk corpus: every position in

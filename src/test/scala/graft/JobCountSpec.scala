@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Bfs, Centrality, ConnectedComponents, Dag, GraphOps,
-  KCore, KTruss, Louvain, Scc, SpanningForest, Sssp}
+  Indexing, KCore, KTruss, Louvain, RandomWalk, Scc, SpanningForest, Sssp}
 
 /** Institutionalizes the r17 one-job-per-round discipline: every BSP
   * round's lazy localCheckpoint is materialized by the SAME job that
@@ -107,6 +107,23 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
   private val MoveStepsBudget = 21
   private val TwoLevelFullBudget = 50
   private val MultilevelBudget = 76
+  // measured before these loops moved onto the shared round driver
+  // (warm): walks(2, 4) 11, neighborhoodFunction(3) 22,
+  // betweennessSample(0, 10) 83; on the BPE fixture bpeLearn(6) 20,
+  // bpeLearnBatched(3, 2) 11, bpeLearnPhrases(3, 2) 11,
+  // bpeLearnPhrasesIncremental(3, 2) 19. On the driver three drop:
+  // neighborhoodFunction 20 (its seed sketch is a lazy checkpoint,
+  // not a persisted frame), betweennessSample 77 (no pivot-level checkpoint job,
+  // no separate σ checkpoint, no trailing level count, and one job
+  // fewer per backward checkpoint) and bpeLearnPhrasesIncremental 16
+  // (the last pass's pair-count update, which nothing read, is gone).
+  private val WalksBudget = 12
+  private val HyperBallBudget = 21
+  private val BetweennessBudget = 78
+  private val BpeLearnBudget = 21
+  private val BpeBatchedBudget = 12
+  private val BpePhrasesBudget = 12
+  private val BpeIncrementalBudget = 17
 
   /** The triangle 10 -> 11 -> 12 -> 10 and the chain 0 -> ... -> 7,
     * directed. */
@@ -119,10 +136,16 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
     ((0L until 7L).map(i => (i, i + 1)) ++
       Seq((10L, 11L), (11L, 12L), (12L, 10L))).toDF("src", "dst"))
 
+  /** IndexingSpec's BPE fixture: "low low low lower lower newest
+    * newest newest newest". */
+  private def bpeDocs = Seq((1L, "low low low lower"),
+    (2L, "lower newest newest"), (3L, "newest newest")).toDF("doc_id", "text")
+
   private def pinned(name: String, rounds: Int, budget: Int)(
       f: => Unit): Unit = {
     f // warm once so codegen/planning one-offs don't ride the counter
     val jobs = countJobs(f)
+    info(s"$name: $jobs jobs")
     assert(jobs <= budget,
       s"$name ($rounds rounds) submitted $jobs jobs — budget $budget; " +
         "a loop change added work per round")
@@ -220,6 +243,56 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
     pinned("Louvain.untilConvergedFull", rounds = 3,
         budget = MultilevelBudget) {
       Louvain.untilConvergedFull(chainAndTriangle).collect()
+    }
+  }
+
+  test("RandomWalk.walks job count is pinned (4 steps)") {
+    pinned("RandomWalk.walks", rounds = 4, budget = WalksBudget) {
+      RandomWalk.walks(chainAndTriangle, 2, 4).collect()
+    }
+  }
+
+  test("Centrality.neighborhoodFunction job count is pinned (3 rounds)") {
+    pinned("Centrality.neighborhoodFunction", rounds = 3,
+        budget = HyperBallBudget) {
+      Centrality.neighborhoodFunction(chainAndTriangle, 3).collect()
+    }
+  }
+
+  test("Centrality.betweennessSample job count is pinned (7 levels)") {
+    // pivot 0 settles the chain's end at level 7: 4 forward rounds of
+    // two levels each and a 7-level backward sweep
+    pinned("Centrality.betweennessSample", rounds = 8,
+        budget = BetweennessBudget) {
+      Centrality.betweennessSample(chainAndTriangle, Seq(0L, 10L)).collect()
+    }
+  }
+
+  test("Indexing.bpeLearn job count is pinned (6 merges)") {
+    pinned("Indexing.bpeLearn", rounds = 6, budget = BpeLearnBudget) {
+      Indexing.bpeLearn(bpeDocs, "text", 6).collect()
+    }
+  }
+
+  test("Indexing.bpeLearnBatched job count is pinned (3 passes)") {
+    pinned("Indexing.bpeLearnBatched", rounds = 3,
+        budget = BpeBatchedBudget) {
+      Indexing.bpeLearnBatched(bpeDocs, "text", 3, 2).collect()
+    }
+  }
+
+  test("Indexing.bpeLearnPhrases job count is pinned (3 passes)") {
+    pinned("Indexing.bpeLearnPhrases", rounds = 3,
+        budget = BpePhrasesBudget) {
+      Indexing.bpeLearnPhrases(bpeDocs, "text", 3, 2).collect()
+    }
+  }
+
+  test("Indexing.bpeLearnPhrasesIncremental job count is pinned " +
+      "(3 passes)") {
+    pinned("Indexing.bpeLearnPhrasesIncremental", rounds = 3,
+        budget = BpeIncrementalBudget) {
+      Indexing.bpeLearnPhrasesIncremental(bpeDocs, "text", 3, 2).collect()
     }
   }
 }

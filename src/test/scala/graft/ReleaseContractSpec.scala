@@ -66,6 +66,10 @@ class ReleaseContractSpec extends AnyFunSuite with SparkTestBase {
       ((0L until 7L).map(i => (i, i + 1)) ++
         Seq((10L, 11L), (11L, 12L), (12L, 10L))).toDF("src", "dst"))
     val weighted = edges.withColumn("w", lit(1L))
+    // IndexingSpec's BPE fixture: the learners return driver-local
+    // merge tables, so nothing they persist may outlive the call
+    val docs = Seq((1L, "low low low lower"),
+      (2L, "lower newest newest"), (3L, "newest newest")).toDF("doc_id", "text")
     val cases: Seq[(String, () => DataFrame)] = Seq(
       "Bfs.runMulti" -> (() => Bfs.runMulti(edges, Seq(0L, 10L))),
       "Sssp.run" -> (() => Sssp.run(weighted, 0L)),
@@ -100,7 +104,19 @@ class ReleaseContractSpec extends AnyFunSuite with SparkTestBase {
       "Louvain.untilConvergedFull" ->
         (() => Louvain.untilConvergedFull(edges)),
       "Louvain.untilConvergedWeighted" ->
-        (() => Louvain.untilConvergedWeighted(weighted)))
+        (() => Louvain.untilConvergedWeighted(weighted)),
+      "RandomWalk.walks" -> (() => RandomWalk.walks(edges, 2, 4)),
+      "Centrality.neighborhoodFunction" ->
+        (() => Centrality.neighborhoodFunction(edges, 3)),
+      "Centrality.betweennessSample" ->
+        (() => Centrality.betweennessSample(edges, Seq(0L, 10L))),
+      "Indexing.bpeLearn" -> (() => Indexing.bpeLearn(docs, "text", 6)),
+      "Indexing.bpeLearnBatched" ->
+        (() => Indexing.bpeLearnBatched(docs, "text", 3, 2)),
+      "Indexing.bpeLearnPhrases" ->
+        (() => Indexing.bpeLearnPhrases(docs, "text", 3, 2)),
+      "Indexing.bpeLearnPhrasesIncremental" ->
+        (() => Indexing.bpeLearnPhrasesIncremental(docs, "text", 3, 2)))
     val leaks = cases.flatMap { case (name, op) =>
       val sc = spark.sparkContext
       val before = sc.getPersistentRDDs.keySet
