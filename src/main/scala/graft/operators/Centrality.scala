@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * the exact O(|V|·|E|) all-pairs form relaxes to at scale).
   *
   * Scale design: cost is exactly k BFS passes — each one exchange per
-  * round over the co-partitioned edge table (the [[Bfs]] discipline),
-  * state one row per vertex per pivot. k is a constant chosen by the
+  * round over the co-partitioned edge table, state one row per vertex
+  * per pivot. k is a constant chosen by the
   * analyst (dozens), never |V|. For whole-graph neighborhood
   * functions at 100 TB the HLL-counter route (HyperBall: one
   * cardinality sketch per vertex, |V|·log log |V| state) is the
@@ -195,7 +195,7 @@ object Centrality {
           when(j === k, rho).otherwise(lit(0)).cast("int").as(s"r$k")): _*)
         .localCheckpoint(false)
       // union-with-self rides the join input as explicit self-loops —
-      // one join + one grouped max per round, the Bfs exchange shape
+      // one join + one grouped max, one exchange, per round
       val withSelf = bsp.hold(edges.select(col("src"), col("dst"))
         .unionByName(verts.select(col("id").as("src"), col("id").as("dst")))
         .localCheckpoint(false))

@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   * machinery as its BFS — `BFS_map_reduce.py:115-150` — with min-label
   * instead of min-dist; multi-source init instead of single-source).
   *
-  * Round structure mirrors [[Bfs.run]]: ONE shuffle per round
-  * (`labels ∪ propagated → groupBy(id).min`), a lazy localCheckpoint
-  * (materialized by the round's probe) to truncate lineage, and
-  * convergence detected WITHOUT a compare-join:
+  * A round joins every vertex's label to the edge table (staged by
+  * `src`), merges the offers with the labels in ONE partial-aggregated
+  * exchange (`labels ∪ propagated → groupBy(id).min`), lazily
+  * localCheckpoints the result (materialized by the round's probe) to
+  * truncate lineage, and detects convergence WITHOUT a compare-join:
   * labels only ever decrease, so the fixpoint is reached exactly when
   * `sum(label)` stops changing — one cheap aggregate action per round.
   *

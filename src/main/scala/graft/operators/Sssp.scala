@@ -8,15 +8,15 @@ import org.apache.spark.sql.functions._
   * (`BFS_map_reduce.py:115-150`: same frontier/semilattice machinery,
   * min-plus instead of min-hop).
   *
-  * Round structure follows [[Bfs.run]] — ONE shuffle and one frontier
-  * count per round — with the one structural difference weights
-  * force: BFS knows the newly-settled vertices by `dist == round`, but
-  * a weighted relaxation can IMPROVE an already-reached vertex, so
-  * each round's merge aggregates BOTH the new minimum and the
-  * previous state's minimum per id (`min(dist)` and
-  * `min(dist WHERE old)` in one partial-aggregated exchange) and the
-  * next frontier is the rows where the new minimum is strictly
-  * better. Rounds needed = hop count of the longest shortest path
+  * Each round the frontier (broadcast while small) expands over the
+  * edge table, the relaxations are unioned with the whole state, and
+  * ONE partial-aggregated exchange by id merges them: `min(dist)` and
+  * `min(dist WHERE old)`, the previous state's minimum. The next
+  * frontier is the rows where the new minimum is strictly better, and
+  * counting it is the round's probe. Unlike [[Bfs]], the state cannot
+  * skip the merge: a weighted relaxation can IMPROVE an
+  * already-reached vertex, so no candidate can be dropped for being
+  * settled. Rounds needed = hop count of the longest shortest path
   * (≤ |V|-1, the Bellman-Ford bound); convergence is "no vertex
   * improved".
   *
@@ -26,10 +26,10 @@ import org.apache.spark.sql.functions._
   * would silently produce wrong fixpoints; Bellman-Ford's
   * negative-cycle semantics are not this operator's contract).
   *
-  * Scale notes: identical to [[Bfs]] — edges hash-partitioned on `src`
-  * once and checkpointed, frontier broadcast while small, a lazy
-  * per-round localCheckpoint (materialized by the frontier count)
-  * keeps lineage flat, AQE off inside the loop.
+  * Scale notes: edges hash-partitioned on `src` once and
+  * checkpointed, frontier broadcast while small, a lazy per-round
+  * localCheckpoint (materialized by the frontier count) keeps lineage
+  * flat, AQE off inside the loop.
   */
 object Sssp {
 

@@ -90,21 +90,58 @@ class BfsSpec extends AnyFunSuite with SparkTestBase {
   def samples(n: Int): Seq[(Seq[(Long, Long)], Long)] =
     (1 to n).flatMap(i => graphGen.apply(Gen.Parameters.default, Seed(i.toLong)))
 
+  /** Run `f` with Spark's size-based broadcast off, so that a round
+    * over `broadcastFrontierRows` really plans a shuffled join: these
+    * fixtures are far under the 10 MB auto-broadcast threshold. */
+  def withoutAutoBroadcast[T](f: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try f finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Run `f` under both expansion plans a round can take: the
+    * broadcast join (default cap), and the shuffled join
+    * (`broadcastFrontierRows = 0`), whose candidates are re-shuffled
+    * by id for the settled-id anti-join. Both must give the same rows. */
+  def inJoinModes(f: (String, Bfs.Config) => Unit): Unit = {
+    f("broadcast", Bfs.Config())
+    withoutAutoBroadcast(f("shuffled", Bfs.Config(broadcastFrontierRows = 0L)))
+  }
+
   test("property: distances match serial oracle on random graphs " +
        "(incl. duplicate edges and self-loops)") {
-    samples(8).foreach { case (edges, src) =>
-      val sym = undirected(edges)
-      val expected = SerialBfsOracle.distances(sym, src)
-      val got = Bfs.run(GraphOps.symmetrize(edgesDf(edges)), src)
-        .as[(Long, Long)].collect().toMap
-      assert(got == expected, s"src=$src edges=$edges")
+    inJoinModes { (mode, cfg) =>
+      samples(8).foreach { case (edges, src) =>
+        val sym = undirected(edges)
+        val expected = SerialBfsOracle.distances(sym, src)
+        val got = Bfs.run(GraphOps.symmetrize(edgesDf(edges)), src, cfg)
+          .as[(Long, Long)].collect().toMap
+        assert(got == expected, s"$mode src=$src edges=$edges")
+      }
+    }
+  }
+
+  test("property: directed random graphs match a serial directed BFS") {
+    // the edges as drawn, not symmetrized: a target reached only
+    // against an edge's direction must stay unreached
+    inJoinModes { (mode, cfg) =>
+      samples(8).foreach { case (edges, src) =>
+        val expected = graft.operators.SerialBfs.run(edges, src)
+          .view.mapValues { case (d, p) => (d, p.toSeq) }.toMap
+        val got = Bfs.run(edgesDf(edges), src, cfg.copy(withPaths = true))
+          .as[(Long, Long, Seq[Long])].collect()
+          .map { case (id, d, p) => id -> ((d, p)) }.toMap
+        assert(got == expected, s"$mode src=$src edges=$edges")
+      }
     }
   }
 
   test("non-broadcast path (forced shuffle join + lazy edge co-partition)") {
-    val result = Bfs.run(GraphOps.symmetrize(edgesDf(tinyG)), 0L,
-        Bfs.Config(broadcastFrontierRows = 0L, withPaths = true))
-      .as[(Long, Long, Seq[Long])].collect().sortBy(_._1)
+    val result = withoutAutoBroadcast(
+      Bfs.run(GraphOps.symmetrize(edgesDf(tinyG)), 0L,
+          Bfs.Config(broadcastFrontierRows = 0L, withPaths = true))
+        .as[(Long, Long, Seq[Long])].collect().sortBy(_._1))
     val viaBroadcast = Bfs.run(GraphOps.symmetrize(edgesDf(tinyG)), 0L,
         Bfs.Config(withPaths = true))
       .as[(Long, Long, Seq[Long])].collect().sortBy(_._1)
@@ -124,14 +161,16 @@ class BfsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("property: engine paths equal serial lex-min paths on random graphs") {
-    samples(4).foreach { case (edges, src) =>
-      val expected = graft.operators.SerialBfs.run(undirected(edges), src)
-        .view.mapValues { case (d, p) => (d, p.toSeq) }.toMap
-      val got = Bfs.run(GraphOps.symmetrize(edgesDf(edges)), src,
-          Bfs.Config(withPaths = true))
-        .as[(Long, Long, Seq[Long])].collect()
-        .map { case (id, d, p) => id -> ((d, p)) }.toMap
-      assert(got == expected, s"src=$src edges=$edges")
+    inJoinModes { (mode, cfg) =>
+      samples(4).foreach { case (edges, src) =>
+        val expected = graft.operators.SerialBfs.run(undirected(edges), src)
+          .view.mapValues { case (d, p) => (d, p.toSeq) }.toMap
+        val got = Bfs.run(GraphOps.symmetrize(edgesDf(edges)), src,
+            cfg.copy(withPaths = true))
+          .as[(Long, Long, Seq[Long])].collect()
+          .map { case (id, d, p) => id -> ((d, p)) }.toMap
+        assert(got == expected, s"$mode src=$src edges=$edges")
+      }
     }
   }
 

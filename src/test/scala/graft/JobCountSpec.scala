@@ -1,8 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,16 +22,12 @@ import graft.operators.{Bfs, Centrality, ConnectedComponents, Dag, GraphOps,
 class JobCountSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
-  /** Run `f` and return the number of Spark jobs it submitted.
-    * Listener events are asynchronous: poll until the count is stable
-    * for 500 ms (all jobs here complete inside `f`, so stability means
-    * the bus has drained). */
-  private def countJobs(f: => Unit): Int = {
-    val n = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
+  /** Run `f` with `listener` registered and return `read()` once the
+    * listener bus has drained. Listener events are asynchronous: poll
+    * until the reading is stable for 500 ms (all jobs here complete
+    * inside `f`, so stability means the bus has drained). */
+  private def observe(listener: SparkListener, read: () => Int)(
+      f: => Unit): Int = {
     spark.sparkContext.addSparkListener(listener)
     try {
       f
@@ -37,15 +35,43 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
       var stableMs = 0
       while (stableMs < 500) {
         Thread.sleep(100)
-        val cur = n.get()
+        val cur = read()
         if (cur == last) stableMs += 100 else { last = cur; stableMs = 0 }
       }
-      n.get()
+      read()
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("Bfs pays one job per round: checkpoint fused with the " +
-      "frontier count") {
+  /** Run `f` and return the number of Spark jobs it submitted. */
+  private def countJobs(f: => Unit): Int = {
+    val n = new AtomicInteger(0)
+    observe(new SparkListener {
+      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }, () => n.get())(f)
+  }
+
+  /** Run `f` and return the number of stages in which some task wrote
+    * shuffle records: one per exchange that ran. */
+  private def countShuffleWriteStages(f: => Unit): Int = {
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    observe(new SparkListener {
+      override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
+        val m = taskEnd.taskMetrics
+        if (m != null && m.shuffleWriteMetrics.recordsWritten > 0)
+          stages.add(taskEnd.stageId)
+      }
+    }, () => stages.size)(f)
+  }
+
+  /** The reference's tinyG: ecc(0) = 2, so BFS from 0 runs 3 rounds. */
+  private def tinyG = GraphOps.symmetrize(Seq(
+    (0L, 5L), (4L, 3L), (0L, 1L), (9L, 12L), (6L, 4L), (5L, 4L),
+    (0L, 2L), (11L, 12L), (9L, 10L), (0L, 6L), (5L, 3L), (0L, 7L),
+    (7L, 8L), (9L, 11L), (0L, 9L)).toDF("src", "dst"))
+
+  test("Bfs pays two jobs per round: the fused frontier count and the " +
+      "broadcast build") {
     // tinyG: ecc(0) = 2 ⇒ exactly 3 BSP rounds (the 3rd sees an empty
     // frontier). Per round the loop legitimately submits TWO jobs:
     // the fused checkpoint+frontier-count job, and the
@@ -57,11 +83,7 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
     // engine-version drift. The pre-r17 eager-checkpoint form paid a
     // THIRD job per round (measured 10 on this fixture) and MUST trip
     // this.
-    val tinyG = Seq(
-      (0L, 5L), (4L, 3L), (0L, 1L), (9L, 12L), (6L, 4L), (5L, 4L),
-      (0L, 2L), (11L, 12L), (9L, 10L), (0L, 6L), (5L, 3L), (0L, 7L),
-      (7L, 8L), (9L, 11L), (0L, 9L)).toDF("src", "dst")
-    val edges = GraphOps.symmetrize(tinyG)
+    val edges = tinyG
     // warm once so codegen/planning one-offs don't ride the counter
     Bfs.run(edges, 0L).collect()
     val jobs = countJobs {
@@ -74,6 +96,37 @@ class JobCountSpec extends AnyFunSuite with SparkTestBase {
         "before the frontier count adds a job per round")
     assert(jobs >= 6, s"suspiciously few jobs ($jobs) — did the " +
       "convergence probe stop running per round?")
+  }
+
+  test("a broadcast Bfs round shuffles only its probe's count") {
+    // The edge table is staged by dst and the state by id, so the
+    // broadcast expansion, the settled-id anti-join, the merge and the
+    // append to the state are partition-aligned and plan no exchange;
+    // the one shuffle a round writes is the frontier count's
+    // single-partition exchange. Staging adds two: the edge table's and
+    // the init state's repartitions.
+    val staging = 2
+    // With the edge table staged by src and the state re-merged
+    // through an exchange every round, a round wrote two: measured 7
+    // (tinyG) and 31 (chain) shuffle-write stages on a warm call,
+    // against 5 and 17 staged this way.
+    val chain = GraphOps.symmetrize(
+      (0L until 14L).map(i => (i, i + 1)).toDF("src", "dst"))
+    Seq(("tinyG", tinyG, 3), ("15-hop chain", chain, 15)).foreach {
+      case (name, edges, rounds) =>
+        val cfg = Bfs.Config(withPaths = true)
+        Bfs.run(edges, 0L, cfg).collect() // warm
+        val stages = countShuffleWriteStages {
+          Bfs.run(edges, 0L, cfg).collect()
+        }
+        info(s"$name: $stages shuffle-write stages over $rounds rounds")
+        assert(stages <= rounds + staging,
+          s"Bfs on $name ($rounds rounds) wrote shuffle output in " +
+            s"$stages stages — expected one per round (the probe " +
+            s"count) plus $staging for staging")
+        assert(stages >= rounds, s"only $stages shuffle-write stages " +
+          s"for $rounds rounds — did the per-round probe stop running?")
+    }
   }
 
   // The loops below pin their whole-call job count on a small

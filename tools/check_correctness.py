@@ -119,4 +119,5 @@ def main():
         print(f"wrote {json_out} ({len(report)} entries)")
     sys.exit(1 if failures else 0)
 
-main()
+if __name__ == "__main__":
+    main()
