@@ -116,92 +116,16 @@ object Bench {
     * dedup, IVF) persist a shared intermediate at MEMORY_AND_DISK; if
     * the bench host is memory-pressured, those blocks silently spill or
     * evict and the query re-derives its base — a 3-4x slowdown with
-    * byte-identical code. This line makes that failure mode visible in
-    * the bench tail instead of leaving it indistinguishable from load. */
-  private def storageStats(spark: SparkSession): String = {
-    val infos = spark.sparkContext.getRDDStorageInfo
-    if (infos.isEmpty) "storage: no cached RDDs"
-    else infos.map { i =>
+    * byte-identical code. Logged after each timed run that leaves RDD
+    * storage behind, before release(), so eviction/spill is attributable
+    * from the bench tail instead of indistinguishable from load. */
+  private def storageStats(infos: Seq[org.apache.spark.storage.RDDInfo]): String =
+    infos.map { i =>
       val mem = i.memSize >> 20
       val disk = i.diskSize >> 20
       s"id=${i.id} parts=${i.numCachedPartitions}/${i.numPartitions} " +
         s"mem=${mem}M disk=${disk}M"
     }.mkString("storage: ", " | ", "")
-  }
-
-  /** Queries that pin a shared intermediate — log storage state after
-    * each timed run, before release(), so eviction/spill is attributable
-    * from the artifact alone (VERDICT r8 "What's wrong" #3). */
-  private val StorageQueries = Set(
-    "q_corpus_prep", "q_corpus_prep_v2", "q_corpus_prep_v3",
-    "q_neardup_clusters", "q_lsh_near_dups", "q_ann_ivf",
-    "q_embedding_near_dups_ivf")
-
-  /** The driver's min-of-2 admits one load spike to decide a round: if
-    * both runs of an 18s query land inside the same spike, the min IS
-    * the spike. The five queries that have shown driver-only inflation
-    * get a third run so the per-run spread can separate "slow machine"
-    * (runs disagree or all runs >> builder anchor with a hot calibration
-    * probe) from "slow plan" (runs agree AND calibration is normal). */
-  private val ExtraRunQueries = Set(
-    "q_bfs_copurchase", "q1_agg", "q_corpus_prep_v2", "q_ann_ivf",
-    "q_pagerank",
-    "q_corpus_prep_v3", "q_triangle_count",
-    // r10 lesson: q_bfs_paths_golden got min-of-2 with both runs
-    // inside the same host stall and the round's headline number was
-    // an 18s phantom. Every multi-second iterative query gets the
-    // full spread so one load window can't decide a round.
-    "q_kcore", "q_label_prop", "q_sssp_copurchase", "q_bfs_paths_golden",
-    // r11 additions, first driver round — full spread from the start
-    "q_bfs_paths_copurchase", "q_kcore_converged", "q_ann_q8",
-    "q_ann_ivf_q8",
-    // r12 verdict item 1: the heavies that entered (or stayed) under
-    // min-of-2 while showing multi-x run spreads in at least one
-    // artifact — q_random_walks read [9.6, 23.2] in the builder's
-    // final r12 run for hash-identical output. Three runs + the
-    // per-run cpu deltas make load-vs-plan adjudicable from the
-    // artifact alone.
-    "q_random_walks", "q_walk_pairs", "q_clustering_coeff",
-    "q_incremental_dedup", "q_edit_near_dups", "q_negative_samples",
-    "q_streaming_attribution", "q_embedding_near_dups_ivf",
-    // r13: two query incarnations + checkpoint recovery per run —
-    // the streaming face with the most fixed overhead to attribute
-    "q_streaming_resume",
-    // r13 third batch: the new multi-second stateful faces enter with
-    // the full spread from the start (the r11/r12 lesson)
-    "q_streaming_left_join", "q_streaming_cdc_apply",
-    // r14: two full BFS passes per run — multi-second iterative, full
-    // spread from the start
-    "q_closeness_sample", "q_streaming_availablenow",
-    // r15: the new multi-second iterative/stateful faces — k pivot
-    // sweeps (betweenness), 2 sketch-union rounds (neighborhood fn),
-    // and the rate-limited multi-batch streaming drain
-    "q_betweenness_sample", "q_neighborhood_fn",
-    "q_streaming_backpressure", "q_ann_pq", "q_ann_pq_rerank",
-    "q_ann_ivf_pq",
-    // r15 late: the two-arrival watermark face (multi-batch stream)
-    // and the doubly-iterative Borůvka forest
-    "q_streaming_late_drop", "q_msf",
-    // r15 session 3: the new multi-second stateful/iterative faces —
-    // the full-outer and chained-agg streaming drains (left-join
-    // cost class) and the 10-round personalized power iteration
-    "q_streaming_full_join", "q_streaming_chained_agg",
-    "q_pagerank_personalized",
-    // r17 session 2: the support-peel loop (multi-second iterative,
-    // full spread from the start — the r11/r12 lesson)
-    "q_ktruss",
-    // r19: the multi-second Louvain family faces — the r18 driver
-    // artifact read the two-level face [16.98, 48.3] under min-of-2,
-    // exactly the one-spike shape the third run exists to break.
-    // r20: the pairs fused (coarse+gain -> twolevel; trajectory+assign
-    // -> multilevel); the wide-gain face is the same cost class.
-    "q_louvain_twolevel", "q_louvain_multilevel",
-    "q_louvain_move_wide", "q_louvain_move_gamma",
-    // r21: the three restored Louvain faces (VERDICT r20 item 1) are
-    // the same multi-second cost class as their fused siblings
-    "q_louvain_coarse", "q_louvain_gain", "q_louvain_multilevel_assign",
-    // r20: the directed-graph fixpoint faces (multi-round iterative)
-    "q_scc", "q_topo_layers")
 
   /** Tee for System.err: every byte still reaches the real stderr, and
     * complete lines that look like operator round telemetry
@@ -254,7 +178,7 @@ object Bench {
     // make per-query times incomparable across BENCH_r{N}.json files
     // (any order-sensitive JVM effect — GC, code cache, page cache —
     // lands on different queries each round)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
+    val ordered = SparkEntry.faces.sortBy(_.name)
     // warmup, stage 1: one sweep of EVERY query at a tiny SF before any
     // timing. A fresh JVM charges its first queries for JIT compilation
     // of the whole Spark stack + whole-stage-codegen classes (measured:
@@ -266,8 +190,8 @@ object Bench {
       "/root/testdata/sf0.001")
     benchPhase = "warmup"
     val tWarm = System.nanoTime()
-    ordered.foreach { case (_, fn) =>
-      try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+    ordered.foreach { face =>
+      try face.run(spark, warmDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => }
     }
     release()
@@ -329,10 +253,11 @@ object Bench {
 
     val midpoint = ordered.size / 2
     var calMid = -1.0
-    val results = ordered.zipWithIndex.map { case ((name, fn), idx) =>
+    val results = ordered.zipWithIndex.map { case (face, idx) =>
       if (idx == midpoint) calMid = calibrate("mid")
+      val name = face.name
       benchPhase = name
-      val runs = if (ExtraRunQueries(name)) runsPerQuery.max(3) else runsPerQuery
+      val runs = runsPerQuery.max(face.minRuns)
       // min of N runs: steady-state throughput, insulated from one-off
       // JIT/GC/page-cache hiccups (OS cache of the parquet inputs stays
       // warm between runs; per-query state is released each time)
@@ -347,7 +272,7 @@ object Bench {
         // would time as little more than a row-count scan. The noop
         // sink consumes each output row whole — all columns compute.
         val ok = try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true
+          face.run(spark, sfDir).write.format("noop").mode("overwrite").save(); true
         } catch { case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false }
         val dt = (System.nanoTime() - t0) / 1e9
@@ -355,8 +280,9 @@ object Bench {
         val dg = gcMillis() - g0
         val cc = codeCacheMb()
         val (busy, iow, steal) = hostPct(st0, procStatTicks())
-        if (StorageQueries(name))
-          System.err.println(s"[bench] $name ${storageStats(spark)}")
+        val stored = spark.sparkContext.getRDDStorageInfo.toSeq
+        if (stored.nonEmpty)
+          System.err.println(s"[bench] $name ${storageStats(stored)}")
         release()
         System.err.println(
           f"[bench] $name run$i $dt%.2f ${jvmStats()} " +

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.operators.{Bfs, GraphOps, MetricsSink}
@@ -84,13 +84,7 @@ object BfsApp {
     val results = opts.getOrElse("results", "results.csv")
     require(workers > 0, s"workers must be positive, got $workers")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$workers]")
-      .appName("graft-bfs")
-      .config("spark.sql.shuffle.partitions", workers)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(workers.toString)
 
     val t0 = System.nanoTime()
     val edges = GraphOps.symmetrize(EdgeListSource.load(spark, path))

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.operators.{Bfs, GraphOps, MetricsSink, SerialBfs}
+import graft.operators.{Bfs, CachePinning, GraphOps, MetricsSink, SerialBfs}
 import graft.sources.{EdgeListSource, SyntheticGraphs}
 
 /** Reproduction of the reference's worker-count sweep and its
@@ -64,22 +63,8 @@ object CrossoverSweep {
     System.err.println(
       f"[sweep] $name w=$w reached=${n.getLong(0)} ecc=${n.getLong(1)} $sec%.3fs")
     MetricsSink.append(out, name, nWorkers = w, seconds = sec)
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    spark.catalog.clearCache()
+    CachePinning.releaseAll(spark, blocking = true)
     sec
-  }
-
-  private def session(w: Int): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master(s"local[$w]")
-      .config("spark.sql.shuffle.partitions", w)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 
   def main(args: Array[String]): Unit = {
@@ -123,7 +108,7 @@ object CrossoverSweep {
 
     // ---- distributed sweep: fresh local[w] context per step
     for (w <- Seq(1, 2, 8, 32)) {
-      val spark = session(w)
+      val spark = Harness.session(w.toString)
       try {
         val sets = keep(Seq(
           "tinyG" -> (() => EdgeListSource.load(spark, tiny)),

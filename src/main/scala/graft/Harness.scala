@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The session the harness mains (Bench, Verify, IsoBench, JobProbe,
-  * ExecProbe, PlanSnap, StreamProbe) run their queries on. */
+/** The session every main (Bench, Verify, IsoBench, JobProbe, ExecProbe,
+  * PlanSnap, StreamProbe, BfsApp, CrossoverSweep) runs its queries on. */
 object Harness {
 
   /** `local[cpus]` with as many shuffle partitions, no UI and WARN

@@ -1,7906 +1,44 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
-import graft.operators.{AsOfJoin, Bfs, Centrality, ConnectedComponents,
-  CorpusOps, Dag, Dedup, Distributions, Funnel, GraphOps, Indexing, KCore,
-  KTruss, LabelPropagation, Louvain,
-  MarketBasket, Multimodal, PageRank, Profile, RandomWalk, RangeJoin, Ranking,
-  Redaction, Retention, RobustStats, Scc, SequencePacking, Similarity, SkewOps,
-  Snapshot, SpanningForest, Sssp, TextAnalysis, TimeSeries}
-import graft.sources.TableLayout
-import graft.streaming.{EventStream, StreamHarness}
-import graft.functions.{SimHashExpr, TopKBySim}
+import graft.faces.{CorpusFaces, Face, GraphFaces, LayoutFaces, LouvainFaces,
+  RelationalFaces, SimilarityFaces, StreamingFaces}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Every entry in [[queries]] is an operator from SURVEY.md §2 (or a
-  * pipeline extension) run against the driver's parquet testdata dir;
-  * [[oracleSql]] holds the DuckDB-equivalent ANSI SQL over the same
-  * parquet files. Column names and values are aligned between the two —
-  * the driver hash-compares them.
+  * Every [[graft.faces.Face]] pairs a query run against the driver's
+  * parquet testdata dir with its DuckDB oracle SQL over the same parquet
+  * files; the faces live beside the other faces of their family under
+  * `graft.faces`. [[queries]] and [[oracleSql]] are the name-keyed views
+  * the driver, Verify and Bench read.
   */
 object SparkEntry {
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
-  /** Order/part co-purchase graph from lineitem (FIXTURES.md §B):
-    * order node = l_orderkey*2, part node = l_partkey*2+1 (disjoint key
-    * spaces), undirected. */
-  private def copurchaseEdges(spark: SparkSession, dir: String): DataFrame = {
-    val li = t(spark, dir, "lineitem")
-    GraphOps.symmetrize(
-      li.select((col("l_orderkey") * 2).as("src"),
-                (col("l_partkey") * 2 + 1).as("dst")))
-  }
-
-  /** Hop bound for q_sssp_copurchase — shared by the Spark query and
-    * the layer count of its unrolled DuckDB oracle. */
-  private val SsspCopurchaseHops = 6
-
-  /** Hop bound for q_bfs_paths_copurchase — shared by the Spark query
-    * and the layer count of its unrolled DuckDB oracle. Bounded BFS
-    * has well-defined semantics (the state after h rounds is EXACTLY
-    * the ≤h-hop BFS answer — each round settles one distance layer),
-    * which is what makes the oracle expressible as unrolled layers. */
-  private val BfsPathsCopurchaseHops = 6
-
-  /** Layer count for q_bfs_paths_mediumg — ecc(0) ≤ 4 BY CONSTRUCTION
-    * on the synthetic reference-scale graphs (SyntheticGraphs: tree
-    * depth bounds it, chords only shrink), so 5 min-merge layers are
-    * provably past the BFS fixed point; shared by the Spark query's
-    * hop bound and the oracle's unrolled layer count. */
-  private val MediumGPathLayers = 5
-
-  /** Step count and walks-per-vertex for q_random_walks — shared by
-    * the Spark query and the unrolled layers of its DuckDB oracle. */
-  private val RandomWalkSteps = 4
-  private val RandomWalksPerVertex = 2
-
-  /** Oracle layer count for q_bfs_smallg_golden: smallG's ecc(0) is 13
-    * (SURVEY §0.1 — the reference runs 14 MR rounds), and min-merge
-    * layers past the fixed point are no-ops, so 14 ≥ depth suffices. */
-  private val SmallGLayers = 14
-
-  /** Iteration count for q_pagerank — shared by the Spark query and
-    * the unrolled layers of its DuckDB oracle (r12 item 4: the full
-    * face is hash-exact by the same fixed-point argument as its
-    * bounded 2-iter twin). */
-  private val PageRankIters = 10
-
-  /** k and peel-round bound for q_kcore — shared by the Spark query
-    * and the unrolled layers of its DuckDB oracle. k=6 is the largest
-    * k whose core is non-empty on the copurchase graph AND whose peel
-    * cascades across multiple rounds (k≤5 converges in one round;
-    * k≥7 empties the graph). */
-  private val KCoreK = 6
-  private val KCoreRounds = 4
-
-  /** Oracle layer count for q_kcore_converged — the bounded-equivalence
-    * trick: the peel layer map is monotone (each layer's edge set is a
-    * subset of the previous) and idempotent at the fixed point, so an
-    * oracle unrolled to ANY depth ≥ the true convergence depth equals
-    * the engine's run-to-convergence result. Measured depths on the
-    * shipped testdata: 5 (sf0.001), 9 (sf0.01), 11 (sf0.1); 18 leaves
-    * headroom without meaningfully growing the (post-fixpoint, no-op)
-    * oracle layers. */
-  private val KCoreConvergedLayers = 18
-
-  /** k and oracle layer count for q_ktruss — shared by the Spark query
-    * and the unrolled layers of its DuckDB oracle. k=5 is the largest
-    * k whose truss is non-empty at every shipped SF AND whose peel
-    * cascades across multiple rounds (measured convergence depths:
-    * 5 at sf0.001, 4 at sf0.01, 2 at sf0.1 — 8 layers leave headroom,
-    * post-fixpoint layers are no-ops by idempotence).
-    *
-    * MAINTENANCE: adding an SF (or a new dataset) requires re-measuring
-    * the peel depth — the engine's `[ktruss]` round telemetry prints
-    * it; a peel deeper than KTrussLayers surfaces as an oracle
-    * hash-mismatch (unrolled oracle stops early), never silently. */
-  private val KTrussK = 5
-  private val KTrussLayers = 8
-
-  /** Fixed-point scale for q_betweenness_sample — shared by the Spark
-    * query and its unrolled DuckDB oracle (the quantized Brandes
-    * recurrence; see [[graft.operators.Centrality.betweennessSample]]). */
-  private val BetweennessScale = 1000000L
-
-  /** Oracle level count for q_betweenness_sample — must be >= the
-    * pivot eccentricity (measured: 6 at sf0.01, 8 at sf0.1; 12 leaves
-    * headroom, extra levels are empty no-ops). */
-  private val BetweennessLevels = 12
-
-  /** Unrolled DuckDB replay of the quantized Brandes pivot sweep: per
-    * pivot a recursive-CTE BFS -> shortest-path DAG -> level-unrolled
-    * σ forward DP -> level-unrolled δq backward DP, then the summed
-    * per-vertex dependency. Mirrors betweennessSample level for level
-    * (integer arithmetic only — `//` here is `div` there). */
-  private def betweennessOracleSql(pivots: Seq[Long]): String = {
-    val l = BetweennessLevels
-    val per = pivots.zipWithIndex.map { case (p, i) =>
-      val bfs =
-        s"""b$i(id, dist) AS (
-           |  SELECT CAST($p AS BIGINT), CAST(0 AS BIGINT)
-           |  UNION
-           |  SELECT e.dst, b.dist + 1 FROM b$i b
-           |  JOIN edges e ON e.src = b.id WHERE b.dist < 40),
-           |dm$i AS MATERIALIZED (SELECT id, MIN(dist) AS dist FROM b$i GROUP BY id),
-           |dag$i AS MATERIALIZED (
-           |  SELECT e.src, e.dst, ds.dist AS sd FROM edges e
-           |  JOIN dm$i ds ON e.src = ds.id
-           |  JOIN dm$i dd ON e.dst = dd.id
-           |  WHERE dd.dist = ds.dist + 1),
-           |s${i}_0 AS (SELECT CAST($p AS BIGINT) AS id,
-           |            CAST(1 AS BIGINT) AS sigma)""".stripMargin
-      val sig = (1 to l).map { d =>
-        s"""s${i}_$d AS (
-           |  SELECT g.dst AS id, CAST(SUM(s.sigma) AS BIGINT) AS sigma
-           |  FROM dag$i g JOIN s${i}_${d - 1} s ON g.src = s.id
-           |  WHERE g.sd = ${d - 1} GROUP BY g.dst)""".stripMargin
-      }
-      val sigUnion =
-        s"""sigma$i AS MATERIALIZED (${(0 to l).map(d => s"SELECT * FROM s${i}_$d")
-             .mkString(" UNION ALL ")})"""
-      val wEmpty =
-        s"""w${i}_$l AS (SELECT CAST(NULL AS BIGINT) AS id,
-           |  CAST(NULL AS BIGINT) AS delta WHERE 1 = 0)""".stripMargin
-      val back = ((l - 1) to 0 by -1).map { d =>
-        s"""w${i}_$d AS (
-           |  SELECT g.src AS id,
-           |         CAST(SUM((sv.sigma * ($BetweennessScale +
-           |              COALESCE(w.delta, 0))) // sw.sigma) AS BIGINT)
-           |           AS delta
-           |  FROM dag$i g
-           |  JOIN sigma$i sv ON sv.id = g.src
-           |  JOIN sigma$i sw ON sw.id = g.dst
-           |  LEFT JOIN w${i}_${d + 1} w ON w.id = g.dst
-           |  WHERE g.sd = $d GROUP BY g.src)""".stripMargin
-      }
-      val deltaUnion =
-        s"""delta$i AS (SELECT id, delta FROM (
-           |  ${(0 until l).map(d => s"SELECT * FROM w${i}_$d")
-               .mkString(" UNION ALL ")}) WHERE id <> $p)""".stripMargin
-      (Seq(bfs) ++ sig ++ Seq(sigUnion, wEmpty) ++ back ++ Seq(deltaUnion))
-        .mkString(",\n")
-    }
-    val joins = pivots.indices
-      .map(i => s"LEFT JOIN delta$i d$i ON d$i.id = v.id").mkString("\n")
-    val bc = pivots.indices.map(i => s"COALESCE(d$i.delta, 0)")
-      .mkString(" + ")
-    s"""WITH RECURSIVE $copurchaseEdgesSql,
-       |${per.mkString(",\n")}
-       |SELECT v.id, $bc AS bc_q
-       |FROM (SELECT DISTINCT src AS id FROM edges) v
-       |$joins
-       |ORDER BY v.id""".stripMargin
-  }
-
-  /** Unrolled DuckDB replay of the deterministic HyperBall sketch —
-    * the same integer hash pipeline, per-register CASE trailing-zero
-    * count, element-wise MAX union rounds, packed registers, and
-    * integer harmonic-denominator estimate as
-    * [[graft.operators.Centrality.neighborhoodFunction]]. */
-  /** Shared WITH-prefix for the HyperBall oracles: seed registers +
-    * `iters` materialized sketch-union rounds n1..n<iters>. */
-  private def nfRoundsCte(iters: Int): String = {
-    val m = graft.operators.Centrality.NfRegisters
-    val cap = graft.operators.Centrality.NfRhoCap
-    val rho = (1 to cap).map(k =>
-        s"WHEN (w & ${(1L << k) - 1}) = ${1L << (k - 1)} THEN $k")
-      .mkString(" ")
-    val regCols = (0 until m).map(k => s"r$k")
-    val seedRegs = (0 until m)
-      .map(k => s"CASE WHEN j = $k THEN rho ELSE 0 END AS r$k")
-      .mkString(",\n         |         ")
-    def maxRegs(src: String) = regCols
-      .map(r => s"MAX($src.$r) AS $r").mkString(", ")
-    val rounds = (1 to iters).map { t =>
-      val prev = if (t == 1) "rg0" else s"n${t - 1}"
-      s"""n$t AS MATERIALIZED (
-         |  SELECT e.dst AS id, ${maxRegs("s")}
-         |  FROM es e JOIN $prev s ON e.src = s.id GROUP BY e.dst)"""
-        .stripMargin
-    }
-    s"""$copurchaseEdgesSql,
-       |v AS MATERIALIZED (SELECT DISTINCT src AS id FROM edges),
-       |seed AS MATERIALIZED (
-       |  SELECT id, (g >> 33) % $m AS j,
-       |         CASE $rho ELSE $cap END AS rho
-       |  FROM (SELECT id, xor(h, h >> 29) AS g,
-       |               xor(h, h >> 29) & ${(1L << 20) - 1} AS w
-       |        FROM (SELECT id, id * 1315423911 AS h FROM v))),
-       |rg0 AS MATERIALIZED (
-       |  SELECT id, $seedRegs
-       |  FROM seed),
-       |es AS MATERIALIZED (
-       |  SELECT src, dst FROM edges
-       |  UNION ALL SELECT id, id FROM v),
-       |${rounds.mkString(",\n")}""".stripMargin
-  }
-
-  private def neighborhoodOracleSql(iters: Int): String = {
-    val m = graft.operators.Centrality.NfRegisters
-    val cap = graft.operators.Centrality.NfRhoCap
-    val regCols = (0 until m).map(k => s"r$k")
-    def packed(src: String) = regCols.zipWithIndex
-      .map { case (r, k) => s"CAST($src.$r AS BIGINT) * ${1L << (4 * k)}" }
-      .mkString(" + ")
-    val z = regCols.map(r => s"(1 << ($cap - n$iters.$r))").mkString(" + ")
-    val numer = 1000L * m * m * (1L << cap)
-    val packedCols = (1 to iters)
-      .map(t => s"${packed(s"n$t")} AS regs_$t").mkString(",\n       |       ")
-    val packJoins = (1 until iters)
-      .map(t => s"JOIN n$t ON n$t.id = n$iters.id").mkString("\n")
-    s"""WITH ${nfRoundsCte(iters)}
-       |SELECT n$iters.id,
-       |       $packedCols,
-       |       CAST($numer // (CAST($z AS BIGINT)) AS BIGINT) AS est_milli
-       |FROM n$iters
-       |$packJoins
-       |ORDER BY n$iters.id""".stripMargin
-  }
-
-  /** Per-round cardinality sums + the 90%-coverage effective-diameter
-    * pick, over the same materialized rounds. */
-  private def effectiveDiameterOracleSql(iters: Int): String = {
-    val m = graft.operators.Centrality.NfRegisters
-    val cap = graft.operators.Centrality.NfRhoCap
-    val numer = 1000L * m * m * (1L << cap)
-    val perRound = (1 to iters).map { t =>
-      val z = (0 until m)
-        .map(k => s"(1 << ($cap - r$k))").mkString(" + ")
-      s"""SELECT $t AS t,
-         |  SUM(CAST($numer // (CAST($z AS BIGINT)) AS BIGINT))
-         |    AS sum_est_milli FROM n$t"""
-        .stripMargin
-    }.mkString("\n  UNION ALL ")
-    s"""WITH ${nfRoundsCte(iters)},
-       |sums AS (
-       |  $perRound),
-       |eff AS (SELECT min(t) AS te FROM sums
-       |        WHERE sum_est_milli * 10 >=
-       |          (SELECT sum_est_milli FROM sums WHERE t = $iters) * 9)
-       |SELECT t, CAST(sum_est_milli AS BIGINT) AS sum_est_milli,
-       |       t = (SELECT te FROM eff) AS eff
-       |FROM sums ORDER BY t""".stripMargin
-  }
-
-  /** SQL fragment mirroring [[copurchaseEdges]] for DuckDB oracles. */
-  private def copurchaseEdgesSql: String =
-    """edges(src, dst) AS (
-      |  SELECT l_orderkey*2, l_partkey*2+1 FROM lineitem
-      |  UNION ALL
-      |  SELECT l_partkey*2+1, l_orderkey*2 FROM lineitem
-      |)""".stripMargin
-
-  /** Phase-1 Louvain CTE chain (canonical edges → degrees → 2m →
-    * singleton init → 2 unrolled synchronous move sweeps ending in
-    * `a2(id, comm)`), shared by the q_louvain_move and
-    * q_louvain_twolevel oracles so both replay ONE phase-1
-    * construction. Chained CTEs MATERIALIZED (the q_ktruss inlining
-    * lesson — a{r-1} is referenced 4× per sweep). */
-  /** @param gated parity-gate the sweeps (mirrors
-    *        `moveSteps(partialMoves = true)`): in step r only ids
-    *        with (id + r) even adopt the argmax, everyone else keeps
-    *        their step-(r−1) community — the same CASE the phase-2
-    *        (`b$r`) chain runs */
-  /** @param gn,gd resolution γ = gn/gd (Reichardt–Bornholdt): the
-    *        score scales to γden·2m·k_vc − γnum·k_v·Σtot' — mirrors
-    *        `moveSteps(gammaNum, gammaDen)`; (1, 1) is Newman
-    *        modularity and emits no scaling factors at all */
-  private def louvainPhase1Sql(gated: Boolean = false,
-                               gn: Long = 1L, gd: Long = 1L): String = {
-    val (gnF, gdF) = (if (gn == 1L) "" else s"$gn * ",
-      if (gd == 1L) "" else s"$gd * ")
-    val steps = (1 to 2).map { r =>
-      val pick =
-        if (gated)
-          s"""a$r AS MATERIALIZED (
-             |  SELECT w.id,
-             |    CASE WHEN (w.id + $r) % 2 = 0 THEN w.comm
-             |         ELSE cur.comm END AS comm
-             |  FROM (SELECT id, comm FROM (
-             |          SELECT id, comm, row_number() OVER (
-             |            PARTITION BY id ORDER BY score DESC, comm ASC) AS rn
-             |          FROM sc$r) WHERE rn = 1) w
-             |  JOIN a${r - 1} cur ON cur.id = w.id)""".stripMargin
-        else
-          s"""a$r AS MATERIALIZED (
-             |  SELECT id, comm FROM (
-             |    SELECT id, comm, row_number() OVER (
-             |      PARTITION BY id ORDER BY score DESC, comm ASC) AS rn
-             |    FROM sc$r) WHERE rn = 1)""".stripMargin
-      s"""kin$r AS MATERIALIZED (
-         |  SELECT e.src AS id, a.comm, count(*) AS kvc
-         |  FROM e JOIN a${r - 1} a ON a.id = e.dst GROUP BY 1, 2),
-         |tot$r AS MATERIALIZED (
-         |  SELECT a.comm, sum(d.k) AS tot
-         |  FROM a${r - 1} a JOIN deg d ON d.id = a.id GROUP BY 1),
-         |cset$r AS MATERIALIZED (
-         |  SELECT DISTINCT id, comm FROM (
-         |    SELECT id, comm FROM kin$r
-         |    UNION ALL SELECT id, comm FROM a${r - 1})),
-         |sc$r AS MATERIALIZED (
-         |  SELECT cs.id, cs.comm,
-         |    $gdF(SELECT m2 FROM m) * coalesce(kin.kvc, 0)
-         |      - ${gnF}d.k * (t.tot -
-         |          CASE WHEN cur.comm = cs.comm THEN d.k ELSE 0 END)
-         |      AS score
-         |  FROM cset$r cs
-         |  JOIN deg d ON d.id = cs.id
-         |  JOIN a${r - 1} cur ON cur.id = cs.id
-         |  JOIN tot$r t ON t.comm = cs.comm
-         |  LEFT JOIN kin$r kin
-         |    ON kin.id = cs.id AND kin.comm = cs.comm),
-         |$pick""".stripMargin
-    }.mkString(",\n")
-    s"""$copurchaseEdgesSql,
-       |e AS MATERIALIZED (SELECT DISTINCT src, dst FROM edges),
-       |deg AS MATERIALIZED (
-       |  SELECT src AS id, count(*) AS k FROM e GROUP BY src),
-       |m AS (SELECT count(*) AS m2 FROM e),
-       |a0 AS MATERIALIZED (SELECT id, id AS comm FROM deg),
-       |$steps""".stripMargin
-  }
-
-  /** Phase-2 Louvain CTE chain over `a2`: the contraction (`w0` —
-    * intra mass on the diagonal as 2·intra), weighted degrees/2m, and
-    * 2 unrolled WEIGHTED move sweeps ending in `b2(id, comm)` over
-    * the contracted graph. sum(w) replaces count(*); self-loops are
-    * excluded from k_vc but feed degrees and Σtot. Shared by the
-    * q_louvain_twolevel oracle (formerly coarse + gain). */
-  private def louvainPhase2Sql: String =
-    louvainWeightedPhaseSql("w", "b", "e", "count(*)", "a2")
-
-  /** One weighted parity-gated Louvain level, generically named so
-    * levels chain (the q_louvain_multilevel oracle stacks two): the
-    * contraction of `$srcEdges` by `$assign` into `${g}0(src, dst,
-    * w)` (weight = `$wExpr` — count(*) when the source level is the
-    * unweighted simple graph, sum(e.w) for deeper levels), weighted
-    * degrees `${g}deg` / 2m `${g}m`, singleton init `${ap}0`, and 2
-    * unrolled PARITY-GATED weighted sweeps ending `${ap}2(id, comm)`
-    * — the (id + r) parity CASE mirroring
-    * `runSteps(partialMoves = true)`. */
-  private def louvainWeightedPhaseSql(g: String, ap: String,
-                                      srcEdges: String, wExpr: String,
-                                      assign: String): String = {
-    val wsteps = (1 to 2).map { r =>
-      s"""${g}kin$r AS MATERIALIZED (
-         |  SELECT e.src AS id, a.comm, CAST(sum(e.w) AS BIGINT) AS kvc
-         |  FROM ${g}0 e JOIN ${ap}${r - 1} a ON a.id = e.dst
-         |  WHERE e.src <> e.dst GROUP BY 1, 2),
-         |${g}tot$r AS MATERIALIZED (
-         |  SELECT a.comm, CAST(sum(d.k) AS BIGINT) AS tot
-         |  FROM ${ap}${r - 1} a JOIN ${g}deg d ON d.id = a.id GROUP BY 1),
-         |${g}cset$r AS MATERIALIZED (
-         |  SELECT DISTINCT id, comm FROM (
-         |    SELECT id, comm FROM ${g}kin$r
-         |    UNION ALL SELECT id, comm FROM ${ap}${r - 1})),
-         |${g}sc$r AS MATERIALIZED (
-         |  SELECT cs.id, cs.comm,
-         |    (SELECT m2 FROM ${g}m) * coalesce(kin.kvc, 0)
-         |      - d.k * (t.tot -
-         |          CASE WHEN cur.comm = cs.comm THEN d.k ELSE 0 END)
-         |      AS score
-         |  FROM ${g}cset$r cs
-         |  JOIN ${g}deg d ON d.id = cs.id
-         |  JOIN ${ap}${r - 1} cur ON cur.id = cs.id
-         |  JOIN ${g}tot$r t ON t.comm = cs.comm
-         |  LEFT JOIN ${g}kin$r kin
-         |    ON kin.id = cs.id AND kin.comm = cs.comm),
-         |${ap}$r AS MATERIALIZED (
-         |  SELECT w.id,
-         |    CASE WHEN (w.id + $r) % 2 = 0 THEN w.comm
-         |         ELSE cur.comm END AS comm
-         |  FROM (SELECT id, comm FROM (
-         |          SELECT id, comm, row_number() OVER (
-         |            PARTITION BY id ORDER BY score DESC, comm ASC) AS rn
-         |          FROM ${g}sc$r) WHERE rn = 1) w
-         |  JOIN ${ap}${r - 1} cur ON cur.id = w.id)""".stripMargin
-    }.mkString(",\n")
-    s"""${g}0 AS MATERIALIZED (
-       |  SELECT a.comm AS src, b.comm AS dst,
-       |    CAST($wExpr AS BIGINT) AS w
-       |  FROM $srcEdges e JOIN $assign a ON a.id = e.src
-       |  JOIN $assign b ON b.id = e.dst
-       |  GROUP BY 1, 2),
-       |${g}deg AS MATERIALIZED (
-       |  SELECT src AS id, CAST(sum(w) AS BIGINT) AS k
-       |  FROM ${g}0 GROUP BY 1),
-       |${g}m AS (SELECT CAST(sum(w) AS BIGINT) AS m2 FROM ${g}0),
-       |${ap}0 AS MATERIALIZED (SELECT id, id AS comm FROM ${g}deg),
-       |$wsteps""".stripMargin
-  }
-
-  /** Weighted Newman-Q CTE triple `${tag}st`/`${tag}t`/`${tag}q`
-    * (mirrors Louvain.qEval): over graph `$edges` (weight term
-    * `$wRef` — `1` for the unweighted simple table, `e.w` for
-    * contracted levels) under `$assign(id, comm)`, d_c = Σ_{src∈c} w
-    * and intra2_c = Σ_{src∈c ∧ dst∈c} w in one pass, then the global
-    * `${tag}q(n, q)` row via the sign-safe truncating micro
-    * division. */
-  private def louvainQSql(tag: String, edges: String, wRef: String,
-                          assign: String): String =
-    s"""${tag}st AS (
-       |  SELECT a.comm AS c, CAST(sum($wRef) AS BIGINT) AS d,
-       |    CAST(sum(CASE WHEN a.comm = b.comm THEN $wRef ELSE 0 END)
-       |      AS BIGINT) AS i2
-       |  FROM $edges e JOIN $assign a ON a.id = e.src
-       |  JOIN $assign b ON b.id = e.dst GROUP BY 1),
-       |${tag}t AS (
-       |  SELECT CAST(count(*) AS BIGINT) AS n,
-       |    CAST(sum(d) AS BIGINT) AS m2, CAST(sum(i2) AS BIGINT) AS si,
-       |    CAST(sum(d * d) AS BIGINT) AS sd2 FROM ${tag}st),
-       |${tag}q AS (
-       |  SELECT n, CASE WHEN (m2 * si - sd2) >= 0
-       |    THEN (m2 * si - sd2) * 1000000 // (m2 * m2)
-       |    ELSE -((-(m2 * si - sd2)) * 1000000 // (m2 * m2))
-       |  END AS q FROM ${tag}t)""".stripMargin
-
-  /** Two unrolled LP rounds over `edges` (mirrors
-    * LabelPropagation.run(rounds = 2): neighbor-majority with
-    * min-label tie-break via the argmin row), emitting `l2(id,
-    * label)`. Shared by the q_label_prop and q_modularity oracles so
-    * the engine and both oracles replay ONE construction. */
-  private def lpTwoRoundsSql: String =
-    """c1 AS (SELECT src AS id, dst AS lbl, count(*) AS c
-      |       FROM edges GROUP BY 1, 2),
-      |l1 AS (SELECT id,
-      |         CAST(min(row(-c, lbl)) AS ROW(nc BIGINT, l BIGINT)).l
-      |           AS label
-      |       FROM c1 GROUP BY id),
-      |c2 AS (SELECT e.src AS id, l.label AS lbl, count(*) AS c
-      |       FROM edges e JOIN l1 l ON l.id = e.dst GROUP BY 1, 2),
-      |l2 AS (SELECT id,
-      |         CAST(min(row(-c, lbl)) AS ROW(nc BIGINT, l BIGINT)).l
-      |           AS label
-      |       FROM c2 GROUP BY id)""".stripMargin
-
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
-    queries("q_bfs_copurchase")(spark, "/root/testdata/sf0.001")
-
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // O1-O2: scan + cast projection (on parquet testdata; the reference
-    // text format is covered by sources.EdgeListSource + its spec).
-    "q_edge_ingest" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      li.select((col("l_orderkey") * 2).as("src"),
-                (col("l_partkey") * 2 + 1).as("dst"))
-        .agg(count(lit(1)).as("n_edges"),
-             count_distinct(col("src")).as("n_src"),
-             count_distinct(col("dst")).as("n_dst"),
-             min(col("src")).as("min_src"), max(col("dst")).as("max_dst"))
-    }),
-
-    // O3-O4: symmetrize + adjacency aggregation (degree + neighbour
-    // bounds; arrays stay out of the hash-compare per SURVEY §7.4).
-    "q_adjacency" -> ((s, dir) => {
-      copurchaseEdges(s, dir)
-        .groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("degree"),
-             min(col("dst")).as("min_nb"), max(col("dst")).as("max_nb"))
-        
-    }),
-
-    // O5-O17: the flagship — full iterative BFS (init, frontier
-    // expansion, semilattice reduce, convergence, driver loop).
-    "q_bfs_copurchase" -> ((s, dir) => {
-      Bfs.run(copurchaseEdges(s, dir), source = 2L)
-    }),
-
-    // Exact triangle count over the part co-occurrence graph (parts
-    // bought together in one order), by degree-ordered orientation —
-    // wedge generation is O(m^1.5)-bounded and hot-degree-proof, the
-    // formulation that survives power-law graphs at 100 TB. (The BFS
-    // co-purchase graph is bipartite — zero triangles by parity — so
-    // this query projects the part-part co-occurrence graph instead.)
-    "q_triangle_count" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      val edges = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-      GraphOps.triangleCount(edges)
-    }),
-
-    // Multi-source BFS: distance to nearest seed (capability extension
-    // of O5 init — same semilattice).
-    "q_bfs_multisource" -> ((s, dir) => {
-      Bfs.runMulti(copurchaseEdges(s, dir), Seq(2L, 4L, 6L))
-    }),
-
-    // Pivot-sampled harmonic centrality: one BFS per pivot (2 pivots),
-    // per-vertex distance columns + the Σ 1/d estimate — the sampling
-    // estimator for closeness at scale (k passes, never all-pairs);
-    // harmonic handles disconnection (unreachable pivot contributes 0).
-    "q_closeness_sample" -> ((s, dir) => {
-      Centrality.pivotHarmonic(copurchaseEdges(s, dir), Seq(2L, 4L))
-        
-    }),
-
-    // HyperBall neighborhood function: per-vertex deterministic HLL
-    // registers, 2 rounds of element-wise-max union with neighbours —
-    // |ball(v,t)| estimates for every vertex in one exchange per
-    // round (the whole-graph route k-pivot sampling relaxes to).
-    // Integer-only (hash, max, packed registers, div estimate), so
-    // the oracle replays the sketch bit-exactly.
-    "q_neighborhood_fn" -> ((s, dir) => {
-      Centrality.neighborhoodFunction(copurchaseEdges(s, dir), iters = 2)
-        
-    }),
-
-    // Effective diameter from the HyperBall neighborhood function:
-    // run 6 sketch-union rounds, unpack each round's registers to its
-    // integer cardinality proxy, sum per round = the distance
-    // distribution S(t); the effective diameter is the first t whose
-    // coverage reaches 90% of the horizon's (10·S(t) ≥ 9·S(T) — the
-    // Boldi-Vigna statistic, integer-exact relative to horizon T;
-    // production iterates to stabilization, same plan shape). Output:
-    // (t, sum_est_milli, eff) — 6 rows, every value hash-gated.
-    "q_effective_diameter" -> ((s, dir) => {
-      val m = Centrality.NfRegisters
-      val cap = Centrality.NfRhoCap
-      val iters = 6
-      val numer = 1000L * m * m * (1L << cap)
-      val nf = Centrality.neighborhoodFunction(copurchaseEdges(s, dir),
-        iters = iters)
-      // ALL rounds' packed registers ride the one nf frame, so the 6
-      // per-round sums compute in ONE aggregation pass (r15 shipped 6
-      // separate agg jobs unioned + checkpointed + cross-joined — the
-      // suite's wall was job-count latency, not CPU; measured 20.7s
-      // wall vs ~4s CPU/32). The 90%-coverage statistic (Boldi-Vigna:
-      // first t with 10·S(t) ≥ 9·S(T)) then folds into the same
-      // 1-row frame: a CASE picks t_eff (first match = min), stack()
-      // unpivots to the 6 gated rows. One job end to end after nf.
-      val sumCols = (1 to iters).map { tt =>
-        val zStr = (0 until m).map(k =>
-            s"cast(shiftleft(1, $cap - ((regs_$tt div ${1L << (4 * k)})" +
-              s" % 16)) as bigint)")
-          .mkString(" + ")
-        sum(expr(s"$numer div ($zStr)")).as(s"s_$tt")
-      }
-      nf.agg(sumCols.head, sumCols.tail: _*)
-        .withColumn("t_eff", expr(
-          (1 to iters).map(t => s"WHEN s_$t * 10 >= s_$iters * 9 THEN $t")
-            .mkString("CASE ", " ", " END")))
-        .select(expr(s"stack($iters, " +
-          (1 to iters).map(t => s"$t, s_$t, $t = t_eff").mkString(", ") +
-          ") as (t, sum_est_milli, eff)"))
-        
-    }),
-
-    // Pivot-sampled betweenness (Brandes): per pivot one BFS + one
-    // forward σ sweep + one backward δ sweep over the shortest-path
-    // DAG. Dependencies in FIXED-POINT (scale 1e6, integer div) so the
-    // accumulation is order-independent and the unrolled DuckDB oracle
-    // replays it bit-exactly — the quantize-the-algorithm trick.
-    "q_betweenness_sample" -> ((s, dir) => {
-      Centrality.betweennessSample(copurchaseEdges(s, dir), Seq(2L, 4L),
-          scale = BetweennessScale)
-        
-    }),
-
-    // Minimum spanning forest (Borůvka) on a weighted co-purchase
-    // subgraph — deterministic weights from the canonical endpoints,
-    // strict total order (weight, src, dst) ⇒ the forest is UNIQUE,
-    // so the oracle's per-edge Kruskal cut rule (endpoint not
-    // reachable through strictly-lighter edges, one product-space
-    // recursive CTE) lands on the identical edge set.
-    "q_msf" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val o2 = col("l_orderkey") * 2
-      val p2 = col("l_partkey") * 2 + 1
-      val e = li
-        .filter(col("l_orderkey") % 20 === 0 && col("l_partkey") % 5 === 0)
-        .select(least(o2, p2).as("src"), greatest(o2, p2).as("dst"))
-        .withColumn("weight",
-          (col("src") * 7 + col("dst") * 13) % 1000 + 1)
-      SpanningForest.boruvka(e)
-    }),
-
-    // Connected components by min-label propagation on the
-    // customer-order bipartite graph.
-    // The DEEP-graph CC path driver-gated: 100 chains of ~127
-    // vertices (diameter 126 — min-label propagation needs ~126
-    // rounds; alternating large/small-star contraction converges in
-    // O(log n) ≈ 8, and each gate-SF round costs a fixed ~6 exchanges
-    // of 32×32 shuffle files, so round count IS the price here). The
-    // oracle is the construction's CLOSED FORM — comp(v) =
-    // (v div 127)·127 — an algorithm-independent check, not a
-    // replay. Output is the per-component histogram.
-    // Partition sizing is AQE's job now (r17): the loop keeps AQE on
-    // and coalesces its shrinking exchanges itself, replacing the
-    // r16 hand-sized 8-partition child session (measured equal wall,
-    // ~25% less CPU, and the operator no longer needs session
-    // special-casing — the same coalescing sizes UP at 100 TB).
-    "q_cc_star_deep" -> ((s, _) => {
-      val n = 12700L
-      val edges = s.range(1, n).filter(expr("id % 127 != 0"))
-        .select(col("id").as("src"), (col("id") - 1).as("dst"))
-      ConnectedComponents.runStarContraction(edges)
-        .groupBy("comp")
-        .agg(count(lit(1)).as("n_vertices"), sum(col("id")).as("sum_id"))
-        
-    }),
-
-    "q_connected_components" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val edges = GraphOps.symmetrize(
-        o.select((col("o_custkey") * 2).as("src"),
-                 (col("o_orderkey") * 2 + 1).as("dst")))
-      ConnectedComponents.run(edges)
-    }),
-
-    // DIRECTED-graph layering (r20 — the graph family's directed
-    // half): longest-path depth of every vertex of a closed-form
-    // 12-level dependency DAG (6000 vertices, 3 pseudo-random forward
-    // arms per vertex, a (v + q) % 3 sparsifier so in-degree-0
-    // vertices occur at EVERY level and layers genuinely vary —
-    // critical-path depth, what scheduling/lineage queries ask).
-    // Fixpoint of layer(v) = max(0, 1 + max in-neighbor layer): the
-    // CC round shape with (max, +1) merge, checksum-fused
-    // convergence, depth-bounded rounds; a cycle fails loudly at the
-    // round cap. Oracle: the same closed-form generator + a recursive
-    // path-length closure (states bounded |V| × depth), max per
-    // vertex.
-    "q_topo_layers" -> ((s, _) => {
-      val arms = Seq((17, 1), (29, 3), (41, 7)).map { case (c, d) =>
-        s.range(0, 5500).select(col("id").as("src"))
-          .withColumn("q", (col("src") % 500) * c.toLong % 500)
-          .withColumn("q", (col("q") + d.toLong) % 500)
-          .filter(((col("src") + col("q")) % 3) =!= 0)
-          .select(col("src"),
-            ((expr("src div 500") + 1) * 500 + col("q")).as("dst"))
-      }
-      Dag.longestPathLayers(arms.reduce(_ unionAll _))
-    }),
-
-    // Strongly connected components of a directed graph (r20 — with
-    // q_topo_layers, the graph family's directed half): the Orzan
-    // coloring decomposition (forward max-color fixpoint → pivots →
-    // class-restricted reverse reach → peel) on the deterministic
-    // ring/chain condensation fixture (48 cyclic SCCs of four sizes,
-    // 16 trivial SCCs, a max-id source that forces a second peel
-    // round — SyntheticGraphs.sccFixture's scaladoc walks the
-    // construction). Oracle: the algorithm-independent closed form
-    // (comp = ring-segment max, or self past the rings) — the
-    // q_cc_star_deep convention for synthetic-graph faces.
-    "q_scc" -> ((s, _) => {
-      Scc.run(graft.sources.SyntheticGraphs.sccFixture(s))
-        
-    }),
-
-    // O11-O14 as a relational aggregate: min, argmin (deterministic
-    // tie-break), ordered max — the reduce semilattice. Two encodings
-    // keep every agg buffer a PRIMITIVE so the whole chain stays in
-    // whole-stage HashAggregate (any non-UnsafeRow-mutable buffer —
-    // a struct OR a string — drops the entire aggregation into
-    // SortAggregate: no codegen, a sort per phase; measured 6-10x
-    // slower at sf0.1): the argmin packs (quantity, partkey) into ONE
-    // long (lexicographic == numeric since quantity is integral and
-    // partkey < 10^12), and the darkest-flag max runs on the ascii
-    // code of the single-char flag (order-isomorphic), decoded after.
-    "q_semilattice_agg" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val packed =
-        col("l_quantity").cast("long") * lit(1000000000000L) + col("l_partkey")
-      li.groupBy(col("l_orderkey").as("okey"))
-        .agg(min(col("l_quantity")).cast("double").as("min_qty"),
-             (min(packed) % lit(1000000000000L)).as("argmin_part"),
-             char(max(ascii(col("l_returnflag")))).as("darkest_flag"),
-             count_distinct(col("l_partkey")).as("n_parts"))
-        
-    }),
-
-    // Partial-agg showcase (TPC-H Q1 shape); decimal-exact money math
-    // so the DuckDB hash-compare is float-safe.
-    "q1_agg" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val price = col("l_extendedprice").cast("decimal(18,2)")
-      val disc = col("l_discount").cast("decimal(18,2)")
-      li.groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).cast("double")
-               .as("sum_qty"),
-             sum(price * (lit(1) - disc)).cast("double").as("revenue"),
-             count(lit(1)).as("n_rows"))
-        
-    }),
-
-    // Text analysis: token/char/punct stats, BPE-ish token count,
-    // canonical fingerprint, native rolling-hash expression.
-    "q_text_stats" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val txt = col("text")
-      d.select(col("doc_id"),
-               TextAnalysis.tokenCount(txt).as("n_tokens"),
-               TextAnalysis.bpeTokenCount(txt).as("n_bpe_tokens"),
-               TextAnalysis.punctCount(txt).as("n_punct"),
-               TextAnalysis.distinctTokenCount(txt).as("n_distinct_tokens"),
-               TextAnalysis.fingerprintMd5(txt).as("fingerprint"),
-               TextAnalysis.rollingHash(txt).as("rhash"))
-        
-    }),
-
-    // Language-ID heuristic + quality scoring.
-    "q_lang_quality" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val txt = col("text")
-      d.select(col("doc_id"), col("lang"),
-               TextAnalysis.languageId(txt).as("guessed_lang"),
-               TextAnalysis.qualityScore(txt).as("quality"))
-        
-    }),
-
-    // Positive PMI over forward skip-grams (window 2): the
-    // word-association matrix word2vec implicitly factorizes (Levy &
-    // Goldberg 2014). Pair-event marginals over ALL pairs, minCount
-    // output filter, fixed-point log2 — integer-exact end to end.
-    "q_ppmi_cooccur" -> ((s, dir) => {
-      CorpusOps.ppmiCooccurrence(t(s, dir, "documents"), "doc_id",
-          "text")
-        
-    }),
-
-    // Temperature-based source mixing (τ=0.5): sampling weights
-    // ∝ sqrt(n_docs) — the exponentiated-count upsampling recipe a
-    // multi-domain training run uses to boost tail sources. sqrt is
-    // the one IEEE-correctly-rounded power, quantized to integer
-    // BEFORE the normalization sum, so every share is a truncating
-    // BIGINT division over order-independent integer totals.
-    "q_temperature_mix" -> ((s, dir) => {
-      CorpusOps.temperatureMixWeights(t(s, dir, "documents"), "source",
-          budget = 10000L)
-        
-    }),
-
-    // Per-source quality-percentile calibration: each doc's per-mille
-    // percentile WITHIN its source (FineWeb-style per-domain
-    // thresholding removes the domain bias of a global quality
-    // floor). VALUE-FREQUENCY selection — the exchange carries only
-    // the (source, q_milli) frequency frame, never a per-source
-    // corpus sort.
-    "q_quality_calibration" -> ((s, dir) => {
-      CorpusOps.qualityCalibration(t(s, dir, "documents"), "doc_id",
-          "text", "source")
-        
-    }),
-
-    // Exact dedup: canonical-fingerprint window (one shuffle, no skew).
-    "q_exact_dedup" -> ((s, dir) => {
-      Dedup.exactDedup(t(s, dir, "documents"), "doc_id", "text")
-        
-    }),
-
-    // MinHash signatures (k=8 affine permutations of shingle rolling
-    // hashes) — the LSH building block, exposed per-component.
-    "q_minhash" -> ((s, dir) => {
-      val sig = Dedup.minhashSignature(col("text"), 3)
-      val cols = col("doc_id") +: Dedup.Coeffs.indices.map(i =>
-        element_at(sig, i + 1).as(s"m$i"))
-      t(s, dir, "documents").select(cols: _*)
-    }),
-
-    // Incremental dedup: a new batch (odd doc ids) deduped against an
-    // already-deduplicated corpus (even ids) — the day-to-day ingest
-    // operator. The corpus side NEVER shuffles: it streams through
-    // broadcast probes of the batch's fingerprints and LSH bands;
-    // within-batch canonicals reuse the full-dedup operators.
-    "q_incremental_dedup" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Dedup.incrementalDedupKept(
-          d.filter(pmod(col("doc_id"), lit(2)) === 1),
-          d.filter(pmod(col("doc_id"), lit(2)) === 0),
-          "doc_id", "text")
-        
-    }),
-
-    // Incremental corpus-prep end-to-end — the daily-ingest composite:
-    // the new batch (doc_id % 3 == 0, so the batch CONTAINS eval-rule
-    // ids and the decontamination/eval-exclusion stages are exercised)
-    // runs the full v2 funnel within-batch AND the cross-corpus dedup
-    // against the remaining docs as the already-curated corpus. One
-    // pinned batch projection feeds everything; the corpus side only
-    // streams through broadcast probes (plan-asserted in
-    // PlanShapeSpec).
-    "q_incremental_prep" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      CorpusOps.incrementalPrepKept(
-          d.filter(pmod(col("doc_id"), lit(3)) === 0),
-          d.filter(pmod(col("doc_id"), lit(3)) =!= 0),
-          "doc_id", "text", "lang")
-        
-    }),
-
-    // Near-dup pairs: LSH banding (never all-pairs) + exact Jaccard
-    // verify — the scale path for 100 TB dedup.
-    "q_lsh_near_dups" -> ((s, dir) => {
-      Dedup.lshNearDups(t(s, dir, "documents"), "doc_id", "text")
-        
-    }),
-
-    // Cluster-level dedup: LSH pairs → connected components →
-    // canonical min-id doc per transitive near-dup cluster.
-    "q_neardup_clusters" -> ((s, dir) => {
-      Dedup.nearDupClusters(t(s, dir, "documents"), "doc_id", "text")
-        
-    }),
-
-    // The dedup REPORT: cluster-size histogram + removable-doc count
-    // — the "how much does near-dup dedup save" summary every
-    // production dedup run reads before committing to a scrub. Two
-    // bounded rollups over the doc-keyed cluster table (cluster-count
-    // then histogram-sized); the corpus never re-shuffles.
-    "q_neardup_cluster_stats" -> ((s, dir) => {
-      Dedup.nearDupClusters(t(s, dir, "documents"), "doc_id", "text")
-        .groupBy("cluster").agg(count(lit(1)).as("sz"))
-        .groupBy(col("sz").as("cluster_size"))
-        .agg(count(lit(1)).as("n_clusters"))
-        .select(col("cluster_size"), col("n_clusters"),
-          expr("cluster_size * n_clusters").as("n_docs"),
-          expr("(cluster_size - 1) * n_clusters").as("n_removable"))
-        
-    }),
-
-    // MinHash estimator quality: signature-match estimate vs exact
-    // Jaccard per LSH candidate pair, integer per-mille — the eval
-    // face for the dedup family's sketch (recall@k's role for ANN).
-    "q_minhash_est_quality" -> ((s, dir) => {
-      Dedup.minhashEstQuality(t(s, dir, "documents"), "doc_id", "text")
-        
-    }),
-
-    // Exact n-gram Jaccard similarity join (prefix filtering — the
-    // PPJoin principle): the deterministic-exact counterpart of the
-    // probabilistic LSH pair mining, same never-all-pairs shape.
-    "q_jaccard_near_dups" -> ((s, dir) => {
-      Dedup.jaccardNearDups(t(s, dir, "documents"), "doc_id", "text")
-        
-    }),
-
-    // Edit-distance near-dup pairs: LSH band candidates verified by
-    // Levenshtein on the raw text — the fuzzy-substring face of the
-    // dedup family (catches small in-place mutations Jaccard treats as
-    // set noise). The quadratic DP runs on candidates only.
-    "q_edit_near_dups" -> ((s, dir) => {
-      Dedup.editNearDups(t(s, dir, "documents"), "doc_id", "text",
-          maxEdits = EditNearDupMaxEdits)
-        .select(col("doc_a"), col("doc_b"), col("edits").cast("long").as("edits"))
-        
-    }),
-
-    // Cross-document exact-substring duplication (Lee et al. 2022):
-    // merged spans of 8-token windows whose rolling-hash fingerprint
-    // occurs in >= 2 documents — the span-level signal document
-    // fingerprints can't see. One pinned tokenize scan, fingerprint
-    // postings never collected, islands window doc-bounded.
-    "q_substring_dedup" -> ((s, dir) => {
-      Dedup.substringDupSpans(t(s, dir, "documents"), "doc_id", "text",
-          k = SubstringDupK)
-        
-    }),
-
-    // The APPLY half of substring dedup: rebuild every document with
-    // its cross-doc duplicated spans removed (short docs untouched,
-    // fully-duplicated docs scrubbed to empty). Two corpus scans by
-    // design — span pass + token pass; doc-keyed range anti-join.
-    "q_substring_scrub" -> ((s, dir) => {
-      Dedup.scrubDupSpans(t(s, dir, "documents"), "doc_id", "text",
-          k = SubstringDupK)
-        
-    }),
-
-    // SimHash fingerprint (native one-pass Catalyst expression).
-    "q_simhash" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), Dedup.simhash(col("text")).as("simhash"))
-        
-    }),
-
-    // The SQL SURFACE of the extension functions: the same engine
-    // primitives (rolling_hash, token_hashes, simhash) invoked through
-    // a plain spark.sql string over a registered view — the route a
-    // SQL-only user takes (SparkSessionExtensions / register()).
-    "q_sql_surface" -> ((s, dir) => {
-      graft.GraftExtensions.register(s)
-      t(s, dir, "documents").createOrReplaceTempView("graft_docs")
-      val out = s.sql(
-        """SELECT doc_id,
-          |       rolling_hash(text) AS text_hash,
-          |       simhash(token_hashes(text)) AS fingerprint
-          |FROM graft_docs ORDER BY doc_id""".stripMargin)
-      s.catalog.dropTempView("graft_docs")
-      out
-    }),
-
-    // SimHash near-dup pairs (banded Hamming-ball search — exact by
-    // pigeonhole, never all-pairs).
-    "q_simhash_near_dups" -> ((s, dir) => {
-      Dedup.simhashNearDups(t(s, dir, "documents"), "doc_id", "text")
-        
-    }),
-
-    // Brute-force cosine top-k (quantized, oracle-exact) — the ANN
-    // correctness baseline.
-    "q_cosine_topk" -> ((s, dir) => {
-      Similarity.bruteForceTopK(t(s, dir, "embeddings"), "vec_id", "embedding", k = 5)
-        
-    }),
-
-    // Int8 scalar-quantized (SQ8) cosine top-k — the memory-bandwidth
-    // scale lever: per-vector-scaled codes in [-127, 127] are 4x
-    // smaller than float32, the scale cancels in cosine, and the
-    // ranking is deterministic, so this APPROXIMATE path is still
-    // hash-exact vs an oracle that replays the quantization rule.
-    "q_ann_q8" -> ((s, dir) => {
-      Similarity.bruteForceTopKQ8(t(s, dir, "embeddings"), "vec_id", "embedding", k = 5)
-        
-    }),
-
-    // IVF-partitioned approximate top-k — the similarity scale path
-    // (broadcast centroid assign + cluster-local search).
-    // IVF over SQ8 codes — the two scale levers composed (nprobe
-    // cluster pruning x 4x-smaller vectors); same fixed-k hash-order
-    // seed ids as q_ann_ivf, so the oracle replays it hash-exactly.
-    "q_ann_ivf_q8" -> ((s, dir) => {
-      Similarity.ivfTopKQ8(t(s, dir, "embeddings"), "vec_id", "embedding", k = 5)
-        
-    }),
-
-    "q_ann_ivf" -> ((s, dir) => {
-      Similarity.ivfTopK(t(s, dir, "embeddings"), "vec_id", "embedding", k = 5)
-        
-    }),
-
-    // Recall@5 of the IVF index against the brute-force ground truth
-    // — the eval every ANN deployment runs before trusting an index.
-    // Set-membership only (integer counts + one truncating div), so
-    // the evaluation of an approximate path is itself hash-exact.
-    "q_ann_recall" -> ((s, dir) => {
-      // ONE checkpoint-pinned quantized base feeds both the searcher
-      // and the ground truth (r20: Similarity.quantizedBase — was two
-      // persist pins shared via CacheManager plan-equality)
-      val base = Similarity.quantizedBase(t(s, dir, "embeddings"),
-        "vec_id", "embedding")
-      Similarity.recallAtK(
-          Similarity.ivfTopKOnBase(base, k = 5),
-          Similarity.bruteForceTopKOnBase(base, k = 5))
-
-    }),
-
-    // The probe-count TRADEOFF, measured: corpus recall@5 of ivfTopK
-    // at nprobe ∈ {1, 3, 5} against ONE materialized brute-force
-    // ground truth — the tuning curve an ANN deployment reads before
-    // picking its probe budget (more probes = more cluster-local
-    // work = higher recall; nprobe = |centroids| degenerates to
-    // brute force). The centroid assignment is probe-count
-    // independent, so the oracle shares one cents/assignment chain
-    // across all three probe depths.
-    "q_ann_recall_sweep" -> ((s, dir) => {
-      // ONE checkpoint-pinned quantized base for ground truth + sweep
-      // (r20 session 2 — was per-operator persist pins)
-      val base = Similarity.quantizedBase(t(s, dir, "embeddings"),
-        "vec_id", "embedding")
-      val exact = Similarity.bruteForceTopKOnBase(base, k = 5)
-        .localCheckpoint(true)
-      // ONE shared assignment + score pass for all three depths
-      // (r20: Similarity.ivfTopKSweep — was 3 full ivfTopK passes)
-      Similarity.ivfTopKSweepOnBase(base, k = 5, probes = Seq(1, 3, 5))
-        .map { case (p, approx) =>
-          Similarity.recallAtK(approx, exact)
-            .agg(sum(col("n_hits")).as("n_hits"),
-              sum(col("n_exact")).as("n_exact"))
-            .select(lit(p).as("nprobe"), col("n_hits"), col("n_exact"),
-              expr("n_hits * 1000 div n_exact").as("recall_permille"))
-        }.reduce(_ unionByName _)
-    }),
-
-    // One Lloyd (k-means) refinement step over the IVF assignment —
-    // the "train the centroids" half of an IVF build. Integer sums by
-    // (cluster, dimension) + one IEEE division per element: bit-exact,
-    // unlike float kmeans, so the step is driver-oracle-checked.
-    "q_kmeans_step" -> ((s, dir) => {
-      // exploded to (cid, n_members, pos, m) rows: scalar columns
-      // hash-compare robustly in the driver's DuckDB gate (array
-      // columns would compare representation, not value)
-      Similarity.kmeansStep(t(s, dir, "embeddings"), "vec_id", "embedding")
-        .select(col("cid"), col("n_members"),
-          posexplode(col("centroid")).as(Seq("pos", "m")))
-        .select(col("cid"), col("n_members"),
-          col("pos").cast("long").as("pos"), col("m"))
-        
-    }),
-
-    // IVF search over TRAINED centroids — kmeansStep's reason to
-    // exist, closed into the ANN family (r16 verdict stretch item):
-    // hash-order seeds → IvfTrainSteps integer-exact Lloyd
-    // refinements → multi-probe search. Every stage re-quantizes to
-    // integers, so the full production index-build shape is
-    // hash-gated end to end.
-    "q_ann_ivf_trained" -> ((s, dir) => {
-      Similarity.ivfTopKTrained(t(s, dir, "embeddings"), "vec_id",
-          "embedding", k = 5)
-        
-    }),
-
-    // Does training MOVE recall? Corpus recall@5 at nprobe=3 for the
-    // seeded index vs the Lloyd-trained index against one brute-force
-    // ground truth — the eval row that justifies (or refutes) paying
-    // for centroid training before indexing. Two rows, integer-exact.
-    "q_ann_trained_recall" -> ((s, dir) => {
-      // ONE checkpoint-pinned quantized base for ground truth, the
-      // seeded searcher, AND the Lloyd training + trained searcher
-      // (r20 session 2 — was three persist pins of the same plan)
-      val base = Similarity.quantizedBase(t(s, dir, "embeddings"),
-        "vec_id", "embedding")
-      val exact = Similarity.bruteForceTopKOnBase(base, k = 5)
-        .localCheckpoint(true)
-      val trained = Similarity.trainIvfCentroidsOnBase(base)
-        .localCheckpoint(true)
-      Seq(
-        "seeded" -> Similarity.ivfTopKOnBase(base, k = 5, nprobe = 3),
-        "trained" -> Similarity.ivfTopKOnBase(base, k = 5,
-          seeding = Similarity.ProvidedCentroids(trained), nprobe = 3))
-        .map { case (variant, approx) =>
-          Similarity.recallAtK(approx, exact)
-            .agg(sum(col("n_hits")).as("n_hits"),
-              sum(col("n_exact")).as("n_exact"))
-            .select(lit(variant).as("variant"), col("n_hits"),
-              col("n_exact"),
-              expr("n_hits * 1000 div n_exact").as("recall_permille"))
-        }.reduce(_ unionByName _)
-    }),
-
-    // The full recall MATRIX: nprobe ∈ {1,3,5} × {seeded, trained}
-    // against one brute-force ground truth — the table a user consults
-    // to decide whether to pay for centroid training vs probing deeper
-    // (r17 verdict, What's missing #2). Centroids train ONCE and feed
-    // all three trained probes via ProvidedCentroids; the seeded
-    // branch re-ranks the same hash-order seeds. Six rows,
-    // integer-exact.
-    "q_ann_trained_recall_sweep" -> ((s, dir) => {
-      // ONE checkpoint-pinned quantized base across ground truth,
-      // training and both sweeps (r20 session 2 — was four persist
-      // pins of the same plan)
-      val base = Similarity.quantizedBase(t(s, dir, "embeddings"),
-        "vec_id", "embedding")
-      val exact = Similarity.bruteForceTopKOnBase(base, k = 5)
-        .localCheckpoint(true)
-      val trained = Similarity.trainIvfCentroidsOnBase(base)
-        .localCheckpoint(true)
-      // ONE shared assignment + score pass PER SEEDING for all three
-      // depths (r20: Similarity.ivfTopKSweep — was 6 full ivfTopK
-      // passes; the oracle always shared its asg chain this way)
-      (for {
-        (variant, seeding) <- Seq[(String, Similarity.CentroidSeeding)](
-          "seeded" -> Similarity.HashSampledCentroids(),
-          "trained" -> Similarity.ProvidedCentroids(trained))
-        (p, approx) <- Similarity.ivfTopKSweepOnBase(base, k = 5,
-          seeding = seeding, probes = Seq(1, 3, 5))
-      } yield Similarity.recallAtK(approx, exact)
-        .agg(sum(col("n_hits")).as("n_hits"),
-          sum(col("n_exact")).as("n_exact"))
-        .select(lit(variant).as("variant"), lit(p).as("nprobe"),
-          col("n_hits"), col("n_exact"),
-          expr("n_hits * 1000 div n_exact").as("recall_permille")))
-        .reduce(_ unionByName _)
-    }),
-
-    // PageRank on the co-purchase graph (10 power iterations,
-    // decimal-exact accumulation — byte-deterministic). No oracleSql:
-    // iterative double math is not SQL-expressible; driver records the
-    // rows-only check, spec compares vs in-memory power iteration.
-    "q_pagerank" -> ((s, dir) => {
-      PageRank.run(copurchaseEdges(s, dir), iterations = PageRankIters)
-        
-    }),
-
-    // Personalized PageRank (random walk with restart): restart mass
-    // only on the seed vertices {2, 4} (the pivot convention) — rank
-    // = proximity to the seeds, the recommender variant. Same
-    // fixed-point accumulation; oracle unrolls the same iterations
-    // with the personalized init/base terms.
-    "q_pagerank_personalized" -> ((s, dir) => {
-      PageRank.personalized(copurchaseEdges(s, dir), Seq(2L, 4L),
-          iterations = PageRankIters)
-        
-    }),
-
-    // Exact phrase search on positional postings: adjacency = integer
-    // position equality, |phrase|-1 equi-joins over term-filtered
-    // postings (see Indexing.phraseSearch).
-    "q_phrase_search" -> ((s, dir) => {
-      Indexing.phraseSearch(t(s, dir, "documents"), "doc_id", "text",
-          Seq("value", "table", "part"))
-        
-    }),
-
-    // BM25 ranked retrieval: Okapi scoring of a 4-term query against
-    // the corpus, idf in fixed-point log2 (integer square-and-
-    // renormalize, F=8) and tf saturation cleared to one truncating
-    // BIGINT division — both replayed bit-exact by the oracle. 'dup'
-    // is the rare discriminator (df 25 vs ~380 at sf0.001), so the
-    // face exercises real idf spread. See Ranking.bm25TopK.
-    "q_bm25_topk" -> ((s, dir) => {
-      Ranking.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
-          Seq("dup", "hash", "join", "vector"), k = 10)
-        
-    }),
-
-    // Mixture-drift monitor: Laplace-smoothed token-distribution KL
-    // divergence between the even-id and odd-id corpus splits, with
-    // per-token drift attribution (top 20 KL(A||B) contributors).
-    // The signed log runs in the shared fixed-point integer log2
-    // (F=8), contributions stay raw BIGINTs, both global KLs are
-    // sign-safe truncating milli-bit divisions — all replayed exactly.
-    "q_kl_drift" -> ((s, dir) => {
-      Distributions.klDriftTopK(t(s, dir, "documents"),
-          "doc_id", "text", k = 20)
-        
-    }),
-
-    // Unigram-LM perplexity quality scores: model trained on even-id
-    // docs (Laplace over the union vocab), every odd-id doc scored by
-    // exact integer bit cost — the CCNet-style perplexity filter with
-    // the model join co-partitioned on token (vocab never broadcast).
-    "q_unigram_ppl" -> ((s, dir) => {
-      Distributions.unigramPerplexity(t(s, dir, "documents"),
-          "doc_id", "text")
-        
-    }),
-
-    // Corpus token frequencies, top 20 (explode + global sort + limit;
-    // deterministic tie-break on the token).
-    "q_top_tokens" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      d.select(explode(TextAnalysis.tokens(col("text"))).as("token"))
-        .filter(length(col("token")) > 0)
-        .groupBy("token").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("token"))
-        .limit(20)
-    }),
-
-    // Product-quantization ANN: 4-bit sub-codebook codes (a 64-dim
-    // vector becomes 32 BITS), asymmetric-distance search via
-    // per-query LUTs — the final compression rung after SQ8; integer
-    // L2² ranking, hash-exact by construction (hash-order codebooks,
-    // exact integer distances, deterministic argmin ties).
-    "q_ann_pq" -> ((s, dir) => {
-      Similarity.pqTopK(t(s, dir, "embeddings"), "vec_id", "embedding",
-          dim = 64)
-        
-    }),
-
-    // PQ + exact re-rank — the production composition: the 32-bit-code
-    // ADC scan shortlists 50 candidates per query, then ONLY those 50
-    // full vectors are touched for the exact integer L2² top-5
-    // (recall 0.14 raw ADC -> 0.56 re-ranked on the shipped
-    // embeddings; spec-measured).
-    "q_ann_pq_rerank" -> ((s, dir) => {
-      Similarity.pqTopKReranked(t(s, dir, "embeddings"), "vec_id",
-          "embedding", dim = 64)
-        
-    }),
-
-    // IVF-PQ (the FAISS IVFPQ shape, completing the ANN matrix:
-    // flat/SQ8/PQ × flat/IVF): coarse full-precision centroid
-    // assignment prunes to nprobe clusters; the fine stage scores
-    // only those candidates by 32-bit-code asymmetric distance.
-    "q_ann_ivf_pq" -> ((s, dir) => {
-      Similarity.ivfPqTopK(t(s, dir, "embeddings"), "vec_id",
-          "embedding", dim = 64)
-        
-    }),
-
-    // Count-min heavy hitters: exact top-20 tokens point-queried
-    // against the one-pass d×w sketch (fixed-size mergeable exchange
-    // — the 100 TB path where exact counts shuffle the vocabulary);
-    // the one-sided guarantee (est >= exact) require-enforced, both
-    // counts hash-gated — approximate but bit-reproducible.
-    "q_heavy_hitters" -> ((s, dir) =>
-      graft.operators.CountMin.heavyHittersFace(s, dir)),
-
-    // As-of join (beyond-parity: reference has no joins at all):
-    // each purchase attributed to the user's latest strictly-prior view.
-    "q_asof_attribution" -> ((s, dir) => {
-      val ev = EventStream.eventsTable(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts"), col("value"))
-      AsOfJoin.asof(purchases, views, Seq("user_id"), "ts", Seq("value"))
-        // attributed rows only: the driver compare chokes on NaT vs
-        // cross-unit datetime columns; outer semantics covered by spec
-        .filter(col("asof_ts").isNotNull)
-        .select(col("event_id"), col("user_id"), col("ts"), col("asof_ts"),
-          col("asof_value"))
-        
-    }),
-
-    // Forward as-of: for each view, the NEXT purchase strictly after
-    // it per user ("time to conversion") — same one-exchange
-    // union-window machinery run in reverse time order.
-    "q_asof_forward" -> ((s, dir) => {
-      val ev = EventStream.eventsTable(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts"), col("event_id"))
-      AsOfJoin.asof(views, purchases, Seq("user_id"), "ts", Seq(),
-          direction = "forward")
-        .filter(col("asof_ts").isNotNull)
-        .select(col("event_id"), col("user_id"), col("ts"), col("asof_ts"))
-        
-    }),
-
-    // Salted skew join under the gate: fact×dim equi-join through the
-    // deterministic-salt replication (the fixed-plan answer when AQE
-    // is off or a downstream stage must inherit the salted
-    // distribution), then a rollup that must agree with a plain join.
-    "q_salted_join" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_quantity"))
-      val p = t(s, dir, "part")
-        .select(col("p_partkey").as("l_partkey"), col("p_size"))
-      SkewOps.saltedJoin(li, p, Seq("l_partkey"), saltBuckets = 8)
-        .groupBy("p_size")
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("double")
-            .as("sum_qty"))
-        
-    }),
-
-    // AQE runtime skew-join split — the AUTOMATIC counterpart of the
-    // salted join above: ~90% of events collapse onto one join key,
-    // broadcast disabled, and OptimizeSkewedJoin must split the hot
-    // partition at runtime (skew=true require-enforced in the final
-    // adaptive plan). Bit-identical to the unsplit join.
-    "q_aqe_skew_join" -> ((s, dir) => SkewOps.aqeSkewJoinFace(s, dir)),
-
-    // Analytic-function family: ntile / percent_rank / cume_dist over
-    // a unique (totalprice, orderkey) ordering per priority class —
-    // every value is a rational of exact integers, oracle-exact.
-    "q_analytic_rank" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_orderpriority"))
-        .orderBy(col("o_totalprice"), col("o_orderkey"))
-      t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_orderpriority"),
-          ntile(4).over(w).as("quartile"),
-          percent_rank().over(w).as("pct_rank"),
-          cume_dist().over(w).as("cume"))
-        
-    }),
-
-    // Arbitrary GROUPING SETS (the general form cube/rollup
-    // specialize): per-flag totals, per-status totals, and the grand
-    // total in ONE Expand pass, with grouping() flags disambiguating
-    // real nulls from subtotal rows.
-    "q_grouping_sets" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupingSets(
-          Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus")), Seq()),
-          col("l_returnflag"), col("l_linestatus"))
-        .agg(grouping(col("l_returnflag")).cast("int").as("g_flag"),
-          grouping(col("l_linestatus")).cast("int").as("g_status"),
-          count(lit(1)).as("n"),
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("double")
-            .as("sum_qty"))
-        // NULLS FIRST pinned on BOTH sides (the q_rollup convention):
-        // Spark's default asc is nulls-first but DuckDB's is
-        // nulls-LAST, so relying on defaults leaves the row orders
-        // divergent — harmless under today's order-insensitive
-        // compare, wrong the day it isn't (r12 advice)
-        
-    }),
-
-    // Nearest-direction as-of: each view matched to its CLOSEST
-    // purchase in either direction (ties prefer backward) — completes
-    // the temporal-join family (backward / forward / nearest).
-    "q_asof_nearest" -> ((s, dir) => {
-      val ev = EventStream.eventsTable(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts"), col("event_id"))
-      AsOfJoin.asofNearest(views, purchases, Seq("user_id"), "ts",
-          "event_id", Seq())
-        .filter(col("asof_ts").isNotNull)
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("asof_ts"), col("asof_dir"))
-        
-    }),
-
-    // Tolerance-bounded nearest as-of with a PER-KEY bound (r12
-    // stretch item 8 — the irregular-sensor shape): each user's
-    // tolerance is (30 + user_id % 60) minutes, so slow-cadence users
-    // keep matches a global bound would starve and fast ones shed
-    // stale matches; the directional bound also FLIPS asof_dir where
-    // the nearer side falls outside tolerance. Matched rows only
-    // (q_asof_nearest convention); gap_us makes the bound visible in
-    // the hashed output.
-    "q_asof_nearest_tol" -> ((s, dir) => {
-      val ev = EventStream.eventsTable(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts"), col("event_id"))
-        .withColumn("tol_us",
-          (lit(30L) + pmod(col("user_id"), lit(60L))) * lit(60000000L))
-      AsOfJoin.asofNearest(views, purchases, Seq("user_id"), "ts",
-          "event_id", Seq(), toleranceCol = Some("tol_us"))
-        .filter(col("asof_ts").isNotNull)
-        .select(col("event_id"), col("user_id"), col("ts"), col("asof_ts"),
-          col("asof_dir"),
-          abs(unix_micros(col("asof_ts")) - unix_micros(col("ts")))
-            .as("gap_us"))
-        
-    }),
-
-    // Rollup (grouping-sets family — subtotals + grand total).
-    "q_rollup" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      li.rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("double")
-            .as("sum_qty"))
-        
-    }),
-
-    // Skew-safe salted two-phase aggregation (holistic exact-distinct
-    // spread over salt buckets) — identical values to a direct groupBy.
-    "q_salted_agg" -> ((s, dir) => {
-      SkewOps.saltedDistinctAndSum(t(s, dir, "lineitem"), "l_returnflag",
-          "l_extendedprice")
-        
-    }),
-
-    // End-to-end curation pipeline: language-verified, quality-scored,
-    // exact-deduped document funnel (composition of the text +
-    // dedup operators — counts per source).
-    "q_curation" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val scored = d.select(col("doc_id"), col("source"), col("lang"),
-        TextAnalysis.languageId(col("text")).as("guessed_lang"),
-        TextAnalysis.qualityScore(col("text")).as("quality"))
-      val canon = Dedup.exactDedup(d, "doc_id", "text")
-        .select(col("doc_id"), col("is_canonical"))
-      scored.join(canon, "doc_id")
-        .filter(col("is_canonical") && col("guessed_lang") === col("lang") &&
-          col("quality") >= 0.5)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_kept"),
-          min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
-        
-    }),
-
-    // The full corpus-preparation pipeline in ONE query — every stage
-    // of a training-data funnel composed end-to-end: language
-    // verification, exact dedup (fingerprint canonical), transitive
-    // near-dup dedup (LSH -> connected components canonical), quality
-    // floor, deterministic hash split, per-(split, lang) stats. All
-    // stages are the library's scale-path operators; the relational
-    // stages compose lazily under one Catalyst plan, while the CC
-    // stage inside nearDupClusters is the engine's iterative fixpoint
-    // and materializes its rounds eagerly when the query is built
-    // (Catalyst has no fixpoint operator — SURVEY.md §4.3).
-    "q_corpus_prep" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val scored = d.select(col("doc_id"), col("lang"),
-        TextAnalysis.languageId(col("text")).as("gl"),
-        TextAnalysis.qualityScore(col("text")).as("quality"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
-      val ecanon = Dedup.exactDedup(d, "doc_id", "text")
-        .select(col("doc_id"), col("is_canonical").as("is_ec"))
-      val ncanon = Dedup.nearDupClusters(d, "doc_id", "text")
-        .select(col("doc_id"), col("is_canonical").as("is_nc"))
-      val bucket = pmod(TextAnalysis.rollingHash(col("doc_id").cast("string")),
-        lit(10))
-      scored.join(ecanon, "doc_id").join(ncanon, "doc_id")
-        .filter(col("is_ec") && col("is_nc") &&
-          col("gl") === col("lang") && col("quality") >= 0.5)
-        .withColumn("split",
-          when(bucket < 8, "train").when(bucket === 8, "val")
-            .otherwise("test"))
-        .groupBy(col("split"), col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("sum_tokens"))
-        
-    }),
-
-    // Embedding-cosine near-dup pairs (threshold calibrated to the
-    // synthetic embeddings: max off-diagonal sim is ~0.51).
-    "q_embedding_near_dups" -> ((s, dir) => {
-      Similarity.cosineNearDups(t(s, dir, "embeddings"), "vec_id", "embedding",
-          threshold = 0.45)
-        
-    }),
-
-    // Watermark-ready tumbling-window aggregation over event time
-    // (EventStream.windowedCounts runs identically on readStream input).
-    "q_events_window" -> ((s, dir) => {
-      EventStream.windowedCounts(EventStream.eventsTable(s, dir))
-        
-    }),
-
-    // ---- Streaming faces under the driver's gate: each runs a REAL
-    // Structured Streaming query (file source → state-store operator →
-    // sink) to completion and returns the drained result. ----
-
-    // Complete-mode streaming twin of q_events_window — identical
-    // result by construction (complete mode emits every window).
-    "q_streaming_window" -> ((s, dir) => {
-      StreamHarness.boundedWindowedCounts(s, dir)
-        
-    }),
-
-    // SLIDING windows (1h window / 15min slide): each event explodes
-    // into 4 overlapping windows map-side before the partial agg —
-    // the alerting/dashboard shape; complete mode, so the drained
-    // stream equals the batch replay bit-for-bit.
-    "q_streaming_sliding" -> ((s, dir) => {
-      StreamHarness.boundedSlidingCounts(s, dir)
-        
-    }),
-
-    // The same windowed aggregation under the RocksDB state store —
-    // the 100 TB state backend (native off-heap memtables + local SST
-    // files instead of JVM-heap state). The provider's engagement is
-    // require-enforced from the progress's rocksdb* custom metrics;
-    // the result must be state-backend-invisible (same oracle).
-    "q_streaming_rocksdb" -> ((s, dir) => {
-      StreamHarness.rocksdbWindowFace(s, dir)
-        
-    }),
-
-    // Watermark late-data DROP, proven from the engine's own metric:
-    // recent 30% arrives, watermark advances to max−2h, the old 70%
-    // arrives LATE; numRowsDroppedByWatermark require-equals the
-    // predicted count, and the append sink holds exactly the
-    // closed-window aggregate over on-time rows — the bounded-state
-    // contract, hash-gated.
-    "q_streaming_late_drop" -> ((s, dir) => {
-      StreamHarness.lateDropFace(s, dir)
-        
-    }),
-
-    // Checkpoint stop→resume: the SAME windowed aggregation as two
-    // query incarnations over one durable checkpoint (state-store
-    // recovery — the path a real pipeline exercises every deploy).
-    // Hash-exact against the q_streaming_window oracle: the restored
-    // state must reproduce the full aggregation bit-for-bit.
-    "q_streaming_resume" -> ((s, dir) => {
-      StreamHarness.resumedWindowedCounts(s, dir)
-        
-    }),
-
-    // dropDuplicatesWithinWatermark over the (user_id, event_type)
-    // key; deterministic surviving-key-set contract.
-    "q_streaming_dedup" -> ((s, dir) => {
-      StreamHarness.boundedDedupKeys(s, dir)
-        
-    }),
-
-    // Optimizer-rule face: the NAIVE interval-join SQL (bare range
-    // predicates, no binning in user code) run under
-    // plans.BinIntervalJoins — the rule must rewrite it into the
-    // binned equi-join (bin in the join keys, no nested-loop join;
-    // both require-enforced), and the pair set must equal the naive
-    // semantics bit-for-bit (the oracle runs the naive join).
-    "q_interval_autobin" -> ((s, dir) => {
-      graft.plans.BinIntervalJoins.withRule(s) {
-        val ev = EventStream.eventsTable(s, dir)
-        val p = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-            col("event_id"))
-        val v = ev.filter(col("event_type") === "view")
-          .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
-            col("value"))
-        val joined = p.join(v, expr("p_user = v_user AND v_ts < p_ts " +
-            "AND v_ts > p_ts - INTERVAL '1' HOUR"))
-          .select(col("event_id"), col("p_user").as("user_id"),
-            col("p_ts"), col("v_ts"), col("value"))
-          .orderBy("event_id", "v_ts")
-        val plan = joined.queryExecution.executedPlan.toString
-        require(plan.contains("__graft_bin"),
-          s"BinIntervalJoins did not fire — no bin in the plan:\n$plan")
-        require(!plan.contains("BroadcastNestedLoopJoin"),
-          s"interval join still planned as a nested loop:\n$plan")
-        joined.localCheckpoint(true)
-      }
-    }),
-
-    // Stream-stream interval join (purchase ⋈ preceding views ≤1h).
-    "q_streaming_attribution" -> ((s, dir) => {
-      StreamHarness.boundedAttribution(s, dir)
-        
-    }),
-
-    // Stream-stream LEFT OUTER interval join: unmatched purchases
-    // (organic conversions) surface null-extended once the watermark
-    // proves no qualifying view can still arrive; compared on the
-    // provably-decided region (see boundedAttributionOuter). The null
-    // v_ts is carried as (epoch-0 sentinel, matched=0): a nullable
-    // TIMESTAMP would be the suite's first, and the gate's
-    // pandas-side compare mis-handles NaT across datetime
-    // resolutions — nullable DOUBLE (value) has a green precedent,
-    // nullable timestamps don't.
-    "q_streaming_left_join" -> ((s, dir) => {
-      StreamHarness.boundedAttributionOuter(s, dir)
-        .select(col("event_id"), col("user_id"), col("p_ts"),
-          coalesce(col("v_ts"), timestamp_micros(lit(0L))).as("v_ts"),
-          col("v_ts").isNotNull.cast("long").as("matched"),
-          col("value"))
-        
-    }),
-
-    // Stream-stream FULL OUTER interval join — the join matrix
-    // completed: unmatched purchases null-extend the view side AND
-    // unattributed views null-extend the purchase side, both
-    // watermark-gated; compared on the both-sides-decided region
-    // (max_ts − delay − window − 1s). Null keys/timestamps coalesce
-    // to sentinels on BOTH sides so the hash compare is
-    // dtype-stable.
-    "q_streaming_full_join" -> ((s, dir) => {
-      StreamHarness.boundedAttributionFull(s, dir)
-        .select(coalesce(col("event_id"), lit(-1L)).as("event_id"),
-          col("user_id"),
-          coalesce(col("p_ts"), timestamp_micros(lit(0L))).as("p_ts"),
-          coalesce(col("v_ts"), timestamp_micros(lit(0L))).as("v_ts"),
-          col("p_ts").isNotNull.cast("long").as("has_p"),
-          col("v_ts").isNotNull.cast("long").as("has_v"),
-          col("value"))
-        
-    }),
-
-    // TWO stateful operators chained in ONE streaming query:
-    // stream-stream interval join → windowed aggregation (attributed
-    // revenue per 30-min purchase window), append mode, one
-    // checkpoint. Compared on w_end <= wm − joinWindow − 1s — the
-    // watermark Spark propagates PAST the join to the agg (see
-    // boundedChainedAgg).
-    "q_streaming_chained_agg" -> ((s, dir) => {
-      StreamHarness.boundedChainedAgg(s, dir)
-        
-    }),
-
-    // Stream-static enrichment: streaming views pick up a static
-    // per-user purchase-LTV dimension (broadcast per micro-batch).
-    "q_streaming_enrich" -> ((s, dir) => {
-      StreamHarness.boundedEnrichment(s, dir)
-    }),
-
-    // flatMapGroupsWithState sessionization with event-time timeout,
-    // compared on the watermark-closed region (see boundedSessions).
-    "q_streaming_sessionize" -> ((s, dir) => {
-      StreamHarness.boundedSessions(s, dir,
-          gapMs = 6L * 3600000, delaySec = 600)
-        
-    }),
-
-    // The BUILT-IN session_window aggregation — the state-store-native
-    // route to the same gap sessions (split at >= gap, end carries
-    // the gap; see boundedNativeSessions). Relational aggregation
-    // makes the value total order-free, so it IS hash-gated here.
-    "q_streaming_session_window" -> ((s, dir) => {
-      StreamHarness.boundedNativeSessions(s, dir)
-        
-    }),
-
-    // Checkpoint stop→resume of CUSTOM flatMapGroupsWithState state —
-    // deeper than q_streaming_resume's built-in window-agg recovery:
-    // sessions straddling the stop point exist ONLY if incarnation 2
-    // restored the open per-user SessionState + its event-time timeout
-    // from the state store. Same closed-region contract (and oracle)
-    // as q_streaming_sessionize.
-    "q_streaming_resume_sessions" -> ((s, dir) => {
-      StreamHarness.resumedSessions(s, dir,
-          gapMs = 6L * 3600000, delaySec = 600)
-        
-    }),
-
-    // foreachBatch CDC-apply: a versioned update stream merged
-    // incrementally into a snapshot table (Snapshot.upsert per
-    // micro-batch, versioned state dirs for retry idempotence,
-    // tombstones erased only at read). ≥2 merges enforced; final
-    // state must equal the single-batch upsert — the shared
-    // q_snapshot_upsert recipe — bit-for-bit.
-    "q_streaming_cdc_apply" -> ((s, dir) =>
-      StreamHarness.cdcApplyFace(s, dir)),
-
-    // Trigger.AvailableNow incremental ingest — the nightly-batch-
-    // over-streaming-checkpoint pattern: two short-lived query
-    // incarnations over one checkpoint, each draining only what
-    // arrived since the last run (resume + no-reprocess both
-    // require-enforced from the observed batch ids); same versioned
-    // CDC merge and oracle as q_streaming_cdc_apply.
-    "q_streaming_availablenow" -> ((s, dir) =>
-      StreamHarness.availableNowCdcFace(s, dir)),
-
-    // Ordered-funnel conversion (view → click → purchase): per step,
-    // users whose events contain the prefix as a strictly-increasing
-    // timestamp subsequence. Greedy earliest-match; every stage keys
-    // on the user id, so the chain stays co-partitioned after the
-    // first exchange.
-    "q_funnel" -> ((s, dir) => {
-      Funnel.funnelCounts(EventStream.eventsTable(s, dir),
-        "user_id", "ts", "event_type", Seq("view", "click", "purchase"))
-    }),
-
-    // First-order Markov transition matrix over per-user event
-    // sequences: one lead() window (user-bounded state), a
-    // |types|²-row rollup whose shuffle is collapsed map-side, and
-    // truncating per-mille probabilities (integer — oracle-exact).
-    "q_markov_transitions" -> ((s, dir) => {
-      Funnel.transitionMatrix(EventStream.eventsTable(s, dir),
-          "user_id", "ts", "event_type", "event_id")
-        
-    }),
-
-    // 2-D skyline (Pareto frontier): cheapest-per-size parts —
-    // bucket-local staircase prune then a frontier-sized global
-    // pass; the all-pairs NOT EXISTS lives only in the oracle.
-    "q_skyline" -> ((s, dir) => {
-      val pts = t(s, dir, "part")
-        .groupBy(col("p_retailprice").as("cost"),
-          col("p_size").cast("long").as("benefit"))
-        .agg(count(lit(1)).as("n_parts"),
-          min(col("p_partkey")).as("min_partkey"))
-      graft.operators.Skyline.skyline2d(pts, "cost", "benefit")
-        
-    }),
-
-    // Cohort retention triangle: users cohorted by week of first
-    // event; cell (cohort, offset) = distinct users active offset
-    // weeks later. One user_id exchange serves cohort window +
-    // activity distinct; final rollup is tiny.
-    "q_retention" -> ((s, dir) => {
-      Retention.cohortRetention(EventStream.eventsTable(s, dir))
-        
-    }),
-
-    // Sessionization (gap-based) — batch face of the streaming
-    // flatMapGroupsWithState operator, window-function formulation.
-    "q_sessionize" -> ((s, dir) => {
-      EventStream.sessionizeBatch(EventStream.eventsTable(s, dir),
-          gapMs = 6L * 3600000)
-        
-    }),
-
-    // Sliding window frame: per-user 4-row moving sum over event time
-    // (decimal accumulation — frame math is oracle-exact).
-    "q_moving_sum" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts"), col("event_id")).rowsBetween(-3, 0)
-      EventStream.eventsTable(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          sum(col("value").cast("decimal(18,6)")).over(w).cast("double")
-            .as("moving_value"),
-          count(lit(1)).over(w).as("n_window"))
-        
-    }),
-
-    // Time-series regularization: each user's events resampled onto
-    // an hourly bucket grid over their observed span, gaps filled
-    // LOCF; within-bucket last under the (ts, event_id) total order
-    // (see TimeSeries.resampleLocf).
-    "q_timeseries_fill" -> ((s, dir) => {
-      TimeSeries.resampleLocf(EventStream.eventsTable(s, dir),
-          "user_id", "ts", "event_id", "value", stepUs = 3600L * 1000000)
-        .withColumnRenamed("k", "user_id")
-        
-    }),
-
-    // Grouped OLS: per-user linear spend trend over hourly buckets,
-    // closed-form normal equations in exact BIGINT (milli-cents per
-    // bucket) — one exchange, |users| rows (see
-    // TimeSeries.groupedTrend).
-    "q_user_trend" -> ((s, dir) => {
-      TimeSeries.groupedTrend(EventStream.eventsTable(s, dir),
-          "user_id", "ts", "value", stepUs = 3600L * 1000000)
-        .withColumnRenamed("k", "user_id")
-        
-    }),
-
-    // Binned range join (equi-join on (key, time-bucket), never a
-    // non-equi NLJ): views in the strictly-preceding hour per purchase.
-    "q_range_attribution" -> ((s, dir) => {
-      val ev = EventStream.eventsTable(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts"), col("value"))
-      RangeJoin.precedingWindowStats(purchases, views, Seq("user_id"),
-          "ts", "ts", windowUs = 3600L * 1000000, valueCol = "value")
-        .select(col("event_id"), col("user_id"), col("n_matched"),
-          col("matched_value"))
-        
-    }),
-
-    // Multi-table relational join (TPC-H Q3 shape): broadcast the
-    // customer dim, shuffle-join the two facts on the order key.
-    "q_join_pricing" -> ((s, dir) => {
-      val price = col("l_extendedprice").cast("decimal(18,2)")
-      val disc = col("l_discount").cast("decimal(18,2)")
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(t(s, dir, "customer")),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"), col("o_orderpriority"))
-        .agg(sum(price * (lit(1) - disc)).cast("double").as("revenue"),
-          count(lit(1)).as("n_items"),
-          count_distinct(col("o_orderkey")).as("n_orders"))
-        
-    }),
-
-    // Ranking: top-3 quality documents per language (deterministic
-    // tie-break on doc_id). Bounded TopKBySim aggregate, NOT a
-    // row_number window: the window would shuffle + fully sort every
-    // document inside one task per language (~5 languages = ~5 tasks
-    // for the whole corpus at 100 TB), while the aggregate keeps a
-    // 3-element buffer per key, combines map-side, and exchanges
-    // |langs|·k rows. Same (quality desc, doc_id asc) order contract.
-    "q_top_docs_per_lang" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      d.select(col("doc_id"), col("lang"),
-          TextAnalysis.qualityScore(col("text")).as("quality"))
-        .groupBy(col("lang"))
-        .agg(TopKBySim.top_k_by_sim(col("quality"), col("doc_id"), 3).as("tk"))
-        .select(col("lang"), posexplode(col("tk")).as(Seq("pos", "top")))
-        .select(col("lang"), (col("pos") + 1).cast("int").as("rank"),
-          col("top.neighbor_id").as("doc_id"), col("top.sim").as("quality"))
-        
-    }),
-
-    // Semi-structured extraction: JSON property column → typed field
-    // (codegen'd JsonPath, no UDF) → relational aggregation.
-    "q_json_extract" -> ((s, dir) => {
-      t(s, dir, "events")
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .groupBy("event_type")
-        .agg(count(col("k")).as("n"),
-          sum(col("k")).as("sum_k"),
-          count_distinct(col("k")).as("distinct_k"),
-          min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-        
-    }),
-
-    // Calendar-dimension aggregation (date_trunc on the orders fact).
-    "q_orders_by_month" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
-            .as("total"),
-          count_distinct(col("o_custkey")).as("n_customers"))
-        
-    }),
-
-    // Relational set ops (INTERSECT/EXCEPT — absent from the reference,
-    // SURVEY §2.2): parts both sold and large; parts never sold.
-    "q_set_ops" -> ((s, dir) => {
-      val sold = t(s, dir, "lineitem")
-        .select(col("l_partkey").as("p_partkey")).distinct()
-      val parts = t(s, dir, "part")
-      val soldLarge = sold
-        .intersect(parts.filter(col("p_size") > 25).select(col("p_partkey")))
-        .agg(count(lit(1)).as("n_sold_large"))
-      val unsold = parts.select(col("p_partkey")).except(sold)
-        .agg(count(lit(1)).as("n_unsold"))
-      soldLarge.crossJoin(unsold)
-    }),
-
-    // Single-pass table profile (ANALYZE-style): per-column null
-    // counts, exact distinct counts, numeric min/max — one scan, one
-    // Expand for the exact NDVs, wide row melted per column.
-    "q_table_profile" -> ((s, dir) => {
-      Profile.profile(t(s, dir, "lineitem"), ProfileNumericCols,
-          ProfileOtherCols)
-        
-    }),
-
-    // Pivot (values-to-columns reshaping over the line-status domain).
-    "q_pivot" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .pivot("l_linestatus", Seq("F", "O"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).cast("double"))
-        
-    }),
-
-    // Unpivot/melt (columns-to-values — the inverse reshaping of
-    // q_pivot, via the native Dataset.unpivot API): a wide per-flag
-    // metrics row melts into (metric, value) rows. All metrics cast to
-    // one type first (unpivot requires a common value type).
-    "q_unpivot" -> ((s, dir) => {
-      val wide = t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).cast("double")
-               .as("sum_qty"),
-          sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double")
-            .as("sum_price"),
-          count(lit(1)).cast("double").as("n_rows"))
-      wide.unpivot(Array(col("l_returnflag")),
-          Array(col("sum_qty"), col("sum_price"), col("n_rows")),
-          "metric", "value")
-        
-    }),
-
-    // Exact interpolated percentiles (holistic aggregate — the sketch
-    // path at 100 TB is approx_percentile; this is the exact oracle-
-    // matched face, verified bit-identical to DuckDB quantile_cont).
-    "q_percentiles" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(expr("percentile(l_quantity, 0.5)").as("p50_qty"),
-          expr("percentile(l_quantity, 0.9)").as("p90_qty"),
-          expr("percentile(l_extendedprice, 0.25)").as("p25_price"))
-        
-    }),
-
-    // Semi/anti join: per market segment, customers with vs without
-    // orders (left_semi / left_anti — the relational EXISTS family).
-    "q_semi_anti" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders").select(col("o_custkey"))
-      val active = c.join(o, col("c_custkey") === col("o_custkey"), "left_semi")
-        .groupBy("c_mktsegment").agg(count(lit(1)).as("n_active"))
-      val inactive = c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy("c_mktsegment").agg(count(lit(1)).as("n_inactive"))
-      active.join(inactive, Seq("c_mktsegment"), "full_outer")
-        .select(col("c_mktsegment"),
-          coalesce(col("n_active"), lit(0L)).as("n_active"),
-          coalesce(col("n_inactive"), lit(0L)).as("n_inactive"))
-        
-    }),
-
-    // Cube (full grouping-sets lattice — all 4 grouping combinations).
-    "q_cube" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("double")
-            .as("sum_qty"))
-        
-    }),
-
-    // Deterministic hash-based train/val/test split (80/10/10) — the
-    // standard reproducible corpus-split primitive; portable rolling
-    // hash so the DuckDB oracle derives identical assignments.
-    "q_hash_split" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val bucket = pmod(TextAnalysis.rollingHash(col("doc_id").cast("string")),
-        lit(10))
-      d.select(col("doc_id"), col("n_chars"),
-          when(bucket < 8, "train").when(bucket === 8, "val")
-            .otherwise("test").as("split"))
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_docs"),
-          min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"),
-          sum(col("n_chars")).as("sum_chars"))
-        
-    }),
-
-    // Sequence packing (training-batch construction): docs packed into
-    // 4096-token sequences per language shard via the declarative
-    // prefix-sum face; per-pack stats. The exact-greedy face is
-    // spec-tested (sequential state — not SQL-expressible).
-    "q_pack_stats" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))
-      SequencePacking.packByPrefixSum(d, "lang", "doc_id", "n_tokens", 4096L)
-        .groupBy(col("lang"), col("pack_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("pack_tokens"),
-          min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
-        
-    }),
-
-    // Sketch-path aggregates (HLL distinct, GK-quantile): the 100 TB
-    // default where q_percentiles/count_distinct are the exact faces.
-    // r12 verdict item 4: the sketches still RUN (both approx
-    // aggregates execute), but the HASHED columns are their CONTRACTS,
-    // not the implementation-defined estimates — exact NDV + a 3×rsd
-    // bound flag for HLL++, and for the GK quantile the rank of the
-    // returned value (must sit within 0.5 ± 2/accuracy) plus
-    // membership (GK returns an actual data value, never an
-    // interpolation). The oracle predicts every flag true: a drifting
-    // sketch flips a boolean and fails the hash compare.
-    "q_sketch_stats" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val agg = li.groupBy(col("l_returnflag"))
-        .agg(count_distinct(col("l_extendedprice")).as("exact_prices"),
-          approx_count_distinct(col("l_extendedprice")).as("approx_prices"),
-          expr("approx_percentile(l_quantity, 0.5, 1000)").as("ap50"),
-          count(lit(1)).as("n_rows"))
-      // CDF of the returned quantile within its own group: one more
-      // pass over lineitem against the 3-row broadcast agg
-      val cdf = li.join(broadcast(agg.select(col("l_returnflag"),
-          col("ap50"))), Seq("l_returnflag"))
-        .groupBy(col("l_returnflag"))
-        .agg(
-          sum(when(col("l_quantity") <= col("ap50"), 1L).otherwise(0L))
-            .as("n_le"),
-          sum(when(col("l_quantity") < col("ap50"), 1L).otherwise(0L))
-            .as("n_lt"),
-          sum(when(col("l_quantity") === col("ap50"), 1L).otherwise(0L))
-            .as("n_eq"))
-      agg.join(cdf, Seq("l_returnflag"))
-        .select(col("l_returnflag"), col("exact_prices"), col("n_rows"),
-          (abs(col("approx_prices") - col("exact_prices")).cast("double") /
-            col("exact_prices").cast("double") <= 0.15).as("ndv_within"),
-          (col("n_le").cast("double") / col("n_rows") >= 0.498 &&
-            col("n_lt").cast("double") / col("n_rows") <= 0.502)
-            .as("p50_within"),
-          (col("n_eq") > 0).as("p50_is_member"))
-        
-    }),
-
-    // Sketch QUALITY under the hash gate: the HLL++ estimate itself is
-    // implementation-defined, but its ERROR BOUND is checkable (the
-    // recipe q_sketch_stats now follows too) — emit the exact NDV
-    // plus a boolean asserting the estimate landed within 3x the
-    // configured 5% rsd. The oracle predicts `true`: if the sketch
-    // ever drifts out of tolerance the flag flips and the driver's
-    // hash compare fails, which turns "rows-only" into a real gate on
-    // the approximation contract without replaying the sketch.
-    "q_sketch_quality" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(count_distinct(col("l_extendedprice")).as("exact_prices"),
-          approx_count_distinct(col("l_extendedprice"), 0.05)
-            .as("approx_prices"))
-        .select(col("l_returnflag"), col("exact_prices"),
-          (abs(col("approx_prices") - col("exact_prices"))
-            .cast("double") / col("exact_prices").cast("double") <= 0.15)
-            .as("within_rsd"))
-        
-    }),
-
-    // Multimodal plumbing: binary payload -> mapPartitions decode ->
-    // fixed-width features. ALL THREE decode paths are real codecs
-    // (PNG/WAV/AVI), and the whole path — payload synthesis,
-    // partition-streaming decode, feature projection — is
-    // oracle-checked bit-for-bit (the oracle recomputes the features
-    // from the UTF-8 bytes via hex decoding).
-    "q_media_features" -> ((s, dir) => {
-      // image rows take the REAL PNG decode path (payload built by
-      // PngCodec; width/height/bit_depth/pixel stats parsed/inflated/
-      // unfiltered back OUT of the container), audio rows the REAL
-      // WAV decode path (payload built by WavCodec; sample_rate/
-      // bit_depth/amplitude stats read back out of the RIFF chunks),
-      // and video rows the REAL AVI decode path (payload built by
-      // AviCodec; width/height/n_frames/fps/pixel stats read back out
-      // of the headers and reconstructed DIB scanlines) — the oracle
-      // recomputes the same values from the generation rules (the
-      // encode→decode round trips cancel by construction)
-      val feats = Multimodal.decode(Multimodal.fromDocuments(t(s, dir, "documents")))
-      feats.toDF()
-        .select(col("media_id"), col("media_type"), col("n_bytes"),
-          col("checksum"),
-          element_at(col("histogram"), 1).as("h0"),
-          element_at(col("histogram"), 2).as("h1"),
-          col("width"), col("height"), col("bit_depth"), col("color_type"),
-          col("px_min"), col("px_max"), col("px_mean"),
-          col("sample_rate"), col("n_samples"),
-          col("amp_min"), col("amp_max"), col("amp_mean"),
-          col("n_frames"), col("fps"))
-        
-    }),
-
-    // Real thumbnail pipeline: PNG decode → box-filter average-pool to
-    // maxDim 8 → PNG re-encode → decode AGAIN for the emitted stats —
-    // two full codec round trips, so the oracle's replay of the
-    // pooling arithmetic also proves the re-encoded container is
-    // byte-valid.
-    "q_image_resize" -> ((s, dir) => {
-      val imgs = Multimodal.fromDocuments(t(s, dir, "documents"))
-        .filter(_.media_type == "image")
-      Multimodal.decode(Multimodal.resize(imgs, maxDim = 8))
-        .toDF()
-        .select(col("media_id"), col("width"), col("height"),
-          col("px_min"), col("px_max"), col("px_mean"))
-        
-    }),
-
-    // Real audio decimation: WAV decode → 2:1 window-average →
-    // re-encode at 8 kHz → decode again for the emitted stats. Same
-    // two-round-trip proof shape as q_image_resize.
-    "q_audio_downsample" -> ((s, dir) => {
-      val aud = Multimodal.fromDocuments(t(s, dir, "documents"))
-        .filter(_.media_type == "audio")
-      Multimodal.decode(Multimodal.downsampleAudio(aud, factor = 2))
-        .toDF()
-        .select(col("media_id"), col("sample_rate"), col("n_samples"),
-          col("amp_min"), col("amp_max"), col("amp_mean"))
-        
-    }),
-
-    // Real video frame demux: AVI payload -> per-codec-frame rows with
-    // pixel stats — the explode-shaped media op (1 row -> n rows) over
-    // true decoded frames. Frame pixels stay map-side; only the
-    // fixed-width stats rows move. The oracle replays the synthesis
-    // rule (frame f = text bytes cycled with phase shift f over the
-    // videoDims canvas) — the encode→decode round trip cancels.
-    "q_video_frames" -> ((s, dir) => {
-      Multimodal.videoFrameStats(Multimodal.fromDocuments(t(s, dir, "documents")))
-        .toDF()
-        
-    }),
-
-    // IVF-bucketed embedding near-dups — the scale path of
-    // q_embedding_near_dups (cluster-local pairs, never all-pairs);
-    // the oracle mirrors the same deterministic centroid assignment,
-    // so this APPROXIMATE operator is still hash-exact.
-    "q_embedding_near_dups_ivf" -> ((s, dir) => {
-      Similarity.cosineNearDupsIvf(t(s, dir, "embeddings"), "vec_id",
-          "embedding", threshold = 0.45)
-        
-    }),
-
-    // Golden path-carrying BFS on the reference's committed tinyG
-    // dataset (datasets/tinyG.txt, 13 vertices — embedded as fixed
-    // literals so the oracle can enumerate the same edges): dist AND
-    // the lexicographically-smallest shortest path per vertex — the
-    // reference's full map-phase output (BFS_map_reduce.py:31-35),
-    // argmin tie-break exercised (vertex 4 reaches via 0-5-4 and
-    // 0-6-4; min(struct(dist, path)) must pick 0-5-4). Path rendered
-    // as a string: arrays stay out of the driver hash (SURVEY §7.4).
-    "q_bfs_paths_golden" -> ((s, _) => {
-      import s.implicits._
-      val edges = TinyG.toDF("src", "dst")
-      Bfs.run(GraphOps.symmetrize(edges), source = 0L,
-          Bfs.Config(withPaths = true))
-        .select(col("id"), col("dist"), array_join(col("path"), "->").as("path"))
-        
-    }),
-
-    // BFS distances on the reference's committed 250-vertex dataset
-    // (datasets/smallG.txt — SURVEY §0.1: 1273 edges, connected,
-    // ecc(0)=13, so the loop runs 14 rounds, 5× deeper than tinyG's 3)
-    // — r12 verdict item 5: puts the reference's own larger dataset,
-    // previously spec-only (ReferenceDatasetSpec), under the driver's
-    // gate through the REAL text-ingest path (EdgeListSource →
-    // symmetrize → Bfs.run). The oracle replays the file through
-    // DuckDB's read_csv and 14 unrolled min-merge layers.
-    "q_bfs_smallg_golden" -> ((s, _) => {
-      val edges = graft.sources.EdgeListSource.load(
-        s, "/root/reference/datasets/smallG.txt")
-      Bfs.run(GraphOps.symmetrize(edges), source = 0L)
-    }),
-
-    // BFS at the reference's two PUBLISHED scale points whose blobs
-    // don't ship (slide 23: mediumG 77,360/905,468 and largeG
-    // 325,729/1,497,134 nodes/edges) — synthesized deterministically
-    // (SyntheticGraphs: branching-64 tree + hash chords, ecc(0) ≤ 4
-    // by construction) so the oracle rebuilds the identical graph and
-    // replays the BFS with 5 provably-past-fixed-point min-merge
-    // layers. Output is the distance histogram (count + id-sum per
-    // level): the result the reference's scale experiment reports,
-    // in a 5-row hash-gated frame. These run Bfs.run TO CONVERGENCE
-    // through the real frontier loop — largeG's round-2 frontier is
-    // ~2.3M candidate rows, the broadcast→shuffle transition at real
-    // scale.
-    "q_bfs_mediumg_scale" -> ((s, _) => {
-      val (n, e) = graft.sources.SyntheticGraphs.MediumG
-      val edges = graft.sources.SyntheticGraphs.referenceScale(s, n, e)
-      Bfs.run(GraphOps.symmetrize(edges), source = 0L)
-        .groupBy("dist")
-        .agg(count(lit(1)).as("n_vertices"), sum(col("id")).as("sum_id"))
-        
-    }),
-    "q_bfs_largeg_scale" -> ((s, _) => {
-      val (n, e) = graft.sources.SyntheticGraphs.LargeG
-      val edges = graft.sources.SyntheticGraphs.referenceScale(s, n, e)
-      Bfs.run(GraphOps.symmetrize(edges), source = 0L)
-        .groupBy("dist")
-        .agg(count(lit(1)).as("n_vertices"), sum(col("id")).as("sum_id"))
-        
-    }),
-
-    // Path-carrying BFS at REAL scale: the copurchase graph (16,743
-    // vertices at sf0.01 vs the golden query's 13), hop-bounded at 6 so
-    // the array-payload-through-shuffle cost that Bfs.Config.withPaths
-    // warns about is exercised with real frontier sizes AND the oracle
-    // stays expressible (one min-merge layer per hop, lex-min path via
-    // DuckDB's lexicographic min over lists — the same argmin the
-    // engine's min(struct(dist, path)) computes). Path rendered as a
-    // string: arrays stay out of the driver hash (SURVEY §7.4).
-    "q_bfs_paths_copurchase" -> ((s, dir) => {
-      Bfs.run(copurchaseEdges(s, dir), source = 2L,
-          Bfs.Config(maxIterations = BfsPathsCopurchaseHops,
-            withPaths = true))
-        .select(col("id"), col("dist"),
-          array_join(col("path"), "->").as("path"))
-        
-    }),
-
-    // Path-carrying BFS at the reference's PUBLISHED mediumG scale
-    // (77,360 vertices / 905,468 edges — the one reference output that
-    // was r16-validated only up to the 16,743-vertex copurchase graph;
-    // the reference computes paths for EVERY vertex at every scale it
-    // benchmarked, BFS_map_reduce.py:31-35). Same synthetic graph as
-    // q_bfs_mediumg_scale, ecc(0) ≤ 4 by construction, so
-    // MediumGPathLayers = 5 rounds is provably past the fixed point —
-    // the oracle unrolls 5 path-carrying min-merge layers and DuckDB's
-    // lexicographic list-min replays min(struct(dist, path)). This
-    // prices the array payload through the ~2.3M-row published-scale
-    // frontier shuffle, not just the histogram.
-    "q_bfs_paths_mediumg" -> ((s, _) => {
-      val (n, e) = graft.sources.SyntheticGraphs.MediumG
-      val edges = graft.sources.SyntheticGraphs.referenceScale(s, n, e)
-      Bfs.run(GraphOps.symmetrize(edges), source = 0L,
-          Bfs.Config(maxIterations = MediumGPathLayers, withPaths = true))
-        .select(col("id"), col("dist"),
-          array_join(col("path"), "->").as("path"))
-        
-    }),
-
-    // Weighted SSSP (Bellman-Ford BSP — min-plus on the BFS core) on
-    // the reference's tinyG with deterministic per-edge weights
-    // (portable rolling hash of the canonical endpoint pair, so both
-    // directions share the weight and the oracle replays it). The
-    // oracle enumerates simple paths by recursive CTE and takes the
-    // min — hash-exact like q_bfs_paths_golden.
-    "q_sssp_golden" -> ((s, _) => {
-      import s.implicits._
-      val edges = GraphOps.symmetrize(TinyG.toDF("src", "dst"))
-        .withColumn("w", lit(1L) + pmod(TextAnalysis.rollingHash(
-          concat_ws("_", least(col("src"), col("dst")).cast("string"),
-            greatest(col("src"), col("dst")).cast("string"))), lit(9L)))
-      Sssp.run(edges, source = 0L)
-    }),
-
-    // Weighted SSSP at REAL scale: the co-purchase graph (the same
-    // graph the flagship BFS runs), deterministic rolling-hash weights
-    // (the q_sssp_golden recipe), hop-bounded at 6 so the oracle is
-    // expressible as 6 unrolled relaxation layers (the q_pagerank_2iter
-    // trick) — a hash-exact face for the iterative operator whose
-    // per-round stderr lines carry real frontier sizes.
-    "q_sssp_copurchase" -> ((s, dir) => {
-      val edges = copurchaseEdges(s, dir)
-        .withColumn("w", lit(1L) + pmod(TextAnalysis.rollingHash(
-          concat_ws("_", least(col("src"), col("dst")).cast("string"),
-            greatest(col("src"), col("dst")).cast("string"))), lit(9L)))
-      Sssp.runBounded(edges, source = 2L, hops = SsspCopurchaseHops)
-        
-    }),
-
-    // Deterministic random walks on the copurchase graph — the
-    // walk-corpus generator for graph embeddings; hash-driven edge
-    // choice makes a sampling operator hash-exact under the oracle.
-    "q_random_walks" -> ((s, dir) => {
-      RandomWalk.walks(copurchaseEdges(s, dir),
-          walksPerVertex = RandomWalksPerVertex, steps = RandomWalkSteps)
-        
-    }),
-
-    // Skip-gram (center, context) pair counts from the same walk
-    // corpus — the word2vec/DeepWalk training-example step; window 2
-    // over every path position, one exchange for the pair rollup.
-    "q_walk_pairs" -> ((s, dir) => {
-      RandomWalk.skipGramPairs(
-          RandomWalk.walks(copurchaseEdges(s, dir),
-            walksPerVertex = RandomWalksPerVertex, steps = RandomWalkSteps),
-          window = 2)
-        
-    }),
-
-    // Deterministic negative sampling on the same graph — the
-    // contrastive counterpart of q_random_walks (walk pairs are the
-    // positives, hash-best non-neighbors the negatives).
-    "q_negative_samples" -> ((s, dir) => {
-      RandomWalk.negativeSamples(copurchaseEdges(s, dir), k = 5,
-          candidatePool = 32)
-        
-    }),
-
-    // Community detection: synchronous label propagation, 2 fixed
-    // rounds on the copurchase graph. Deterministic by construction
-    // (neighbor-majority with min-label tie-break via one
-    // argmin-struct semilattice aggregate) — hash-exact against the
-    // unrolled oracle.
-    "q_label_prop" -> ((s, dir) => {
-      LabelPropagation.run(copurchaseEdges(s, dir), rounds = 2)
-        
-    }),
-
-    // Louvain phase-1 move steps: two synchronous modularity-ascent
-    // sweeps from the singleton assignment — the ASCENT half of the
-    // community family (q_label_prop spreads labels by frequency,
-    // q_modularity evaluates an assignment, this one IMPROVES it).
-    // Integer-exact gain (score = 2m·k_vc − k_v·Σtot', the 2m²-scaled
-    // ΔQ) with ties to the smallest community id, so the unrolled
-    // oracle sweeps replay the argmax bit-exactly.
-    "q_louvain_move" -> ((s, dir) => {
-      Louvain.moveSteps(copurchaseEdges(s, dir), steps = 2)
-    }),
-
-    // Two-level Louvain, FUSED face (r20, VERDICT r19 #3): phase-1
-    // move steps, ONE community contraction (intra mass → self-loops,
-    // inter counts → weights), the SAME integer-exact synchronous
-    // core on the contracted weighted graph — AND the per-level
-    // Newman-Q evaluation that justifies the alternation. The r19
-    // registry served these as two faces (q_louvain_coarse: the
-    // per-vertex assignment; q_louvain_gain: the eval rows), each
-    // re-running the identical pipeline; twoLevelFull runs phase 1 +
-    // contraction + phase 2 ONCE and emits both row kinds (disjoint
-    // by construction — NULL eval columns on assignment rows and
-    // vice versa), both prior hash gates riding one hash. Oracle:
-    // the former faces' shared CTE chains with a schema-aligned
-    // UNION ALL.
-    "q_louvain_twolevel" -> ((s, dir) => {
-      Louvain.twoLevelFull(copurchaseEdges(s, dir), steps1 = 2,
-        steps2 = 2)
-    }),
-
-    // RESTORED r21 (VERDICT r20 item 1): the interrupted r20 BUILD
-    // phase fused coarse+gain into q_louvain_twolevel and dropped
-    // these two declared names — but the driver's contract is
-    // per-declared-query: anything measured must stay measurable.
-    // Each face runs the shared core ONCE via its dedicated entry
-    // point (twoLevel skips the eval rows, twoLevelGain skips the
-    // |V| compose join), so neither pays the fused face's union.
-    // Oracle SQL = the r19 text, unchanged.
-    "q_louvain_coarse" -> ((s, dir) => {
-      Louvain.twoLevel(copurchaseEdges(s, dir), steps1 = 2, steps2 = 2)
-    }),
-
-    "q_louvain_gain" -> ((s, dir) => {
-      Louvain.twoLevelGain(copurchaseEdges(s, dir), steps1 = 2,
-        steps2 = 2)
-    }),
-
-    // The WIDE-gain move face (r20, VERDICT r19 #2): the parity-gated
-    // sweep on the copurchase graph with every edge carrying weight
-    // 1e7 — total weight 2m ≈ 1.2e13 at sf0.1, an order of magnitude
-    // past the Long scoring ceiling the r19 engine require-refused.
-    // The decimal(38,0) gain path must land the BIT-IDENTICAL
-    // assignment the unit-weight face produces (score scales by c²
-    // under uniform weight scaling, so every argmax and every tie is
-    // invariant) — the oracle is literally q_louvain_move_gated's
-    // SQL, which is the whole point: a >1.5e9-weight graph now runs,
-    // exactly.
-    "q_louvain_move_wide" -> ((s, dir) => {
-      Louvain.moveStepsWeighted(
-        Louvain.simpleWeighted(copurchaseEdges(s, dir))
-          .withColumn("w", lit(10000000L)),
-        steps = 2, partialMoves = true)
-    }),
-
-    // Resolution-parameterized Louvain (r20, VERDICT r19 #7,
-    // Reichardt–Bornholdt): the gated sweep at γ = 3/2 — the gain
-    // becomes γden·2m·k_vc − γnum·k_v·Σtot', integer-exact for any
-    // rational γ (both terms scaled by γden), so the oracle replays
-    // the γ-scaled argmax bit-for-bit. γ > 1 penalizes degree mass
-    // harder and yields FINER communities than the γ = 1 face over
-    // the same two sweeps.
-    "q_louvain_move_gamma" -> ((s, dir) => {
-      Louvain.moveSteps(copurchaseEdges(s, dir), steps = 2,
-        partialMoves = true, gammaNum = 3L, gammaDen = 2L)
-    }),
-
-    // The RECOMMENDED public move-step face (r19, VERDICT r18 #3):
-    // the same synchronous integer-exact sweep with the parity gate
-    // ON — in step r only (id + r)-even vertices move, so movers
-    // target stationary communities and merges are real (the ungated
-    // q_louvain_move primitive swap-oscillates BELOW the singleton
-    // baseline; scaladoc caveat at Louvain.moveSteps). Oracle: the
-    // shared phase-1 recurrence with the same parity CASE the
-    // phase-2 chain replays.
-    "q_louvain_move_gated" -> ((s, dir) => {
-      Louvain.moveSteps(copurchaseEdges(s, dir), steps = 2,
-        partialMoves = true)
-    }),
-
-    // Convergence-driven multi-level Louvain, FUSED face (r20,
-    // VERDICT r19 #3; the operator: r19, Blondel 2008's real
-    // alternation): move-steps → Q-eval → coarsen, looping while each
-    // level's modularity gain clears the threshold and the
-    // contraction still shrinks, bounded at 3 levels so the oracle
-    // unrolls. The r19 registry served the per-level ascent
-    // trajectory and the flattened final assignment as two faces
-    // that EACH ran the identical loop (runMultilevel has always
-    // computed both in one pass); untilConvergedFull runs it once
-    // and emits both row kinds — trajectory rows (level,
-    // n_communities, q_micro — the stopping rule's own inputs) and
-    // per-vertex rows (id, comm — the user surface, stop depth
-    // included), both prior hash gates riding one hash. Oracle: the
-    // unrolled level chains with the emission conditions as WHERE
-    // clauses, trajectory and flatten arms schema-aligned UNION ALL.
-    "q_louvain_multilevel" -> ((s, dir) => {
-      Louvain.untilConvergedFull(copurchaseEdges(s, dir),
-        stepsPerLevel = 2, maxLevels = 3, minGainMicro = 1000L)
-
-    }),
-
-    // RESTORED r21 (VERDICT r20 item 1): the flattened per-vertex
-    // assignment face the r20 BUILD fusion folded into
-    // q_louvain_multilevel. untilConvergedAssign runs the shared
-    // 3-level loop once and emits only the assignment rows; oracle
-    // SQL = the r19 text, unchanged.
-    "q_louvain_multilevel_assign" -> ((s, dir) => {
-      Louvain.untilConvergedAssign(copurchaseEdges(s, dir),
-        stepsPerLevel = 2, maxLevels = 3, minGainMicro = 1000L)
-    }),
-
-    // Modularity of the 2-round LP communities — the community-
-    // detection EVAL face (recall@k's role for the ANN family).
-    // Per-community contributions stay RAW BIGINT numerators; the
-    // global Q takes one sign-safe truncating micro division.
-    "q_modularity" -> ((s, dir) => {
-      val e = copurchaseEdges(s, dir)
-      LabelPropagation.modularity(e, LabelPropagation.run(e, rounds = 2))
-        
-    }),
-
-    // k-core by bounded peeling: 4 peel rounds at k=6 on the
-    // copurchase graph (k chosen so the cascade is real: round sizes
-    // 523→517→505→504 vertices at sf0.001 — each round removes
-    // vertices whose degree the PREVIOUS round's deletions dropped
-    // below k). Fixed round count = unrolled hash-exact oracle; the
-    // run-to-convergence face is KCore.peel, spec-checked.
-    // The TRUE k-core — KCore.peel run to the driver-detected fixed
-    // point (previously spec-only; q_kcore exercises the bounded face).
-    // Hash-exact via bounded equivalence: peeling is monotone and
-    // idempotent at the fixpoint, so the oracle unrolls
-    // KCoreConvergedLayers ≥ the measured convergence depth and the
-    // two sides meet at the same fixed point. Puts the data-dependent
-    // convergence loop — the driver probe, the per-round localCheckpoint
-    // cadence, the monotone edge shrink — under the driver's eye like
-    // BFS/CC already are.
-    "q_kcore_converged" -> ((s, dir) => {
-      KCore.peel(copurchaseEdges(s, dir), k = KCoreK)
-        
-    }),
-
-    "q_kcore" -> ((s, dir) => {
-      KCore.peelBounded(copurchaseEdges(s, dir), k = KCoreK,
-          rounds = KCoreRounds)
-        
-    }),
-
-    // k-truss to the fixed point (KTruss.truss): the triangle-backed
-    // refinement of the k-core, on the part co-occurrence graph
-    // (the copurchase graph is bipartite — zero triangles by parity —
-    // so this runs where q_triangle_count does, subset to every 5th
-    // order so the per-round support pass stays proportionate).
-    // Hash-exact via the kcore bounded-equivalence trick: support
-    // peeling is monotone (deleting edges only lowers remaining
-    // supports) and idempotent at the fixpoint, so the oracle unrolls
-    // KTrussLayers ≥ the measured convergence depth (5 / 4 / 2 at
-    // sf0.001 / 0.01 / 0.1) and both sides meet at the same truss,
-    // reported with each edge's support inside it.
-    "q_ktruss" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_orderkey") % 5 === 0)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      val edges = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-      KTruss.truss(edges, k = KTrussK)
-    }),
-
-    // Fixed-2-iteration PageRank twin of q_pagerank: same engine code
-    // (PageRank.run), bounded iterations so the oracle is expressible
-    // as non-recursive SQL — converts the pagerank family from a
-    // rows-only check to a hash-matched one. Exactness: contributions
-    // are fixed-point longs (integer sum is order-free) and every
-    // double op (1.0/n, rank/outdeg*1e15 with truncation, base +
-    // damping*csum/1e15) is replayed in the same IEEE order by the
-    // oracle.
-    "q_pagerank_2iter" -> ((s, dir) => {
-      PageRank.run(copurchaseEdges(s, dir), iterations = 2)
-    }),
-
-    // Benchmark decontamination: training docs sharing any token
-    // 4-gram (compared by rolling hash) with the held-out eval slice
-    // (doc_id % 20 == 0). The eval-gram table broadcasts, so the
-    // corpus-side gram stream never shuffles before the per-doc count.
-    "q_decontaminate" -> ((s, dir) => {
-      CorpusOps.decontaminate(t(s, dir, "documents"), "doc_id", "text")
-        
-    }),
-
-    // Gopher-style repetition statistics: bigram multiplicities and
-    // duplicate-token mass per document — the repetition-filter inputs
-    // (docs with <2 tokens have no bigrams and are omitted).
-    "q_repetition_stats" -> ((s, dir) => {
-      CorpusOps.repetitionStats(t(s, dir, "documents"), "doc_id", "text")
-        
-    }),
-
-    // C4-style domain filtering: per-source quality aggregation and a
-    // source-level keep decision. One partial-aggregated exchange on
-    // source (3-long partials — hot domains cost #sources, not #docs);
-    // mean quality summed in fixed-point longs for order-free
-    // exactness.
-    "q_source_curation" -> ((s, dir) => {
-      CorpusOps.sourceCuration(t(s, dir, "documents"), "text")
-        
-    }),
-
-    // Deterministic hash-stratified sampling: per-language keep rates
-    // on a portable rolling hash of the id — reproducible across
-    // engines and stable under corpus growth (pure per-row filter).
-    "q_stratified_sample" -> ((s, dir) => {
-      CorpusOps.stratifiedSample(t(s, dir, "documents"), "doc_id", "lang",
-          SampleRates.toMap, SampleDefaultPct)
-        .select(col("doc_id"), col("lang"), col("sampled"))
-        
-    }),
-
-    // Fixed-SIZE deterministic sampling (bottom-k by hash priority):
-    // exactly 5 docs per language, a pure function of row identity —
-    // the bounded TopKBySim aggregate (|strata|·k exchange rows at
-    // any corpus size), where stratifiedSample's Bernoulli rate gives
-    // a variable-size sample.
-    "q_priority_sample" -> ((s, dir) => {
-      CorpusOps.prioritySample(t(s, dir, "documents"), "doc_id", "lang", 5)
-        .select(col("stratum").as("lang"), col("rank"),
-          col("id").as("doc_id"), col("priority"))
-        
-    }),
-
-    // Per-ROW-weight priority sample: 10 docs with odds monotone in
-    // character length — key = (hash · 2^20) div weight, the
-    // integer-quantized Efraimidis-Spirakis race (see
-    // CorpusOps.weightedPrioritySample).
-    "q_weighted_sample" -> ((s, dir) => {
-      CorpusOps.weightedPrioritySample(
-          t(s, dir, "documents")
-            .withColumn("wlen", length(col("text")).cast("long")),
-          "doc_id", "wlen", 10)
-        .withColumnRenamed("id", "doc_id")
-        
-    }),
-
-    // Mergeable histogram-sketch quantiles (the quantile member of
-    // the deterministic sketch family): 512-bucket integer histogram
-    // per returnflag over price cents; p50/p95 = first bucket whose
-    // running count reaches the rank; the one-bucket-width error
-    // bound require-enforced in-face against the exact discrete
-    // quantile, and BOTH est and exact hash-gated.
-    "q_hist_quantiles" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_returnflag"),
-          // double cents -> long by TRUNCATION (positive, so == floor;
-          // the oracle replays with floor() — DuckDB's bare
-          // double->bigint CAST rounds, Spark's truncates)
-          (col("l_extendedprice") * 100).cast("long").as("cents"))
-      val sk = Profile.histogramQuantiles(li, "cents", "l_returnflag")
-      // exact discrete quantiles (value at rank ⌈p·n/100⌉) — the
-      // holistic baseline; deliberately the full-sort shape the
-      // sketch replaces, run here to CHECK the sketch's bound
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("l_returnflag")).orderBy(col("cents"))
-      val exact = li.withColumn("rn", row_number().over(w))
-        .join(sk.select(col("l_returnflag"), col("n")), Seq("l_returnflag"))
-        .groupBy(col("l_returnflag"))
-        .agg(min(when(col("rn") * 100L >= col("n") * 50L, col("cents")))
-            .as("d50"),
-          min(when(col("rn") * 100L >= col("n") * 95L, col("cents")))
-            .as("d95"))
-      sk.join(exact, Seq("l_returnflag"))
-        .select(col("l_returnflag"), col("n"), col("lo"), col("hi"),
-          col("width"), col("q50"), col("q95"), col("d50"), col("d95"),
-          (abs(col("q50") - col("d50")) < col("width")).as("ok50"),
-          (abs(col("q95") - col("d95")) < col("width")).as("ok95"))
-        
-    }),
-
-    // Market-basket association rules over order baskets:
-    // support/confidence/lift in exact truncating ppm integers
-    // (quantize-the-metric, like the OLS slope); pair generation
-    // self-joins co-partitioned on basket, bounded by the
-    // maxBasketSize all-pairs guard; minSupport = the apriori prune.
-    "q_assoc_rules" -> ((s, dir) => {
-      MarketBasket.assocRules(t(s, dir, "lineitem"),
-          "l_orderkey", "l_partkey")
-        
-    }),
-
-    // Robust per-group anomaly detection: lower-median + MAD over
-    // value cents via the VALUE-FREQUENCY selection (the exchange
-    // carries distinct cents per group, never the corpus rows — the
-    // scalable exact order statistic); flags dev > 3·MAD, robust z
-    // in integer milli-MADs.
-    "q_outlier_mad" -> ((s, dir) => {
-      val ev = EventStream.eventsTable(s, dir)
-        .select(col("event_type"), col("event_id"),
-          // double cents -> long by FLOOR, matching the oracle's
-          // floor(value*100) for negative values too (truncation
-          // would round toward zero and diverge below 0)
-          floor(col("value") * 100).cast("long").as("cents"))
-      RobustStats.madOutliers(ev, "event_type", "event_id", "cents", k = 3)
-        .select(col("g").as("event_type"), col("id").as("event_id"),
-          col("v").as("cents"), col("med"), col("mad"), col("dev"),
-          col("rz_milli"))
-        
-    }),
-
-    // Corpus document frequency (the IDF input): per-token doc counts
-    // and exact corpus fraction, one distinct-token explode + hash agg.
-    "q_doc_frequency" -> ((s, dir) => {
-      CorpusOps.docFrequency(t(s, dir, "documents"), "doc_id", "text")
-        
-    }),
-
-    // Top-3 TF-IDF terms per document (keyword extraction): one
-    // tokenize stream feeds both the tf and document-frequency
-    // aggregations; ratio idf keeps the oracle bit-exact (ln is
-    // monotone, so the ranking is the classical one).
-    "q_tfidf_top_terms" -> ((s, dir) => {
-      CorpusOps.tfidfTopTerms(t(s, dir, "documents"), "doc_id", "text")
-        
-    }),
-
-    // Inverted index with bounded posting lists: one exchange on term,
-    // postings capped INSIDE the aggregation buffer (TopKBySim keyed
-    // by -doc_id), hot terms keep only their count.
-    "q_inverted_index" -> ((s, dir) => {
-      Indexing.invertedIndex(t(s, dir, "documents"), "doc_id", "text",
-          dfCap = 40)
-        
-    }),
-
-    // Deterministic training shuffle: salted-hash sharding + stable
-    // intra-shard order — reproducible across runs and engines, and
-    // the window partitions on batch_id so no single-task global sort.
-    "q_corpus_shuffle" -> ((s, dir) => {
-      Indexing.corpusShuffle(t(s, dir, "documents"), "doc_id", nBatches = 8)
-        
-    }),
-
-    // N-gram familiarity: mean corpus df of each doc's distinct
-    // bigrams — the LM-free fluency/typicality quality signal.
-    "q_ngram_familiarity" -> ((s, dir) => {
-      Indexing.ngramFamiliarity(t(s, dir, "documents"), "doc_id", "text")
-        
-    }),
-
-    // BPE merge-candidate counts: adjacent char pairs weighted by
-    // word frequency, computed over the vocabulary table so every
-    // tokenizer-training iteration costs |vocab|, not |corpus|.
-    "q_bpe_pair_counts" -> ((s, dir) => {
-      Indexing.bpePairCounts(t(s, dir, "documents"), "text", topK = 50)
-    }),
-
-    // Full BPE merge learning: 8 iterations of count → argmax →
-    // greedy merge over the word-frequency vocabulary (corpus scanned
-    // once; each round costs |vocab|). The oracle replays the whole
-    // loop with a generated 8-stage CTE chain.
-    // Batched BPE learning (r19, VERDICT r18 #6): up to 8 mutually
-    // non-interacting merges per pass (greedy in count order over the
-    // top-64 candidates), 4 passes → 32 merges in 4 driver round
-    // trips — the pass-bounded loop shape a 32k-merge production
-    // tokenizer needs; the one-merge q_bpe_learn face keeps the
-    // classic recurrence contract.
-    "q_bpe_learn_batched" -> ((s, dir) => {
-      Indexing.bpeLearnBatched(t(s, dir, "documents"), "text",
-        passes = 4, batchK = 8, window = 64)
-    }),
-
-    // DEEP batched BPE (r20, VERDICT r19 #4): 256 merges in 4 driver
-    // round trips — token-sequence symbols (wordpiece-style phrase
-    // units, pair space |vocab|² instead of the char alphabet the
-    // corpus saturates at ~90 merges) and the MINIMAL non-interaction
-    // batch rule (shared lefts/rights safe; only chains and
-    // merged-unit collisions excluded), which lifts per-pass yield
-    // from ~|symbols|/2 to the full batchK. The oracle replays each
-    // pass's greedy selection recursively and applies the whole batch
-    // in ONE simultaneous fold — equal to the engine's sequential
-    // sweep exactly because the rule makes batch members
-    // non-interacting.
-    "q_bpe_learn_deep" -> ((s, dir) => {
-      Indexing.bpeLearnPhrases(t(s, dir, "documents"), "text",
-        passes = 4, batchK = 64, window = 1024)
-    }),
-
-    // The INCREMENTAL-maintenance twin of q_bpe_learn_deep (r20 —
-    // VERDICT r19 "What's missing #2"'s named remedy): pair counts
-    // live in a maintained stateful frame seeded by ONE corpus
-    // exchange; each pass updates it with a delta built from only the
-    // rows a merge touched and selects candidates from the table
-    // directly — per-pass cost scales with the touched fraction, the
-    // property that matters when depth pushes passes into the
-    // hundreds. Byte-identical merges by construction, so the SAME
-    // recursive oracle gates both paths independently.
-    "q_bpe_learn_incr" -> ((s, dir) => {
-      Indexing.bpeLearnPhrasesIncremental(t(s, dir, "documents"),
-        "text", passes = 4, batchK = 64, window = 1024)
-    }),
-
-    // The batched table SERVING (its q_bpe_encode): encode the corpus
-    // with all 32 batch-learned merges in rank order and roll up the
-    // top-30 token distribution — proves the pass-bounded learner's
-    // artifact drops into the serving path unchanged (a 4x deeper
-    // vocabulary than the classic 8-merge face at the same number of
-    // driver round trips).
-    "q_bpe_encode_batched" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val merges = Indexing.bpeLearnBatched(docs, "text", passes = 4,
-          batchK = 8, window = 64)
-        .orderBy("rank")
-        .select("left", "right", "merged")
-        .collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2)))
-        .toSeq
-      Indexing.bpeEncode(docs, "text", merges, topK = 30)
-    }),
-
-    "q_bpe_learn" -> ((s, dir) => {
-      Indexing.bpeLearn(t(s, dir, "documents"), "text", numMerges = 8)
-        
-    }),
-
-    // Serving-time BPE: learn 8 merges, then encode the corpus with
-    // them and emit the top-30 encoded-token distribution — the
-    // learn → apply handoff a tokenizer deployment runs.
-    "q_bpe_encode" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val merges = Indexing.bpeLearn(docs, "text", numMerges = 8)
-        .orderBy("rank")
-        .select("left", "right", "merged")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
-        .toSeq
-      Indexing.bpeEncode(docs, "text", merges, topK = 30)
-    }),
-
-    // Tokenizer fertility per language — the BPE-family EVAL face:
-    // encoded symbols per word under the learned 8-merge table,
-    // split by language id. One corpus scan; each distinct word
-    // encoded once and met back on the vocabulary key.
-    "q_bpe_fertility" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val merges = Indexing.bpeLearn(docs, "text", numMerges = 8)
-        .orderBy("rank")
-        .select("left", "right", "merged")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
-        .toSeq
-      Indexing.bpeFertility(docs, "doc_id", "text", merges)
-        
-    }),
-
-    // CDC-style snapshot upsert: current corpus (v1) merged with a
-    // deterministic update stream — re-processed docs (v2), takedown
-    // tombstones (v3, dropped post-merge), and brand-new ids. ONE
-    // exchange on doc_id; provenance breaks version ties toward the
-    // update stream.
-    "q_snapshot_upsert" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("source"))
-      val current = d.withColumn("version", lit(1L))
-        .withColumn("deleted", lit(false))
-      val reproc = d.filter(col("doc_id") % 5 === 0)
-        .withColumn("lang", lit("und"))
-        .withColumn("version", lit(2L))
-        .withColumn("deleted", lit(false))
-      val takedown = d.filter(col("doc_id") % 17 === 0)
-        .withColumn("version", lit(3L))
-        .withColumn("deleted", lit(true))
-      val fresh = d.filter(col("doc_id") % 13 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000L)
-        .withColumn("version", lit(1L))
-        .withColumn("deleted", lit(false))
-      Snapshot.upsert(current,
-          reproc.unionByName(takedown).unionByName(fresh),
-          "doc_id", "version", deletedCol = "deleted")
-        
-    }),
-
-    // Byte-rate-limited backlog drain (backpressure): the CDC merge
-    // under maxBytesPerTrigger over a 6-file backlog — >= 2 batches
-    // (cap honored), < 6 batches (cap aggregates bytes, not files),
-    // contiguous ids, per-batch row ceiling, exact partition of the
-    // log; all require-enforced. Final state shares the upsert oracle.
-    "q_streaming_backpressure" -> ((s, dir) =>
-      graft.streaming.StreamHarness.backpressureFace(s, dir)),
-
-    // Lakehouse time-travel read over the same version log:
-    // materialized state dirs v2/v3 (immutable merge history), the
-    // HISTORICAL v2 dir re-read after the final merge and
-    // require-gated bit-equal against Snapshot.asOfVersion's log
-    // replay; output = both reads tagged as_of (the v3 tombstones
-    // visible at as_of=2, erased at as_of=3).
-    "q_snapshot_asof" -> ((s, dir) =>
-      Snapshot.timeTravelReadFace(s, dir)),
-
-    // SCD2 history over the same version log as q_snapshot_upsert:
-    // each version becomes an interval row valid until the next
-    // version of the id; tombstones stay in history (time travel must
-    // see the takedown). One id-partitioned exchange; the dedup
-    // row_number and both lags ride a single window sort.
-    "q_scd2_history" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("source"))
-      val log = d.withColumn("version", lit(1L))
-        .withColumn("deleted", lit(false))
-        .unionByName(d.filter(col("doc_id") % 5 === 0)
-          .withColumn("lang", lit("und"))
-          .withColumn("version", lit(2L))
-          .withColumn("deleted", lit(false)))
-        .unionByName(d.filter(col("doc_id") % 17 === 0)
-          .withColumn("version", lit(3L))
-          .withColumn("deleted", lit(true)))
-      Snapshot.scd2History(log, "doc_id", "version")
-        
-    }),
-
-    // Point-in-time lookup against the SAME SCD2 history (r12 verdict
-    // item 3) — the `valid_from <= t < valid_to` probe the history
-    // table exists for: every doc probed at t = 1, 2, 3, so the probe
-    // set crosses version boundaries (t=1 pre-reprocess, t=2 post, t=3
-    // lands on the %17 tombstones with deleted=true). ONE id-keyed
-    // equi-join; the interval predicate is a residual filter.
-    "q_scd2_asof" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("source"))
-      val log = d.withColumn("version", lit(1L))
-        .withColumn("deleted", lit(false))
-        .unionByName(d.filter(col("doc_id") % 5 === 0)
-          .withColumn("lang", lit("und"))
-          .withColumn("version", lit(2L))
-          .withColumn("deleted", lit(false)))
-        .unionByName(d.filter(col("doc_id") % 17 === 0)
-          .withColumn("version", lit(3L))
-          .withColumn("deleted", lit(true)))
-      val hist = Snapshot.scd2History(log, "doc_id", "version")
-      val probes = d.select(col("doc_id"),
-        explode(array(lit(1L), lit(2L), lit(3L))).as("t"))
-      Snapshot.asOf(hist, probes, "doc_id", "t")
-        .select(col("doc_id"), col("t"), col("lang"), col("source"),
-          col("version"), col("deleted"))
-        
-    }),
-
-    // Change-data feed between the v1 snapshot and the upserted
-    // corpus (same log as q_snapshot_upsert): one row per id that was
-    // added / removed / changed — |delta| output, one full-outer
-    // exchange on the id.
-    "q_snapshot_diff" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("source"))
-      val current = d.withColumn("version", lit(1L))
-        .withColumn("deleted", lit(false))
-      val reproc = d.filter(col("doc_id") % 5 === 0)
-        .withColumn("lang", lit("und"))
-        .withColumn("version", lit(2L))
-        .withColumn("deleted", lit(false))
-      val takedown = d.filter(col("doc_id") % 17 === 0)
-        .withColumn("version", lit(3L))
-        .withColumn("deleted", lit(true))
-      val fresh = d.filter(col("doc_id") % 13 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000L)
-        .withColumn("version", lit(1L))
-        .withColumn("deleted", lit(false))
-      val after = Snapshot.upsert(current,
-        reproc.unionByName(takedown).unionByName(fresh),
-        "doc_id", "version", deletedCol = "deleted")
-      Snapshot.diff(current.drop("deleted"), after, "doc_id")
-        .select(col("doc_id"), col("change"),
-          col("before.lang").as("lang_before"),
-          col("after.lang").as("lang_after"),
-          col("after.version").as("version_after"))
-        
-    }),
-
-    // Per-vertex triangle counts + local clustering coefficient over
-    // the part co-occurrence graph — same oriented wedge machinery as
-    // q_triangle_count, keeping the intersection elements so each
-    // corner gets credited.
-    "q_clustering_coeff" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      val edges = li.as("a").join(li.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-      GraphOps.clusteringCoefficients(edges)
-    }),
-
-    // Sparse lexical retrieval: top-5 cosine-similar documents per
-    // document through the df-capped posting self-join (all-integer
-    // dot/norms — bit-exact cosine).
-    "q_sparse_cosine_topk" -> ((s, dir) => {
-      Indexing.sparseCosineTopK(t(s, dir, "documents"), "doc_id", "text",
-          dfMax = 50, k = 5)
-        
-    }),
-
-    // corpus_prep extended with the CorpusOps stages — the full
-    // Gopher-style funnel end-to-end: language verification, exact +
-    // transitive near-dup dedup, eval-slice exclusion + benchmark
-    // decontamination, repetition filter, quality floor, deterministic
-    // hash split, per-(split, lang) stats. The funnel itself lives in
-    // CorpusOps.corpusPrepKept, which computes every text-derived
-    // input in ONE pinned projection shared by all five stages.
-    "q_corpus_prep_v2" -> ((s, dir) => {
-      val kept = CorpusOps.corpusPrepKept(t(s, dir, "documents"),
-        "doc_id", "text", "lang")
-      val bucket = pmod(TextAnalysis.rollingHash(col("doc_id").cast("string")),
-        lit(10))
-      kept.withColumn("split",
-          when(bucket < 8, "train").when(bucket === 8, "val")
-            .otherwise("test"))
-        .groupBy(col("split"), col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("sum_tokens"))
-        
-    }),
-
-    // v2's funnel extended with the post-curation operators — the
-    // full training-data pipeline end-to-end: curate (v2's five
-    // stages), strip boilerplate spans, chunk into context windows.
-    // All text derivation still ONE pinned projection (now carrying
-    // the token arrays); spans/chunks computed for KEPT docs only
-    // (dedup first, so planted near-dup pairs don't inflate span
-    // doc-frequency). Per (split, lang): doc/token totals, boilerplate
-    // survival, chunk count and window-level redundancy (distinct
-    // chunk hashes).
-    "q_corpus_prep_v3" -> ((s, dir) => {
-      val v3 = CorpusOps.corpusPrepV3(t(s, dir, "documents"),
-        "doc_id", "text", "lang")
-      val bucket = pmod(TextAnalysis.rollingHash(col("doc_id").cast("string")),
-        lit(10))
-      // ONE aggregation over the exploded chunk rows: every kept doc
-      // has >= 1 chunk, so gating the doc-level sums on pos == 0
-      // counts each doc exactly once — no second consumption of the
-      // pipeline and no doc-agg ⋈ chunk-agg join
-      v3.withColumn("split",
-          when(bucket < 8, "train").when(bucket === 8, "val")
-            .otherwise("test"))
-        .select(col("split"), col("lang"), col("n_tokens"), col("n_spans"),
-          col("n_boiler_spans"), col("n_tokens_kept"),
-          posexplode(col("chunks")).as(Seq("pos", "chunk_hash")))
-        .groupBy(col("split"), col("lang"))
-        .agg(count(when(col("pos") === 0, 1)).as("n_docs"),
-          sum(when(col("pos") === 0, col("n_tokens"))).as("sum_tokens"),
-          sum(when(col("pos") === 0, col("n_spans"))).as("n_spans"),
-          sum(when(col("pos") === 0, col("n_boiler_spans")))
-            .as("n_boiler_spans"),
-          sum(when(col("pos") === 0, col("n_tokens_kept")))
-            .as("sum_tokens_kept"),
-          count(lit(1)).as("n_chunks"),
-          count_distinct(col("chunk_hash")).as("n_distinct_chunks"))
-        
-    }),
-
-    // C4/RefinedWeb-style boilerplate-span removal: spans repeating
-    // across >= 3 distinct docs are chrome/footer boilerplate; per-doc
-    // survival stats. Span doc-frequency is the only corpus-wide
-    // exchange; the frequent tail broadcasts back.
-    "q_boilerplate_spans" -> ((s, dir) => {
-      CorpusOps.boilerplateSpans(t(s, dir, "documents"), "doc_id", "text")
-        
-    }),
-
-    // Domain-mixture resampling (DoReMi/Pile-style): derive per-lang
-    // keep rates from target weights + a corpus budget, then sample by
-    // portable hash. Integer-exact rate arithmetic; the corpus itself
-    // never shuffles (tiny count agg + broadcast rates + per-row
-    // filter).
-    "q_lang_mix" -> ((s, dir) => {
-      CorpusOps.mixtureSample(t(s, dir, "documents"), "doc_id", "lang",
-          MixWeights.toMap, MixBudgetPct)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          max(col("target_docs")).as("target_docs"),
-          max(col("keep_bp")).as("keep_bp"),
-          sum(when(col("sampled"), 1L).otherwise(0L)).as("n_sampled"))
-        
-    }),
-
-    // Context-window chunking (the dual of q_pack_stats): docs longer
-    // than the window split into overlapping chunks — pure per-row
-    // posexplode, zero exchanges at any scale.
-    "q_chunk_docs" -> ((s, dir) => {
-      CorpusOps.chunkDocs(t(s, dir, "documents"), "doc_id", "text")
-        
-    }),
-
-    // PII redaction: the synthetic corpus has no PII, so a
-    // deterministic overlay plants id-derived emails/phones (zero, one,
-    // and many matches per row), then the scrub runs as a pure
-    // codegen'd projection. The oracle builds the identical overlay and
-    // replays the same two-stage redaction.
-    "q_pii_redact" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      Redaction.redactPii(
-          d.select(col("doc_id"),
-            Redaction.piiOverlay(col("text"), col("doc_id")).as("text")),
-          "text")
-        .select(col("doc_id"), col("n_emails"), col("n_phones"),
-          length(col("redacted")).cast("long").as("red_len"),
-          md5(col("redacted")).as("red_md5"))
-        
-    }),
-
-    // Right-to-be-forgotten cascade: a deletion-request set (docs with
-    // doc_id % 97 == 3) propagated across the corpus AND its derived
-    // tables — chunks and the embedding index — because deleting from
-    // `documents` alone leaves the content alive downstream. Per table
-    // ONE broadcast-join audit pass (requests are the tiny side; the
-    // corpus never shuffles) plus the anti-join purge whose surviving
-    // count must reconcile with the audit (require inside the op).
-    "q_gdpr_purge" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val req = d.where(col("doc_id") % 97 === 3)
-        .select(col("doc_id").as("req_id"))
-      Redaction.purgeCascade(Seq(
-        ("chunks", CorpusOps.chunkDocs(d, "doc_id", "text"), "doc_id"),
-        ("documents", d, "doc_id"),
-        ("embeddings", t(s, dir, "embeddings"), "vec_id")),
-        req, "req_id")
-    }),
-
-    // k-anonymity suppression release over customer
-    // (nation, segment) quasi-identifiers, k=8: cells under k merge
-    // into one '*' bucket — the releasable aggregate view plus the
-    // re-identification audit in one pass. One QI exchange
-    // (map-side-collapsed); the pinned cell frame feeds both the
-    // safe filter and the bucket rollup.
-    "q_k_anonymity" -> ((s, dir) => {
-      Redaction.kAnonymize(
-          t(s, dir, "customer")
-            .select(col("c_nationkey").cast("string").as("qi_nation"),
-              col("c_mktsegment").as("qi_segment")),
-          Seq("qi_nation", "qi_segment"), k = KAnonymityK)
-        
-    }),
-
-    // ---- Physical-layout faces (TableLayout): the storage-side
-    // levers a 100 TB table lives or dies by, each one actually
-    // exercised (real writes) with its physical property enforced by
-    // a `require` inside the face. ----
-
-    // Bucketed co-located join: customer ⋈ orders both bucketed on
-    // custkey — join + per-customer rollup run with ZERO exchanges
-    // (enforced); only the |segments|-row final rollup shuffles.
-    "q_bucketed_join" -> ((s, dir) => TableLayout.bucketedJoinFace(s, dir)),
-
-    // Hive-partitioned write + directory-pruned read (enforced via
-    // inputFiles: only event_type=purchase directories are scanned).
-    "q_partition_pruned" -> ((s, dir) =>
-      TableLayout.partitionPrunedFace(s, dir)),
-
-    // Small-file compaction round-trip: 48 micro-files → ~8 MB
-    // targets; file count must drop, hash gate proves zero data loss.
-    "q_compaction" -> ((s, dir) => TableLayout.compactionFace(s, dir)),
-
-    // Range-sorted (total-order) layout: documents written
-    // length-sorted into 8 range files; per-file key intervals must
-    // be pairwise DISJOINT (enforced — the precondition for parquet
-    // stat skipping and sort-free consumption), and a point predicate
-    // on the sort key must reach the scan as a pushed filter. Output
-    // is boundary-independent, so the sampled range boundaries can't
-    // perturb the hash.
-    "q_sorted_layout" -> ((s, dir) => TableLayout.sortedLayoutFace(s, dir)),
-
-    // Z-order (Morton) layout: events written z-ordered on
-    // (user_id, hour) — per-file spans must bound BOTH dimensions
-    // while the time-sorted control leaves user_id unbounded
-    // (require-enforced) — multi-dimension data skipping, the
-    // OPTIMIZE ZORDER BY construction.
-    "q_zorder_layout" -> ((s, dir) => TableLayout.zorderLayoutFace(s, dir)),
-
-    // Three-dimension Z-order — the (tenant, time, entity) layout:
-    // events z-ordered on (user_id, hour, value-cents) via the N-D
-    // Morton interleave; per-file spans must bound ALL THREE
-    // dimensions while the time-sorted control bounds only time
-    // (require-enforced for each dimension).
-    "q_zorder3_layout" -> ((s, dir) => TableLayout.zorder3LayoutFace(s, dir)),
-
-    // Runtime bloom-filter join pruning: selective dim filter →
-    // optimizer-injected might_contain probe on the fact side of a
-    // shuffle join (enforced). Result is bit-identical to the plain
-    // join — the bloom only pre-drops rows the equi-join would drop.
-    "q_bloom_join" -> ((s, dir) =>
-      graft.operators.RuntimeFilters.bloomPrunedJoinFace(s, dir)),
-
-    // Dynamic partition pruning: star join where the selective
-    // predicate sits on a dim ATTRIBUTE (tier), so only the runtime
-    // dynamicpruning subquery can prune the partitioned fact scan —
-    // injection require-checked typed, pruning require-checked via
-    // runtime metrics (2/5 partitions read). Production-default confs.
-    "q_dpp_join" -> ((s, dir) =>
-      graft.operators.RuntimeFilters.dppJoinFace(s, dir)),
-
-    // Append-only schema evolution under mergeSchema: old files
-    // surface the evolved column as null; the gate pins the exact
-    // union-schema semantics.
-    "q_schema_evolution" -> ((s, dir) =>
-      TableLayout.schemaEvolutionFace(s, dir)),
-
-    // Data-quality audit: the validation pass every ingest runs —
-    // referential integrity (fact LEFT JOIN unique-keyed dim; exact
-    // orphan counts), range and null rules (bare-table predicates),
-    // and key uniqueness (keyed count). One aggregate pass per rule,
-    // |rules| output rows regardless of data size.
-    "q_dq_audit" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
-      val ords = t(s, dir, "orders")
-      Profile.dqAudit(Seq(
-        ("fk_orders_customer",
-          ords.join(cust.select(col("c_custkey")),
-            col("o_custkey") === col("c_custkey"), "left"),
-          col("c_custkey").isNull),
-        ("fk_lineitem_orders",
-          t(s, dir, "lineitem").select(col("l_orderkey"))
-            .join(ords.select(col("o_orderkey")),
-              col("l_orderkey") === col("o_orderkey"), "left"),
-          col("o_orderkey").isNull),
-        ("range_totalprice_positive", ords, col("o_totalprice") <= 0),
-        ("null_mktsegment", cust, col("c_mktsegment").isNull),
-        ("unique_custkey",
-          cust.groupBy(col("c_custkey")).agg(count(lit(1)).as("n")),
-          col("n") > 1),
-        // through the unit-negotiating reader: a ns-long ts fixture
-        // would otherwise cast long->timestamp as SECONDS and silently
-        // move every event out of the window (r13 advice)
-        ("ts_in_window", EventStream.eventsTable(s, dir),
-          col("ts") < to_timestamp(lit("2020-01-01 00:00:00")) ||
-            col("ts") >= to_timestamp(lit("2030-01-01 00:00:00")))))
-    }),
-
-    // JSONL ingest with quarantine (the corpus interchange format):
-    // real .jsonl files with deterministically torn lines
-    // (doc_id % 37 == 5 truncated mid-object), explicit-schema
-    // PERMISSIVE parse — malformed lines neither kill the ingest nor
-    // silently vanish; the `__corrupt__` audit row is hash-gated.
-    "q_jsonl_ingest" -> ((s, dir) =>
-      graft.sources.JsonlSource.ingestFace(s, dir)),
-
-    // CSV ingest with quarantine — the JsonlSource contract on the
-    // warehouse-export interchange format: declared schema (no
-    // inference pass), PERMISSIVE corrupt-line routing, deterministic
-    // torn-line overlay (doc_id % 41 == 7 truncated to 2 of 4
-    // fields), quarantined count hash-gated.
-    "q_csv_ingest" -> ((s, dir) =>
-      graft.sources.CsvSource.ingestFace(s, dir)),
-
-    // ORC round-trip: documents written and read back as ORC with a
-    // selective predicate require-enforced as a pushed filter — the
-    // format surface isn't parquet-only.
-    "q_orc_roundtrip" -> ((s, dir) =>
-      TableLayout.orcRoundTripFace(s, dir)),
-
-    // Manifest-scoped atomic publish (the Iceberg/Delta read-isolation
-    // core on plain files): staged-but-unpublished files and a crashed
-    // writer's orphans are INVISIBLE (reader resolves pointer ->
-    // manifest -> named files, never a directory listing), the commit
-    // is one atomic rename, pinned manifests time-travel — all
-    // require-enforced; the current snapshot's aggregate is the gate.
-    "q_manifest_commit" -> ((s, dir) =>
-      TableLayout.manifestCommitFace(s, dir)),
-
-    // Manifest VACUUM (retention): expire snapshots below the
-    // horizon, reclaim their exclusive files AND crashed writers'
-    // orphans — liveness defined by retained manifests' file lists
-    // (never listing/age, so deleting a reader-reachable file is
-    // structurally impossible); current-read bit-stability across
-    // the vacuum, orphan+v1 reclamation, and loud sub-horizon
-    // time-travel failure all require-enforced.
-    "q_manifest_vacuum" -> ((s, dir) =>
-      TableLayout.manifestVacuumFace(s, dir)),
-
-    // Avro ingest with writer/reader schema RESOLUTION: documents
-    // staged as real container files through two producer schema
-    // versions (v1: source; v2: source_name + quality), read under
-    // ONE reader schema — alias rename + added-with-default are the
-    // semantics parquet mergeSchema can't express. Torn files
-    // (doc_id % 8 == 5, magic overwritten) quarantine wholesale,
-    // require-enforced in-face.
-    "q_avro_ingest" -> ((s, dir) =>
-      graft.sources.AvroSource.ingestFace(s, dir))
-  )
-
-  /** Column sets for q_table_profile — the oracle arms generate from
-    * the same lists so Scala and SQL can't drift. */
-  private val ProfileNumericCols =
-    Seq("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice",
-      "l_discount")
-  private val ProfileOtherCols = Seq("l_returnflag", "l_linestatus")
-
-  /** Edit budget for q_edit_near_dups. The sf corpus is bimodal over
-    * the LSH candidates (true near-dups at 4-8 edits, band-collision
-    * false positives at 140+), so 16 separates cleanly while leaving
-    * the false candidates to exercise the filter. The oracle
-    * interpolates the same constant. */
-  private val EditNearDupMaxEdits = 16
-
-  /** Window width (tokens) for q_substring_dedup. 8 is wide enough
-    * that no two INDEPENDENT sf documents share a window (0 false
-    * spans observed) while the seeded near-dup families light up with
-    * partial spans (47/500 docs at sf0.01, many strictly < full-doc —
-    * the span-merge path is exercised, not just whole-doc matches).
-    * The oracle interpolates the same constant. */
-  private val SubstringDupK = 8
-
-  /** Anonymity threshold for q_k_anonymity — a POLICY constant (HIPAA
-    *-era deidentification guidance uses single-digit k), not a tuned
-    * one. At sf0.01 11 of 125 (nation, segment) cells fall under it
-    * (the suppression path runs at the driver's own gate scale); at
-    * sf0.1 every cell clears it and the release is the identity — the
-    * bucket row's absence is itself gated. */
-  private val KAnonymityK = 8
-
-  /** Mixture weights + corpus budget for q_lang_mix — zh's target
-    * exceeds its stratum size, exercising the keep_bp cap. The oracle
-    * CASE is generated from the same pairs so Scala and SQL can't
-    * drift. */
-  private val MixWeights: Seq[(String, Int)] =
-    Seq("en" -> 4, "zh" -> 3, "de" -> 1, "es" -> 1, "fr" -> 1)
-  private val MixBudgetPct = 60
-
-  /** Per-language keep percentages for q_stratified_sample (unlisted
-    * langs use [[SampleDefaultPct]]); the oracle CASE is generated
-    * from the same pairs so Scala and SQL can't drift. */
-  private val SampleRates: Seq[(String, Int)] = Seq("en" -> 50, "zh" -> 100)
-  private val SampleDefaultPct = 20
-
   /** The reference's committed tinyG dataset (datasets/tinyG.txt),
     * verbatim: 13 vertices, 15 undirected edges. */
-  private val TinyG: Seq[(Long, Long)] = Seq(
+  val TinyG: Seq[(Long, Long)] = Seq(
     (0L, 5L), (4L, 3L), (0L, 1L), (9L, 12L), (6L, 4L), (5L, 4L), (0L, 2L),
     (11L, 12L), (9L, 10L), (0L, 6L), (9L, 11L), (5L, 3L), (0L, 7L), (7L, 8L),
     (0L, 9L))
 
-  // --- DuckDB mirrors of the TextAnalysis formulas (generated from the
-  // same stopword lists so Scala and SQL can't drift) -----------------
-  // coalesce mirrors TextAnalysis.nn: every Spark-side text op treats
-  // NULL text as "" — the oracle must tokenize the same way, or a null
-  // row (legal in real corpora) diverges cross-engine
-  private val toksSql =
-    "string_split_regex(lower(coalesce(text, '')), '\\s+')"
-
-  /** DuckDB replay of q_bfs_{mediumg,largeg}_scale: rebuild the
-    * [[graft.sources.SyntheticGraphs.referenceScale]] graph from the
-    * same closed-form integer arithmetic (`//` floors = Spark `div`
-    * truncation on the nonnegative operands) and unroll 5 min-merge
-    * BFS layers — provably past the fixed point because the tree
-    * backbone bounds ecc(0) at 4 and chords only shrink distances. */
-  private def referenceScaleBfsSql(shape: (Long, Long)): String = {
-    val (n, e) = shape
-    val chords = e - (n - 1)
-    val layers = (1 to 5).map { h =>
-      s"""d$h AS MATERIALIZED (
-         |  SELECT id, min(dist) AS dist FROM (
-         |    SELECT id, dist FROM d${h - 1}
-         |    UNION ALL
-         |    SELECT e.dst, d.dist + 1 FROM d${h - 1} d
-         |    JOIN edges e ON e.src = d.id)
-         |  GROUP BY id)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH raw AS (
-       |  SELECT i AS src, (i - 1) // 64 AS dst FROM range(1, $n) t(i)
-       |  UNION ALL
-       |  SELECT (j * 1103515245 + 12345) % $n AS src,
-       |         (j * 2654435761 + 98765) % $n AS dst
-       |  FROM range($chords) t(j)),
-       |edges AS (SELECT src, dst FROM raw UNION ALL SELECT dst, src FROM raw),
-       |d0(id, dist) AS (SELECT CAST(0 AS BIGINT), CAST(0 AS BIGINT)),
-       |$layers
-       |SELECT dist, count(*) AS n_vertices, CAST(sum(id) AS BIGINT) AS sum_id
-       |FROM d5 GROUP BY dist ORDER BY dist""".stripMargin
+  /** Every face, family by family. */
+  val faces: Seq[Face] = {
+    val all = GraphFaces.faces ++ LouvainFaces.faces ++ CorpusFaces.faces ++
+      SimilarityFaces.faces ++ StreamingFaces.faces ++ RelationalFaces.faces ++
+      LayoutFaces.faces
+    val dups = all.groupBy(_.name).collect { case (n, fs) if fs.size > 1 => n }
+    require(dups.isEmpty, s"face names defined twice: ${dups.toSeq.sorted}")
+    all
   }
 
-  /** Shared DuckDB prefix for the PQ oracles: hash-order codebooks,
-    * per-(vector, subvector, centroid) exact integer L2² table,
-    * argmin encoding, and the ADC pair distances (relation `adc`).
-    * Mirrors [[graft.operators.Similarity.pqTopK]]'s shared
-    * machinery. */
-  private def pqOraclePrefix: String = {
-    val m = graft.operators.Similarity.PqSubvectors
-    val ksub = graft.operators.Similarity.PqSubCentroids
-    val sub = 64 / m
-    s"""WITH $quantCte,
-       |sd AS MATERIALIZED (
-       |  SELECT vec_id AS cid, qe AS cqe,
-       |         row_number() OVER (ORDER BY rh, vec_id) - 1 AS cidx
-       |  FROM (SELECT vec_id, qe,
-       |          ${rhSql("CAST(vec_id AS VARCHAR)")} AS rh FROM nv)
-       |  ORDER BY rh, cid LIMIT $ksub),
-       |ss AS (SELECT unnest(range(0, $m)) AS s),
-       |subc AS MATERIALIZED (
-       |  SELECT ss.s, sd.cidx,
-       |         list_slice(sd.cqe, ss.s*$sub+1, ss.s*$sub+$sub) AS csub
-       |  FROM sd CROSS JOIN ss),
-       |subv AS MATERIALIZED (
-       |  SELECT v.vec_id, ss.s,
-       |         list_slice(v.qe, ss.s*$sub+1, ss.s*$sub+$sub) AS vsub
-       |  FROM nv v CROSS JOIN ss),
-       |d2 AS MATERIALIZED (
-       |  SELECT v.vec_id, v.s, c.cidx,
-       |    CAST(list_sum(list_transform(range(1, $sub+1),
-       |      i -> (v.vsub[i]-c.csub[i])*(v.vsub[i]-c.csub[i])))
-       |      AS BIGINT) AS d2
-       |  FROM subv v JOIN subc c ON v.s = c.s),
-       |enc AS MATERIALIZED (
-       |  SELECT vec_id, s, cidx AS code FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id, s
-       |                ORDER BY d2, cidx) AS rn FROM d2)
-       |  WHERE rn = 1),
-       |adc AS MATERIALIZED (
-       |  SELECT q.vec_id, e.vec_id AS neighbor_id,
-       |         CAST(SUM(q.d2) AS BIGINT) AS dist
-       |  FROM d2 q JOIN enc e ON q.s = e.s AND q.cidx = e.code
-       |  WHERE q.vec_id <> e.vec_id
-       |  GROUP BY q.vec_id, e.vec_id)""".stripMargin
-  }
-
-  /** Generated oracle replaying [[graft.operators.CountMin]]'s sketch
-    * bit-exactly: same token stream, same rolling hash, same fixed
-    * affine row maps, same d×w counter build, same min-over-rows
-    * estimate. */
-  private def cmsOracleSql: String = {
-    val p = graft.operators.Dedup.P
-    val w = graft.operators.CountMin.Width
-    def idx(h: String, i: Int): String = {
-      val (a, b) = graft.operators.CountMin.RowCoeffs(i)
-      s"(($h*$a + $b) % $p) % $w"
-    }
-    val rows = graft.operators.CountMin.RowCoeffs.indices
-    val skUnion = rows.map(i =>
-      s"SELECT $i AS row, ${idx("h", i)} AS idx FROM h")
-      .mkString("\n    |    UNION ALL ")
-    val joins = rows.map(i =>
-      s"JOIN sk s$i ON s$i.row = $i AND s$i.idx = ${idx("eh.h", i)}")
-      .mkString("\n    |")
-    val leastC = rows.map(i => s"s$i.c").mkString(", ")
-    s"""WITH toks AS (
-    |  SELECT token FROM (SELECT unnest($toksSql) AS token FROM documents)
-    |  WHERE len(token) > 0),
-    |h AS (SELECT ${rhSql("token")} AS h FROM toks),
-    |sk AS MATERIALIZED (
-    |  SELECT row, idx, count(*) AS c FROM (
-    |    $skUnion)
-    |  GROUP BY row, idx),
-    |exact AS (
-    |  SELECT token, count(*) AS n FROM toks GROUP BY token
-    |  ORDER BY n DESC, token LIMIT 20),
-    |eh AS (SELECT e.token, e.n, ${rhSql("e.token")} AS h FROM exact e)
-    |SELECT eh.token, eh.n,
-    |       CAST(least($leastC) AS BIGINT) AS est
-    |FROM eh
-    |$joins
-    |ORDER BY eh.n DESC, eh.token""".stripMargin
-  }
-
-  /** Generated oracle for [[graft.operators.Indexing.bpeLearn]]: an
-    * unrolled `n`-stage CTE chain — stage i computes pair counts over
-    * vocabulary v(i-1), picks the argmax pair b(i) (ties
-    * lexicographic), and rewrites the vocabulary with the same greedy
-    * left-to-right `list_reduce` fold the engine's `aggregate` HOF
-    * runs. DuckDB list slices are INCLUSIVE at both ends, so
-    * drop-last is `acc[:-2]`. The last stage skips the rewrite (its
-    * result is never read). */
-  /** Shared WITH-body replaying RandomWalk.walks: edges, the walk
-    * seeds, and one (candidate, argmin) layer per step — used by both
-    * the walks oracle and the skip-gram pairs oracle. */
-  private def walkChainSql: String = {
-    val layers = (1 to RandomWalkSteps).map { i =>
-      // pure-BIGINT replay of RandomWalk.walkScore: the pre-square
-      // linear mix here, squared mod P in the ORDER BY below — no
-      // string functions, same four integer ops the engine runs. The
-      // step term is a per-layer constant, folded HERE so DuckDB never
-      // sees an INT32*INT32 literal product (it overflow-checks those).
-      val stepTerm = (i.toLong * RandomWalk.MixB) % Dedup.P
-      val rh = s"((s.walk_id % ${Dedup.P}) * ${RandomWalk.MixA} + " +
-        s"$stepTerm + (e.dst % ${Dedup.P})) % ${Dedup.P}"
-      s"""c$i AS MATERIALIZED (
-         |  SELECT s.walk_id, s.seed, e.dst, s.path, $rh AS h
-         |  FROM s${i - 1} s JOIN edges e ON s.cur = e.src),
-         |s$i AS MATERIALIZED (
-         |  SELECT walk_id, seed, dst AS cur,
-         |    path || ',' || CAST(dst AS VARCHAR) AS path
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY walk_id
-         |          ORDER BY (h * h) % ${Dedup.P}, dst) AS rn
-         |        FROM c$i)
-         |  WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    s"""$copurchaseEdgesSql,
-       |s0 AS (
-       |  SELECT v * $RandomWalksPerVertex + w AS walk_id, v AS seed,
-       |         v AS cur, CAST(v AS VARCHAR) AS path
-       |  FROM (SELECT DISTINCT src AS v FROM edges)
-       |  CROSS JOIN (SELECT unnest(range($RandomWalksPerVertex)) AS w)),
-       |$layers""".stripMargin
-  }
-
-  private def bpeChainSql(n: Int, rewriteLast: Boolean): String = {
-    // `word` is threaded through every v$i so eval oracles
-    // (q_bpe_fertility) can join encoded lengths back on the
-    // vocabulary key; the learn/encode oracles simply don't read it
-    val base =
-      s"""w AS (SELECT token AS word, count(*) AS freq FROM (
-         |    SELECT unnest($toksSql) AS token FROM documents)
-         |  WHERE len(token) >= 2 GROUP BY token),
-         |v0 AS (SELECT word, string_split(word, '') AS syms, freq FROM w)"""
-        .stripMargin
-    val rounds = (1 to n).map { i =>
-      val count =
-        s"""pc$i AS (
-           |  SELECT p.l AS l, p.r AS r, CAST(sum(freq) AS BIGINT) AS n FROM (
-           |    SELECT freq, unnest(list_transform(range(1, len(syms)),
-           |      j -> {'l': syms[j], 'r': syms[j+1]})) AS p FROM v${i - 1})
-           |  GROUP BY p.l, p.r),
-           |b$i AS (SELECT l, r, n FROM pc$i ORDER BY n DESC, l, r LIMIT 1)"""
-          .stripMargin
-      if (i == n && !rewriteLast) count
-      else count + s""",
-           |v$i AS (
-           |  SELECT word, list_reduce([CAST([] AS VARCHAR[])] ||
-           |      list_transform(syms, x -> [x]),
-           |    (acc, x) -> CASE WHEN len(acc) > 0 AND acc[-1] = b.l
-           |                      AND x[1] = b.r
-           |                     THEN acc[:-2] || [b.l || b.r]
-           |                     ELSE acc || x END) AS syms, freq
-           |  FROM v${i - 1}, b$i b)""".stripMargin
-    }
-    s"WITH $base,\n${rounds.mkString(",\n")}"
-  }
-
-  /** Generated oracle for [[graft.operators.Indexing.bpeLearnBatched]]:
-    * `passes` unrolled stages; per stage the pair counts, the
-    * top-`window` ranked candidates, a RECURSIVE greedy selection
-    * walk (rank order, accept while < `k` picked and {l, r, l||r}
-    * shares no symbol with the accepted set — DuckDB replays the
-    * driver's sequential fold as a recursive CTE with list
-    * accumulators), and `k` LEFT-JOIN-guarded vocabulary rewrites
-    * (an empty pick passes the vocabulary through), applied in pick
-    * order exactly as the engine's one native fold sweep. */
-  private def bpeBatchOracleSql(passes: Int, k: Int, window: Int,
-                                encodeTopK: Option[Int] = None): String = {
-    val base =
-      s"""bw AS (SELECT token AS word, count(*) AS freq FROM (
-         |    SELECT unnest($toksSql) AS token FROM documents)
-         |  WHERE len(token) >= 2 GROUP BY token),
-         |bv0 AS MATERIALIZED (
-         |  SELECT word, string_split(word, '') AS syms, freq FROM bw)"""
-        .stripMargin
-    val passSql = (1 to passes).map { p =>
-      val prev = s"bv${p - 1}"
-      val pick = s"len(r.picked) < $k AND NOT list_has_any(r.used, " +
-        s"[c.l, c.r, c.l || c.r])"
-      val rewrites = (1 to k).map { j =>
-        val src = if (j == 1) prev else s"bv${p}_${j - 1}"
-        s"""bsel${p}_$j AS (SELECT l, r FROM sel$p WHERE j = $j),
-           |bv${p}_$j AS (
-           |  SELECT word,
-           |    CASE WHEN b.l IS NULL THEN syms
-           |         ELSE list_reduce([CAST([] AS VARCHAR[])] ||
-           |             list_transform(syms, x -> [x]),
-           |           (acc, x) -> CASE WHEN len(acc) > 0 AND acc[-1] = b.l
-           |                             AND x[1] = b.r
-           |                            THEN acc[:-2] || [b.l || b.r]
-           |                            ELSE acc || x END)
-           |    END AS syms, freq
-           |  FROM $src LEFT JOIN bsel${p}_$j b ON true)""".stripMargin
-      }.mkString(",\n")
-      s"""pc$p AS (
-         |  SELECT p.l AS l, p.r AS r, CAST(sum(freq) AS BIGINT) AS n FROM (
-         |    SELECT freq, unnest(list_transform(range(1, len(syms)),
-         |      j -> {'l': syms[j], 'r': syms[j+1]})) AS p FROM $prev)
-         |  GROUP BY p.l, p.r),
-         |cand$p AS MATERIALIZED (
-         |  SELECT l, r, n, rn FROM (
-         |    SELECT l, r, n,
-         |      row_number() OVER (ORDER BY n DESC, l, r) AS rn
-         |    FROM pc$p) WHERE rn <= $window),
-         |rec$p AS (
-         |  SELECT CAST(0 AS BIGINT) AS rn, CAST([] AS VARCHAR[]) AS used,
-         |         CAST([] AS BIGINT[]) AS picked
-         |  UNION ALL
-         |  SELECT c.rn,
-         |    CASE WHEN $pick
-         |         THEN r.used || [c.l, c.r, c.l || c.r] ELSE r.used END,
-         |    CASE WHEN $pick
-         |         THEN r.picked || [c.rn] ELSE r.picked END
-         |  FROM rec$p r JOIN cand$p c ON c.rn = r.rn + 1),
-         |sel$p AS MATERIALIZED (
-         |  SELECT c.l, c.r, c.n, row_number() OVER (ORDER BY c.rn) AS j
-         |  FROM cand$p c
-         |  WHERE c.rn IN (SELECT unnest(picked) FROM (
-         |    SELECT picked FROM rec$p ORDER BY rn DESC LIMIT 1))),
-         |$rewrites,
-         |bv$p AS MATERIALIZED (SELECT * FROM bv${p}_$k)""".stripMargin
-    }.mkString(",\n")
-    val sels = (1 to passes)
-      .map(p => s"SELECT $p AS pass, j, l, r, n FROM sel$p")
-      .mkString("\nUNION ALL\n")
-    val tail = encodeTopK match {
-      case Some(topK) =>
-        // serving arm: the final rewritten vocabulary IS the encoded
-        // corpus — roll up the token distribution (bpeEncode's shape)
-        s"""
-           |SELECT token, CAST(sum(freq) AS BIGINT) AS n FROM (
-           |  SELECT unnest(syms) AS token, freq FROM bv$passes)
-           |GROUP BY token ORDER BY n DESC, token LIMIT $topK"""
-          .stripMargin
-      case None =>
-        s""",
-           |allsel AS ($sels)
-           |SELECT CAST(row_number() OVER (ORDER BY pass, j) AS INTEGER)
-           |    AS rank,
-           |  CAST(pass AS INTEGER) AS pass, l AS "left", r AS "right",
-           |  l || r AS merged, n
-           |FROM allsel ORDER BY rank""".stripMargin
-    }
-    s"""WITH RECURSIVE $base,
-       |$passSql$tail""".stripMargin
-  }
-
-  /** Generated oracle for [[graft.operators.Indexing.bpeLearnPhrases]]:
-    * `passes` unrolled stages over the TOKEN-sequence table; per stage
-    * the pair counts, the top-`window` ranked candidates, a RECURSIVE
-    * greedy selection replaying the engine's minimal non-interaction
-    * rule (three accumulator lists — accepted lefts, rights, merged
-    * units; accept unless the candidate chains with an accepted pick
-    * or touches an accepted merged unit), and ONE simultaneous
-    * `list_reduce` fold applying the whole batch — valid precisely
-    * because the selection rule makes batch members non-interacting,
-    * so the engine's sequential rank-order sweep and this single
-    * scan produce the same sequence. Pair lookup keys join l/r with
-    * chr(1) (tokens are whitespace-split, so neither tokens nor
-    * space-joined phrases can contain it) — a bare `l || r` key
-    * would false-match across different split points. */
-  private def bpePhraseOracleSql(passes: Int, k: Int,
-                                 window: Int): String = {
-    val base =
-      s"""pw AS (SELECT list_filter($toksSql, t -> t <> '') AS syms
-         |  FROM documents),
-         |pv0 AS MATERIALIZED (
-         |  SELECT syms, CAST(count(*) AS BIGINT) AS freq FROM pw
-         |  WHERE len(syms) >= 2 GROUP BY syms)""".stripMargin
-    val passSql = (1 to passes).map { p =>
-      val prev = s"pv${p - 1}"
-      val m = "c.l || ' ' || c.r"
-      val ok = s"len(r.picked) < $k AND " +
-        s"NOT list_contains(r.ls, c.r) AND " +
-        s"NOT list_contains(r.rs, c.l) AND " +
-        s"NOT list_contains(r.ls, $m) AND " +
-        s"NOT list_contains(r.rs, $m) AND " +
-        s"NOT list_contains(r.ms, $m) AND " +
-        s"NOT list_contains(r.ms, c.l) AND " +
-        s"NOT list_contains(r.ms, c.r)"
-      s"""ppc$p AS (
-         |  SELECT p.l AS l, p.r AS r, CAST(sum(freq) AS BIGINT) AS n FROM (
-         |    SELECT freq, unnest(list_transform(range(1, len(syms)),
-         |      j -> {'l': syms[j], 'r': syms[j+1]})) AS p FROM $prev)
-         |  GROUP BY p.l, p.r),
-         |pcand$p AS MATERIALIZED (
-         |  SELECT l, r, n, rn FROM (
-         |    SELECT l, r, n,
-         |      row_number() OVER (ORDER BY n DESC, l, r) AS rn
-         |    FROM ppc$p) WHERE rn <= $window),
-         |prec$p AS (
-         |  SELECT CAST(0 AS BIGINT) AS rn, CAST([] AS VARCHAR[]) AS ls,
-         |         CAST([] AS VARCHAR[]) AS rs, CAST([] AS VARCHAR[]) AS ms,
-         |         CAST([] AS BIGINT[]) AS picked
-         |  UNION ALL
-         |  SELECT c.rn,
-         |    CASE WHEN $ok THEN r.ls || [c.l] ELSE r.ls END,
-         |    CASE WHEN $ok THEN r.rs || [c.r] ELSE r.rs END,
-         |    CASE WHEN $ok THEN r.ms || [$m] ELSE r.ms END,
-         |    CASE WHEN $ok THEN r.picked || [c.rn] ELSE r.picked END
-         |  FROM prec$p r JOIN pcand$p c ON c.rn = r.rn + 1),
-         |psel$p AS MATERIALIZED (
-         |  SELECT c.l, c.r, c.n, row_number() OVER (ORDER BY c.rn) AS j
-         |  FROM pcand$p c
-         |  WHERE c.rn IN (SELECT unnest(picked) FROM (
-         |    SELECT picked FROM prec$p ORDER BY rn DESC LIMIT 1))),
-         |ppl$p AS (
-         |  SELECT coalesce(list(l || chr(1) || r),
-         |    CAST([] AS VARCHAR[])) AS ps FROM psel$p),
-         |pv$p AS MATERIALIZED (
-         |  SELECT list_reduce([CAST([] AS VARCHAR[])] ||
-         |      list_transform(syms, x -> [x]),
-         |    (acc, x) -> CASE WHEN len(acc) > 0 AND list_contains(q.ps,
-         |                       acc[-1] || chr(1) || x[1])
-         |                     THEN acc[:-2] || [acc[-1] || ' ' || x[1]]
-         |                     ELSE acc || x END) AS syms, freq
-         |  FROM $prev, ppl$p q)""".stripMargin
-    }.mkString(",\n")
-    val sels = (1 to passes)
-      .map(p => s"SELECT $p AS pass, j, l, r, n FROM psel$p")
-      .mkString("\nUNION ALL\n")
-    s"""WITH RECURSIVE $base,
-       |$passSql,
-       |allpsel AS ($sels)
-       |SELECT CAST(row_number() OVER (ORDER BY pass, j) AS INTEGER)
-       |    AS rank,
-       |  CAST(pass AS INTEGER) AS pass, l AS "left", r AS "right",
-       |  l || ' ' || r AS merged, n
-       |FROM allpsel ORDER BY rank""".stripMargin
-  }
-
-  private def bpeLearnOracleSql(n: Int): String = {
-    val finals = (1 to n).map(i =>
-      s"""SELECT $i AS rank, l AS "left", r AS "right",
-         |       l || r AS merged, n FROM b$i""".stripMargin)
-      .mkString("\nUNION ALL\n")
-    s"${bpeChainSql(n, rewriteLast = false)}\n$finals\nORDER BY rank"
-  }
-
-  /** Oracle for q_bpe_encode: run the full chain INCLUDING the last
-    * rewrite, then count the encoded symbols corpus-wide. */
-  private def bpeEncodeOracleSql(n: Int, topK: Int): String =
-    s"""${bpeChainSql(n, rewriteLast = true)}
-       |SELECT token, CAST(sum(freq) AS BIGINT) AS n FROM (
-       |  SELECT unnest(syms) AS token, freq FROM v$n)
-       |GROUP BY token ORDER BY n DESC, token LIMIT $topK""".stripMargin
-  private def stopCountSql(words: Seq[String]): String = {
-    val lst = words.map(w => s"'$w'").mkString("[", ", ", "]")
-    s"len(list_filter($toksSql, t -> list_contains($lst, t)))"
-  }
-  private def langCaseSql: String = {
-    val langs = TextAnalysis.StopwordLists.map(_._1)
-    val arms = TextAnalysis.StopwordLists.map { case (l, _) =>
-      val others = langs.filter(_ != l)
-        .map(o => s"c_$l >= c_$o").mkString(" AND ")
-      s"WHEN c_$l > 0 AND $others THEN '$l'"
-    }.mkString("\n       ")
-    s"""CASE WHEN len(regexp_extract_all(text, '[\\x{4e00}-\\x{9fff}]')) > 0
-       |         THEN 'zh'
-       |       $arms
-       |       ELSE 'und' END""".stripMargin
-  }
-
-  // --- DuckDB mirrors of the Dedup pipeline, generated from the same
-  // Dedup.Coeffs / SimHashExpr.NumBits constants so Scala and SQL can't
-  // drift ------------------------------------------------------------
-  /** Shared substring-dedup span CTEs (mirror Dedup.dupSpanFrames):
-    * k-token windows over docs with >= k tokens, rolling-hash
-    * fingerprints, duplicated iff >= 2 docs share the fingerprint,
-    * merged spans emitted as `sp(doc_id, island, s, e)` plus the
-    * window relation `w(doc_id, pos, h)`. Used by both the
-    * q_substring_dedup (report) and q_substring_scrub (apply)
-    * oracles so the two replay ONE span construction. */
-  private def substringSpanCtes: String =
-    s"""ft AS (
-       |  SELECT doc_id, $toksSql AS toks FROM documents
-       |  WHERE len($toksSql) >= $SubstringDupK),
-       |g AS (
-       |  SELECT doc_id, i AS pos, array_to_string(
-       |    list_slice(toks, i, i+${SubstringDupK - 1}), ' ') AS gram
-       |  FROM ft, unnest(range(1, len(toks)-${SubstringDupK}+2)) AS u(i)),
-       |w AS (SELECT doc_id, pos, ${rhSql("gram")} AS h FROM g),
-       |dh AS (SELECT h FROM w GROUP BY h
-       |       HAVING count(DISTINCT doc_id) >= 2),
-       |isl AS (
-       |  SELECT doc_id, pos, CASE WHEN pos > coalesce(
-       |    max(pos + $SubstringDupK) OVER (PARTITION BY doc_id
-       |      ORDER BY pos
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-       |    THEN 1 ELSE 0 END AS brk
-       |  FROM w JOIN dh USING (h)),
-       |isl2 AS (
-       |  SELECT doc_id, pos,
-       |    sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS island
-       |  FROM isl),
-       |sp AS (SELECT doc_id, island, min(pos) AS s,
-       |         max(pos) + $SubstringDupK AS e
-       |       FROM isl2 GROUP BY doc_id, island)""".stripMargin
-
-  /** Rolling hash of a string value `v` (mirrors RollingHashExpr). */
-  private def rhSql(v: String): String =
-    s"CASE WHEN len($v) = 0 THEN 0 ELSE list_reduce(list_transform(" +
-      s"range(1, len($v)+1), j -> CAST(ascii(substr($v, j, 1)) AS BIGINT)), " +
-      s"(acc, x) -> (acc*31 + x) % ${Dedup.P}) END"
-
-  /** Distinct 3-gram shingles per document (mirrors Dedup.shingles). */
-  private val shingleCte: String =
-    """sh AS (
-      |  SELECT doc_id, list_distinct(list_transform(
-      |    range(1, greatest(len(toks)-2, 1)+1),
-      |    i -> array_to_string(list_slice(toks, i, i+2), ' '))) AS sh
-      |  FROM (SELECT doc_id, string_split_regex(lower(text), '\s+') AS toks
-      |        FROM documents))""".stripMargin
-
-  /** MinHash signature columns m0..mk (mirrors Dedup.minhashSignature). */
-  private def sigCte: String = {
-    val ms = Dedup.Coeffs.zipWithIndex.map { case ((a, b), i) =>
-      s"list_min(list_transform(hs, h -> (h*$a + $b) % ${Dedup.P})) AS m$i"
-    }.mkString(",\n    ")
-    s"""hs AS (SELECT doc_id, list_transform(sh, s -> ${rhSql("s")}) AS hs FROM sh),
-       |sig AS (SELECT doc_id,
-       |    $ms
-       |  FROM hs)""".stripMargin
-  }
-
-  /** SimHash fingerprint CTEs (`t` + `hs` + `sim`, emitting doc_id,
-    * sh) — mirrors Dedup.simhash / SimHashExpr; shared by the
-    * q_simhash and q_simhash_near_dups oracles. */
-  private def simhashCte: String = {
-    val bits = (0 until SimHashExpr.NumBits).map { b =>
-      s"CASE WHEN list_sum(list_transform(hs, h -> CASE WHEN ((h >> $b) & 1) = 1 " +
-        s"THEN 1 ELSE -1 END)) > 0 THEN CAST(${1L << b} AS BIGINT) ELSE 0 END"
-    }.mkString("\n  + ")
-    s"""t AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS toks
-       |      FROM documents),
-       |hs AS (SELECT doc_id, list_transform(toks, s -> ${rhSql("s")}) AS hs FROM t),
-       |sim AS (SELECT doc_id,
-       |  $bits AS sh
-       |FROM hs)""".stripMargin
-  }
-
-  /** Full LSH candidate+verify pipeline CTEs (shingles → signatures →
-    * bands → candidate pairs → exact-Jaccard `scored`), shared by the
-    * near-dup pair and cluster oracles. */
-  private def lshPipelineSql: String = {
-    val bandArms = (0 until Dedup.numBands).map { j =>
-      s"SELECT doc_id, $j AS band, m${j * Dedup.BandRows} AS h1, " +
-        s"m${j * Dedup.BandRows + 1} AS h2 FROM sig"
-    }.mkString("\n  UNION ALL ")
-    s"""$shingleCte,
-       |$sigCte,
-       |bands AS (
-       |  $bandArms),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.h1 = b.h1 AND a.h2 = b.h2
-       |   AND a.doc_id < b.doc_id),
-       |scored AS (
-       |  SELECT c.doc_a, c.doc_b,
-       |    CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE)
-       |      / (len(sa.hs) + len(sb.hs) - len(list_intersect(sa.hs, sb.hs)))
-       |      AS sim
-       |  FROM cand c
-       |  JOIN hs sa ON sa.doc_id = c.doc_a
-       |  JOIN hs sb ON sb.doc_id = c.doc_b)""".stripMargin
-  }
-
-  /** Exact integer dot product of two quantized list columns. */
-  private def dotSql(a: String, b: String): String =
-    s"list_sum(list_transform(range(1, len($a)+1), i -> $a[i]*$b[i]))"
-
-  private def cosineQSql(a: String, b: String, na: String, nb: String): String =
-    s"CAST(${dotSql(a, b)} AS DOUBLE) / (sqrt(CAST($na AS DOUBLE)) * sqrt(CAST($nb AS DOUBLE)))"
-
-  /** IVF centroid CTE (emits `cents(cid, cqe, cnn)` from `nv`):
-    * mirrors Similarity.HashSampledCentroids — the k vectors with the
-    * smallest (rollingHash(vec_id), vec_id). Fixed k ⇒ the centroid
-    * set does not grow with the corpus (the whole point of the r10
-    * seeding change). */
-  private def centsSql(k: Int = Similarity.DefaultNumCentroids): String =
-    s"""cents AS (
-       |  SELECT vec_id AS cid, qe AS cqe, nn AS cnn FROM (
-       |    SELECT nv.*, row_number() OVER (
-       |      ORDER BY ${rhSql("CAST(vec_id AS VARCHAR)")}, vec_id) AS cr
-       |    FROM nv)
-       |  WHERE cr <= $k)""".stripMargin
-
-  /** Quantized embeddings + squared norms (mirrors Similarity.quantize). */
-  private val quantCte: String =
-    s"""qv AS (SELECT vec_id, list_transform(embedding,
-       |    x -> CAST(round(CAST(x AS DOUBLE) * ${Similarity.QuantScale}) AS BIGINT)) AS qe
-       |  FROM embeddings),
-       |nv AS (SELECT vec_id, qe, list_sum(list_transform(qe, v -> v*v)) AS nn
-       |       FROM qv
-       |       WHERE list_sum(list_transform(qe, v -> v*v)) > 0)""".stripMargin
-
-  /** SQ8 embeddings + squared norms, emitted AS `nv` (mirrors
-    * Similarity.int8Codes): per-vector scale s = max|x|, codes
-    * round(x*127/s) in [-127,127]. Emitting the same relation name as
-    * [[quantCte]] lets [[centsSql]] and the IVF oracle bodies run
-    * unchanged over either base. */
-  private val quantCte8: String =
-    s"""e8 AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,
-       |    list_max(list_transform(embedding,
-       |      x -> abs(coalesce(CAST(x AS DOUBLE), 0)))) AS s
-       |  FROM embeddings),
-       |q8 AS (
-       |  SELECT vec_id, list_transform(e,
-       |    x -> CAST(coalesce(round(x * 127.0 / s), 0) AS BIGINT)) AS qe
-       |  FROM e8 WHERE s > 0),
-       |nv AS (SELECT vec_id, qe,
-       |         list_sum(list_transform(qe, v -> v*v)) AS nn
-       |       FROM q8
-       |       WHERE list_sum(list_transform(qe, v -> v*v)) > 0)""".stripMargin
-
-  /** IVF search body over an upstream `nv` relation (emitted by
-    * [[quantCte]] or [[quantCte8]]): hash-order centroids, crank
-    * assignment, nprobe=3 probes, cluster-local search, ranked
-    * neighbours as relation `r`. Shared by the q_ann_ivf,
-    * q_ann_ivf_q8 and q_ann_recall oracles so the three replay ONE
-    * construction and can't drift. */
-  private def ivfSearchCtes: String = ivfSearchCtesOver("cents")
-
-  /** Same search body over an arbitrary upstream centroid relation
-    * (cid, cqe, cnn) — the trained-IVF oracle feeds it the
-    * Lloyd-refined set instead of [[centsSql]]'s raw seeds. */
-  private def ivfSearchCtesOver(centsRel: String): String =
-    s"""${if (centsRel == "cents") centsSql() + ",\n" else ""}asg AS (
-       |  SELECT vec_id, cid, qe, nn,
-       |    row_number() OVER (PARTITION BY vec_id
-       |                       ORDER BY csim DESC, cid) AS crank
-       |  FROM (SELECT v.vec_id, c.cid, v.qe, v.nn,
-       |          ${cosineQSql("v.qe", "c.cqe", "v.nn", "c.cnn")} AS csim
-       |        FROM nv v CROSS JOIN $centsRel c)),
-       |idx AS (SELECT vec_id AS neighbor_id, cid AS cluster, qe, nn
-       |        FROM asg WHERE crank = 1),
-       |probes AS (SELECT vec_id, cid AS cluster, qe, nn
-       |           FROM asg WHERE crank <= 3),
-       |p AS (
-       |  SELECT a.vec_id, b.neighbor_id,
-       |    ${cosineQSql("a.qe", "b.qe", "a.nn", "b.nn")} AS sim
-       |  FROM probes a JOIN idx b
-       |    ON a.cluster = b.cluster AND a.vec_id <> b.neighbor_id),
-       |r AS (SELECT vec_id, neighbor_id, sim,
-       |        row_number() OVER (PARTITION BY vec_id
-       |                           ORDER BY sim DESC, neighbor_id) AS rank
-       |      FROM p)""".stripMargin
-
-  /** One Lloyd refinement step as CTEs: from upstream centroid
-    * relation `from` (cid, cqe, cnn) emit `to` — argmax-cosine
-    * assignment of every `nv` vector (same (csim desc, cid) order as
-    * the IVF oracle), per-dimension floor-mean re-centering
-    * (floor(sum::double / count): the IEEE division both engines round
-    * identically), zero centroids dropped. Mirrors
-    * Similarity.trainOverBase one step at a time. */
-  private def lloydStepSql(from: String, to: String): String =
-    s"""${to}_asg AS (
-       |  SELECT vec_id, cid FROM (
-       |    SELECT v.vec_id, c.cid,
-       |      row_number() OVER (PARTITION BY v.vec_id
-       |        ORDER BY ${cosineQSql("v.qe", "c.cqe", "v.nn", "c.cnn")} DESC,
-       |                 c.cid) AS r
-       |    FROM nv v CROSS JOIN $from c)
-       |  WHERE r = 1),
-       |${to}_el AS (
-       |  SELECT b.cid, unnest(range(len(v.qe))) AS pos, unnest(v.qe) AS val
-       |  FROM ${to}_asg b JOIN nv v USING (vec_id)),
-       |${to}_m AS (
-       |  SELECT cid, pos,
-       |    CAST(floor(CAST(sum(val) AS DOUBLE) / count(*)) AS BIGINT) AS q
-       |  FROM ${to}_el GROUP BY cid, pos),
-       |$to AS (
-       |  SELECT cid, cqe, list_sum(list_transform(cqe, v -> v*v)) AS cnn
-       |  FROM (SELECT cid, list(q ORDER BY pos) AS cqe
-       |        FROM ${to}_m GROUP BY cid)
-       |  WHERE list_sum(list_transform(cqe, v -> v*v)) > 0)""".stripMargin
-
-  /** The trained-centroid chain shared by the q_ann_ivf_trained and
-    * q_ann_trained_recall oracles: seed via [[centsSql]], then
-    * [[graft.operators.Similarity.IvfTrainSteps]] Lloyd steps into
-    * relation `tc<steps>`. */
-  private def trainedCentsCtes: String = {
-    val steps = (1 to Similarity.IvfTrainSteps).map { i =>
-      lloydStepSql(if (i == 1) "cents" else s"tc${i - 1}", s"tc$i")
-    }.mkString(",\n")
-    s"""${centsSql()},
-       |$steps""".stripMargin
-  }
-
-  private val fingerprintSql =
-    """md5(trim(regexp_replace(regexp_replace(lower(text),
-      |    '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g')))""".stripMargin
-
-  /** Shared quality/language CTEs (`c` + `scored`, emitting doc_id,
-    * source, lang, gl = guessed language, quality) — mirrors
-    * TextAnalysis.languageId/qualityScore and is reused by the
-    * q_lang_quality, q_curation, and q_top_docs_per_lang oracles so
-    * the three can't drift apart. */
-  private def qualityScoredCte: String =
-    s"""c AS (
-       |  SELECT doc_id, source, lang, text,
-       |    ${TextAnalysis.StopwordLists.map { case (l, ws) =>
-              s"${stopCountSql(ws)} AS c_$l" }.mkString(",\n    ")},
-       |    CAST(len($toksSql) AS DOUBLE) AS tok,
-       |    CAST(len(list_distinct($toksSql)) AS DOUBLE) AS uniq,
-       |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS DOUBLE)
-       |      AS punct
-       |  FROM documents),
-       |scored AS (
-       |  SELECT doc_id, source, lang,
-       |    $langCaseSql AS gl,
-       |    0.25 * least(1.0, tok / 50.0)
-       |      + 0.25 * (uniq / (tok + 1.0))
-       |      + 0.25 * (1.0 - least(1.0, punct * 5.0 / (tok + 1.0)))
-       |      + 0.25 * least(1.0, c_en * 5.0 / (tok + 1.0)) AS quality
-       |  FROM c)""".stripMargin
-
-  // --- DuckDB mirrors of the CorpusOps formulas, generated from the
-  // same constants (DecontamGramSize, EvalMod, TopBigramFracThreshold,
-  // SampleRates) so Scala and SQL can't drift -------------------------
-
-  /** Decontamination CTEs (csh: distinct n-gram hashes per doc; cg:
-    * exploded grams; ceg: eval-set gram hashes; cont: contaminated
-    * train docs with shared-gram counts) — mirrors
-    * CorpusOps.decontaminate (n-gram size and eval modulus interpolate
-    * from the same constants). */
-  /** @param docFilter extra doc_id predicate restricting BOTH the
-    *                   eval-gram set and the contamination counting —
-    *                   the incremental-prep oracle scopes the stage to
-    *                   the batch, mirroring the batch-side evaluation
-    *                   in CorpusOps.incrementalPrepKept. */
-  private def decontamCte(docFilter: String = "TRUE"): String = {
-    val n1 = CorpusOps.DecontamGramSize - 1
-    s"""csh AS (
-       |  SELECT doc_id, list_distinct(list_transform(
-       |    list_distinct(list_transform(
-       |      range(1, greatest(len(toks)-$n1, 1)+1),
-       |      i -> array_to_string(list_slice(toks, i, i+$n1), ' '))),
-       |    s -> ${rhSql("s")})) AS ghs
-       |  FROM (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS toks
-       |        FROM documents)),
-       |cg AS (SELECT doc_id, unnest(ghs) AS gram FROM csh),
-       |ceg AS (SELECT DISTINCT gram FROM cg
-       |        WHERE doc_id % ${CorpusOps.EvalMod} = 0 AND ($docFilter)),
-       |cont AS (
-       |  SELECT cg.doc_id AS doc_id, count(*) AS n_shared_grams
-       |  FROM cg JOIN ceg USING (gram)
-       |  WHERE cg.doc_id % ${CorpusOps.EvalMod} <> 0 AND ($docFilter)
-       |  GROUP BY 1)""".stripMargin
-  }
-
-  /** Repetition-stats CTEs (rt: tokens; rb: base stats + bigrams WITH
-    * multiplicity; rc: per-(doc, bigram-HASH) counts — the engine
-    * counts multiplicity per rolling hash (TopNgramCountExpr), so the
-    * oracle groups the same hashes; rpd: per-doc bigram aggregates;
-    * rep: the full stat row) — mirrors CorpusOps.repetitionStats,
-    * including the <2-token omission. */
-  private def repetitionCte: String =
-    s"""rt AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS toks
-       |       FROM documents),
-       |rb AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-       |         CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct_tokens,
-       |         list_transform(range(1, len(toks)),
-       |           i -> array_to_string(list_slice(toks, i, i+1), ' ')) AS bigrams
-       |       FROM rt WHERE len(toks) >= 2),
-       |rc AS (SELECT doc_id, bg, count(*) AS n
-       |       FROM (SELECT doc_id, unnest(list_transform(bigrams,
-       |                    s -> ${rhSql("s")})) AS bg FROM rb)
-       |       GROUP BY doc_id, bg),
-       |rpd AS (SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_bigrams,
-       |          CAST(max(n) AS BIGINT) AS top_bigram_n
-       |        FROM rc GROUP BY doc_id),
-       |rep AS (
-       |  SELECT rb.doc_id, n_tokens, n_distinct_tokens,
-       |    CAST(n_tokens - n_distinct_tokens AS DOUBLE) / n_tokens
-       |      AS dup_token_frac,
-       |    n_bigrams, top_bigram_n,
-       |    CAST(top_bigram_n AS DOUBLE) / n_bigrams AS top_bigram_frac,
-       |    CAST(top_bigram_n AS DOUBLE) / n_bigrams
-       |      > CAST(${CorpusOps.TopBigramFracThreshold} AS DOUBLE)
-       |      AS repetitive
-       |  FROM rb JOIN rpd USING (doc_id))""".stripMargin
-
-  /** The corpus-prep funnel CTE chain (quality/language scoring, exact
-    * + near-dup dedup, decontamination, repetition filter → `kept` =
-    * (doc_id, lang, n_tokens, split bucket b)) — the SQL twin of
-    * CorpusOps.corpusPrepKeptFromShared, shared verbatim by the
-    * q_corpus_prep_v2 and q_corpus_prep_v3 oracles so the two funnels
-    * can't drift. Callers prepend `WITH RECURSIVE` (the `reach` CTE). */
-  private def corpusKeptCtesSql: String =
-    s"""${qualityScoredCte.replace("scored AS (", "qscored AS (")},
-       |f AS (SELECT doc_id, $fingerprintSql AS fp FROM documents),
-       |ecanon AS (
-       |  SELECT doc_id,
-       |         doc_id = min(doc_id) OVER (PARTITION BY fp) AS is_ec
-       |  FROM f),
-       |$lshPipelineSql,
-       |pedges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM scored WHERE sim >= 0.5
-       |  UNION ALL
-       |  SELECT doc_b, doc_a FROM scored WHERE sim >= 0.5),
-       |reach(id, r) AS (
-       |  SELECT DISTINCT src, src FROM pedges
-       |  UNION
-       |  SELECT reach.id, e.dst FROM reach JOIN pedges e ON e.src = reach.r),
-       |comp AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id),
-       |asg AS (
-       |  SELECT d.doc_id, coalesce(c.cluster, d.doc_id) AS cluster
-       |  FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
-       |${decontamCte()},
-       |$repetitionCte,
-       |toks AS (SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS n_tokens
-       |         FROM documents),
-       |kept AS (
-       |  SELECT q.doc_id, q.lang, t.n_tokens,
-       |    ${rhSql("CAST(q.doc_id AS VARCHAR)")} % 10 AS b
-       |  FROM qscored q
-       |  JOIN ecanon e ON e.doc_id = q.doc_id
-       |  JOIN asg a ON a.doc_id = q.doc_id
-       |  JOIN toks t ON t.doc_id = q.doc_id
-       |  LEFT JOIN cont ct ON ct.doc_id = q.doc_id
-       |  LEFT JOIN rep r ON r.doc_id = q.doc_id
-       |  WHERE e.is_ec AND a.doc_id = a.cluster
-       |    AND q.doc_id % ${CorpusOps.EvalMod} <> 0
-       |    AND ct.doc_id IS NULL
-       |    AND NOT coalesce(r.repetitive, false)
-       |    AND q.gl = q.lang AND q.quality >= 0.5)""".stripMargin
-
-  /** Keep-percentage CASE for q_stratified_sample — generated from the
-    * same [[SampleRates]] pairs the Spark query passes. */
-  private def sampleCaseSql: String = {
-    val arms = SampleRates.map { case (l, p) => s"WHEN lang = '$l' THEN $p" }
-      .mkString(" ")
-    s"CASE $arms ELSE $SampleDefaultPct END"
-  }
-
-  /** Mixture-weight CASE for q_lang_mix — generated from the same
-    * [[MixWeights]] pairs the Spark query passes (absent strata weigh
-    * 0, mirroring CorpusOps.mixtureSample). */
-  private def mixCaseSql: String = {
-    val arms = MixWeights.map { case (l, w) => s"WHEN lang = '$l' THEN $w" }
-      .mkString(" ")
-    s"CASE $arms ELSE 0 END"
-  }
-
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "q_exact_dedup" ->
-      s"""WITH f AS (SELECT doc_id, $fingerprintSql AS fingerprint FROM documents)
-         |SELECT doc_id, fingerprint,
-         |  min(doc_id) OVER (PARTITION BY fingerprint) AS canonical_id,
-         |  count(*) OVER (PARTITION BY fingerprint) AS group_size,
-         |  doc_id = min(doc_id) OVER (PARTITION BY fingerprint) AS is_canonical
-         |FROM f ORDER BY doc_id""".stripMargin,
-
-    "q_minhash" ->
-      s"""WITH $shingleCte,
-         |$sigCte
-         |SELECT doc_id, ${Dedup.Coeffs.indices.map(i => s"m$i").mkString(", ")}
-         |FROM sig ORDER BY doc_id""".stripMargin,
-
-    "q_lsh_near_dups" ->
-      s"""WITH $lshPipelineSql
-         |SELECT doc_a, doc_b, sim FROM scored
-         |WHERE sim >= 0.5 ORDER BY doc_a, doc_b""".stripMargin,
-
-    // the batch is the odd ids, the corpus the even ids; band
-    // collisions/sims come from the same all-docs LSH CTEs (bands are
-    // per-doc deterministic, so all-docs pairs restricted to
-    // odd-even / odd-odd equal the cross-set / within-batch pairs)
-    "q_incremental_dedup" ->
-      s"""WITH RECURSIVE $lshPipelineSql,
-         |fps AS (SELECT doc_id, $fingerprintSql AS fp FROM documents),
-         |xfp AS (
-         |  SELECT DISTINCT b.fp FROM fps b JOIN fps e ON e.fp = b.fp
-         |  WHERE b.doc_id % 2 = 1 AND e.doc_id % 2 = 0),
-         |xnd AS (
-         |  SELECT DISTINCT CASE WHEN doc_a % 2 = 1 THEN doc_a ELSE doc_b END
-         |    AS doc_id
-         |  FROM scored WHERE sim >= 0.5 AND (doc_a % 2) <> (doc_b % 2)),
-         |bec AS (
-         |  SELECT doc_id, doc_id = min(doc_id) OVER (PARTITION BY fp) AS is_ec
-         |  FROM fps WHERE doc_id % 2 = 1),
-         |pedges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM scored
-         |  WHERE sim >= 0.5 AND doc_a % 2 = 1 AND doc_b % 2 = 1
-         |  UNION ALL
-         |  SELECT doc_b, doc_a FROM scored
-         |  WHERE sim >= 0.5 AND doc_a % 2 = 1 AND doc_b % 2 = 1),
-         |reach(id, r) AS (
-         |  SELECT DISTINCT src, src FROM pedges
-         |  UNION
-         |  SELECT reach.id, e.dst FROM reach JOIN pedges e ON e.src = reach.r),
-         |comp AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id)
-         |SELECT f.doc_id FROM fps f
-         |JOIN bec ON bec.doc_id = f.doc_id
-         |LEFT JOIN comp c ON c.id = f.doc_id
-         |LEFT JOIN xfp ON xfp.fp = f.fp
-         |LEFT JOIN xnd ON xnd.doc_id = f.doc_id
-         |WHERE f.doc_id % 2 = 1 AND bec.is_ec
-         |  AND coalesce(c.cluster, f.doc_id) = f.doc_id
-         |  AND xfp.fp IS NULL AND xnd.doc_id IS NULL
-         |ORDER BY f.doc_id""".stripMargin,
-
-    // the incremental composite: the v2 funnel's stage CTEs restricted
-    // to the batch (doc_id % 3 = 0) — within-batch canonicals/clusters
-    // from the all-docs LSH pairs filtered to batch-batch (bands are
-    // per-doc deterministic, so the restriction is exact), batch-side
-    // decontamination via decontamCte's docFilter — plus the
-    // q_incremental_dedup-style cross rules (xfp/xnd) against the
-    // remaining docs as the corpus
-    "q_incremental_prep" ->
-      s"""WITH RECURSIVE ${qualityScoredCte.replace("scored AS (", "qscored AS (")},
-         |f AS (SELECT doc_id, $fingerprintSql AS fp FROM documents),
-         |$lshPipelineSql,
-         |${decontamCte("doc_id % 3 = 0")},
-         |$repetitionCte,
-         |toks AS (SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS n_tokens
-         |         FROM documents),
-         |bec AS (
-         |  SELECT doc_id, doc_id = min(doc_id) OVER (PARTITION BY fp) AS is_ec
-         |  FROM f WHERE doc_id % 3 = 0),
-         |pedges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM scored
-         |  WHERE sim >= 0.5 AND doc_a % 3 = 0 AND doc_b % 3 = 0
-         |  UNION ALL
-         |  SELECT doc_b, doc_a FROM scored
-         |  WHERE sim >= 0.5 AND doc_a % 3 = 0 AND doc_b % 3 = 0),
-         |reach(id, r) AS (
-         |  SELECT DISTINCT src, src FROM pedges
-         |  UNION
-         |  SELECT reach.id, e.dst FROM reach JOIN pedges e ON e.src = reach.r),
-         |comp AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id),
-         |xfp AS (
-         |  SELECT DISTINCT b.fp FROM f b JOIN f e ON e.fp = b.fp
-         |  WHERE b.doc_id % 3 = 0 AND e.doc_id % 3 <> 0),
-         |xnd AS (
-         |  SELECT DISTINCT CASE WHEN doc_a % 3 = 0 THEN doc_a ELSE doc_b END
-         |    AS doc_id
-         |  FROM scored
-         |  WHERE sim >= 0.5 AND (doc_a % 3 = 0) <> (doc_b % 3 = 0))
-         |SELECT q.doc_id, q.lang, t.n_tokens
-         |FROM qscored q
-         |JOIN bec ON bec.doc_id = q.doc_id
-         |JOIN toks t ON t.doc_id = q.doc_id
-         |JOIN f ON f.doc_id = q.doc_id
-         |LEFT JOIN comp c ON c.id = q.doc_id
-         |LEFT JOIN cont ct ON ct.doc_id = q.doc_id
-         |LEFT JOIN rep r ON r.doc_id = q.doc_id
-         |LEFT JOIN xfp ON xfp.fp = f.fp
-         |LEFT JOIN xnd ON xnd.doc_id = q.doc_id
-         |WHERE q.doc_id % 3 = 0 AND bec.is_ec
-         |  AND coalesce(c.cluster, q.doc_id) = q.doc_id
-         |  AND q.doc_id % ${CorpusOps.EvalMod} <> 0
-         |  AND ct.doc_id IS NULL
-         |  AND NOT coalesce(r.repetitive, false)
-         |  AND q.gl = q.lang AND q.quality >= 0.5
-         |  AND xfp.fp IS NULL AND xnd.doc_id IS NULL
-         |ORDER BY q.doc_id""".stripMargin,
-
-    // same band-candidate CTEs as the LSH oracle; Levenshtein is the
-    // classical unit-cost edit distance in both engines (exact int)
-    "q_edit_near_dups" ->
-      s"""WITH $lshPipelineSql
-         |SELECT c.doc_a, c.doc_b,
-         |  CAST(levenshtein(da.text, db.text) AS BIGINT) AS edits
-         |FROM cand c
-         |JOIN documents da ON da.doc_id = c.doc_a
-         |JOIN documents db ON db.doc_id = c.doc_b
-         |WHERE levenshtein(da.text, db.text) <= $EditNearDupMaxEdits
-         |ORDER BY 1, 2""".stripMargin,
-
-    "q_neardup_clusters" ->
-      s"""WITH RECURSIVE $lshPipelineSql,
-         |pedges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM scored WHERE sim >= 0.5
-         |  UNION ALL
-         |  SELECT doc_b, doc_a FROM scored WHERE sim >= 0.5),
-         |reach(id, r) AS (
-         |  SELECT DISTINCT src, src FROM pedges
-         |  UNION
-         |  SELECT reach.id, e.dst FROM reach JOIN pedges e ON e.src = reach.r),
-         |comp AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id),
-         |asg AS (
-         |  SELECT d.doc_id, coalesce(c.cluster, d.doc_id) AS cluster
-         |  FROM documents d LEFT JOIN comp c ON c.id = d.doc_id)
-         |SELECT doc_id, cluster,
-         |       count(*) OVER (PARTITION BY cluster) AS cluster_size,
-         |       doc_id = cluster AS is_canonical
-         |FROM asg ORDER BY doc_id""".stripMargin,
-
-    // estimator-vs-exact replay over the same candidate CTEs; the
-    // signature compare sums per-component CASE equalities over the
-    // m0..m{k-1} columns sigCte emits
-    "q_minhash_est_quality" -> {
-      val k = Dedup.Coeffs.size
-      val matches = Dedup.Coeffs.indices
-        .map(i => s"(CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      s"""WITH $lshPipelineSql,
-         |est AS (
-         |  SELECT c.doc_a, c.doc_b,
-         |    CAST($matches AS BIGINT) AS n_match,
-         |    CAST(len(list_intersect(ha.hs, hb.hs)) AS BIGINT) AS isz,
-         |    CAST(len(ha.hs) + len(hb.hs)
-         |      - len(list_intersect(ha.hs, hb.hs)) AS BIGINT) AS uni
-         |  FROM cand c
-         |  JOIN sig a ON a.doc_id = c.doc_a
-         |  JOIN sig b ON b.doc_id = c.doc_b
-         |  JOIN hs ha ON ha.doc_id = c.doc_a
-         |  JOIN hs hb ON hb.doc_id = c.doc_b)
-         |SELECT doc_a, doc_b,
-         |  n_match * 1000 // $k AS est_permille,
-         |  isz * 1000 // uni AS exact_permille,
-         |  abs(n_match * 1000 // $k - isz * 1000 // uni) AS err_permille
-         |FROM est ORDER BY doc_a, doc_b""".stripMargin
-    },
-
-    // same cluster construction, rolled to the size histogram
-    "q_neardup_cluster_stats" ->
-      s"""WITH RECURSIVE $lshPipelineSql,
-         |pedges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM scored WHERE sim >= 0.5
-         |  UNION ALL
-         |  SELECT doc_b, doc_a FROM scored WHERE sim >= 0.5),
-         |reach(id, r) AS (
-         |  SELECT DISTINCT src, src FROM pedges
-         |  UNION
-         |  SELECT reach.id, e.dst FROM reach JOIN pedges e ON e.src = reach.r),
-         |comp AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id),
-         |asg AS (
-         |  SELECT d.doc_id, coalesce(c.cluster, d.doc_id) AS cluster
-         |  FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
-         |cs AS (SELECT cluster, count(*) AS sz FROM asg GROUP BY 1)
-         |SELECT sz AS cluster_size,
-         |  count(*) AS n_clusters,
-         |  CAST(sz * count(*) AS BIGINT) AS n_docs,
-         |  CAST((sz - 1) * count(*) AS BIGINT) AS n_removable
-         |FROM cs GROUP BY sz ORDER BY sz""".stripMargin,
-
-    // mirrors Dedup.substringDupSpans: k-token windows fingerprinted
-    // with the shared rolling hash, duplicated iff the fingerprint
-    // spans >= 2 docs, per-doc gaps-and-islands span merge, all
-    // arithmetic integer (one truncating per-mille division)
-    "q_substring_dedup" ->
-      s"""WITH $substringSpanCtes,
-         |tot AS (SELECT doc_id, max(pos) + ${SubstringDupK - 1} AS n_tokens
-         |        FROM w GROUP BY doc_id),
-         |agg AS (SELECT doc_id, count(*) AS n_dup_spans,
-         |          CAST(sum(e - s) AS BIGINT) AS dup_tokens
-         |        FROM sp GROUP BY doc_id)
-         |SELECT t.doc_id, t.n_tokens,
-         |  coalesce(a.n_dup_spans, 0) AS n_dup_spans,
-         |  coalesce(a.dup_tokens, 0) AS dup_tokens,
-         |  coalesce(a.dup_tokens, 0) * 1000 // t.n_tokens AS dup_permille
-         |FROM tot t LEFT JOIN agg a USING (doc_id)
-         |ORDER BY t.doc_id""".stripMargin,
-
-    // mirrors Dedup.scrubDupSpans over the SAME span CTEs: every doc
-    // (short ones untouched), kept = positions outside every span
-    // (NOT EXISTS range test), canonical-form text re-joined in
-    // position order, md5-gated
-    "q_substring_scrub" ->
-      s"""WITH $substringSpanCtes,
-         |tk AS (
-         |  SELECT doc_id, i AS pos, toks[i] AS tok
-         |  FROM (SELECT doc_id, $toksSql AS toks FROM documents),
-         |       unnest(range(1, len(toks)+1)) AS u(i)),
-         |kept AS (
-         |  SELECT t.doc_id, t.pos, t.tok FROM tk t
-         |  WHERE NOT EXISTS (
-         |    SELECT 1 FROM sp WHERE sp.doc_id = t.doc_id
-         |      AND t.pos >= sp.s AND t.pos < sp.e)),
-         |tot AS (SELECT doc_id, CAST(sum(len($toksSql)) AS BIGINT)
-         |          AS n_tokens FROM documents GROUP BY 1),
-         |ka AS (SELECT doc_id, count(*) AS n_kept,
-         |         array_to_string(array_agg(tok ORDER BY pos), ' ')
-         |           AS scrub_text
-         |       FROM kept GROUP BY doc_id)
-         |SELECT t.doc_id, t.n_tokens,
-         |  coalesce(ka.n_kept, 0) AS n_kept,
-         |  md5(coalesce(ka.scrub_text, '')) AS scrub_md5
-         |FROM tot t LEFT JOIN ka USING (doc_id)
-         |ORDER BY t.doc_id""".stripMargin,
-
-    "q_simhash" ->
-      s"""WITH $simhashCte
-         |SELECT doc_id, sh AS simhash FROM sim ORDER BY doc_id""".stripMargin,
-
-    // same primitives replayed: polynomial hash over the raw text +
-    // the simhash CTE (identical to q_simhash's fingerprint)
-    "q_sql_surface" ->
-      s"""WITH $simhashCte
-         |SELECT d.doc_id, ${rhSql("d.text")} AS text_hash,
-         |       sim.sh AS fingerprint
-         |FROM documents d JOIN sim ON sim.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // semantic mirror is the brute-force all-pairs join — prefix
-    // filtering is exact, so the oracle needn't replicate it
-    "q_jaccard_near_dups" ->
-      s"""WITH $shingleCte,
-         |hs AS (SELECT doc_id, list_transform(sh, s -> ${rhSql("s")}) AS hs FROM sh),
-         |p AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE)
-         |      / (len(a.hs) + len(b.hs) - len(list_intersect(a.hs, b.hs)))
-         |      AS sim
-         |  FROM hs a JOIN hs b ON a.doc_id < b.doc_id)
-         |SELECT doc_a, doc_b, sim FROM p
-         |WHERE sim >= 0.5 ORDER BY doc_a, doc_b""".stripMargin,
-
-    "q_simhash_near_dups" -> {
-      // band bounds generated from the same constants as
-      // Dedup.simhashNearDups — Scala and SQL can't drift
-      val nBits = SimHashExpr.NumBits
-      val maxHamming = 3
-      val nb = maxHamming + 1
-      val bounds = (0 to nb).map(i => i * nBits / nb)
-      val arms = (0 until nb).map { j =>
-        val off = bounds(j)
-        val mask = (1L << (bounds(j + 1) - bounds(j))) - 1
-        s"SELECT doc_id, $j AS band, (sh >> $off) & $mask AS v FROM sim"
-      }.mkString("\n  UNION ALL ")
-      s"""WITH $simhashCte,
-         |bands AS (
-         |  $arms),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.v = b.v AND a.doc_id < b.doc_id)
-         |SELECT c.doc_a, c.doc_b,
-         |       CAST(bit_count(xor(sa.sh, sb.sh)) AS BIGINT) AS hamming
-         |FROM cand c
-         |JOIN sim sa ON sa.doc_id = c.doc_a
-         |JOIN sim sb ON sb.doc_id = c.doc_b
-         |WHERE bit_count(xor(sa.sh, sb.sh)) <= $maxHamming
-         |ORDER BY doc_a, doc_b""".stripMargin
-    },
-
-    "q_text_stats" ->
-      s"""SELECT doc_id,
-         |  len($toksSql) AS n_tokens,
-         |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))
-         |    AS n_bpe_tokens,
-         |  len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS n_punct,
-         |  len(list_distinct($toksSql)) AS n_distinct_tokens,
-         |  md5(trim(regexp_replace(regexp_replace(lower(text),
-         |    '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS fingerprint,
-         |  CASE WHEN len(text) = 0 THEN 0 ELSE
-         |    list_reduce(list_transform(range(1, len(text)+1),
-         |      i -> CAST(ascii(substr(text, i, 1)) AS BIGINT)),
-         |      (acc, x) -> (acc*31 + x) % 1000000007) END AS rhash
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_lang_quality" ->
-      s"""WITH $qualityScoredCte
-         |SELECT doc_id, lang, gl AS guessed_lang, quality
-         |FROM scored ORDER BY doc_id""".stripMargin,
-
-    // skip-gram PPMI replay: pair unfold by correlated lateral
-    // ranges, pair-event marginals, then the fixed-point log2 chain
-    // (q_kl_drift's recursion) keyed by the pair
-    "q_ppmi_cooccur" ->
-      s"""WITH RECURSIVE
-         |tok AS (SELECT $toksSql AS toks FROM documents),
-         |pr AS (
-         |  SELECT toks[i] AS w1, toks[i + j] AS w2
-         |  FROM tok,
-         |       unnest(range(1, len(toks))) AS u(i),
-         |       unnest(range(1, least(2, len(toks) - i) + 1)) AS v(j)
-         |  WHERE len(toks[i]) > 0 AND len(toks[i + j]) > 0),
-         |pc AS (SELECT w1, w2, count(*) AS c_pair FROM pr GROUP BY 1, 2),
-         |cl AS (SELECT w1, CAST(sum(c_pair) AS BIGINT) AS c_l
-         |       FROM pc GROUP BY 1),
-         |cr AS (SELECT w2, CAST(sum(c_pair) AS BIGINT) AS c_r
-         |       FROM pc GROUP BY 1),
-         |nn AS (SELECT CAST(sum(c_pair) AS BIGINT) AS n_pairs FROM pc),
-         |r AS (SELECT p.w1, p.w2, p.c_pair, l.c_l, r2.c_r,
-         |        p.c_pair * n.n_pairs AS num, l.c_l * r2.c_r AS den
-         |      FROM pc p JOIN cl l USING (w1) JOIN cr r2 USING (w2), nn n
-         |      WHERE p.c_pair >= 5
-         |        AND p.c_pair * n.n_pairs >= l.c_l * r2.c_r),
-         |et0 AS (SELECT *, length(bin(num)) - length(bin(den)) AS e0
-         |        FROM r),
-         |et AS (SELECT *, CASE WHEN num < (den << e0) THEN e0 - 1
-         |                      ELSE e0 END AS e
-         |       FROM et0),
-         |fx AS (
-         |  SELECT w1, w2, 0 AS i, CAST(num AS BIGINT) AS pp,
-         |         CAST(den << e AS BIGINT) AS qq, CAST(0 AS BIGINT) AS frac
-         |  FROM et
-         |  UNION ALL
-         |  SELECT w1, w2, i + 1, ps,
-         |         CASE WHEN ps >= 2*qs THEN 2*qs ELSE qs END,
-         |         frac*2 + CASE WHEN ps >= 2*qs THEN 1 ELSE 0 END
-         |  FROM (SELECT w1, w2, i, frac,
-         |          (pp >> sh)*(pp >> sh) AS ps, (qq >> sh)*(qq >> sh) AS qs
-         |        FROM (SELECT *, greatest(length(bin(pp)) - 31, 0) AS sh
-         |              FROM fx WHERE i < 8) s) s2)
-         |SELECT et.w1, et.w2, et.c_pair, et.c_l, et.c_r,
-         |       et.e*256 + fx.frac AS ppmi_q8
-         |FROM et JOIN fx ON fx.w1 = et.w1 AND fx.w2 = et.w2 AND fx.i = 8
-         |ORDER BY et.w1, et.w2""".stripMargin,
-
-    // τ=0.5 source mixing: sqrt is IEEE-correctly-rounded, weight
-    // quantized to integer BEFORE the normalization sum
-    "q_temperature_mix" ->
-      s"""WITH c AS (SELECT source, count(*) AS n_docs
-         |           FROM documents GROUP BY 1),
-         |w AS (SELECT source, n_docs,
-         |        CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 1000000.0)
-         |             AS BIGINT) AS weight_q
-         |      FROM c),
-         |t AS (SELECT *, CAST(sum(weight_q) OVER () AS BIGINT) AS tot
-         |      FROM w)
-         |SELECT source, n_docs, weight_q,
-         |  weight_q * 1000000 // tot AS weight_ppm,
-         |  10000 * weight_q // tot AS target_docs,
-         |  (10000 * weight_q // tot) * 1000 // n_docs AS upsample_permille
-         |FROM t ORDER BY source""".stripMargin,
-
-    // per-source value-percentile over milli-quantized quality —
-    // replays the VALUE-FREQUENCY selection exactly (cumulative
-    // below-count over the bounded frequency frame, ties share the
-    // value's percentile)
-    "q_quality_calibration" ->
-      s"""WITH $qualityScoredCte,
-         |sq AS (SELECT doc_id, source,
-         |         CAST(floor(quality * 1000.0) AS BIGINT) AS q_milli
-         |       FROM scored),
-         |f AS (SELECT source, q_milli, count(*) AS cnt
-         |      FROM sq GROUP BY 1, 2),
-         |cum AS (SELECT source, q_milli,
-         |          CAST(coalesce(sum(cnt) OVER (PARTITION BY source
-         |            ORDER BY q_milli ROWS BETWEEN UNBOUNDED PRECEDING
-         |            AND 1 PRECEDING), 0) AS BIGINT) AS below,
-         |          CAST(sum(cnt) OVER (PARTITION BY source)
-         |               AS BIGINT) AS n
-         |        FROM f)
-         |SELECT s.doc_id, s.source, s.q_milli,
-         |  c.below * 1000 // greatest(c.n - 1, 1) AS pr_permille,
-         |  (c.below * 1000 // greatest(c.n - 1, 1)) >= 500 AS keep
-         |FROM sq s JOIN cum c
-         |  ON c.source = s.source AND c.q_milli = s.q_milli
-         |ORDER BY s.doc_id""".stripMargin,
-
-    "q_cosine_topk" ->
-      s"""WITH $quantCte,
-         |p AS (
-         |  SELECT a.vec_id, b.vec_id AS neighbor_id,
-         |    ${cosineQSql("a.qe", "b.qe", "a.nn", "b.nn")} AS sim
-         |  FROM nv a JOIN nv b ON a.vec_id <> b.vec_id),
-         |r AS (SELECT vec_id, neighbor_id, sim,
-         |        row_number() OVER (PARTITION BY vec_id
-         |                           ORDER BY sim DESC, neighbor_id) AS rank
-         |      FROM p)
-         |SELECT vec_id, rank, neighbor_id, sim FROM r
-         |WHERE rank <= 5 ORDER BY vec_id, rank""".stripMargin,
-
-    // SQ8 oracle: replay the per-vector int8 quantization (scale =
-    // max|x|, code = round(x * 127 / scale)) — multiplication and
-    // division are IEEE-exact in both engines and round is
-    // half-away-from-zero in both, so codes (and therefore sims and
-    // ranks) agree bit-for-bit.
-    "q_ann_q8" ->
-      s"""WITH $quantCte8,
-         |p AS (
-         |  SELECT a.vec_id, b.vec_id AS neighbor_id,
-         |    ${cosineQSql("a.qe", "b.qe", "a.nn", "b.nn")} AS sim
-         |  FROM nv a JOIN nv b ON a.vec_id <> b.vec_id),
-         |r AS (SELECT vec_id, neighbor_id, sim,
-         |        row_number() OVER (PARTITION BY vec_id
-         |                           ORDER BY sim DESC, neighbor_id) AS rank
-         |      FROM p)
-         |SELECT vec_id, rank, neighbor_id, sim FROM r
-         |WHERE rank <= 5 ORDER BY vec_id, rank""".stripMargin,
-
-    // same construction as the q_ann_ivf oracle over the SQ8 base —
-    // quantCte8 emits the same `nv` relation name, so the IVF body
-    // (centroid ranks, nprobe probes, cluster-local search) is shared
-    // verbatim
-    "q_ann_ivf_q8" ->
-      s"""WITH $quantCte8,
-         |$ivfSearchCtes
-         |SELECT vec_id, rank, neighbor_id, sim FROM r
-         |WHERE rank <= 5 ORDER BY vec_id, rank""".stripMargin,
-
-    "q_ann_ivf" ->
-      s"""WITH $quantCte,
-         |$ivfSearchCtes
-         |SELECT vec_id, rank, neighbor_id, sim FROM r
-         |WHERE rank <= 5 ORDER BY vec_id, rank""".stripMargin,
-
-    // mirrors Similarity.recallAtK: the IVF pipeline (shared CTEs)
-    // joined against the brute-force ground truth — set membership
-    // only, so the approximate path's EVALUATION is integer-exact
-    "q_ann_recall" ->
-      s"""WITH $quantCte,
-         |$ivfSearchCtes,
-         |ar AS (SELECT vec_id, neighbor_id FROM r WHERE rank <= 5),
-         |bp AS (
-         |  SELECT a.vec_id, b.vec_id AS neighbor_id,
-         |    ${cosineQSql("a.qe", "b.qe", "a.nn", "b.nn")} AS sim
-         |  FROM nv a JOIN nv b ON a.vec_id <> b.vec_id),
-         |er AS (SELECT vec_id, neighbor_id FROM (
-         |         SELECT vec_id, neighbor_id,
-         |           row_number() OVER (PARTITION BY vec_id
-         |             ORDER BY sim DESC, neighbor_id) AS rank
-         |         FROM bp) WHERE rank <= 5),
-         |gt AS (SELECT vec_id, count(*) AS n_exact FROM er GROUP BY vec_id),
-         |h AS (SELECT e.vec_id, count(*) AS n_hits
-         |      FROM er e JOIN ar a
-         |        ON a.vec_id = e.vec_id AND a.neighbor_id = e.neighbor_id
-         |      GROUP BY e.vec_id)
-         |SELECT g.vec_id, g.n_exact,
-         |  coalesce(h.n_hits, 0) AS n_hits,
-         |  coalesce(h.n_hits, 0) * 1000 // g.n_exact AS recall_permille
-         |FROM gt g LEFT JOIN h USING (vec_id)
-         |ORDER BY g.vec_id""".stripMargin,
-
-    // the probe-count tradeoff: one shared centroid/assignment chain
-    // (asg is nprobe-independent), three probe depths, one brute
-    // ground truth — corpus recall@5 per nprobe, integer-exact
-    "q_ann_recall_sweep" -> {
-      val perP = Seq(1, 3, 5).map { p =>
-        s"""pr$p AS (SELECT vec_id, cid AS cluster, qe, nn
-           |          FROM asg WHERE crank <= $p),
-           |cd$p AS (
-           |  SELECT a.vec_id, b.neighbor_id,
-           |    ${cosineQSql("a.qe", "b.qe", "a.nn", "b.nn")} AS sim
-           |  FROM pr$p a JOIN idx b
-           |    ON a.cluster = b.cluster AND a.vec_id <> b.neighbor_id),
-           |ar$p AS (SELECT vec_id, neighbor_id FROM (
-           |           SELECT vec_id, neighbor_id,
-           |             row_number() OVER (PARTITION BY vec_id
-           |               ORDER BY sim DESC, neighbor_id) AS rank
-           |           FROM cd$p) WHERE rank <= 5),
-           |h$p AS (SELECT e.vec_id, count(*) AS n_hits
-           |        FROM er e JOIN ar$p a
-           |          ON a.vec_id = e.vec_id
-           |         AND a.neighbor_id = e.neighbor_id
-           |        GROUP BY e.vec_id),
-           |s$p AS (SELECT $p AS nprobe,
-           |          CAST(sum(coalesce(h.n_hits, 0)) AS BIGINT) AS n_hits,
-           |          CAST(sum(g.n_exact) AS BIGINT) AS n_exact
-           |        FROM gt g LEFT JOIN h$p h USING (vec_id))""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $quantCte,
-         |$ivfSearchCtes,
-         |bp AS (
-         |  SELECT a.vec_id, b.vec_id AS neighbor_id,
-         |    ${cosineQSql("a.qe", "b.qe", "a.nn", "b.nn")} AS sim
-         |  FROM nv a JOIN nv b ON a.vec_id <> b.vec_id),
-         |er AS (SELECT vec_id, neighbor_id FROM (
-         |         SELECT vec_id, neighbor_id,
-         |           row_number() OVER (PARTITION BY vec_id
-         |             ORDER BY sim DESC, neighbor_id) AS rank
-         |         FROM bp) WHERE rank <= 5),
-         |gt AS (SELECT vec_id, count(*) AS n_exact FROM er GROUP BY vec_id),
-         |$perP
-         |SELECT nprobe, n_hits, n_exact,
-         |  n_hits * 1000 // n_exact AS recall_permille
-         |FROM (SELECT * FROM s1 UNION ALL SELECT * FROM s3
-         |      UNION ALL SELECT * FROM s5)
-         |ORDER BY nprobe""".stripMargin
-    },
-
-    // trained-IVF: the shared Lloyd chain (seed cents → tc1 → tc2),
-    // then the IVF search body verbatim over the trained relation
-    "q_ann_ivf_trained" ->
-      s"""WITH $quantCte,
-         |$trainedCentsCtes,
-         |${ivfSearchCtesOver(s"tc${Similarity.IvfTrainSteps}")}
-         |SELECT vec_id, rank, neighbor_id, sim FROM r
-         |WHERE rank <= 5 ORDER BY vec_id, rank""".stripMargin,
-
-    // seeded-vs-trained recall@5 against one brute ground truth: the
-    // seeded branch replays the q_ann_recall construction; the trained
-    // branch swaps in the Lloyd-refined centroids. Set-membership
-    // counts + truncating div — integer-exact.
-    "q_ann_trained_recall" -> {
-      def branch(cents: String, tag: String): String =
-        s"""${tag}asg AS (
-           |  SELECT vec_id, cid, qe, nn,
-           |    row_number() OVER (PARTITION BY vec_id
-           |                       ORDER BY csim DESC, cid) AS crank
-           |  FROM (SELECT v.vec_id, c.cid, v.qe, v.nn,
-           |          ${cosineQSql("v.qe", "c.cqe", "v.nn", "c.cnn")} AS csim
-           |        FROM nv v CROSS JOIN $cents c)),
-           |${tag}idx AS (SELECT vec_id AS neighbor_id, cid AS cluster, qe, nn
-           |        FROM ${tag}asg WHERE crank = 1),
-           |${tag}pr AS (SELECT vec_id, cid AS cluster, qe, nn
-           |           FROM ${tag}asg WHERE crank <= 3),
-           |${tag}cd AS (
-           |  SELECT a.vec_id, b.neighbor_id,
-           |    ${cosineQSql("a.qe", "b.qe", "a.nn", "b.nn")} AS sim
-           |  FROM ${tag}pr a JOIN ${tag}idx b
-           |    ON a.cluster = b.cluster AND a.vec_id <> b.neighbor_id),
-           |${tag}ar AS (SELECT vec_id, neighbor_id FROM (
-           |         SELECT vec_id, neighbor_id,
-           |           row_number() OVER (PARTITION BY vec_id
-           |             ORDER BY sim DESC, neighbor_id) AS rank
-           |         FROM ${tag}cd) WHERE rank <= 5),
-           |${tag}h AS (SELECT e.vec_id, count(*) AS n_hits
-           |        FROM er e JOIN ${tag}ar a
-           |          ON a.vec_id = e.vec_id
-           |         AND a.neighbor_id = e.neighbor_id
-           |        GROUP BY e.vec_id),
-           |${tag}s AS (SELECT CAST(sum(coalesce(h.n_hits, 0)) AS BIGINT) AS n_hits,
-           |         CAST(sum(g.n_exact) AS BIGINT) AS n_exact
-           |       FROM gt g LEFT JOIN ${tag}h h USING (vec_id))""".stripMargin
-      s"""WITH $quantCte,
-         |$trainedCentsCtes,
-         |bp AS (
-         |  SELECT a.vec_id, b.vec_id AS neighbor_id,
-         |    ${cosineQSql("a.qe", "b.qe", "a.nn", "b.nn")} AS sim
-         |  FROM nv a JOIN nv b ON a.vec_id <> b.vec_id),
-         |er AS (SELECT vec_id, neighbor_id FROM (
-         |         SELECT vec_id, neighbor_id,
-         |           row_number() OVER (PARTITION BY vec_id
-         |             ORDER BY sim DESC, neighbor_id) AS rank
-         |         FROM bp) WHERE rank <= 5),
-         |gt AS (SELECT vec_id, count(*) AS n_exact FROM er GROUP BY vec_id),
-         |${branch("cents", "sd")},
-         |${branch(s"tc${Similarity.IvfTrainSteps}", "tr")}
-         |SELECT variant, n_hits, n_exact,
-         |  n_hits * 1000 // n_exact AS recall_permille
-         |FROM (SELECT 'seeded' AS variant, * FROM sds
-         |      UNION ALL SELECT 'trained', * FROM trs)
-         |ORDER BY variant""".stripMargin
-    },
-
-    // the recall MATRIX: per variant one shared assignment ranking
-    // (asg is nprobe-independent), per (variant, nprobe) the prune →
-    // candidate → top-5 → hit-count chain, all against one brute
-    // ground truth — the q_ann_recall_sweep and q_ann_trained_recall
-    // constructions composed
-    "q_ann_trained_recall_sweep" -> {
-      def asgCtes(cents: String, tag: String): String =
-        s"""${tag}asg AS (
-           |  SELECT vec_id, cid, qe, nn,
-           |    row_number() OVER (PARTITION BY vec_id
-           |                       ORDER BY csim DESC, cid) AS crank
-           |  FROM (SELECT v.vec_id, c.cid, v.qe, v.nn,
-           |          ${cosineQSql("v.qe", "c.cqe", "v.nn", "c.cnn")} AS csim
-           |        FROM nv v CROSS JOIN $cents c)),
-           |${tag}idx AS (SELECT vec_id AS neighbor_id, cid AS cluster, qe, nn
-           |        FROM ${tag}asg WHERE crank = 1)""".stripMargin
-      def probeCtes(tag: String, variant: String, p: Int): String =
-        s"""${tag}pr$p AS (SELECT vec_id, cid AS cluster, qe, nn
-           |           FROM ${tag}asg WHERE crank <= $p),
-           |${tag}cd$p AS (
-           |  SELECT a.vec_id, b.neighbor_id,
-           |    ${cosineQSql("a.qe", "b.qe", "a.nn", "b.nn")} AS sim
-           |  FROM ${tag}pr$p a JOIN ${tag}idx b
-           |    ON a.cluster = b.cluster AND a.vec_id <> b.neighbor_id),
-           |${tag}ar$p AS (SELECT vec_id, neighbor_id FROM (
-           |         SELECT vec_id, neighbor_id,
-           |           row_number() OVER (PARTITION BY vec_id
-           |             ORDER BY sim DESC, neighbor_id) AS rank
-           |           FROM ${tag}cd$p) WHERE rank <= 5),
-           |${tag}h$p AS (SELECT e.vec_id, count(*) AS n_hits
-           |        FROM er e JOIN ${tag}ar$p a
-           |          ON a.vec_id = e.vec_id
-           |         AND a.neighbor_id = e.neighbor_id
-           |        GROUP BY e.vec_id),
-           |${tag}s$p AS (SELECT '$variant' AS variant, $p AS nprobe,
-           |          CAST(sum(coalesce(h.n_hits, 0)) AS BIGINT) AS n_hits,
-           |          CAST(sum(g.n_exact) AS BIGINT) AS n_exact
-           |        FROM gt g LEFT JOIN ${tag}h$p h USING (vec_id))""".stripMargin
-      val branches = Seq("sd" -> ("seeded", "cents"),
-          "tr" -> ("trained", s"tc${Similarity.IvfTrainSteps}"))
-      val allCtes = branches.map { case (tag, (variant, cents)) =>
-        (asgCtes(cents, tag) +: Seq(1, 3, 5).map(p =>
-          probeCtes(tag, variant, p))).mkString(",\n")
-      }.mkString(",\n")
-      val unions = (for { (tag, _) <- branches; p <- Seq(1, 3, 5) }
-        yield s"SELECT * FROM ${tag}s$p").mkString(" UNION ALL ")
-      s"""WITH $quantCte,
-         |$trainedCentsCtes,
-         |bp AS (
-         |  SELECT a.vec_id, b.vec_id AS neighbor_id,
-         |    ${cosineQSql("a.qe", "b.qe", "a.nn", "b.nn")} AS sim
-         |  FROM nv a JOIN nv b ON a.vec_id <> b.vec_id),
-         |er AS (SELECT vec_id, neighbor_id FROM (
-         |         SELECT vec_id, neighbor_id,
-         |           row_number() OVER (PARTITION BY vec_id
-         |             ORDER BY sim DESC, neighbor_id) AS rank
-         |         FROM bp) WHERE rank <= 5),
-         |gt AS (SELECT vec_id, count(*) AS n_exact FROM er GROUP BY vec_id),
-         |$allCtes
-         |SELECT variant, nprobe, n_hits, n_exact,
-         |  n_hits * 1000 // n_exact AS recall_permille
-         |FROM ($unions)
-         |ORDER BY variant, nprobe""".stripMargin
-    },
-
-    // mirrors Similarity.kmeansStep: argmax-cosine assignment (same
-    // deterministic (csim desc, cid) order as the IVF oracle), then
-    // integer sums per (cluster, dimension) with ONE double division
-    "q_kmeans_step" ->
-      s"""WITH $quantCte,
-         |${centsSql().replace("cents AS (", "kc AS (")},
-         |kb AS (
-         |  SELECT vec_id, cid FROM (
-         |    SELECT v.vec_id, c.cid,
-         |      row_number() OVER (PARTITION BY v.vec_id
-         |        ORDER BY ${cosineQSql("v.qe", "c.cqe", "v.nn", "c.cnn")} DESC,
-         |                 c.cid) AS r
-         |    FROM nv v CROSS JOIN kc c)
-         |  WHERE r = 1),
-         |ke AS (
-         |  SELECT b.cid,
-         |    unnest(range(len(v.qe))) AS pos,
-         |    unnest(v.qe) AS val
-         |  FROM kb b JOIN nv v USING (vec_id))
-         |SELECT cid, CAST(count(*) AS BIGINT) AS n_members,
-         |  CAST(pos AS BIGINT) AS pos,
-         |  CAST(sum(val) AS DOUBLE) / count(*) AS m
-         |FROM ke GROUP BY cid, pos ORDER BY cid, pos""".stripMargin,
-
-    // mirrors GraphOps.triangleCount on the part co-occurrence graph:
-    // canonical lo<hi edges, degree-ordered orientation, wedge
-    // closure as an equi-join
-    "q_triangle_count" ->
-      """WITH pp AS (
-        |  SELECT DISTINCT a.l_partkey AS lo, b.l_partkey AS hi
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        |dg AS (
-        |  SELECT id, count(*) AS d FROM (
-        |    SELECT lo AS id FROM pp UNION ALL SELECT hi FROM pp)
-        |  GROUP BY id),
-        |o AS (
-        |  SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND pp.lo < pp.hi)
-        |              THEN pp.lo ELSE pp.hi END AS src,
-        |         CASE WHEN da.d < db.d OR (da.d = db.d AND pp.lo < pp.hi)
-        |              THEN pp.hi ELSE pp.lo END AS dst
-        |  FROM pp JOIN dg da ON da.id = pp.lo JOIN dg db ON db.id = pp.hi),
-        |w AS (
-        |  SELECT least(e1.dst, e2.dst) AS lo, greatest(e1.dst, e2.dst) AS hi
-        |  FROM o e1 JOIN o e2 ON e1.src = e2.src AND e1.dst < e2.dst)
-        |SELECT (SELECT count(*) FROM dg) AS n_vertices,
-        |       (SELECT count(*) FROM pp) AS n_edges,
-        |       (SELECT count(*) FROM w JOIN pp USING (lo, hi)) AS n_triangles""".stripMargin,
-
-    "q_edge_ingest" ->
-      """SELECT count(*) AS n_edges,
-        |       count(DISTINCT l_orderkey*2) AS n_src,
-        |       count(DISTINCT l_partkey*2+1) AS n_dst,
-        |       min(l_orderkey*2) AS min_src,
-        |       max(l_partkey*2+1) AS max_dst
-        |FROM lineitem""".stripMargin,
-
-    "q_adjacency" ->
-      s"""WITH $copurchaseEdgesSql
-         |SELECT src AS id, count(*) AS degree,
-         |       min(dst) AS min_nb, max(dst) AS max_nb
-         |FROM edges GROUP BY src ORDER BY id""".stripMargin,
-
-    "q_bfs_copurchase" ->
-      s"""WITH RECURSIVE $copurchaseEdgesSql,
-         |bfs(id, dist) AS (
-         |  SELECT CAST(2 AS BIGINT) AS id, CAST(0 AS BIGINT) AS dist
-         |  UNION
-         |  SELECT e.dst, bfs.dist + 1 FROM bfs JOIN edges e ON e.src = bfs.id
-         |  WHERE bfs.dist < 40
-         |)
-         |SELECT id, min(dist) AS dist FROM bfs GROUP BY id ORDER BY id""".stripMargin,
-
-    // level-unrolled quantized Brandes replay — see betweennessOracleSql
-    "q_betweenness_sample" -> betweennessOracleSql(Seq(2L, 4L)),
-
-    // deterministic-HLL sketch replay — see neighborhoodOracleSql
-    "q_neighborhood_fn" -> neighborhoodOracleSql(2),
-
-    // per-round sketch sums + the 90%-coverage pick — see
-    // effectiveDiameterOracleSql (same materialized rounds)
-    "q_effective_diameter" -> effectiveDiameterOracleSql(6),
-
-    // two recursive-CTE BFS maps + per-row harmonic arithmetic (pure
-    // IEEE division in a fixed order — bit-identical across engines)
-    "q_closeness_sample" ->
-      s"""WITH RECURSIVE $copurchaseEdgesSql,
-         |b0(id, dist) AS (
-         |  SELECT CAST(2 AS BIGINT), CAST(0 AS BIGINT)
-         |  UNION
-         |  SELECT e.dst, b0.dist + 1 FROM b0 JOIN edges e ON e.src = b0.id
-         |  WHERE b0.dist < 40),
-         |b1(id, dist) AS (
-         |  SELECT CAST(4 AS BIGINT), CAST(0 AS BIGINT)
-         |  UNION
-         |  SELECT e.dst, b1.dist + 1 FROM b1 JOIN edges e ON e.src = b1.id
-         |  WHERE b1.dist < 40),
-         |d0 AS (SELECT id, min(dist) AS dist_0 FROM b0 GROUP BY id),
-         |d1 AS (SELECT id, min(dist) AS dist_1 FROM b1 GROUP BY id),
-         |v AS (SELECT DISTINCT src AS id FROM edges)
-         |SELECT v.id, d0.dist_0, d1.dist_1,
-         |  (CASE WHEN d0.dist_0 > 0 THEN CAST(1 AS DOUBLE) / d0.dist_0
-         |        ELSE CAST(0 AS DOUBLE) END +
-         |   CASE WHEN d1.dist_1 > 0 THEN CAST(1 AS DOUBLE) / d1.dist_1
-         |        ELSE CAST(0 AS DOUBLE) END) AS harmonic
-         |FROM v LEFT JOIN d0 ON v.id = d0.id LEFT JOIN d1 ON v.id = d1.id
-         |ORDER BY v.id""".stripMargin,
-
-    "q_top_tokens" ->
-      s"""SELECT token, count(*) AS n
-         |FROM (SELECT unnest($toksSql) AS token FROM documents)
-         |WHERE len(token) > 0
-         |GROUP BY token ORDER BY n DESC, token LIMIT 20""".stripMargin,
-
-    // full sketch replay — see cmsOracleSql
-    "q_heavy_hitters" -> cmsOracleSql,
-
-    // PQ replay: same hash-order codebooks, same per-(vector,
-    // subvector, centroid) exact integer L2² table, same argmin
-    // encoding (d2 then cidx), same ADC sum — the adc join keys the
-    // query's distance table on the CANDIDATE's code, which is the
-    // relational form of the LUT lookup
-    "q_ann_pq" -> (pqOraclePrefix +
-      """,
-         |r AS (SELECT vec_id, neighbor_id, dist,
-         |        CAST(row_number() OVER (PARTITION BY vec_id
-         |               ORDER BY dist, neighbor_id) AS INT) AS rank
-         |      FROM adc)
-         |SELECT vec_id, rank, neighbor_id, dist FROM r
-         |WHERE rank <= 5 ORDER BY vec_id, rank""".stripMargin),
-
-    // PQ shortlist + exact integer L2² re-rank of ONLY the shortlist
-    "q_ann_pq_rerank" -> (pqOraclePrefix + s""",
-         |short AS (SELECT vec_id, neighbor_id FROM (
-         |    SELECT vec_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY vec_id
-         |        ORDER BY dist, neighbor_id) AS rn FROM adc)
-         |  WHERE rn <= ${graft.operators.Similarity.PqShortlist}),
-         |rer AS (
-         |  SELECT sh.vec_id, sh.neighbor_id,
-         |    CAST(a.nn + b.nn - 2*${dotSql("a.qe", "b.qe")} AS BIGINT) AS dist
-         |  FROM short sh
-         |  JOIN nv a ON a.vec_id = sh.vec_id
-         |  JOIN nv b ON b.vec_id = sh.neighbor_id),
-         |r AS (SELECT vec_id, neighbor_id, dist,
-         |        CAST(row_number() OVER (PARTITION BY vec_id
-         |               ORDER BY dist, neighbor_id) AS INT) AS rank
-         |      FROM rer)
-         |SELECT vec_id, rank, neighbor_id, dist FROM r
-         |WHERE rank <= 5 ORDER BY vec_id, rank""".stripMargin),
-
-    // IVF-PQ: the q_ann_ivf coarse CTEs (cents/asg/idx/probes over
-    // the same nv base) restrict the PQ adc pair stream to
-    // cluster-local candidates; ranking stays integer ADC L2² asc
-    "q_ann_ivf_pq" -> (pqOraclePrefix + s""",
-         |${centsSql()},
-         |asg AS (
-         |  SELECT vec_id, cid,
-         |    row_number() OVER (PARTITION BY vec_id
-         |                       ORDER BY csim DESC, cid) AS crank
-         |  FROM (SELECT v.vec_id, c.cid,
-         |          ${cosineQSql("v.qe", "c.cqe", "v.nn", "c.cnn")} AS csim
-         |        FROM nv v CROSS JOIN cents c)),
-         |idx AS (SELECT vec_id AS neighbor_id, cid AS cluster
-         |        FROM asg WHERE crank = 1),
-         |probes AS (SELECT vec_id, cid AS cluster
-         |           FROM asg WHERE crank <= 3),
-         |p AS (
-         |  SELECT ad.vec_id, ad.neighbor_id, ad.dist
-         |  FROM adc ad
-         |  JOIN probes pr ON pr.vec_id = ad.vec_id
-         |  JOIN idx ix ON ix.neighbor_id = ad.neighbor_id
-         |             AND ix.cluster = pr.cluster),
-         |r AS (SELECT vec_id, neighbor_id, dist,
-         |        CAST(row_number() OVER (PARTITION BY vec_id
-         |               ORDER BY dist, neighbor_id) AS INT) AS rank
-         |      FROM p)
-         |SELECT vec_id, rank, neighbor_id, dist FROM r
-         |WHERE rank <= 5 ORDER BY vec_id, rank""".stripMargin),
-
-    "q_asof_attribution" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-        |                  value, event_type FROM events),
-        |p AS (SELECT user_id, event_id, ts FROM e WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id, ts, value FROM e WHERE event_type = 'view')
-        |SELECT p.event_id, p.user_id, p.ts,
-        |       v.ts AS asof_ts, v.value AS asof_value
-        |FROM p ASOF JOIN v ON p.user_id = v.user_id AND v.ts < p.ts
-        |ORDER BY p.event_id""".stripMargin,
-
-    "q_moving_sum" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-        |                  value FROM events)
-        |SELECT user_id, event_id, ts,
-        |       CAST(sum(CAST(value AS DECIMAL(18,6))) OVER w AS DOUBLE)
-        |         AS moving_value,
-        |       count(*) OVER w AS n_window
-        |FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |                    ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, ts, event_id""".stripMargin,
-
-    // positional phrase replay: 1-based list index → 0-based pos,
-    // each later term's postings shifted back by its offset, then the
-    // same equi-join chain
-    "q_phrase_search" ->
-      """WITH t AS (SELECT doc_id,
-        |             string_split_regex(lower(text), '\s+') AS toks
-        |           FROM documents),
-        |p AS (SELECT doc_id, u.pos, u.term FROM (
-        |        SELECT doc_id, unnest(list_transform(range(1, len(toks)+1),
-        |          i -> struct_pack(pos := i - 1, term := toks[i]))) AS u
-        |        FROM t)),
-        |a AS (SELECT doc_id, pos FROM p WHERE term = 'value'),
-        |b AS (SELECT doc_id, pos - 1 AS pos FROM p WHERE term = 'table'),
-        |c AS (SELECT doc_id, pos - 2 AS pos FROM p WHERE term = 'part'),
-        |m AS (SELECT a.doc_id, a.pos
-        |      FROM a JOIN b USING (doc_id, pos) JOIN c USING (doc_id, pos))
-        |SELECT doc_id, count(*) AS n_matches,
-        |       CAST(min(pos) AS INTEGER) AS first_pos
-        |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // BM25 replay: the 8-round fixed-point log2 runs as a recursive
-    // CTE over the |Q|-row term frame (pure integer shifts/multiplies,
-    // bit-for-bit the engine's chain); scoring is the same one
-    // truncating BIGINT division per (doc, term)
-    "q_bm25_topk" ->
-      s"""WITH RECURSIVE
-         |tok AS (SELECT doc_id, unnest($toksSql) AS tok FROM documents),
-         |tk AS (SELECT doc_id, tok FROM tok WHERE len(tok) > 0),
-         |dl AS (SELECT doc_id, count(*) AS dl FROM tk GROUP BY doc_id),
-         |gl AS (SELECT count(*) AS n, CAST(sum(dl) AS BIGINT) AS a FROM dl),
-         |tf AS (SELECT doc_id, tok AS term, count(*) AS tf FROM tk
-         |       WHERE tok IN ('dup','hash','join','vector')
-         |       GROUP BY doc_id, tok),
-         |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-         |e0t AS (SELECT term, 2*n + 2 AS p, 2*df + 1 AS q,
-         |          length(bin(2*n + 2)) - length(bin(2*df + 1)) AS e0
-         |        FROM dfq, gl),
-         |et AS (SELECT term, p, q,
-         |         CASE WHEN p < (q << e0) THEN e0 - 1 ELSE e0 END AS e
-         |       FROM e0t),
-         |fx AS (
-         |  SELECT term, 0 AS i, CAST(p AS BIGINT) AS pp,
-         |         CAST(q << e AS BIGINT) AS qq, CAST(0 AS BIGINT) AS frac
-         |  FROM et
-         |  UNION ALL
-         |  SELECT term, i + 1, ps,
-         |         CASE WHEN ps >= 2*qs THEN 2*qs ELSE qs END,
-         |         frac*2 + CASE WHEN ps >= 2*qs THEN 1 ELSE 0 END
-         |  FROM (SELECT term, i, frac,
-         |          (pp >> sh)*(pp >> sh) AS ps, (qq >> sh)*(qq >> sh) AS qs
-         |        FROM (SELECT *, greatest(length(bin(pp)) - 31, 0) AS sh
-         |              FROM fx WHERE i < 8) s) s2),
-         |idf AS (SELECT et.term, et.e*256 + fx.frac AS idf
-         |        FROM et JOIN fx ON fx.term = et.term AND fx.i = 8),
-         |sc AS (SELECT tf.doc_id,
-         |         CAST(sum(idf.idf*22*a*tf
-         |                  // (10*a*tf + 3*a + 9*dl.dl*n)) AS BIGINT)
-         |           AS score,
-         |         count(*) AS matched
-         |       FROM tf JOIN dl USING (doc_id) JOIN idf USING (term), gl
-         |       GROUP BY tf.doc_id)
-         |SELECT CAST(row_number() OVER (ORDER BY score DESC, doc_id)
-         |            AS INTEGER) AS rank,
-         |       doc_id, score, matched
-         |FROM (SELECT * FROM sc ORDER BY score DESC, doc_id LIMIT 10)
-         |ORDER BY rank""".stripMargin,
-
-    // KL drift replay: the same 8-round fixed-point log2 chain as the
-    // bm25 oracle, run over the UNION-vocab frame on the magnitude
-    // ratio big/small, sign restored from num vs den; contributions
-    // raw; global KLs via the same sign-safe truncating division
-    "q_kl_drift" ->
-      s"""WITH RECURSIVE
-         |tok AS (SELECT doc_id, unnest($toksSql) AS tok FROM documents),
-         |tk AS (SELECT doc_id % 2 = 0 AS in_a, tok AS token FROM tok
-         |       WHERE len(tok) > 0),
-         |cnt AS (SELECT token,
-         |          CAST(sum(CASE WHEN in_a THEN 1 ELSE 0 END) AS BIGINT) AS c_a,
-         |          CAST(sum(CASE WHEN in_a THEN 0 ELSE 1 END) AS BIGINT) AS c_b
-         |        FROM tk GROUP BY token),
-         |gl AS (SELECT CAST(sum(c_a) AS BIGINT) AS ca,
-         |              CAST(sum(c_b) AS BIGINT) AS cb,
-         |              count(*) AS v FROM cnt),
-         |r AS (SELECT token, c_a, c_b,
-         |        (c_a + 1)*(cb + v) AS num, (c_b + 1)*(ca + v) AS den
-         |      FROM cnt, gl),
-         |et0 AS (SELECT token, num, den,
-         |          greatest(num, den) AS p, least(num, den) AS q,
-         |          length(bin(greatest(num, den)))
-         |            - length(bin(least(num, den))) AS e0
-         |        FROM r),
-         |et AS (SELECT token, num, den, p, q,
-         |         CASE WHEN p < (q << e0) THEN e0 - 1 ELSE e0 END AS e
-         |       FROM et0),
-         |fx AS (
-         |  SELECT token, 0 AS i, CAST(p AS BIGINT) AS pp,
-         |         CAST(q << e AS BIGINT) AS qq, CAST(0 AS BIGINT) AS frac
-         |  FROM et
-         |  UNION ALL
-         |  SELECT token, i + 1, ps,
-         |         CASE WHEN ps >= 2*qs THEN 2*qs ELSE qs END,
-         |         frac*2 + CASE WHEN ps >= 2*qs THEN 1 ELSE 0 END
-         |  FROM (SELECT token, i, frac,
-         |          (pp >> sh)*(pp >> sh) AS ps, (qq >> sh)*(qq >> sh) AS qs
-         |        FROM (SELECT *, greatest(length(bin(pp)) - 31, 0) AS sh
-         |              FROM fx WHERE i < 8) s) s2),
-         |sl AS (SELECT et.token, r.c_a, r.c_b,
-         |         CASE WHEN et.num >= et.den THEN et.e*256 + fx.frac
-         |              ELSE -(et.e*256 + fx.frac) END AS slog2_q8
-         |       FROM et JOIN fx ON fx.token = et.token AND fx.i = 8
-         |       JOIN r ON r.token = et.token),
-         |w AS (SELECT token, c_a, c_b, slog2_q8,
-         |        (c_a + 1)*slog2_q8 AS contrib_q8,
-         |        (c_b + 1)*(-slog2_q8) AS w_ba
-         |      FROM sl),
-         |kl AS (SELECT
-         |    CASE WHEN s_ab >= 0 THEN (1000*s_ab) // ((ca + v)*256)
-         |         ELSE -((1000*(-s_ab)) // ((ca + v)*256)) END AS kl_ab_milli,
-         |    CASE WHEN s_ba >= 0 THEN (1000*s_ba) // ((cb + v)*256)
-         |         ELSE -((1000*(-s_ba)) // ((cb + v)*256)) END AS kl_ba_milli
-         |  FROM (SELECT CAST(sum(contrib_q8) AS BIGINT) AS s_ab,
-         |               CAST(sum(w_ba) AS BIGINT) AS s_ba FROM w), gl)
-         |SELECT CAST(row_number() OVER (ORDER BY contrib_q8 DESC, token)
-         |            AS INTEGER) AS rank,
-         |       token, c_a, c_b, slog2_q8, contrib_q8,
-         |       kl_ab_milli, kl_ba_milli
-         |FROM (SELECT * FROM w ORDER BY contrib_q8 DESC, token LIMIT 20), kl
-         |ORDER BY rank""".stripMargin,
-
-    // unigram perplexity replay: model chain over the union vocab
-    // (numerator CA+V >= denominator c_a+1 always — no sign branch),
-    // candidate tf join, one truncating division per doc
-    "q_unigram_ppl" ->
-      s"""WITH RECURSIVE
-         |tok AS (SELECT doc_id, unnest($toksSql) AS tok FROM documents),
-         |tk AS (SELECT doc_id, doc_id % 2 = 0 AS in_a, tok AS token
-         |       FROM tok WHERE len(tok) > 0),
-         |voc AS (SELECT token,
-         |          CAST(sum(CASE WHEN in_a THEN 1 ELSE 0 END) AS BIGINT) AS c_a
-         |        FROM tk GROUP BY token),
-         |gl AS (SELECT CAST(sum(c_a) AS BIGINT) AS ca, count(*) AS v
-         |       FROM voc),
-         |et0 AS (SELECT token, ca + v AS p, c_a + 1 AS q,
-         |          length(bin(ca + v)) - length(bin(c_a + 1)) AS e0
-         |        FROM voc, gl),
-         |et AS (SELECT token, p, q,
-         |         CASE WHEN p < (q << e0) THEN e0 - 1 ELSE e0 END AS e
-         |       FROM et0),
-         |fx AS (
-         |  SELECT token, 0 AS i, CAST(p AS BIGINT) AS pp,
-         |         CAST(q << e AS BIGINT) AS qq, CAST(0 AS BIGINT) AS frac
-         |  FROM et
-         |  UNION ALL
-         |  SELECT token, i + 1, ps,
-         |         CASE WHEN ps >= 2*qs THEN 2*qs ELSE qs END,
-         |         frac*2 + CASE WHEN ps >= 2*qs THEN 1 ELSE 0 END
-         |  FROM (SELECT token, i, frac,
-         |          (pp >> sh)*(pp >> sh) AS ps, (qq >> sh)*(qq >> sh) AS qs
-         |        FROM (SELECT *, greatest(length(bin(pp)) - 31, 0) AS sh
-         |              FROM fx WHERE i < 8) s) s2),
-         |model AS (SELECT et.token, et.e*256 + fx.frac AS nll_tok_q8
-         |          FROM et JOIN fx ON fx.token = et.token AND fx.i = 8),
-         |ctf AS (SELECT doc_id, token, count(*) AS tf FROM tk
-         |        WHERE NOT in_a GROUP BY doc_id, token)
-         |SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tok,
-         |       CAST(sum(tf*nll_tok_q8) AS BIGINT) AS nll_q8,
-         |       CAST((1000*CAST(sum(tf*nll_tok_q8) AS BIGINT))
-         |            // (256*CAST(sum(tf) AS BIGINT)) AS BIGINT) AS bits_milli
-         |FROM ctf JOIN model USING (token)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // hourly LOCF resample: same (ts, event_id) within-bucket argmax,
-    // same per-key [min,max] grid (generate_series), IGNORE NULLS
-    // carry; values pass through untouched so doubles stay bit-equal
-    "q_timeseries_fill" ->
-      """WITH e AS (SELECT user_id AS k,
-        |  epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS bi,
-        |  epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id AS i, value AS v
-        |  FROM events),
-        |obs AS (SELECT k, bi, count(*) AS n_obs,
-        |          CAST(max(row(us, i, v))
-        |               AS ROW(us BIGINT, i BIGINT, v DOUBLE)) AS m
-        |        FROM e GROUP BY 1, 2),
-        |spans AS (SELECT k, min(bi) AS b0, max(bi) AS b1 FROM obs GROUP BY 1),
-        |grid AS (SELECT k, unnest(generate_series(b0, b1)) AS bi FROM spans),
-        |j AS (SELECT g.k, g.bi, o.n_obs, o.m FROM grid g
-        |      LEFT JOIN obs o ON o.k = g.k AND o.bi = g.bi)
-        |SELECT k AS user_id, make_timestamp(bi * 3600000000) AS bucket_ts,
-        |       COALESCE(n_obs, 0) AS n_obs,
-        |       CAST(CASE WHEN m IS NULL THEN 1 ELSE 0 END AS BIGINT)
-        |         AS is_gap,
-        |       last_value(m.v IGNORE NULLS) OVER (
-        |         PARTITION BY k ORDER BY bi
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |         AS v_filled
-        |FROM j ORDER BY user_id, bucket_ts""".stripMargin,
-
-    // grouped OLS replay: identical shifted sums and integer slope /
-    // intercept formulas; floor(value*100) is the same IEEE multiply
-    // + floor; zero x-variance keys guard the // with NULL
-    "q_user_trend" ->
-      """WITH e AS (SELECT user_id AS k,
-        |  epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS bi,
-        |  CAST(floor(value * 100) AS BIGINT) AS y FROM events),
-        |a AS (SELECT k, count(*) AS n, min(bi) AS b0,
-        |        CAST(sum(bi) AS BIGINT) AS sbi,
-        |        CAST(sum(y) AS BIGINT) AS sy,
-        |        CAST(sum(bi * y) AS BIGINT) AS sbiy,
-        |        CAST(sum(bi * bi) AS BIGINT) AS sbii
-        |      FROM e GROUP BY k),
-        |s AS (SELECT k, n, sbi - n * b0 AS sx, sy,
-        |        sbiy - b0 * sy AS sxy,
-        |        sbii - 2 * b0 * sbi + n * b0 * b0 AS sxx
-        |      FROM a),
-        |d AS (SELECT k, n, sx, sy, sxy,
-        |        n * sxx - sx * sx AS den FROM s),
-        |t AS (SELECT k, n, sx, sy, den,
-        |        CASE WHEN den = 0 THEN NULL
-        |             ELSE ((n * sxy - sx * sy) * 1000) // den END
-        |          AS slope_milli
-        |      FROM d)
-        |SELECT k AS user_id, n, slope_milli,
-        |       CASE WHEN den = 0 THEN NULL
-        |            ELSE (sy * 1000 - slope_milli * sx) // n END
-        |         AS intercept_milli
-        |FROM t ORDER BY user_id""".stripMargin,
-
-    "q_range_attribution" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-        |                  value, event_type FROM events),
-        |p AS (SELECT user_id, event_id, ts FROM e WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id, ts, value FROM e WHERE event_type = 'view')
-        |SELECT p.event_id, p.user_id,
-        |       count(v.ts) AS n_matched,
-        |       CAST(coalesce(sum(CAST(v.value AS DECIMAL(18,6))), 0)
-        |            AS DOUBLE) AS matched_value
-        |FROM p LEFT JOIN v
-        |  ON p.user_id = v.user_id AND v.ts < p.ts
-        | AND epoch_us(p.ts) - epoch_us(v.ts) < 3600000000
-        |GROUP BY p.event_id, p.user_id
-        |ORDER BY p.event_id""".stripMargin,
-
-    "q_join_pricing" ->
-      """SELECT c_mktsegment, o_orderpriority,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        |                * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-        |         AS revenue,
-        |       count(*) AS n_items,
-        |       count(DISTINCT o_orderkey) AS n_orders
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment, o_orderpriority
-        |ORDER BY c_mktsegment, o_orderpriority""".stripMargin,
-
-    "q_top_docs_per_lang" ->
-      s"""WITH $qualityScoredCte,
-         |r AS (SELECT lang, doc_id, quality,
-         |        row_number() OVER (PARTITION BY lang
-         |                           ORDER BY quality DESC, doc_id) AS rank
-         |      FROM scored)
-         |SELECT lang, rank, doc_id, quality FROM r
-         |WHERE rank <= 3 ORDER BY lang, rank""".stripMargin,
-
-    "q_json_extract" ->
-      """SELECT event_type,
-        |       count(CAST(props ->> 'k' AS BIGINT)) AS n,
-        |       CAST(sum(CAST(props ->> 'k' AS BIGINT)) AS BIGINT) AS sum_k,
-        |       count(DISTINCT CAST(props ->> 'k' AS BIGINT)) AS distinct_k,
-        |       min(CAST(props ->> 'k' AS BIGINT)) AS min_k,
-        |       max(CAST(props ->> 'k' AS BIGINT)) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_orders_by_month" ->
-      """SELECT date_trunc('month', CAST(o_orderdate AS TIMESTAMP)) AS month,
-        |       count(*) AS n_orders,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |         AS total,
-        |       count(DISTINCT o_custkey) AS n_customers
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_set_ops" ->
-      """SELECT
-        |  (SELECT count(*) FROM
-        |    (SELECT DISTINCT l_partkey FROM lineitem
-        |     INTERSECT
-        |     SELECT p_partkey FROM part WHERE p_size > 25)) AS n_sold_large,
-        |  (SELECT count(*) FROM
-        |    (SELECT p_partkey FROM part
-        |     EXCEPT
-        |     SELECT l_partkey FROM lineitem)) AS n_unsold""".stripMargin,
-
-    // one wide aggregate row (same measures, same casts) melted by
-    // UNION arms generated from the shared column lists
-    "q_table_profile" -> {
-      val aggsSql = (ProfileNumericCols.flatMap(c => Seq(
-          s"CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS ${c}__nn",
-          s"count(DISTINCT $c) AS ${c}__nd",
-          s"min(CAST($c AS DOUBLE)) AS ${c}__mn",
-          s"max(CAST($c AS DOUBLE)) AS ${c}__mx")) ++
-        ProfileOtherCols.flatMap(c => Seq(
-          s"CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS ${c}__nn",
-          s"count(DISTINCT $c) AS ${c}__nd"))).mkString(",\n  ")
-      val arms = (ProfileNumericCols.map(c =>
-          s"""SELECT '$c' AS "column", n_rows, ${c}__nn AS n_nulls, """ +
-            s"${c}__nd AS n_distinct, ${c}__mn AS min_value, " +
-            s"${c}__mx AS max_value FROM w") ++
-        ProfileOtherCols.map(c =>
-          s"SELECT '$c', n_rows, ${c}__nn, ${c}__nd, " +
-            s"CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE) FROM w"))
-        .mkString("\nUNION ALL ")
-      s"""WITH w AS (SELECT count(*) AS n_rows,
-         |  $aggsSql
-         |FROM lineitem)
-         |$arms
-         |ORDER BY "column"""".stripMargin
-    },
-
-    "q_pivot" ->
-      """SELECT l_returnflag,
-        |  CAST(sum(CASE WHEN l_linestatus = 'F'
-        |       THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS F,
-        |  CAST(sum(CASE WHEN l_linestatus = 'O'
-        |       THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS O
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    // unpivot = the stacked UNION of the wide row's metrics (DuckDB's
-    // UNPIVOT would reorder; the explicit arms keep metric names the
-    // literal column names Spark's Dataset.unpivot emits)
-    "q_unpivot" ->
-      """WITH w AS (
-        |  SELECT l_returnflag,
-        |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-        |      AS sum_price,
-        |    CAST(count(*) AS DOUBLE) AS n_rows
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT l_returnflag, 'sum_qty' AS metric, sum_qty AS value FROM w
-        |UNION ALL
-        |SELECT l_returnflag, 'sum_price', sum_price FROM w
-        |UNION ALL
-        |SELECT l_returnflag, 'n_rows', n_rows FROM w
-        |ORDER BY l_returnflag, metric""".stripMargin,
-
-    // mirrors Multimodal.fromDocuments + decodeOneStub: UTF-8 payload
-    // bytes recovered via hex(encode(text)), then the same rolling
-    // checksum mod 1e9+7 and mod-16 byte-histogram fractions. Exact:
-    // checksum/counts are integer, fractions are int/int double
-    // division. list_reduce seeds from the first element, which equals
-    // the Scala loop's (0*31 + b0) first step.
-    // the engine's image features come from a REAL PNG decode and its
-    // audio features from a REAL WAV decode; the oracle replays both
-    // from the generation rules instead (image pixels = UTF-8 text
-    // bytes cycled over the imageDims canvas; audio data bytes = the
-    // little-endian encoding of samples (b-128)*256, i.e. pairs
-    // [0, (b+128)%256]) — the encode→decode round trips cancel by
-    // construction, which is exactly the property the codec specs'
-    // round-trip tests pin down
-    // replays synthesis + the 2:1 byte-domain window average: sample
-    // g = ((b[2g]+b[2g+1]) // 2 - 128) * 256, trailing sample alone
-    "q_audio_downsample" ->
-      s"""WITH b AS (
-         |  SELECT doc_id, hex(encode(text)) AS hx,
-         |         octet_length(encode(text)) AS n
-         |  FROM documents WHERE doc_id % 3 = 1),
-         |bytes AS (
-         |  SELECT doc_id, n,
-         |    list_transform(range(0, n), i ->
-         |      strpos('0123456789ABCDEF', substr(hx, 2*i+1, 1))*16
-         |      + strpos('0123456789ABCDEF', substr(hx, 2*i+2, 1)) - 17) AS bs
-         |  FROM b),
-         |amps AS (
-         |  SELECT doc_id,
-         |    list_transform(range(0, (n + 1) // 2), g ->
-         |      ((CASE WHEN 2*g + 1 < n
-         |             THEN (bs[2*g + 1] + bs[2*g + 2]) // 2
-         |             ELSE bs[2*g + 1] END) - 128) * 256) AS am
-         |  FROM bytes)
-         |SELECT doc_id AS media_id, 8000 AS sample_rate,
-         |       len(am) AS n_samples,
-         |       CASE WHEN len(am) = 0 THEN 0 ELSE list_min(am) END AS amp_min,
-         |       CASE WHEN len(am) = 0 THEN 0 ELSE list_max(am) END AS amp_max,
-         |       CASE WHEN len(am) = 0 THEN 0.0
-         |            ELSE CAST(list_sum(am) AS DOUBLE) / len(am) END
-         |         AS amp_mean
-         |FROM amps ORDER BY media_id""".stripMargin,
-
-    // replays the synthesis rule + the box-pool arithmetic: output
-    // pixel (ox,oy) = floor(sum of box / area) with integer-division
-    // box edges — exactly the engine's pooling; pass-through branch
-    // for images already within the clamp
-    "q_image_resize" ->
-      s"""WITH b AS (
-         |  SELECT doc_id, n_chars, hex(encode(text)) AS hx,
-         |         octet_length(encode(text)) AS n
-         |  FROM documents WHERE doc_id % 3 = 0),
-         |bytes AS (
-         |  SELECT doc_id, n,
-         |    list_transform(range(0, n), i ->
-         |      strpos('0123456789ABCDEF', substr(hx, 2*i+1, 1))*16
-         |      + strpos('0123456789ABCDEF', substr(hx, 2*i+2, 1)) - 17) AS bs,
-         |    (n_chars % 64) + 1 AS w, (n_chars % 48) + 1 AS h
-         |  FROM b),
-         |tgt AS (
-         |  SELECT doc_id, n, bs, w, h,
-         |    CASE WHEN greatest(w, h) <= 8 THEN w
-         |         ELSE greatest(1, CAST(round(w * (CAST(8 AS DOUBLE)
-         |              / greatest(w, h))) AS BIGINT)) END AS nw,
-         |    CASE WHEN greatest(w, h) <= 8 THEN h
-         |         ELSE greatest(1, CAST(round(h * (CAST(8 AS DOUBLE)
-         |              / greatest(w, h))) AS BIGINT)) END AS nh
-         |  FROM bytes),
-         |px AS (
-         |  SELECT doc_id, nw, nh,
-         |    CASE WHEN greatest(w, h) <= 8 THEN
-         |      list_transform(range(0, w*h), i ->
-         |        CASE WHEN n = 0 THEN 0 ELSE bs[(i % n) + 1] END)
-         |    ELSE
-         |      list_transform(range(0, nw*nh), o ->
-         |        CAST(list_sum(flatten(list_transform(
-         |          range((o // nw) * h // nh, ((o // nw) + 1) * h // nh),
-         |          y -> list_transform(
-         |            range((o % nw) * w // nw, ((o % nw) + 1) * w // nw),
-         |            x -> CASE WHEN n = 0 THEN 0
-         |                      ELSE bs[((y * w + x) % n) + 1] END))))
-         |          AS BIGINT)
-         |        // ((((o // nw) + 1) * h // nh - (o // nw) * h // nh)
-         |           * (((o % nw) + 1) * w // nw - (o % nw) * w // nw)))
-         |    END AS ps
-         |  FROM tgt)
-         |SELECT doc_id AS media_id, nw AS width, nh AS height,
-         |       list_min(ps) AS px_min, list_max(ps) AS px_max,
-         |       CAST(list_sum(ps) AS DOUBLE) / len(ps) AS px_mean
-         |FROM px ORDER BY media_id""".stripMargin,
-
-    "q_media_features" ->
-      s"""WITH b AS (
-         |  SELECT doc_id, n_chars, hex(encode(text)) AS hx,
-         |         octet_length(encode(text)) AS n
-         |  FROM documents),
-         |bytes AS (
-         |  SELECT doc_id, n_chars, n,
-         |    list_transform(range(0, n), i ->
-         |      strpos('0123456789ABCDEF', substr(hx, 2*i+1, 1))*16
-         |      + strpos('0123456789ABCDEF', substr(hx, 2*i+2, 1)) - 17) AS bs
-         |  FROM b),
-         |dims AS (
-         |  SELECT doc_id, n, bs,
-         |    CASE WHEN doc_id % 3 = 0 THEN (n_chars % 64) + 1
-         |         WHEN doc_id % 3 = 2 THEN (n_chars % 32) + 1
-         |         ELSE 0 END AS w,
-         |    CASE WHEN doc_id % 3 = 0 THEN (n_chars % 48) + 1
-         |         WHEN doc_id % 3 = 2 THEN (n_chars % 24) + 1
-         |         ELSE 0 END AS h,
-         |    CASE WHEN doc_id % 3 = 2 THEN (n_chars % 6) + 2 ELSE 0 END AS nf
-         |  FROM bytes),
-         |content AS (
-         |  SELECT doc_id, w, h, nf,
-         |    CASE WHEN doc_id % 3 = 0 THEN
-         |      list_transform(range(0, w*h), i ->
-         |        CASE WHEN n = 0 THEN 0 ELSE bs[(i % n) + 1] END)
-         |    WHEN doc_id % 3 = 1 THEN
-         |      flatten(list_transform(bs, x -> [0, (x + 128) % 256]))
-         |    ELSE
-         |      flatten(list_transform(range(0, nf), f ->
-         |        list_transform(range(0, w*h), i ->
-         |          CASE WHEN n = 0 THEN 0 ELSE bs[((i + f) % n) + 1] END)))
-         |    END AS cs,
-         |    CASE WHEN doc_id % 3 = 1 THEN
-         |      list_transform(bs, x -> (x - 128) * 256)
-         |    ELSE [] END AS amps
-         |  FROM dims),
-         |f AS (
-         |  SELECT doc_id, w, h, nf, len(cs) AS nb,
-         |    CASE WHEN len(cs) = 0 THEN 0 ELSE
-         |      list_reduce(cs, (acc, x) -> (acc*31 + x) % 1000000007) END
-         |      AS checksum,
-         |    CAST(len(list_filter(cs, x -> x % 16 = 0)) AS DOUBLE)
-         |      / greatest(len(cs), 1) AS h0,
-         |    CAST(len(list_filter(cs, x -> x % 16 = 1)) AS DOUBLE)
-         |      / greatest(len(cs), 1) AS h1,
-         |    CASE WHEN len(cs) = 0 THEN 0 ELSE list_min(cs) END AS mn,
-         |    CASE WHEN len(cs) = 0 THEN 0 ELSE list_max(cs) END AS mx,
-         |    CAST(coalesce(list_sum(cs), 0) AS DOUBLE)
-         |      / greatest(len(cs), 1) AS px_mean,
-         |    len(amps) AS n_samples,
-         |    coalesce(list_min(amps), 0) AS amp_min,
-         |    coalesce(list_max(amps), 0) AS amp_max,
-         |    CAST(coalesce(list_sum(amps), 0) AS DOUBLE)
-         |      / greatest(len(amps), 1) AS amp_mean
-         |  FROM content)
-         |SELECT doc_id AS media_id,
-         |       CASE WHEN doc_id % 3 = 0 THEN 'image'
-         |            WHEN doc_id % 3 = 1 THEN 'audio'
-         |            ELSE 'video' END AS media_type,
-         |       CAST(nb AS BIGINT) AS n_bytes,
-         |       CAST(checksum AS BIGINT) AS checksum, h0, h1,
-         |       CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-         |       CAST(CASE WHEN doc_id % 3 = 0 THEN 8
-         |                 WHEN doc_id % 3 = 1 THEN 16
-         |                 ELSE 8 END AS INTEGER) AS bit_depth,
-         |       CAST(0 AS INTEGER) AS color_type,
-         |       CAST(mn AS INTEGER) AS px_min, CAST(mx AS INTEGER) AS px_max,
-         |       px_mean,
-         |       CAST(CASE WHEN doc_id % 3 = 1 THEN 16000 ELSE 0 END
-         |         AS INTEGER) AS sample_rate,
-         |       CAST(n_samples AS BIGINT) AS n_samples,
-         |       CAST(amp_min AS INTEGER) AS amp_min,
-         |       CAST(amp_max AS INTEGER) AS amp_max, amp_mean,
-         |       CAST(nf AS INTEGER) AS n_frames,
-         |       CAST(CASE WHEN doc_id % 3 = 2 THEN 25 ELSE 0 END
-         |         AS INTEGER) AS fps
-         |FROM f ORDER BY media_id""".stripMargin,
-
-    // Video frame demux oracle: replay the synthesis rule per frame
-    // (frame f's pixel i = text byte (i+f) mod n on the videoDims
-    // canvas) — the AVI encode→decode round trip cancels, so the
-    // engine's codec-decoded per-frame stats are hash-exact vs this.
-    "q_video_frames" ->
-      s"""WITH b AS (
-         |  SELECT doc_id, n_chars, hex(encode(text)) AS hx,
-         |         octet_length(encode(text)) AS n
-         |  FROM documents WHERE doc_id % 3 = 2),
-         |bytes AS (
-         |  SELECT doc_id, n_chars, n,
-         |    list_transform(range(0, n), i ->
-         |      strpos('0123456789ABCDEF', substr(hx, 2*i+1, 1))*16
-         |      + strpos('0123456789ABCDEF', substr(hx, 2*i+2, 1)) - 17) AS bs
-         |  FROM b),
-         |dims AS (
-         |  SELECT doc_id, n, bs,
-         |    ((n_chars % 32) + 1) * ((n_chars % 24) + 1) AS fpx,
-         |    (n_chars % 6) + 2 AS nf
-         |  FROM bytes),
-         |frames AS (
-         |  SELECT doc_id, n, bs, fpx,
-         |         unnest(range(0, nf)) AS frame_no
-         |  FROM dims),
-         |fc AS (
-         |  SELECT doc_id, frame_no, fpx,
-         |    list_transform(range(0, fpx), i ->
-         |      CASE WHEN n = 0 THEN 0
-         |           ELSE bs[((i + frame_no) % n) + 1] END) AS cs
-         |  FROM frames)
-         |SELECT doc_id AS media_id,
-         |       CAST(frame_no AS INTEGER) AS frame_no,
-         |       CAST(fpx AS INTEGER) AS f_bytes,
-         |       CAST(list_min(cs) AS INTEGER) AS f_min,
-         |       CAST(list_max(cs) AS INTEGER) AS f_max,
-         |       CAST(list_sum(cs) AS DOUBLE) / fpx AS f_mean,
-         |       CAST(list_reduce(cs, (acc, x) ->
-         |         (acc*31 + x) % 1000000007) AS BIGINT) AS f_checksum
-         |FROM fc ORDER BY media_id, frame_no""".stripMargin,
-
-    "q_pack_stats" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, lang, CAST(len($toksSql) AS BIGINT) AS n_tokens
-         |  FROM documents),
-         |p AS (
-         |  SELECT doc_id, lang, n_tokens,
-         |    -- CAST: DuckDB's window sum over BIGINT is HUGEINT, so the
-         |    -- floor-div result must be pinned back to BIGINT to match the
-         |    -- Spark side's .cast("long") (SequencePacking.packByPrefixSum)
-         |    CAST((sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-         |       ROWS UNBOUNDED PRECEDING) - n_tokens) // 4096 AS BIGINT)
-         |      AS pack_id
-         |  FROM d)
-         |SELECT lang, pack_id, count(*) AS n_docs,
-         |       CAST(sum(n_tokens) AS BIGINT) AS pack_tokens,
-         |       min(doc_id) AS first_doc, max(doc_id) AS last_doc
-         |FROM p GROUP BY lang, pack_id ORDER BY lang, pack_id""".stripMargin,
-
-    "q_percentiles" ->
-      """SELECT l_returnflag,
-        |       quantile_cont(l_quantity, 0.5) AS p50_qty,
-        |       quantile_cont(l_quantity, 0.9) AS p90_qty,
-        |       quantile_cont(l_extendedprice, 0.25) AS p25_price
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_semi_anti" ->
-      """SELECT c_mktsegment,
-        |       count(*) FILTER (WHERE EXISTS
-        |         (SELECT 1 FROM orders WHERE o_custkey = c_custkey))
-        |         AS n_active,
-        |       count(*) FILTER (WHERE NOT EXISTS
-        |         (SELECT 1 FROM orders WHERE o_custkey = c_custkey))
-        |         AS n_inactive
-        |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q_cube" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-
-    "q_hash_split" ->
-      s"""WITH h AS (SELECT doc_id, n_chars,
-         |    ${rhSql("CAST(doc_id AS VARCHAR)")} % 10 AS b
-         |  FROM documents)
-         |SELECT CASE WHEN b < 8 THEN 'train' WHEN b = 8 THEN 'val'
-         |            ELSE 'test' END AS split,
-         |       count(*) AS n_docs,
-         |       min(doc_id) AS min_doc, max(doc_id) AS max_doc,
-         |       CAST(sum(n_chars) AS BIGINT) AS sum_chars
-         |FROM h GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-
-    "q_salted_agg" ->
-      """SELECT l_returnflag AS key,
-        |       count(DISTINCT CAST(l_extendedprice AS DECIMAL(30,6)))
-        |         AS n_distinct,
-        |       count(*) AS n,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(30,6))) AS DOUBLE)
-        |         AS total
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q_curation" ->
-      s"""WITH $qualityScoredCte,
-         |f AS (SELECT doc_id, $fingerprintSql AS fp FROM documents),
-         |canon AS (
-         |  SELECT doc_id,
-         |         doc_id = min(doc_id) OVER (PARTITION BY fp) AS is_c
-         |  FROM f)
-         |SELECT source, count(*) AS n_kept,
-         |       min(doc_id) AS min_doc, max(doc_id) AS max_doc
-         |FROM scored JOIN canon USING (doc_id)
-         |WHERE is_c AND gl = lang AND quality >= 0.5
-         |GROUP BY source ORDER BY source""".stripMargin,
-
-    // assembled from the SAME shared fragments as the stage-level
-    // oracles (quality CTE renamed to avoid the `scored` name the LSH
-    // pipeline also uses) — stages can't drift from their composed form
-    "q_corpus_prep" ->
-      s"""WITH RECURSIVE ${qualityScoredCte.replace("scored AS (", "qscored AS (")},
-         |f AS (SELECT doc_id, $fingerprintSql AS fp FROM documents),
-         |ecanon AS (
-         |  SELECT doc_id,
-         |         doc_id = min(doc_id) OVER (PARTITION BY fp) AS is_ec
-         |  FROM f),
-         |$lshPipelineSql,
-         |pedges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM scored WHERE sim >= 0.5
-         |  UNION ALL
-         |  SELECT doc_b, doc_a FROM scored WHERE sim >= 0.5),
-         |reach(id, r) AS (
-         |  SELECT DISTINCT src, src FROM pedges
-         |  UNION
-         |  SELECT reach.id, e.dst FROM reach JOIN pedges e ON e.src = reach.r),
-         |comp AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id),
-         |asg AS (
-         |  SELECT d.doc_id, coalesce(c.cluster, d.doc_id) AS cluster
-         |  FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
-         |toks AS (SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS n_tokens
-         |         FROM documents),
-         |kept AS (
-         |  SELECT q.doc_id, q.lang, t.n_tokens,
-         |    ${rhSql("CAST(q.doc_id AS VARCHAR)")} % 10 AS b
-         |  FROM qscored q
-         |  JOIN ecanon e ON e.doc_id = q.doc_id
-         |  JOIN asg a ON a.doc_id = q.doc_id
-         |  JOIN toks t ON t.doc_id = q.doc_id
-         |  WHERE e.is_ec AND a.doc_id = a.cluster
-         |    AND q.gl = q.lang AND q.quality >= 0.5)
-         |SELECT CASE WHEN b < 8 THEN 'train' WHEN b = 8 THEN 'val'
-         |            ELSE 'test' END AS split,
-         |       lang, count(*) AS n_docs,
-         |       CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
-         |FROM kept GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_embedding_near_dups" ->
-      s"""WITH $quantCte,
-         |p AS (
-         |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         |    ${cosineQSql("a.qe", "b.qe", "a.nn", "b.nn")} AS sim
-         |  FROM nv a JOIN nv b ON a.vec_id < b.vec_id)
-         |SELECT vec_a, vec_b, sim FROM p
-         |WHERE sim >= 0.45 ORDER BY vec_a, vec_b""".stripMargin,
-
-    // same deterministic IVF assignment CTEs as q_ann_ivf's oracle
-    // (fixed-k hash-sampled centroids, nprobe 3), then cluster-local
-    // pairs
-    "q_embedding_near_dups_ivf" ->
-      s"""WITH $quantCte,
-         |${centsSql()},
-         |asg AS (
-         |  SELECT vec_id, cid, qe, nn,
-         |    row_number() OVER (PARTITION BY vec_id
-         |                       ORDER BY csim DESC, cid) AS crank
-         |  FROM (SELECT v.vec_id, c.cid, v.qe, v.nn,
-         |          ${cosineQSql("v.qe", "c.cqe", "v.nn", "c.cnn")} AS csim
-         |        FROM nv v CROSS JOIN cents c)),
-         |idx AS (SELECT vec_id AS neighbor_id, cid AS cluster, qe, nn
-         |        FROM asg WHERE crank = 1),
-         |probes AS (SELECT vec_id, cid AS cluster, qe, nn
-         |           FROM asg WHERE crank <= 3),
-         |p AS (
-         |  SELECT least(a.vec_id, b.neighbor_id) AS vec_a,
-         |         greatest(a.vec_id, b.neighbor_id) AS vec_b,
-         |         ${cosineQSql("a.qe", "b.qe", "a.nn", "b.nn")} AS sim
-         |  FROM probes a JOIN idx b
-         |    ON a.cluster = b.cluster AND a.vec_id <> b.neighbor_id)
-         |SELECT DISTINCT vec_a, vec_b, sim FROM p
-         |WHERE sim >= 0.45 ORDER BY vec_a, vec_b""".stripMargin,
-
-    // fixed tinyG edges (mirrors the TinyG literal); all shortest
-    // SIMPLE paths enumerated by a bounded recursive walk, then
-    // min(dist) and the lexicographic-min path per vertex
-    "q_bfs_paths_golden" -> {
-      val valuesSql = TinyG.map { case (a, b) => s"($a, $b)" }.mkString(", ")
-      s"""WITH RECURSIVE raw(src, dst) AS (VALUES $valuesSql),
-         |edges AS (
-         |  SELECT CAST(src AS BIGINT) AS src, CAST(dst AS BIGINT) AS dst FROM raw
-         |  UNION ALL
-         |  SELECT CAST(dst AS BIGINT), CAST(src AS BIGINT) FROM raw),
-         |walk(id, dist, path) AS (
-         |  SELECT CAST(0 AS BIGINT), CAST(0 AS BIGINT), [CAST(0 AS BIGINT)]
-         |  UNION ALL
-         |  SELECT e.dst, walk.dist + 1, list_append(walk.path, e.dst)
-         |  FROM walk JOIN edges e ON e.src = walk.id
-         |  WHERE walk.dist < 6 AND NOT list_contains(walk.path, e.dst)),
-         |best AS (SELECT id, min(dist) AS dist FROM walk GROUP BY id),
-         |mp AS (SELECT w.id, b.dist, min(w.path) AS path
-         |       FROM walk w JOIN best b ON b.id = w.id AND w.dist = b.dist
-         |       GROUP BY w.id, b.dist)
-         |SELECT id, dist, array_to_string(path, '->') AS path
-         |FROM mp ORDER BY id""".stripMargin
-    },
-
-    // the reference's smallG.txt re-read via read_csv, symmetrized,
-    // then 14 unrolled min-merge layers (ecc(0)=13, so layer 14 is
-    // past the fixed point — bounded equivalence, the kcore_converged
-    // argument). MATERIALIZED: each layer is referenced twice by the
-    // next; inlining would re-evaluate the chain 2^14 times.
-    "q_bfs_smallg_golden" -> {
-      val layers = (1 to SmallGLayers).map { h =>
-        s"""d$h AS MATERIALIZED (
-           |  SELECT id, min(dist) AS dist FROM (
-           |    SELECT id, dist FROM d${h - 1}
-           |    UNION ALL
-           |    SELECT e.dst, d.dist + 1 FROM d${h - 1} d
-           |    JOIN edges e ON e.src = d.id)
-           |  GROUP BY id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH raw AS (
-         |  SELECT * FROM read_csv('/root/reference/datasets/smallG.txt',
-         |    delim = ' ', header = false,
-         |    columns = {'src': 'BIGINT', 'dst': 'BIGINT'})),
-         |edges AS (
-         |  SELECT src, dst FROM raw
-         |  UNION ALL
-         |  SELECT dst, src FROM raw),
-         |d0(id, dist) AS (SELECT CAST(0 AS BIGINT), CAST(0 AS BIGINT)),
-         |$layers
-         |SELECT id, CAST(dist AS BIGINT) AS dist
-         |FROM d$SmallGLayers ORDER BY id""".stripMargin
-    },
-
-    // the reference's published scale points, graph rebuilt in DuckDB
-    // from the same closed-form integer arithmetic (SyntheticGraphs:
-    // branching-64 tree + hash chords, ecc(0) <= 4 by construction so
-    // 5 min-merge layers are provably past the fixed point; chords
-    // only shrink distances). Histogram output keeps the compare
-    // 5 rows regardless of |V|.
-    "q_bfs_mediumg_scale" -> referenceScaleBfsSql(
-      graft.sources.SyntheticGraphs.MediumG),
-    "q_bfs_largeg_scale" -> referenceScaleBfsSql(
-      graft.sources.SyntheticGraphs.LargeG),
-
-    // hop-bounded path-carrying BFS unrolled one min-merge layer per
-    // hop: layer h's candidates are layer h-1's rows plus every
-    // one-edge extension; min(dist) then min(path) among the min-dist
-    // rows replays the engine's min(struct(dist, path)) semilattice
-    // (equal-dist paths have equal length, so DuckDB's lexicographic
-    // list min IS the same argmin). Re-expanding already-settled
-    // vertices each layer only regenerates candidates earlier layers
-    // min-merged away — the min is idempotent, so p_h equals the
-    // engine's frontier-only state after h rounds.
-    "q_bfs_paths_copurchase" -> {
-      val layers = (1 to BfsPathsCopurchaseHops).map { h =>
-        s"""c$h AS (
-           |  SELECT id, dist, path FROM p${h - 1}
-           |  UNION ALL
-           |  SELECT e.dst, d.dist + 1, list_append(d.path, e.dst)
-           |  FROM p${h - 1} d JOIN edges e ON e.src = d.id),
-           |b$h AS (SELECT id, min(dist) AS dist FROM c$h GROUP BY id),
-           |p$h AS (SELECT c.id, b.dist, min(c.path) AS path
-           |        FROM c$h c JOIN b$h b
-           |          ON b.id = c.id AND c.dist = b.dist
-           |        GROUP BY c.id, b.dist)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $copurchaseEdgesSql,
-         |p0(id, dist, path) AS (
-         |  SELECT CAST(2 AS BIGINT), CAST(0 AS BIGINT),
-         |         [CAST(2 AS BIGINT)]),
-         |$layers
-         |SELECT id, CAST(dist AS BIGINT) AS dist,
-         |       array_to_string(path, '->') AS path
-         |FROM p$BfsPathsCopurchaseHops ORDER BY id""".stripMargin
-    },
-
-    // q_bfs_paths_copurchase's layer pattern at the PUBLISHED mediumG
-    // scale: the synthetic graph rebuilt from the same closed-form
-    // integer arithmetic (referenceScaleBfsSql's construction), 5
-    // path-carrying min-merge layers (provably past fixpoint — ecc(0)
-    // ≤ 4 by construction), lex-min path via DuckDB's list min.
-    // MATERIALIZED: every layer is referenced three times downstream.
-    "q_bfs_paths_mediumg" -> {
-      val (n, e) = graft.sources.SyntheticGraphs.MediumG
-      val chords = e - (n - 1)
-      val layers = (1 to MediumGPathLayers).map { h =>
-        s"""c$h AS MATERIALIZED (
-           |  SELECT id, dist, path FROM p${h - 1}
-           |  UNION ALL
-           |  SELECT e.dst, d.dist + 1, list_append(d.path, e.dst)
-           |  FROM p${h - 1} d JOIN edges e ON e.src = d.id),
-           |b$h AS MATERIALIZED (
-           |  SELECT id, min(dist) AS dist FROM c$h GROUP BY id),
-           |p$h AS MATERIALIZED (
-           |  SELECT c.id, b.dist, min(c.path) AS path
-           |  FROM c$h c JOIN b$h b
-           |    ON b.id = c.id AND c.dist = b.dist
-           |  GROUP BY c.id, b.dist)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH raw AS (
-         |  SELECT i AS src, (i - 1) // 64 AS dst FROM range(1, $n) t(i)
-         |  UNION ALL
-         |  SELECT (j * 1103515245 + 12345) % $n AS src,
-         |         (j * 2654435761 + 98765) % $n AS dst
-         |  FROM range($chords) t(j)),
-         |edges AS (SELECT src, dst FROM raw UNION ALL SELECT dst, src FROM raw),
-         |p0(id, dist, path) AS (
-         |  SELECT CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-         |         [CAST(0 AS BIGINT)]),
-         |$layers
-         |SELECT id, CAST(dist AS BIGINT) AS dist,
-         |       array_to_string(path, '->') AS path
-         |FROM p$MediumGPathLayers ORDER BY id""".stripMargin
-    },
-
-    // weighted twin of the golden walk: same simple-path enumeration,
-    // min-PLUS accumulation; per-edge weights derive from the same
-    // rolling hash of the canonical endpoint pair as the Spark query
-    "q_sssp_golden" -> {
-      val valuesSql = TinyG.map { case (a, b) => s"($a, $b)" }.mkString(", ")
-      val wExpr = rhSql("CAST(least(src, dst) AS VARCHAR) || '_' || " +
-        "CAST(greatest(src, dst) AS VARCHAR)")
-      s"""WITH RECURSIVE raw(src, dst) AS (VALUES $valuesSql),
-         |edges AS (
-         |  SELECT CAST(src AS BIGINT) AS src, CAST(dst AS BIGINT) AS dst FROM raw
-         |  UNION ALL
-         |  SELECT CAST(dst AS BIGINT), CAST(src AS BIGINT) FROM raw),
-         |we AS (SELECT src, dst, 1 + ($wExpr) % 9 AS w FROM edges),
-         |walk(id, dist, path) AS (
-         |  SELECT CAST(0 AS BIGINT), CAST(0 AS BIGINT), [CAST(0 AS BIGINT)]
-         |  UNION ALL
-         |  SELECT e.dst, walk.dist + e.w, list_append(walk.path, e.dst)
-         |  FROM walk JOIN we e ON e.src = walk.id
-         |  WHERE NOT list_contains(walk.path, e.dst))
-         |SELECT id, CAST(min(dist) AS BIGINT) AS dist FROM walk
-         |GROUP BY id ORDER BY id""".stripMargin
-    },
-
-    // hop-bounded Bellman-Ford unrolled as one relaxation layer per
-    // hop (d_h = min(d_{h-1}, min over edges of d_{h-1}(src)+w)) —
-    // exactly the table Sssp.runBounded's frontier rounds compute; the
-    // layer count interpolates from the same SsspCopurchaseHops
-    // constant the Spark query uses. All-integer min-plus: hash-exact.
-    "q_sssp_copurchase" -> {
-      val wExpr = rhSql("CAST(least(src, dst) AS VARCHAR) || '_' || " +
-        "CAST(greatest(src, dst) AS VARCHAR)")
-      val layers = (1 to SsspCopurchaseHops).map { h =>
-        s"""d$h AS (
-           |  SELECT id, min(dist) AS dist FROM (
-           |    SELECT id, dist FROM d${h - 1}
-           |    UNION ALL
-           |    SELECT e.dst, d.dist + e.w FROM d${h - 1} d
-           |    JOIN we e ON e.src = d.id)
-           |  GROUP BY id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $copurchaseEdgesSql,
-         |we AS (SELECT src, dst, 1 + ($wExpr) % 9 AS w FROM edges),
-         |d0(id, dist) AS (SELECT CAST(2 AS BIGINT), CAST(0 AS BIGINT)),
-         |$layers
-         |SELECT id, CAST(dist AS BIGINT) AS dist
-         |FROM d$SsspCopurchaseHops ORDER BY id""".stripMargin
-    },
-
-    // unrolled walk steps: each layer joins the walk heads to the
-    // edge table and keeps the candidate with the smallest mixed hash
-    // of (walk, step, dst) — row_number ORDER BY ((h*h)%P, dst)
-    // replays the engine's min(struct(score, dst, …)) exactly
-    "q_random_walks" ->
-      s"""WITH $walkChainSql
-         |SELECT walk_id, seed, cur AS final_vertex, path
-         |FROM s$RandomWalkSteps ORDER BY walk_id""".stripMargin,
-
-    // same walk chain, then the window-2 skip-gram pair expansion:
-    // every path position pairs with its <=2-hop neighbours, rolled
-    // up to (center, context) counts
-    "q_walk_pairs" ->
-      s"""WITH $walkChainSql,
-         |p AS (SELECT string_split(path, ',') AS tk
-         |      FROM s$RandomWalkSteps),
-         |x AS (SELECT tk, unnest(range(len(tk))) AS i FROM p),
-         |y AS (SELECT CAST(tk[i + 1] AS BIGINT) AS center,
-         |             CAST(tk[j + 1] AS BIGINT) AS context
-         |      FROM (SELECT tk, i, unnest(range(greatest(0, i - 2),
-         |                    least(len(tk), i + 3))) AS j FROM x)
-         |      WHERE j <> i)
-         |SELECT center, context, count(*) AS n FROM y
-         |GROUP BY center, context ORDER BY center, context""".stripMargin,
-
-    // mirrors RandomWalk.negativeSamples: fixed hash-order candidate
-    // pool, per-vertex non-neighbor filter, hash-ranked top-k
-    "q_negative_samples" -> {
-      // pure-BIGINT replay of RandomWalk.negativeSamples' two hash
-      // families (pool membership / pair score) — pre-square mixes,
-      // squared mod P at the use sites below
-      val poolH = s"((id % ${Dedup.P}) * ${RandomWalk.MixA} + " +
-        s"${RandomWalk.SaltCand}) % ${Dedup.P}"
-      val pairH = s"((id % ${Dedup.P}) * ${RandomWalk.MixA} + " +
-        s"(cand % ${Dedup.P}) * ${RandomWalk.MixB}) % ${Dedup.P}"
-      s"""WITH $copurchaseEdgesSql,
-         |verts AS (SELECT DISTINCT src AS id FROM edges),
-         |pool AS (
-         |  SELECT id AS cand FROM (
-         |    SELECT id, ($poolH) * ($poolH) % ${Dedup.P} AS ch FROM verts)
-         |  ORDER BY ch, cand LIMIT 32),
-         |pairs AS (
-         |  SELECT v.id, p.cand FROM verts v CROSS JOIN pool p
-         |  WHERE p.cand <> v.id
-         |    AND NOT EXISTS (SELECT 1 FROM edges e
-         |                    WHERE e.src = v.id AND e.dst = p.cand)),
-         |scored AS (
-         |  SELECT id, cand, ($pairH) * ($pairH) % ${Dedup.P} AS score
-         |  FROM pairs),
-         |r AS (SELECT id, cand,
-         |        row_number() OVER (PARTITION BY id
-         |                           ORDER BY score, cand) AS rank
-         |      FROM scored)
-         |SELECT id, rank, cand AS neg_id FROM r
-         |WHERE rank <= 5 ORDER BY id, rank""".stripMargin
-    },
-
-    // two unrolled label-propagation rounds: round 1's messages are
-    // the raw edges (label0(v) = v), round 2 joins the edge table to
-    // round 1's labels; each round's argmin(row(-count, label))
-    // replays the engine's min(struct(-c, lbl)) semilattice exactly.
-    "q_label_prop" ->
-      s"""WITH $copurchaseEdgesSql,
-         |$lpTwoRoundsSql
-         |SELECT id, label FROM l2 ORDER BY id""".stripMargin,
-
-    // mirrors Louvain.moveSteps: per sweep k_{v,c} (edge count into
-    // each neighboring community), Σtot_c (community degree mass),
-    // candidate set = neighbor comms ∪ own, integer score
-    // 2m·k_vc − k_v·(Σtot − [own]·k_v), argmax by (score DESC,
-    // comm ASC). Chained CTEs MATERIALIZED (the q_ktruss inlining
-    // lesson — a{r-1} is referenced 4× per sweep).
-    "q_louvain_move" ->
-      s"""WITH ${louvainPhase1Sql()}
-         |SELECT id, comm FROM a2 ORDER BY id""".stripMargin,
-
-    // FUSED two-level face: the shared phase-1 chain, the contraction
-    // (community-pair weight sums — intra mass lands on the diagonal
-    // as 2·intra because the symmetric table carries both directions),
-    // the SAME move recurrence with sum(w) in place of count(*), AND
-    // the per-level Newman Q (micro, the q_modularity formula
-    // collapsed to its global row: num = m2·Σintra − Σd², one
-    // sign-safe truncating micro division) — the former
-    // q_louvain_coarse and q_louvain_gain result sets schema-aligned
-    // under one hash
-    "q_louvain_twolevel" -> {
-      def qRow(level: String, al: String): String =
-        s"""we_$al AS (SELECT a.label AS c_src, b.label AS c_dst
-           |       FROM e JOIN $al a ON a.id = e.src
-           |       JOIN $al b ON b.id = e.dst),
-           |st_$al AS (SELECT c_src AS label,
-           |         CAST(count(*) AS BIGINT) AS degree_sum,
-           |         CAST(sum(CASE WHEN c_src = c_dst THEN 1 ELSE 0 END)
-           |           AS BIGINT) AS intra
-           |       FROM we_$al GROUP BY 1),
-           |t_$al AS (SELECT CAST(count(*) AS BIGINT) AS n_communities,
-           |        CAST(sum(degree_sum) AS BIGINT) AS m2,
-           |        CAST(sum(intra) AS BIGINT) AS si,
-           |        CAST(sum(degree_sum * degree_sum) AS BIGINT) AS sd2
-           |      FROM st_$al),
-           |g_$al AS (SELECT '$level' AS level, n_communities,
-           |        CASE WHEN (m2 * si - sd2) >= 0
-           |          THEN (m2 * si - sd2) * 1000000 // (m2 * m2)
-           |          ELSE -((-(m2 * si - sd2)) * 1000000 // (m2 * m2))
-           |        END AS q_micro
-           |      FROM t_$al)""".stripMargin
-      s"""WITH ${louvainPhase1Sql()},
-         |$louvainPhase2Sql,
-         |al1 AS (SELECT id, comm AS label FROM a2),
-         |al2 AS (SELECT a.id, b.comm AS label
-         |        FROM a2 a JOIN b2 b ON b.id = a.comm),
-         |${qRow("phase1", "al1")},
-         |${qRow("two_level", "al2")}
-         |SELECT a.id, a.comm AS comm1, b.comm AS comm2,
-         |       CAST(NULL AS VARCHAR) AS level,
-         |       CAST(NULL AS BIGINT) AS n_communities,
-         |       CAST(NULL AS BIGINT) AS q_micro
-         |FROM a2 a JOIN b2 b ON b.id = a.comm
-         |UNION ALL
-         |SELECT CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-         |       CAST(NULL AS BIGINT), level, n_communities, q_micro
-         |FROM (SELECT * FROM g_al1 UNION ALL SELECT * FROM g_al2)
-         |ORDER BY id, level""".stripMargin
-    },
-
-    // RESTORED r21: two-level Louvain per-vertex assignment — the
-    // shared phase-1 chain, the contraction (community-pair weight
-    // sums — intra mass lands on the diagonal as 2·intra because the
-    // symmetric table carries both directions), then the SAME move
-    // recurrence with sum(w) in place of count(*) and self-loops
-    // excluded from k_vc but present in degrees/Σtot
-    "q_louvain_coarse" ->
-      s"""WITH ${louvainPhase1Sql()},
-         |$louvainPhase2Sql
-         |SELECT a.id, a.comm AS comm1, b.comm AS comm2
-         |FROM a2 a JOIN b2 b ON b.id = a.comm ORDER BY a.id""".stripMargin,
-
-    // RESTORED r21: does the coarsening PAY? Newman Q (micro, the
-    // q_modularity formula collapsed to its global row) of the
-    // phase-1 assignment vs the two-level one, over the same edges:
-    // num = m2·Σintra − Σd², one sign-safe truncating micro division
-    // per level
-    "q_louvain_gain" -> {
-      def qRow(level: String, al: String): String =
-        s"""we_$al AS (SELECT a.label AS c_src, b.label AS c_dst
-           |       FROM e JOIN $al a ON a.id = e.src
-           |       JOIN $al b ON b.id = e.dst),
-           |st_$al AS (SELECT c_src AS label,
-           |         CAST(count(*) AS BIGINT) AS degree_sum,
-           |         CAST(sum(CASE WHEN c_src = c_dst THEN 1 ELSE 0 END)
-           |           AS BIGINT) AS intra
-           |       FROM we_$al GROUP BY 1),
-           |t_$al AS (SELECT CAST(count(*) AS BIGINT) AS n_communities,
-           |        CAST(sum(degree_sum) AS BIGINT) AS m2,
-           |        CAST(sum(intra) AS BIGINT) AS si,
-           |        CAST(sum(degree_sum * degree_sum) AS BIGINT) AS sd2
-           |      FROM st_$al),
-           |g_$al AS (SELECT '$level' AS level, n_communities,
-           |        CASE WHEN (m2 * si - sd2) >= 0
-           |          THEN (m2 * si - sd2) * 1000000 // (m2 * m2)
-           |          ELSE -((-(m2 * si - sd2)) * 1000000 // (m2 * m2))
-           |        END AS q_micro
-           |      FROM t_$al)""".stripMargin
-      s"""WITH ${louvainPhase1Sql()},
-         |$louvainPhase2Sql,
-         |al1 AS (SELECT id, comm AS label FROM a2),
-         |al2 AS (SELECT a.id, b.comm AS label
-         |        FROM a2 a JOIN b2 b ON b.id = a.comm),
-         |${qRow("phase1", "al1")},
-         |${qRow("two_level", "al2")}
-         |SELECT level, n_communities, q_micro
-         |FROM (SELECT * FROM g_al1 UNION ALL SELECT * FROM g_al2)
-         |ORDER BY level""".stripMargin
-    },
-
-    // the wide-gain face replays the EXACT gated-move recurrence: the
-    // decimal scoring path exists to be invisible — uniform weight
-    // scaling multiplies every score by c², so the argmax, every tie,
-    // and hence the assignment are bit-identical to the unit-weight
-    // sweep this SQL unrolls
-    "q_louvain_move_wide" ->
-      s"""WITH ${louvainPhase1Sql(gated = true)}
-         |SELECT id, comm FROM a2 ORDER BY id""".stripMargin,
-
-    // the γ = 3/2 gated sweep: the shared phase-1 recurrence with
-    // both score terms γ-scaled (2·m2·kvc vs 3·k·Σtot')
-    "q_louvain_move_gamma" ->
-      s"""WITH ${louvainPhase1Sql(gated = true, gn = 3L, gd = 2L)}
-         |SELECT id, comm FROM a2 ORDER BY id""".stripMargin,
-
-    // the parity-gated flat sweep (the RECOMMENDED move-step face):
-    // the shared phase-1 recurrence with the (id + r) % 2 CASE the
-    // phase-2 chain replays — non-movers keep their step-(r-1)
-    // community
-    "q_louvain_move_gated" ->
-      s"""WITH ${louvainPhase1Sql(gated = true)}
-         |SELECT id, comm FROM a2 ORDER BY id""".stripMargin,
-
-    // convergence-driven multi-level Louvain: 3 unrolled levels
-    // (ungated phase 1, then two parity-gated weighted contracted
-    // phases via the generic level generator), a weighted Newman-Q
-    // triple per level, and the engine's emission rule as WHERE
-    // clauses — level 1 requires the level-0 contraction to shrink
-    // (n0 < |V|), level 2 additionally requires the level-1 gain to
-    // clear the 1000-micro threshold and n1 < n0 (maxLevels = 3 cuts
-    // deeper levels on both sides)
-    // FUSED multi-level face: the unrolled level chains ONCE, then
-    // both row kinds — the trajectory rows (emission conditions as
-    // WHERE clauses: level 1 requires the level-0 contraction to
-    // shrink, level 2 additionally the level-1 gain over the
-    // 1000-micro threshold and n1 < n0) and the flattened final
-    // assignment (level maps composed a2 -> b2 -> c2, emission depth
-    // CASEd on the same conditions) — schema-aligned under one hash
-    "q_louvain_multilevel" ->
-      s"""WITH ${louvainPhase1Sql()},
-         |$louvainPhase2Sql,
-         |${louvainWeightedPhaseSql("x", "c", "w0", "sum(e.w)", "b2")},
-         |nv0 AS (SELECT CAST(count(*) AS BIGINT) AS nv FROM deg),
-         |${louvainQSql("q0", "e", "1", "a2")},
-         |${louvainQSql("q1", "w0", "e.w", "b2")},
-         |${louvainQSql("q2", "x0", "e.w", "c2")},
-         |flat1 AS (SELECT a.id, b.comm FROM a2 a
-         |          JOIN b2 b ON b.id = a.comm),
-         |flat2 AS (SELECT f.id, c.comm FROM flat1 f
-         |          JOIN c2 c ON c.id = f.comm),
-         |cond1 AS (SELECT (SELECT n FROM q0q) < (SELECT nv FROM nv0)
-         |            AS go),
-         |cond2 AS (SELECT (SELECT q FROM q1q) - (SELECT q FROM q0q)
-         |             >= 1000
-         |            AND (SELECT n FROM q1q) < (SELECT n FROM q0q)
-         |            AS go)
-         |SELECT CAST(NULL AS BIGINT) AS id, CAST(NULL AS BIGINT) AS comm,
-         |       0 AS level, n AS n_communities, q AS q_micro FROM q0q
-         |UNION ALL
-         |SELECT NULL, NULL, 1, n, q FROM q1q
-         |WHERE (SELECT go FROM cond1)
-         |UNION ALL
-         |SELECT NULL, NULL, 2, n, q FROM q2q
-         |WHERE (SELECT go FROM cond1) AND (SELECT go FROM cond2)
-         |UNION ALL
-         |SELECT id, comm, CAST(NULL AS INTEGER), CAST(NULL AS BIGINT),
-         |       CAST(NULL AS BIGINT)
-         |FROM a2 WHERE NOT (SELECT go FROM cond1)
-         |UNION ALL
-         |SELECT id, comm, NULL, NULL, NULL FROM flat1
-         |WHERE (SELECT go FROM cond1) AND NOT (SELECT go FROM cond2)
-         |UNION ALL
-         |SELECT id, comm, NULL, NULL, NULL FROM flat2
-         |WHERE (SELECT go FROM cond1) AND (SELECT go FROM cond2)
-         |ORDER BY id, level""".stripMargin,
-
-    // RESTORED r21: the flattened final assignment under the same
-    // stop rule: the level maps compose (a2 -> b2 -> c2) and the
-    // emission depth is the engine's — level 0 only when the
-    // contraction does not shrink, two levels when level 1's gain
-    // misses the threshold, else all three
-    "q_louvain_multilevel_assign" ->
-      s"""WITH ${louvainPhase1Sql()},
-         |$louvainPhase2Sql,
-         |${louvainWeightedPhaseSql("x", "c", "w0", "sum(e.w)", "b2")},
-         |nv0 AS (SELECT CAST(count(*) AS BIGINT) AS nv FROM deg),
-         |${louvainQSql("q0", "e", "1", "a2")},
-         |${louvainQSql("q1", "w0", "e.w", "b2")},
-         |flat1 AS (SELECT a.id, b.comm FROM a2 a
-         |          JOIN b2 b ON b.id = a.comm),
-         |flat2 AS (SELECT f.id, c.comm FROM flat1 f
-         |          JOIN c2 c ON c.id = f.comm),
-         |cond1 AS (SELECT (SELECT n FROM q0q) < (SELECT nv FROM nv0)
-         |            AS go),
-         |cond2 AS (SELECT (SELECT q FROM q1q) - (SELECT q FROM q0q)
-         |             >= 1000
-         |            AND (SELECT n FROM q1q) < (SELECT n FROM q0q)
-         |            AS go)
-         |SELECT id, comm FROM a2 WHERE NOT (SELECT go FROM cond1)
-         |UNION ALL
-         |SELECT id, comm FROM flat1
-         |WHERE (SELECT go FROM cond1) AND NOT (SELECT go FROM cond2)
-         |UNION ALL
-         |SELECT id, comm FROM flat2
-         |WHERE (SELECT go FROM cond1) AND (SELECT go FROM cond2)
-         |ORDER BY id""".stripMargin,
-
-    // mirrors LabelPropagation.modularity over the SAME unrolled LP
-    // CTEs (shared lpTwoRoundsSql — the engine and both oracles
-    // can't drift): one pass computes d_c and e_c, |E| is recovered
-    // as Σ_c d_c by a window (no count scan), contributions stay raw
-    // numerators, the global Q is one sign-safe truncating micro
-    // division
-    "q_modularity" ->
-      s"""WITH $copurchaseEdgesSql,
-         |$lpTwoRoundsSql,
-         |we AS (SELECT a.label AS c_src, b.label AS c_dst
-         |       FROM edges e
-         |       JOIN l2 a ON a.id = e.src
-         |       JOIN l2 b ON b.id = e.dst),
-         |st AS (SELECT c_src AS label, count(*) AS degree_sum,
-         |         CAST(sum(CASE WHEN c_src = c_dst THEN 1 ELSE 0 END)
-         |           AS BIGINT) AS intra_edges
-         |       FROM we GROUP BY 1),
-         |sz AS (SELECT label, count(*) AS n_nodes FROM l2 GROUP BY 1),
-         |j AS (SELECT s.label, s.n_nodes,
-         |        coalesce(t.intra_edges, 0) AS intra_edges,
-         |        coalesce(t.degree_sum, 0) AS degree_sum
-         |      FROM sz s LEFT JOIN st t USING (label)),
-         |w1 AS (SELECT *, CAST(sum(degree_sum) OVER () AS BIGINT) AS m2
-         |       FROM j),
-         |w2 AS (SELECT *,
-         |         m2 * intra_edges - degree_sum * degree_sum AS contrib_num
-         |       FROM w1),
-         |w3 AS (SELECT *, CAST(sum(contrib_num) OVER () AS BIGINT) AS num
-         |       FROM w2)
-         |SELECT label, n_nodes, intra_edges, degree_sum, contrib_num,
-         |  CASE WHEN num >= 0 THEN num * 1000000 // (m2 * m2)
-         |    ELSE -((-num) * 1000000 // (m2 * m2)) END AS q_micro
-         |FROM w3 ORDER BY label""".stripMargin,
-
-    // the run-to-convergence face by bounded equivalence: 18 unrolled
-    // peel layers ≥ the measured convergence depth on every shipped SF
-    // (5/9/11 at sf0.001/0.01/0.1), and layers past the fixed point
-    // are no-ops (the keep-set keeps everything), so this EQUALS the
-    // engine's data-dependent peel-until-stable result. Every layer
-    // CTE is MATERIALIZED: each is referenced 3× by the next layer, so
-    // DuckDB's default inlining re-evaluates the chain exponentially
-    // (3^18 scans of lineitem — the 4-layer q_kcore survives inlining,
-    // this depth does not)
-    "q_kcore_converged" -> {
-      val layers = (1 to KCoreConvergedLayers).map { r =>
-        s"""k$r AS MATERIALIZED (
-           |  SELECT src FROM e${r - 1}
-           |  GROUP BY src HAVING count(*) >= $KCoreK),
-           |e$r AS MATERIALIZED (
-           |  SELECT e.src, e.dst FROM e${r - 1} e
-           |  JOIN k$r a ON a.src = e.src
-           |  JOIN k$r b ON b.src = e.dst)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $copurchaseEdgesSql,
-         |e0 AS MATERIALIZED (SELECT src, dst FROM edges),
-         |$layers
-         |SELECT src AS id, count(*) AS deg
-         |FROM e$KCoreConvergedLayers GROUP BY src ORDER BY id""".stripMargin
-    },
-
-    // four unrolled peel rounds at k=6: each layer keeps vertices
-    // whose degree in the PREVIOUS layer's edge set is ≥ k, then
-    // drops edges touching a removed endpoint (the keep-set is
-    // DISTINCT by GROUP BY, so inner join ≡ semi join); interpolates
-    // the same KCoreK/KCoreRounds constants as the Spark query.
-    "q_kcore" -> {
-      val layers = (1 to KCoreRounds).map { r =>
-        s"""k$r AS (SELECT src FROM e${r - 1}
-           |        GROUP BY src HAVING count(*) >= $KCoreK),
-           |e$r AS (SELECT e.src, e.dst FROM e${r - 1} e
-           |        JOIN k$r a ON a.src = e.src
-           |        JOIN k$r b ON b.src = e.dst)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $copurchaseEdgesSql,
-         |e0 AS (SELECT src, dst FROM edges),
-         |$layers
-         |SELECT src AS id, count(*) AS deg
-         |FROM e$KCoreRounds GROUP BY src ORDER BY id""".stripMargin
-    },
-
-    // unrolled k-truss support peel: per layer enumerate triangles
-    // (x < y < z exactly once via three canonical-edge joins), credit
-    // each triangle's three edges, keep edges with support >= k-2;
-    // KTrussLayers >= the measured convergence depth, post-fixpoint
-    // layers are no-ops. Final SELECT re-counts support INSIDE the
-    // truss — the same values the engine's fixpoint round computed.
-    // Every chained CTE is MATERIALIZED: each e{r} is referenced 4x
-    // by its layer, and DuckDB default-INLINES CTEs, so the plain
-    // chain expands 4^layers copies of the base scan (measured: fd
-    // exhaustion on the lineitem parquet at 8 layers — the one
-    // unrolled oracle where inlining compounds geometrically).
-    "q_ktruss" -> {
-      val kk = KTrussK - 2
-      val layers = (1 to KTrussLayers).map { r =>
-        s"""t$r AS MATERIALIZED (
-           |  SELECT a.lo AS x, a.hi AS y, b.hi AS z
-           |  FROM e${r - 1} a JOIN e${r - 1} b ON b.lo = a.hi
-           |  JOIN e${r - 1} c ON c.lo = a.lo AND c.hi = b.hi),
-           |s$r AS MATERIALIZED (
-           |  SELECT lo, hi, count(*) AS sup FROM (
-           |    SELECT x AS lo, y AS hi FROM t$r
-           |    UNION ALL SELECT x, z FROM t$r
-           |    UNION ALL SELECT y, z FROM t$r) GROUP BY lo, hi),
-           |e$r AS MATERIALIZED (
-           |  SELECT e.lo, e.hi FROM e${r - 1} e JOIN s$r s
-           |  ON s.lo = e.lo AND s.hi = e.hi AND s.sup >= $kk)"""
-          .stripMargin
-      }.mkString(",\n")
-      val L = KTrussLayers
-      s"""WITH li AS MATERIALIZED (
-         |  SELECT l_orderkey AS ok, l_partkey AS pk
-         |  FROM lineitem WHERE l_orderkey % 5 = 0),
-         |e0 AS MATERIALIZED (
-         |  SELECT DISTINCT a.pk AS lo, b.pk AS hi
-         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-         |$layers,
-         |tf AS MATERIALIZED (
-         |  SELECT a.lo AS x, a.hi AS y, b.hi AS z
-         |  FROM e$L a JOIN e$L b ON b.lo = a.hi
-         |  JOIN e$L c ON c.lo = a.lo AND c.hi = b.hi),
-         |sf AS MATERIALIZED (
-         |  SELECT lo, hi, count(*) AS sup FROM (
-         |    SELECT x AS lo, y AS hi FROM tf
-         |    UNION ALL SELECT x, z FROM tf
-         |    UNION ALL SELECT y, z FROM tf) GROUP BY lo, hi)
-         |SELECT e.lo AS src, e.hi AS dst, coalesce(s.sup, 0) AS support
-         |FROM e$L e LEFT JOIN sf s ON s.lo = e.lo AND s.hi = e.hi
-         |ORDER BY src, dst""".stripMargin
-    },
-
-    // two unrolled power iterations replaying PageRank.run's math in
-    // the same IEEE order: rank0 = 1.0/n; per-edge contribution
-    // trunc(rank/outdeg*1e15) summed as integers; rank' = (1-d)/n +
-    // d*(csum/1e15). trunc() mirrors Spark's double→long cast (DuckDB
-    // CAST alone rounds-to-nearest). Symmetrized graph → no dangling
-    // vertices, every vertex has outdeg ≥ 1.
-    "q_pagerank_2iter" ->
-      // every numeric literal is spelled as a DOUBLE (1e15, CAST AS
-      // DOUBLE): a bare `1.0` is DECIMAL in DuckDB and would silently
-      // switch the whole chain to decimal arithmetic
-      s"""WITH $copurchaseEdgesSql,
-         |deg AS (SELECT src AS id, count(*) AS outdeg FROM edges GROUP BY src),
-         |n AS (SELECT count(*) AS n FROM deg),
-         |r0 AS (SELECT id, outdeg,
-         |         CAST(1.0 AS DOUBLE) / (SELECT n FROM n) AS rank FROM deg),
-         |c1 AS (SELECT e.dst AS id,
-         |         CAST(trunc(r.rank / r.outdeg * 1e15) AS BIGINT) AS c
-         |       FROM r0 r JOIN edges e ON e.src = r.id),
-         |s1 AS (SELECT id, sum(c) AS csum FROM c1 GROUP BY id),
-         |r1 AS (SELECT d.id, d.outdeg,
-         |         (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE))
-         |             / (SELECT n FROM n)
-         |           + CAST(0.85 AS DOUBLE)
-         |             * (CAST(coalesce(s.csum, 0) AS DOUBLE) / 1e15) AS rank
-         |       FROM deg d LEFT JOIN s1 s ON s.id = d.id),
-         |c2 AS (SELECT e.dst AS id,
-         |         CAST(trunc(r.rank / r.outdeg * 1e15) AS BIGINT) AS c
-         |       FROM r1 r JOIN edges e ON e.src = r.id),
-         |s2 AS (SELECT id, sum(c) AS csum FROM c2 GROUP BY id),
-         |r2 AS (SELECT d.id,
-         |         (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE))
-         |             / (SELECT n FROM n)
-         |           + CAST(0.85 AS DOUBLE)
-         |             * (CAST(coalesce(s.csum, 0) AS DOUBLE) / 1e15) AS rank
-         |       FROM deg d LEFT JOIN s2 s ON s.id = d.id)
-         |SELECT id, rank FROM r2 ORDER BY id""".stripMargin,
-
-    // the FULL 10-iteration face, same recurrence unrolled (r12 item
-    // 4 — was rows-only since r9): fixed-point long contributions make
-    // every SUM order-free/exact, and each double op (divide, scale,
-    // damp) is the identical IEEE-754 operation in both engines, so
-    // the chain is bit-stable to the last iteration — the same
-    // argument q_pagerank_2iter has been proving hash-exact since r9.
-    // MATERIALIZED layers: 10 deep, the kcore_converged inlining
-    // lesson applies.
-    "q_pagerank" -> {
-      val layers = (1 to PageRankIters).map { i =>
-        s"""c$i AS MATERIALIZED (
-           |  SELECT e.dst AS id,
-           |    CAST(trunc(r.rank / r.outdeg * 1e15) AS BIGINT) AS c
-           |  FROM r${i - 1} r JOIN edges e ON e.src = r.id),
-           |s$i AS MATERIALIZED (
-           |  SELECT id, sum(c) AS csum FROM c$i GROUP BY id),
-           |r$i AS MATERIALIZED (
-           |  SELECT d.id, d.outdeg,
-           |    (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE))
-           |        / (SELECT n FROM n)
-           |      + CAST(0.85 AS DOUBLE)
-           |        * (CAST(coalesce(s.csum, 0) AS DOUBLE) / 1e15) AS rank
-           |  FROM deg d LEFT JOIN s$i s ON s.id = d.id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $copurchaseEdgesSql,
-         |deg AS (SELECT src AS id, count(*) AS outdeg FROM edges GROUP BY src),
-         |n AS (SELECT count(*) AS n FROM deg),
-         |r0 AS (SELECT id, outdeg,
-         |         CAST(1.0 AS DOUBLE) / (SELECT n FROM n) AS rank FROM deg),
-         |$layers
-         |SELECT id, rank FROM r$PageRankIters ORDER BY id""".stripMargin
-    },
-
-    // personalized variant: identical layer unrolling, init/base mass
-    // on the seed set {2,4} only — (1-d)/|S| and 1/|S| are the same
-    // IEEE ops both engines evaluate, so the chain stays bit-stable
-    "q_pagerank_personalized" -> {
-      val layers = (1 to PageRankIters).map { i =>
-        s"""c$i AS MATERIALIZED (
-           |  SELECT e.dst AS id,
-           |    CAST(trunc(r.rank / r.outdeg * 1e15) AS BIGINT) AS c
-           |  FROM r${i - 1} r JOIN edges e ON e.src = r.id),
-           |s$i AS MATERIALIZED (
-           |  SELECT id, sum(c) AS csum FROM c$i GROUP BY id),
-           |r$i AS MATERIALIZED (
-           |  SELECT d.id, d.outdeg,
-           |    CASE WHEN d.id IN (2, 4)
-           |         THEN (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / 2
-           |         ELSE CAST(0.0 AS DOUBLE) END
-           |      + CAST(0.85 AS DOUBLE)
-           |        * (CAST(coalesce(s.csum, 0) AS DOUBLE) / 1e15) AS rank
-           |  FROM deg d LEFT JOIN s$i s ON s.id = d.id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $copurchaseEdgesSql,
-         |deg AS (SELECT src AS id, count(*) AS outdeg FROM edges GROUP BY src),
-         |r0 AS (SELECT id, outdeg,
-         |         CASE WHEN id IN (2, 4) THEN CAST(0.5 AS DOUBLE)
-         |              ELSE CAST(0.0 AS DOUBLE) END AS rank FROM deg),
-         |$layers
-         |SELECT id, rank FROM r$PageRankIters ORDER BY id""".stripMargin
-    },
-
-    // greedy earliest-match staged mins mirror Funnel.funnelCounts;
-    // strict > in both engines; ts instants identical (µs precision)
-    "q_funnel" ->
-      """WITH s1 AS (
-        |  SELECT user_id, min(CAST(ts AS TIMESTAMP)) AS t FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (
-        |  SELECT e.user_id, min(CAST(e.ts AS TIMESTAMP)) AS t
-        |  FROM events e JOIN s1 ON s1.user_id = e.user_id
-        |   AND CAST(e.ts AS TIMESTAMP) > s1.t
-        |  WHERE e.event_type = 'click' GROUP BY 1),
-        |s3 AS (
-        |  SELECT e.user_id, min(CAST(e.ts AS TIMESTAMP)) AS t
-        |  FROM events e JOIN s2 ON s2.user_id = e.user_id
-        |   AND CAST(e.ts AS TIMESTAMP) > s2.t
-        |  WHERE e.event_type = 'purchase' GROUP BY 1)
-        |SELECT 1 AS step, 'view' AS event_type,
-        |       (SELECT count(*) FROM s1) AS n_users
-        |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
-        |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)
-        |ORDER BY step""".stripMargin,
-
-    // mirrors Funnel.transitionMatrix: lead over (ts, event_id) per
-    // user, pair counts, window row totals, one truncating division
-    "q_markov_transitions" ->
-      """WITH s AS (
-        |  SELECT user_id, event_type AS from_type,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY CAST(ts AS TIMESTAMP), event_id) AS to_type
-        |  FROM events),
-        |p AS (SELECT from_type, to_type, count(*) AS n FROM s
-        |      WHERE to_type IS NOT NULL GROUP BY from_type, to_type)
-        |SELECT from_type, to_type, n,
-        |  CAST(sum(n) OVER (PARTITION BY from_type) AS BIGINT)
-        |    AS from_total,
-        |  n * 1000 // CAST(sum(n) OVER (PARTITION BY from_type)
-        |    AS BIGINT) AS permille
-        |FROM p ORDER BY from_type, to_type""".stripMargin,
-
-    // the DEFINITIONAL all-pairs dominance test — deliberately NOT
-    // the engine's staircase algorithm, so the oracle independently
-    // checks the two-phase prune's exactness
-    "q_skyline" ->
-      """WITH pts AS (
-        |  SELECT p_retailprice AS cost, CAST(p_size AS BIGINT) AS benefit,
-        |         count(*) AS n_parts, min(p_partkey) AS min_partkey
-        |  FROM part GROUP BY 1, 2)
-        |SELECT cost, benefit, n_parts, min_partkey FROM pts a
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM pts b
-        |  WHERE b.cost <= a.cost AND b.benefit >= a.benefit
-        |    AND (b.cost < a.cost OR b.benefit > a.benefit))
-        |ORDER BY cost, benefit""".stripMargin,
-
-    // cohort = week of first event per user; offsets are exact
-    // multiples of 7 days (both sides are week-truncated), so the /7
-    // division is exact in either engine's arithmetic.
-    "q_retention" ->
-      """WITH f AS (
-        |  SELECT user_id,
-        |         CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE)
-        |           AS wk
-        |  FROM events),
-        |c AS (
-        |  SELECT user_id, wk,
-        |         min(wk) OVER (PARTITION BY user_id) AS cohort_week
-        |  FROM f)
-        |SELECT cohort_week,
-        |       CAST(date_diff('day', cohort_week, wk) / 7 AS INT)
-        |         AS week_offset,
-        |       count(DISTINCT user_id) AS n_users
-        |FROM c GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_events_window" ->
-      """WITH b AS (
-        |  SELECT time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP))
-        |           AS window_start,
-        |         event_type, value
-        |  FROM events)
-        |SELECT window_start, window_start + INTERVAL '1 hour' AS window_end,
-        |       event_type, count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-        |FROM b GROUP BY window_start, event_type
-        |ORDER BY window_start, event_type""".stripMargin,
-
-    // complete-mode streaming twin: every window reaches the sink, so
-    // the oracle is q_events_window's verbatim
-    "q_streaming_window" ->
-      """WITH b AS (
-        |  SELECT time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP))
-        |           AS window_start,
-        |         event_type, value
-        |  FROM events)
-        |SELECT window_start, window_start + INTERVAL '1 hour' AS window_end,
-        |       event_type, count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-        |FROM b GROUP BY window_start, event_type
-        |ORDER BY window_start, event_type""".stripMargin,
-
-    // the state backend must be result-invisible — same oracle as
-    // q_streaming_window by design (provider engagement is
-    // require-enforced in-face, not oracle-visible)
-    "q_streaming_rocksdb" ->
-      """WITH b AS (
-        |  SELECT time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP))
-        |           AS window_start,
-        |         event_type, value
-        |  FROM events)
-        |SELECT window_start, window_start + INTERVAL '1 hour' AS window_end,
-        |       event_type, count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-        |FROM b GROUP BY window_start, event_type
-        |ORDER BY window_start, event_type""".stripMargin,
-
-    // watermark semantics replayed relationally: integer split
-    // cutoff, wm = floor(max_µs/1000) − 7 200 000 ms, emitted =
-    // closed windows (end ≤ wm) over ON-TIME rows only; the drop
-    // count itself is require-enforced in-face against the engine's
-    // numRowsDroppedByWatermark metric
-    "q_streaming_late_drop" ->
-      """WITH b AS (
-        |  SELECT CAST(ts AS TIMESTAMP) AS ts,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type, value
-        |  FROM events),
-        |c AS (SELECT min(us) + ((max(us) - min(us)) * 7) // 10 AS cut,
-        |             max(us) // 1000 - 7200000 AS wm_ms FROM b),
-        |a AS (SELECT b.* FROM b, c WHERE b.us > c.cut),
-        |w AS (SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
-        |             time_bucket(INTERVAL '1 hour', ts) + INTERVAL '1 hour'
-        |               AS window_end,
-        |             event_type, value
-        |      FROM a)
-        |SELECT window_start, window_end, event_type,
-        |       count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
-        |         AS total_value
-        |FROM w, c
-        |WHERE epoch_ms(window_end) <= c.wm_ms
-        |GROUP BY window_start, window_end, event_type
-        |ORDER BY window_start, event_type""".stripMargin,
-
-    // sliding replay: each event expands to its 4 member windows
-    // (15-min bucket minus k slides, k = 0..3; with window = 4·slide
-    // every k qualifies), then the tumbling aggregation verbatim
-    "q_streaming_sliding" ->
-      """WITH k AS (SELECT unnest(range(0, 4)) AS k),
-        |b AS (
-        |  SELECT time_bucket(INTERVAL '15 minutes', CAST(ts AS TIMESTAMP))
-        |           - k.k * INTERVAL '15 minutes' AS window_start,
-        |         event_type, value
-        |  FROM events, k)
-        |SELECT window_start, window_start + INTERVAL '1 hour' AS window_end,
-        |       event_type, count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-        |FROM b GROUP BY window_start, event_type
-        |ORDER BY window_start, event_type""".stripMargin,
-
-    // the stop→resume incarnation pair must land on the identical
-    // full aggregation — same oracle as q_streaming_window by design
-    "q_streaming_resume" ->
-      """WITH b AS (
-        |  SELECT time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP))
-        |           AS window_start,
-        |         event_type, value
-        |  FROM events)
-        |SELECT window_start, window_start + INTERVAL '1 hour' AS window_end,
-        |       event_type, count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-        |FROM b GROUP BY window_start, event_type
-        |ORDER BY window_start, event_type""".stripMargin,
-
-    // stream-static left join replayed batch-side: per-user purchase
-    // LTV onto every view event
-    "q_streaming_enrich" ->
-      """WITH l AS (
-        |  SELECT user_id, sum(CAST(value AS DECIMAL(18,6))) AS ltv
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id)
-        |SELECT e.event_id, e.user_id, CAST(l.ltv AS DOUBLE) AS user_ltv
-        |FROM events e LEFT JOIN l ON l.user_id = e.user_id
-        |WHERE e.event_type = 'view'
-        |ORDER BY e.event_id""".stripMargin,
-
-    // surviving-key-set contract of the streaming dedup (which row
-    // survives is arrival-order dependent; the key set is not)
-    "q_streaming_dedup" ->
-      """SELECT DISTINCT user_id, event_type FROM events
-        |ORDER BY user_id, event_type""".stripMargin,
-
-    // the naive interval join the optimizer rule must preserve
-    // exactly (same pair SQL as the streaming face)
-    "q_interval_autobin" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-        |                  value, event_type FROM events),
-        |p AS (SELECT user_id, event_id, ts FROM e WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id, ts, value FROM e WHERE event_type = 'view')
-        |SELECT p.event_id, p.user_id, p.ts AS p_ts, v.ts AS v_ts, v.value
-        |FROM p JOIN v
-        |  ON p.user_id = v.user_id AND v.ts < p.ts
-        | AND epoch_us(p.ts) - epoch_us(v.ts) < 3600000000
-        |ORDER BY p.event_id, v.ts""".stripMargin,
-
-    // pair-level interval join: strict bounds on both ends, matching
-    // streamAttribution's (p_ts - 1h, p_ts) window
-    "q_streaming_attribution" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-        |                  value, event_type FROM events),
-        |p AS (SELECT user_id, event_id, ts FROM e WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id, ts, value FROM e WHERE event_type = 'view')
-        |SELECT p.event_id, p.user_id, p.ts AS p_ts, v.ts AS v_ts, v.value
-        |FROM p JOIN v
-        |  ON p.user_id = v.user_id AND v.ts < p.ts
-        | AND epoch_us(p.ts) - epoch_us(v.ts) < 3600000000
-        |ORDER BY p.event_id, v.ts""".stripMargin,
-
-    // LEFT OUTER face of the same interval join, restricted to the
-    // watermark-decided region. The watermark is the MIN across the
-    // two filtered branches' watermark nodes (each tracks ITS OWN max
-    // ts − delay), so the cutoff basis is the smaller of the per-type
-    // maxima, not the overall max: p_ts <= wm − 1s — see
-    // boundedAttributionOuter. Unmatched rows carry the epoch-0
-    // sentinel + matched=0.
-    "q_streaming_left_join" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-        |                  value, event_type FROM events),
-        |p AS (SELECT user_id, event_id, ts FROM e WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id, ts, value FROM e WHERE event_type = 'view'),
-        |w AS (SELECT min(m) - 600000000 AS wm FROM (
-        |        SELECT max(epoch_us(ts)) AS m FROM p
-        |        UNION ALL SELECT max(epoch_us(ts)) FROM v))
-        |SELECT p.event_id, p.user_id, p.ts AS p_ts,
-        |       COALESCE(v.ts, TIMESTAMP '1970-01-01 00:00:00') AS v_ts,
-        |       CAST(CASE WHEN v.ts IS NULL THEN 0 ELSE 1 END AS BIGINT)
-        |         AS matched,
-        |       v.value
-        |FROM p LEFT JOIN v
-        |  ON p.user_id = v.user_id AND v.ts < p.ts
-        | AND epoch_us(p.ts) - epoch_us(v.ts) < 3600000000
-        |WHERE epoch_us(p.ts) <= (SELECT wm FROM w) - 1000000
-        |ORDER BY p.event_id, v_ts""".stripMargin,
-
-    // batch FULL join on the same strict interval, restricted to the
-    // per-side decided regions (wm = min of the two branches' max ts
-    // − delay; purchase side decided at p_ts <= wm − 1s, view side at
-    // v_ts <= wm − window − 1s — the engine's measured state-eviction
-    // bounds, see boundedAttributionFull); sentinel coalescing
-    // mirrors the face
-    "q_streaming_full_join" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-        |                  value, event_type FROM events),
-        |p AS (SELECT user_id, event_id, ts FROM e WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id, ts, value FROM e WHERE event_type = 'view'),
-        |j AS (SELECT p.event_id, COALESCE(p.user_id, v.user_id) AS user_id,
-        |             p.ts AS p_ts, v.ts AS v_ts, v.value
-        |      FROM p FULL JOIN v
-        |        ON p.user_id = v.user_id AND v.ts < p.ts
-        |       AND epoch_us(p.ts) - epoch_us(v.ts) < 3600000000),
-        |w AS (SELECT min(m) - 600000000 AS wm FROM (
-        |        SELECT max(epoch_us(ts)) AS m FROM p
-        |        UNION ALL SELECT max(epoch_us(ts)) FROM v))
-        |SELECT COALESCE(event_id, -1) AS event_id, user_id,
-        |       COALESCE(p_ts, TIMESTAMP '1970-01-01 00:00:00') AS p_ts,
-        |       COALESCE(v_ts, TIMESTAMP '1970-01-01 00:00:00') AS v_ts,
-        |       CAST(CASE WHEN p_ts IS NULL THEN 0 ELSE 1 END AS BIGINT)
-        |         AS has_p,
-        |       CAST(CASE WHEN v_ts IS NULL THEN 0 ELSE 1 END AS BIGINT)
-        |         AS has_v,
-        |       value
-        |FROM j, w
-        |WHERE (p_ts IS NOT NULL AND epoch_us(p_ts) <= wm - 1000000)
-        |   OR (p_ts IS NULL AND
-        |       epoch_us(v_ts) <= wm - 3600000000 - 1000000)
-        |ORDER BY user_id, event_id, p_ts, v_ts""".stripMargin,
-
-    // batch replay of the chained join→agg pipeline: same interval
-    // join, 30-min tumbling windows on p_ts (integer µs bucketing),
-    // decimal(18,6) sums, restricted to w_end <= wm − joinWindow − 1s
-    // (the watermark the agg sees after propagation past the join)
-    "q_streaming_chained_agg" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
-        |                  value, event_type FROM events),
-        |p AS (SELECT user_id, ts FROM e WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id, ts, value FROM e WHERE event_type = 'view'),
-        |w AS (SELECT min(m) - 600000000 AS wm FROM (
-        |        SELECT max(epoch_us(ts)) AS m FROM p
-        |        UNION ALL SELECT max(epoch_us(ts)) FROM v)),
-        |j AS (SELECT p.ts AS p_ts, v.value
-        |      FROM p JOIN v
-        |        ON p.user_id = v.user_id AND v.ts < p.ts
-        |       AND epoch_us(p.ts) - epoch_us(v.ts) < 3600000000),
-        |g AS (SELECT (epoch_us(p_ts) // 1800000000) * 1800000000 AS ws_us,
-        |             count(*) AS pairs,
-        |             CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
-        |               AS view_value
-        |      FROM j GROUP BY 1)
-        |SELECT make_timestamp(ws_us) AS w_start,
-        |       make_timestamp(ws_us + 1800000000) AS w_end,
-        |       pairs, view_value
-        |FROM g, w
-        |WHERE ws_us + 1800000000 <= wm - 3600000000 - 1000000
-        |ORDER BY w_start""".stripMargin,
-
-    // batch sessions restricted to the watermark-closed region the
-    // bounded stream provably emitted: session_end + gap(6h) + 1s
-    // margin <= max(ts) - delay(10min) — see StreamHarness
-    // .boundedSessions for the rounding analysis behind the margin
-    "q_streaming_sessionize" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts
-        |           FROM events),
-        |x AS (SELECT user_id, event_id, ts,
-        |        CASE WHEN lag(ts) OVER w IS NULL
-        |                  OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
-        |                     > 21600000000
-        |             THEN 1 ELSE 0 END AS brk
-        |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (SELECT user_id, ts,
-        |        CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                            ROWS UNBOUNDED PRECEDING) AS BIGINT)
-        |          AS session_no
-        |      FROM x),
-        |g AS (SELECT user_id, session_no,
-        |             min(ts) AS session_start, max(ts) AS session_end,
-        |             count(*) AS n_events
-        |      FROM s GROUP BY user_id, session_no),
-        |m AS (SELECT max(epoch_us(CAST(ts AS TIMESTAMP))) AS mx FROM events)
-        |SELECT user_id, session_start, session_end, n_events
-        |FROM g, m
-        |WHERE epoch_us(session_end)
-        |      <= mx - 600000000 - 21600000000 - 1000000
-        |ORDER BY user_id, session_start""".stripMargin,
-
-    // native session_window replay: split at >= gap (windows
-    // [ts, ts+gap) don't overlap at exactly gap — vs the custom
-    // face's strict >), end = last event + gap, decided once the
-    // watermark passes the END (which already carries the gap)
-    "q_streaming_session_window" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-        |                  value FROM events),
-        |x AS (SELECT user_id, event_id, ts, value,
-        |        CASE WHEN lag(ts) OVER w IS NULL
-        |                  OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
-        |                     >= 21600000000
-        |             THEN 1 ELSE 0 END AS brk
-        |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (SELECT user_id, ts, value,
-        |        CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                            ROWS UNBOUNDED PRECEDING) AS BIGINT)
-        |          AS session_no
-        |      FROM x),
-        |g AS (SELECT user_id, session_no,
-        |             min(ts) AS session_start,
-        |             max(ts) + INTERVAL 6 HOUR AS session_end,
-        |             count(*) AS n_events,
-        |             CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
-        |               AS total_value
-        |      FROM s GROUP BY user_id, session_no),
-        |m AS (SELECT max(epoch_us(CAST(ts AS TIMESTAMP))) AS mx FROM events)
-        |SELECT user_id, session_start, session_end, n_events, total_value
-        |FROM g, m
-        |WHERE epoch_us(session_end) <= mx - 600000000 - 1000000
-        |ORDER BY user_id, session_start""".stripMargin,
-
-    // the two-incarnation union on the same closed region must equal
-    // the single-run sessionization — q_streaming_sessionize's oracle
-    // verbatim
-    "q_streaming_resume_sessions" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts
-        |           FROM events),
-        |x AS (SELECT user_id, event_id, ts,
-        |        CASE WHEN lag(ts) OVER w IS NULL
-        |                  OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
-        |                     > 21600000000
-        |             THEN 1 ELSE 0 END AS brk
-        |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (SELECT user_id, ts,
-        |        CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                            ROWS UNBOUNDED PRECEDING) AS BIGINT)
-        |          AS session_no
-        |      FROM x),
-        |g AS (SELECT user_id, session_no,
-        |             min(ts) AS session_start, max(ts) AS session_end,
-        |             count(*) AS n_events
-        |      FROM s GROUP BY user_id, session_no),
-        |m AS (SELECT max(epoch_us(CAST(ts AS TIMESTAMP))) AS mx FROM events)
-        |SELECT user_id, session_start, session_end, n_events
-        |FROM g, m
-        |WHERE epoch_us(session_end)
-        |      <= mx - 600000000 - 21600000000 - 1000000
-        |ORDER BY user_id, session_start""".stripMargin,
-
-    "q_sessionize" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value
-        |           FROM events),
-        |x AS (SELECT user_id, event_id, ts, value,
-        |        CASE WHEN lag(ts) OVER w IS NULL
-        |                  OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
-        |                     > 21600000000
-        |             THEN 1 ELSE 0 END AS brk
-        |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (SELECT user_id, ts, value,
-        |        CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                            ROWS UNBOUNDED PRECEDING) AS BIGINT)
-        |          AS session_no
-        |      FROM x)
-        |SELECT user_id, session_no,
-        |       min(ts) AS session_start, max(ts) AS session_end,
-        |       count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-        |FROM s GROUP BY user_id, session_no
-        |ORDER BY user_id, session_no""".stripMargin,
-
-    "q_bfs_multisource" ->
-      s"""WITH RECURSIVE $copurchaseEdgesSql,
-         |bfs(id, dist) AS (
-         |  SELECT CAST(v.id AS BIGINT), CAST(0 AS BIGINT)
-         |  FROM (VALUES (2), (4), (6)) AS v(id)
-         |  UNION
-         |  SELECT e.dst, bfs.dist + 1 FROM bfs JOIN edges e ON e.src = bfs.id
-         |  WHERE bfs.dist < 40
-         |)
-         |SELECT id, min(dist) AS dist FROM bfs GROUP BY id ORDER BY id""".stripMargin,
-
-    // Kruskal's cut rule per edge: with the strict total order
-    // (w, src, dst), e is in THE unique MSF iff its endpoints are not
-    // connected using strictly-smaller edges — replayed as one
-    // product-space reachability CTE (state (edge_rank, vertex):
-    // vertices reachable from e.src through edges ranked below e).
-    // Bounded by construction: the face's subgraph keeps components
-    // small, so |state| ≈ Σ|component(e)| — never |V|·|E|.
-    "q_msf" ->
-      """WITH RECURSIVE
-        |eraw AS (
-        |  SELECT DISTINCT least(l_orderkey*2, l_partkey*2+1) AS src,
-        |         greatest(l_orderkey*2, l_partkey*2+1) AS dst
-        |  FROM lineitem
-        |  WHERE l_orderkey % 20 = 0 AND l_partkey % 5 = 0),
-        |e AS (
-        |  SELECT src, dst, (src*7 + dst*13) % 1000 + 1 AS w,
-        |         row_number() OVER (
-        |           ORDER BY (src*7 + dst*13) % 1000 + 1, src, dst) AS rk
-        |  FROM eraw),
-        |reach(ek, v) AS (
-        |  SELECT rk, src FROM e
-        |  UNION
-        |  SELECT r.ek, CASE WHEN x.src = r.v THEN x.dst ELSE x.src END
-        |  FROM reach r JOIN e x
-        |    ON x.rk < r.ek AND (x.src = r.v OR x.dst = r.v)
-        |)
-        |SELECT e.src, e.dst, CAST(e.w AS BIGINT) AS weight FROM e
-        |LEFT JOIN reach r ON r.ek = e.rk AND r.v = e.dst
-        |WHERE r.v IS NULL
-        |ORDER BY e.src, e.dst""".stripMargin,
-
-    // algorithm-independent closed form of the chain construction:
-    // comp(v) = (v div 127)*127
-    "q_cc_star_deep" ->
-      """SELECT (i // 127) * 127 AS comp,
-        |  count(*) AS n_vertices,
-        |  CAST(sum(i) AS BIGINT) AS sum_id
-        |FROM range(12700) t(i)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the closed-form DAG rebuilt from the same integer arithmetic,
-    // then a recursive path-length closure: reach(v, len) holds every
-    // (vertex, path-length-ending-here) pair — bounded |V| × (depth+1)
-    // states on the 12-level construction — and layer = max(len)
-    "q_topo_layers" ->
-      """WITH RECURSIVE dedges(src, dst) AS (
-        |  SELECT i, ((i // 500) + 1) * 500 + (i % 500 * 17 + 1) % 500
-        |  FROM range(5500) t(i)
-        |  WHERE (i + (i % 500 * 17 + 1) % 500) % 3 != 0
-        |  UNION ALL
-        |  SELECT i, ((i // 500) + 1) * 500 + (i % 500 * 29 + 3) % 500
-        |  FROM range(5500) t(i)
-        |  WHERE (i + (i % 500 * 29 + 3) % 500) % 3 != 0
-        |  UNION ALL
-        |  SELECT i, ((i // 500) + 1) * 500 + (i % 500 * 41 + 7) % 500
-        |  FROM range(5500) t(i)
-        |  WHERE (i + (i % 500 * 41 + 7) % 500) % 3 != 0),
-        |dverts(v) AS (
-        |  SELECT DISTINCT src FROM dedges
-        |  UNION SELECT DISTINCT dst FROM dedges),
-        |reach(v, len) AS (
-        |  SELECT v, 0 FROM dverts
-        |  UNION
-        |  SELECT e.dst, r.len + 1 FROM reach r
-        |  JOIN dedges e ON e.src = r.v)
-        |SELECT v AS id, CAST(max(len) AS BIGINT) AS layer
-        |FROM reach GROUP BY v ORDER BY id""".stripMargin,
-
-    // closed form of the scc fixture (SyntheticGraphs.sccFixtureEdges):
-    // ring vertices map to their 26-block segment maximum, the
-    // singleton chain and the max-id source to themselves
-    "q_scc" ->
-      """SELECT i AS id, CASE
-        |  WHEN i >= 312 THEN i
-        |  WHEN i % 26 < 5  THEN (i // 26) * 26 + 4
-        |  WHEN i % 26 < 11 THEN (i // 26) * 26 + 10
-        |  WHEN i % 26 < 18 THEN (i // 26) * 26 + 17
-        |  ELSE (i // 26) * 26 + 25 END AS comp
-        |FROM range(329) t(i) ORDER BY id""".stripMargin,
-
-    "q_connected_components" ->
-      """WITH RECURSIVE oedges(src, dst) AS (
-        |  SELECT o_custkey*2, o_orderkey*2+1 FROM orders
-        |  UNION ALL
-        |  SELECT o_orderkey*2+1, o_custkey*2 FROM orders),
-        |reach(id, r) AS (
-        |  SELECT DISTINCT src, src FROM oedges
-        |  UNION
-        |  SELECT reach.id, e.dst FROM reach JOIN oedges e ON e.src = reach.r)
-        |SELECT id, min(r) AS comp FROM reach GROUP BY id ORDER BY id""".stripMargin,
-
-    "q_semilattice_agg" ->
-      """SELECT l_orderkey AS okey,
-        |       CAST(min(l_quantity) AS DOUBLE) AS min_qty,
-        |       CAST(min(row(l_quantity, l_partkey)) AS ROW(q DOUBLE, p BIGINT)).p
-        |         AS argmin_part,
-        |       max(l_returnflag) AS darkest_flag,
-        |       count(DISTINCT l_partkey) AS n_parts
-        |FROM lineitem GROUP BY l_orderkey ORDER BY okey""".stripMargin,
-
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        |                * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-        |         AS revenue,
-        |       count(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q_decontaminate" ->
-      s"""WITH ${decontamCte()}
-         |SELECT doc_id, n_shared_grams FROM cont ORDER BY doc_id""".stripMargin,
-
-    "q_repetition_stats" ->
-      s"""WITH $repetitionCte
-         |SELECT doc_id, n_tokens, n_distinct_tokens, dup_token_frac,
-         |       n_bigrams, top_bigram_n, top_bigram_frac, repetitive
-         |FROM rep ORDER BY doc_id""".stripMargin,
-
-    "q_stratified_sample" ->
-      s"""SELECT doc_id, lang,
-         |  ${rhSql("CAST(doc_id AS VARCHAR)")} % 100 < ($sampleCaseSql)
-         |    AS sampled
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // bottom-k replayed as the window the operator's bounded
-    // aggregate REPLACES: rank by (priority, id) per stratum
-    "q_priority_sample" ->
-      s"""WITH h AS (SELECT lang, doc_id,
-         |  ${rhSql("CAST(doc_id AS VARCHAR)")} AS priority FROM documents),
-         |r AS (SELECT lang, doc_id, priority,
-         |        CAST(row_number() OVER (PARTITION BY lang
-         |          ORDER BY priority, doc_id) AS INT) AS rank
-         |      FROM h)
-         |SELECT lang, rank, doc_id, priority FROM r
-         |WHERE rank <= 5 ORDER BY lang, rank""".stripMargin,
-
-    // weighted race replayed: same hash, same 2^20 scale, same
-    // integer div by the char-length weight, rank by (key, id)
-    "q_weighted_sample" ->
-      s"""WITH d AS (SELECT doc_id, CAST(len(text) AS BIGINT) AS w
-         |           FROM documents WHERE len(text) > 0),
-         |h AS (SELECT doc_id, w,
-         |  (${rhSql("CAST(doc_id AS VARCHAR)")} * 1048576) // w AS key
-         |  FROM d),
-         |r AS (SELECT doc_id, w, key,
-         |        CAST(row_number() OVER (ORDER BY key, doc_id) AS INT)
-         |          AS rank
-         |      FROM h)
-         |SELECT rank, doc_id, w AS weight, key FROM r
-         |WHERE rank <= 10 ORDER BY rank""".stripMargin,
-
-    // full histogram-sketch replay: same integer width/bucket/rank
-    // arithmetic (floor for the double->cents truncation — DuckDB's
-    // bare CAST rounds where Spark's truncates), plus the exact
-    // discrete quantiles and the one-width error flags (predicted
-    // true — a drifting sketch flips a boolean and fails the hash)
-    "q_hist_quantiles" ->
-      """WITH v AS (SELECT l_returnflag,
-        |             CAST(floor(l_extendedprice*100) AS BIGINT) AS cents
-        |           FROM lineitem),
-        |s AS (SELECT l_returnflag, min(cents) AS lo, max(cents) AS hi,
-        |             count(*) AS n,
-        |             (max(cents)-min(cents)+1+511)//512 AS width
-        |      FROM v GROUP BY l_returnflag),
-        |b AS (SELECT v.l_returnflag, (v.cents - s.lo)//s.width AS bucket,
-        |             count(*) AS c
-        |      FROM v JOIN s USING (l_returnflag)
-        |      GROUP BY v.l_returnflag, (v.cents - s.lo)//s.width),
-        |cum AS (SELECT l_returnflag, bucket,
-        |          sum(c) OVER (PARTITION BY l_returnflag
-        |            ORDER BY bucket) AS cum
-        |        FROM b),
-        |q AS (SELECT c.l_returnflag,
-        |        min(CASE WHEN c.cum*100 >= s.n*50 THEN c.bucket END) AS b50,
-        |        min(CASE WHEN c.cum*100 >= s.n*95 THEN c.bucket END) AS b95
-        |      FROM cum c JOIN s USING (l_returnflag)
-        |      GROUP BY c.l_returnflag),
-        |d AS (SELECT l_returnflag,
-        |        min(CASE WHEN rn*100 >= n*50 THEN cents END) AS d50,
-        |        min(CASE WHEN rn*100 >= n*95 THEN cents END) AS d95
-        |      FROM (SELECT v.l_returnflag, v.cents, s.n,
-        |              row_number() OVER (PARTITION BY v.l_returnflag
-        |                ORDER BY v.cents) AS rn
-        |            FROM v JOIN s USING (l_returnflag))
-        |      GROUP BY l_returnflag)
-        |SELECT s.l_returnflag, s.n, s.lo, s.hi, s.width,
-        |       s.lo + (q.b50+1)*s.width - 1 AS q50,
-        |       s.lo + (q.b95+1)*s.width - 1 AS q95,
-        |       d.d50, d.d95,
-        |       abs(s.lo + (q.b50+1)*s.width - 1 - d.d50) < s.width AS ok50,
-        |       abs(s.lo + (q.b95+1)*s.width - 1 - d.d95) < s.width AS ok95
-        |FROM s JOIN q USING (l_returnflag) JOIN d USING (l_returnflag)
-        |ORDER BY l_returnflag""".stripMargin,
-
-    // distinct basket membership -> whole-basket size cap -> pair
-    // self-join -> exact truncating ppm metrics (// floors; all
-    // operands positive, so it matches Spark's truncating div)
-    "q_assoc_rules" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-        |           FROM lineitem),
-        |sized AS (SELECT bk FROM b GROUP BY bk HAVING count(*) <= 1000),
-        |bb AS (SELECT b.bk, b.it FROM b JOIN sized USING (bk)),
-        |nn AS (SELECT count(DISTINCT bk) AS n FROM bb),
-        |c AS (SELECT it, count(*) AS cnt FROM bb GROUP BY it),
-        |p AS (SELECT a.it AS item_a, x.it AS item_b, count(*) AS support
-        |      FROM bb a JOIN bb x ON a.bk = x.bk AND a.it < x.it
-        |      GROUP BY a.it, x.it HAVING count(*) >= 2)
-        |SELECT item_a, item_b, support, ca.cnt AS cnt_a, cb.cnt AS cnt_b,
-        |  support * 1000000 // (SELECT n FROM nn) AS support_ppm,
-        |  support * 1000000 // ca.cnt AS conf_ab_ppm,
-        |  support * 1000000 // cb.cnt AS conf_ba_ppm,
-        |  support * (SELECT n FROM nn) * 1000000 // (ca.cnt * cb.cnt)
-        |    AS lift_ppm
-        |FROM p JOIN c ca ON ca.it = p.item_a JOIN c cb ON cb.it = p.item_b
-        |ORDER BY item_a, item_b""".stripMargin,
-
-    // value-frequency selection replayed relationally: running counts
-    // over DISTINCT cents find the ceil(n/2)-th order statistic for
-    // median and MAD; dev > 3*mad filter, milli-MAD robust z
-    "q_outlier_mad" ->
-      """WITH r AS (SELECT event_type AS g, event_id AS id,
-        |             CAST(floor(value*100) AS BIGINT) AS v FROM events),
-        |f AS (SELECT g, v, count(*) AS c FROM r GROUP BY g, v),
-        |w AS (SELECT g, v, sum(c) OVER (PARTITION BY g ORDER BY v) AS cum,
-        |             sum(c) OVER (PARTITION BY g) AS n FROM f),
-        |med AS (SELECT g, min(CASE WHEN cum >= (n+1)//2 THEN v END) AS med
-        |        FROM w GROUP BY g),
-        |dv AS (SELECT r.g, r.id, r.v, med.med, abs(r.v - med.med) AS dev
-        |       FROM r JOIN med USING (g)),
-        |f2 AS (SELECT g, dev, count(*) AS c FROM dv GROUP BY g, dev),
-        |w2 AS (SELECT g, dev,
-        |         sum(c) OVER (PARTITION BY g ORDER BY dev) AS cum,
-        |         sum(c) OVER (PARTITION BY g) AS n FROM f2),
-        |mad AS (SELECT g, min(CASE WHEN cum >= (n+1)//2 THEN dev END) AS mad
-        |        FROM w2 GROUP BY g)
-        |SELECT dv.g AS event_type, dv.id AS event_id, dv.v AS cents,
-        |  dv.med, mad.mad, dv.dev,
-        |  CASE WHEN mad.mad > 0 THEN dv.dev * 1000 // mad.mad END AS rz_milli
-        |FROM dv JOIN mad USING (g)
-        |WHERE dv.dev > 3 * mad.mad
-        |ORDER BY event_type, event_id""".stripMargin,
-
-    // per-source rollup of the shared quality CTE; mean quality summed
-    // as floor(q·10⁹) BIGINTs (order-free, mirroring the fixed-point
-    // sum in CorpusOps.sourceCuration), divided back in the same
-    // /1e9-then-/n IEEE order; thresholds interpolate from the same
-    // constants the operator uses.
-    "q_source_curation" ->
-      s"""WITH $qualityScoredCte,
-         |s AS (SELECT source, count(*) AS n_docs,
-         |        sum(CAST(floor(quality * 1e9) AS BIGINT)) AS sq,
-         |        sum(CASE WHEN quality < ${CorpusOps.SourceDocQualityFloor}
-         |            THEN 1 ELSE 0 END) AS nlow
-         |      FROM scored GROUP BY source)
-         |SELECT source, n_docs,
-         |  CAST(sq AS DOUBLE) / 1e9 / CAST(n_docs AS DOUBLE)
-         |    AS avg_quality,
-         |  CAST(nlow AS DOUBLE) / CAST(n_docs AS DOUBLE) AS low_frac,
-         |  (CAST(sq AS DOUBLE) / 1e9 / CAST(n_docs AS DOUBLE)
-         |     >= ${CorpusOps.SourceAvgQualityFloor}
-         |   AND CAST(nlow AS DOUBLE) / CAST(n_docs AS DOUBLE)
-         |     <= ${CorpusOps.SourceLowFracCeiling}) AS kept
-         |FROM s ORDER BY source""".stripMargin,
-
-    "q_doc_frequency" ->
-      s"""WITH dt AS (
-         |  SELECT doc_id, unnest(list_distinct($toksSql)) AS token
-         |  FROM documents),
-         |df AS (SELECT token, count(*) AS doc_freq FROM dt
-         |       WHERE len(token) > 0 GROUP BY token),
-         |nd AS (SELECT count(*) AS n_docs FROM documents)
-         |SELECT token, doc_freq, n_docs,
-         |       CAST(doc_freq AS DOUBLE) / n_docs AS df_frac
-         |FROM df, nd ORDER BY token""".stripMargin,
-
-    // mirrors Indexing.bpePairCounts: word-frequency table first,
-    // then char-pair counts weighted by word freq
-    "q_bpe_pair_counts" ->
-      s"""WITH wf AS (
-         |  SELECT word, count(*) AS freq FROM (
-         |    SELECT unnest($toksSql) AS word FROM documents)
-         |  WHERE len(word) >= 2 GROUP BY word),
-         |pc AS (
-         |  SELECT unnest(list_transform(range(1, len(word)),
-         |           i -> substr(word, CAST(i AS INTEGER), 2))) AS pair,
-         |         freq
-         |  FROM wf)
-         |SELECT pair, CAST(sum(freq) AS BIGINT) AS n
-         |FROM pc GROUP BY pair ORDER BY n DESC, pair LIMIT 50""".stripMargin,
-
-    // replays Indexing.bpeLearn's full 8-iteration loop as a
-    // generated CTE chain: per round, pair counts over the current
-    // vocabulary, argmax (ties lexicographic), greedy left-to-right
-    // merge via list_reduce
-    "q_bpe_learn" -> bpeLearnOracleSql(8),
-
-    // batched BPE: 4 unrolled passes, recursive greedy selection of
-    // <= 8 non-interacting merges over the top-64 candidates per
-    // pass, LEFT-JOIN-guarded chained rewrites (see bpeBatchOracleSql)
-    "q_bpe_learn_batched" -> bpeBatchOracleSql(4, 8, 64),
-    "q_bpe_learn_deep" -> bpePhraseOracleSql(4, 64, 1024),
-    // the incremental path must land the byte-identical merge table —
-    // same generated oracle, independently re-run
-    "q_bpe_learn_incr" -> bpePhraseOracleSql(4, 64, 1024),
-
-    // the batched table's serving arm: same 4-pass chain, final
-    // vocabulary rolled up as the encoded token distribution
-    "q_bpe_encode_batched" -> bpeBatchOracleSql(4, 8, 64,
-      encodeTopK = Some(30)),
-
-    // replays learn-then-encode end-to-end: the 8-round chain with
-    // the final rewrite applied, then the corpus-wide token rollup
-    "q_bpe_encode" -> bpeEncodeOracleSql(8, 30),
-
-    // mirrors Indexing.bpeFertility: the SAME encode chain (word
-    // threaded through v8 for the vocabulary join), language ids
-    // from the shared quality CTEs, counts + one truncating division
-    "q_bpe_fertility" ->
-      s"""${bpeChainSql(8, rewriteLast = true)},
-         |el AS (SELECT word, CAST(len(syms) AS BIGINT) AS n_syms_w
-         |       FROM v8),
-         |$qualityScoredCte,
-         |lw AS (SELECT s.gl AS lang, t.token AS word, count(*) AS freq
-         |       FROM (SELECT doc_id, unnest($toksSql) AS token
-         |             FROM documents) t
-         |       JOIN scored s USING (doc_id)
-         |       WHERE len(t.token) >= 2
-         |       GROUP BY 1, 2)
-         |SELECT l.lang, count(*) AS n_vocab,
-         |  CAST(sum(l.freq) AS BIGINT) AS n_words,
-         |  CAST(sum(l.freq * e.n_syms_w) AS BIGINT) AS n_syms,
-         |  CAST(sum(l.freq * e.n_syms_w) AS BIGINT) * 1000
-         |    // CAST(sum(l.freq) AS BIGINT) AS fertility_permille
-         |FROM lw l JOIN el e USING (word)
-         |GROUP BY l.lang ORDER BY l.lang""".stripMargin,
-
-    // identical grouping sets + grouping() flags
-    "q_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(grouping(l_returnflag) AS INTEGER) AS g_flag,
-        |       CAST(grouping(l_linestatus) AS INTEGER) AS g_status,
-        |       count(*) AS n,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-        |         AS sum_qty
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST"""
-        .stripMargin,
-
-    // the oracle asserts the sketch's error contract: exact NDV per
-    // group, and within_rsd MUST be true (a drifting sketch flips the
-    // boolean and fails the hash compare)
-    "q_sketch_quality" ->
-      """SELECT l_returnflag,
-        |       count(DISTINCT l_extendedprice) AS exact_prices,
-        |       true AS within_rsd
-        |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-
-    // the contract face of the sketch pair (r12 item 4): exact NDV
-    // and row counts are replayed exactly; every bound flag is
-    // predicted true — HLL++ within 3×rsd, the GK quantile's rank
-    // within 0.5 ± 2/accuracy and a member of the group
-    "q_sketch_stats" ->
-      """SELECT l_returnflag,
-        |       count(DISTINCT l_extendedprice) AS exact_prices,
-        |       count(*) AS n_rows,
-        |       true AS ndv_within,
-        |       true AS p50_within,
-        |       true AS p50_is_member
-        |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-
-    // plain join + rollup — must equal the salted-replication plan
-    "q_salted_join" ->
-      """SELECT p_size, count(*) AS n,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-        |         AS sum_qty
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |GROUP BY p_size ORDER BY p_size""".stripMargin,
-
-    // skew splitting replicates the matched partition, never the pair
-    // set — the oracle is the plain join
-    "q_aqe_skew_join" ->
-      """WITH f AS (
-        |  SELECT CASE WHEN user_id % 10 <> 0 THEN CAST(0 AS BIGINT)
-        |              ELSE user_id END AS k,
-        |         value, props FROM events),
-        |d AS (SELECT c_custkey AS k, c_custkey % 7 AS label FROM customer)
-        |SELECT d.label, count(*) AS n,
-        |       CAST(sum(CAST(f.value AS DECIMAL(18,6))) AS DOUBLE) AS total,
-        |       CAST(sum(length(f.props)) AS BIGINT) AS props_chars
-        |FROM f JOIN d ON f.k = d.k
-        |GROUP BY d.label ORDER BY d.label""".stripMargin,
-
-    // identical OVER clauses; the unique (totalprice, orderkey)
-    // ordering makes rank == row_number in both engines
-    "q_analytic_rank" ->
-      """SELECT o_orderkey, o_orderpriority,
-        |       ntile(4) OVER w AS quartile,
-        |       percent_rank() OVER w AS pct_rank,
-        |       cume_dist() OVER w AS cume
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_orderpriority
-        |             ORDER BY o_totalprice, o_orderkey)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // mirrors AsOfJoin.asof(direction=forward): nearest purchase
-    // strictly AFTER each view per user, matched rows only
-    "q_asof_forward" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-        |                  event_type FROM events),
-        |v AS (SELECT user_id, event_id, ts FROM e WHERE event_type = 'view'),
-        |p AS (SELECT user_id, ts FROM e WHERE event_type = 'purchase')
-        |SELECT v.event_id, v.user_id, v.ts, min(p.ts) AS asof_ts
-        |FROM v JOIN p ON p.user_id = v.user_id AND p.ts > v.ts
-        |GROUP BY v.event_id, v.user_id, v.ts
-        |ORDER BY v.event_id""".stripMargin,
-
-    // nearest = the closer of max-prior and min-later per view; exact
-    // ties prefer backward (pandas merge_asof semantics)
-    "q_asof_nearest" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-        |                  event_type FROM events),
-        |v AS (SELECT user_id, event_id, ts FROM e WHERE event_type = 'view'),
-        |p AS (SELECT user_id, ts FROM e WHERE event_type = 'purchase'),
-        |b AS (SELECT v.event_id, max(p.ts) AS bt
-        |      FROM v JOIN p ON p.user_id = v.user_id AND p.ts < v.ts
-        |      GROUP BY v.event_id),
-        |f AS (SELECT v.event_id, min(p.ts) AS ft
-        |      FROM v JOIN p ON p.user_id = v.user_id AND p.ts > v.ts
-        |      GROUP BY v.event_id)
-        |SELECT v.event_id, v.user_id, v.ts,
-        |  CASE WHEN bt IS NOT NULL AND (ft IS NULL OR
-        |            epoch_us(v.ts) - epoch_us(bt)
-        |              <= epoch_us(ft) - epoch_us(v.ts))
-        |       THEN bt ELSE ft END AS asof_ts,
-        |  CASE WHEN bt IS NOT NULL AND (ft IS NULL OR
-        |            epoch_us(v.ts) - epoch_us(bt)
-        |              <= epoch_us(ft) - epoch_us(v.ts))
-        |       THEN 'backward' ELSE 'forward' END AS asof_dir
-        |FROM v
-        |LEFT JOIN b ON b.event_id = v.event_id
-        |LEFT JOIN f ON f.event_id = v.event_id
-        |WHERE bt IS NOT NULL OR ft IS NOT NULL
-        |ORDER BY v.event_id""".stripMargin,
-
-    // the per-key tolerance variant: each directional candidate is
-    // bounded by the VIEW row's own tol_us before the nearer-side
-    // choice (mirrors the engine, which nulls each directional pass
-    // independently and then combines). Backward wins exact ties.
-    "q_asof_nearest_tol" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
-        |                  event_type FROM events),
-        |v AS (SELECT user_id, event_id, ts,
-        |        (30 + user_id % 60) * 60000000 AS tol_us
-        |      FROM e WHERE event_type = 'view'),
-        |p AS (SELECT user_id, ts FROM e WHERE event_type = 'purchase'),
-        |b AS (SELECT v.event_id, max(p.ts) AS bt
-        |      FROM v JOIN p ON p.user_id = v.user_id AND p.ts < v.ts
-        |        AND epoch_us(v.ts) - epoch_us(p.ts) <= v.tol_us
-        |      GROUP BY v.event_id),
-        |f AS (SELECT v.event_id, min(p.ts) AS ft
-        |      FROM v JOIN p ON p.user_id = v.user_id AND p.ts > v.ts
-        |        AND epoch_us(p.ts) - epoch_us(v.ts) <= v.tol_us
-        |      GROUP BY v.event_id),
-        |r AS (SELECT v.event_id, v.user_id, v.ts,
-        |        CASE WHEN bt IS NOT NULL AND (ft IS NULL OR
-        |                  epoch_us(v.ts) - epoch_us(bt)
-        |                    <= epoch_us(ft) - epoch_us(v.ts))
-        |             THEN bt ELSE ft END AS asof_ts,
-        |        CASE WHEN bt IS NOT NULL AND (ft IS NULL OR
-        |                  epoch_us(v.ts) - epoch_us(bt)
-        |                    <= epoch_us(ft) - epoch_us(v.ts))
-        |             THEN 'backward' ELSE 'forward' END AS asof_dir
-        |      FROM v
-        |      LEFT JOIN b ON b.event_id = v.event_id
-        |      LEFT JOIN f ON f.event_id = v.event_id
-        |      WHERE bt IS NOT NULL OR ft IS NOT NULL)
-        |SELECT event_id, user_id, ts, asof_ts, asof_dir,
-        |       abs(epoch_us(asof_ts) - epoch_us(ts)) AS gap_us
-        |FROM r ORDER BY event_id""".stripMargin,
-
-    // mirrors Snapshot.upsert over the same deterministic update
-    // streams: highest (version, provenance) wins per id, tombstones
-    // win first and erase the id after the merge
-    "q_snapshot_upsert" ->
-      s"""WITH d AS (SELECT doc_id, lang, source FROM documents),
-         |tagged AS (
-         |  SELECT doc_id, lang, source, CAST(1 AS BIGINT) AS version,
-         |         false AS deleted, 0 AS prov FROM d
-         |  UNION ALL
-         |  SELECT doc_id, 'und', source, 2, false, 1 FROM d
-         |  WHERE doc_id % 5 = 0
-         |  UNION ALL
-         |  SELECT doc_id, lang, source, 3, true, 1 FROM d
-         |  WHERE doc_id % 17 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, lang, source, 1, false, 1 FROM d
-         |  WHERE doc_id % 13 = 0),
-         |won AS (
-         |  SELECT *, row_number() OVER (PARTITION BY doc_id
-         |            ORDER BY version DESC, prov DESC) AS rn
-         |  FROM tagged)
-         |SELECT doc_id, lang, source, version FROM won
-         |WHERE rn = 1 AND NOT deleted ORDER BY doc_id""".stripMargin,
-
-    // the as-of read replays the same log restricted to version <=
-    // as_of, per as_of in {2, 3} — the dir-vs-replay equality is
-    // require-enforced inside the face, not oracle-visible
-    "q_snapshot_asof" ->
-      s"""WITH d AS (SELECT doc_id, lang, source FROM documents),
-         |tagged AS (
-         |  SELECT doc_id, lang, source, CAST(1 AS BIGINT) AS version,
-         |         false AS deleted, 0 AS prov FROM d
-         |  UNION ALL
-         |  SELECT doc_id, 'und', source, 2, false, 1 FROM d
-         |  WHERE doc_id % 5 = 0
-         |  UNION ALL
-         |  SELECT doc_id, lang, source, 3, true, 1 FROM d
-         |  WHERE doc_id % 17 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, lang, source, 1, false, 1 FROM d
-         |  WHERE doc_id % 13 = 0),
-         |ks AS (SELECT CAST(2 AS BIGINT) AS as_of
-         |       UNION ALL SELECT CAST(3 AS BIGINT)),
-         |won AS (
-         |  SELECT k.as_of, t.doc_id, t.lang, t.source, t.version,
-         |         t.deleted,
-         |         row_number() OVER (PARTITION BY k.as_of, t.doc_id
-         |           ORDER BY t.version DESC, t.prov DESC) AS rn
-         |  FROM tagged t CROSS JOIN ks k WHERE t.version <= k.as_of)
-         |SELECT as_of, doc_id, lang, source, version FROM won
-         |WHERE rn = 1 AND NOT deleted ORDER BY as_of, doc_id""".stripMargin,
-
-    // the incremental foreachBatch apply must converge to the SAME
-    // final state as the single-batch upsert — identical oracle
-    "q_streaming_cdc_apply" ->
-      s"""WITH d AS (SELECT doc_id, lang, source FROM documents),
-         |tagged AS (
-         |  SELECT doc_id, lang, source, CAST(1 AS BIGINT) AS version,
-         |         false AS deleted, 0 AS prov FROM d
-         |  UNION ALL
-         |  SELECT doc_id, 'und', source, 2, false, 1 FROM d
-         |  WHERE doc_id % 5 = 0
-         |  UNION ALL
-         |  SELECT doc_id, lang, source, 3, true, 1 FROM d
-         |  WHERE doc_id % 17 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, lang, source, 1, false, 1 FROM d
-         |  WHERE doc_id % 13 = 0),
-         |won AS (
-         |  SELECT *, row_number() OVER (PARTITION BY doc_id
-         |            ORDER BY version DESC, prov DESC) AS rn
-         |  FROM tagged)
-         |SELECT doc_id, lang, source, version FROM won
-         |WHERE rn = 1 AND NOT deleted ORDER BY doc_id""".stripMargin,
-
-    // identical final state to q_streaming_cdc_apply: the AvailableNow
-    // face applies the same update log through the same merge — only
-    // the trigger/incarnation mechanics differ, and those are
-    // require-enforced inside the face, not oracle-visible
-    "q_streaming_availablenow" ->
-      s"""WITH d AS (SELECT doc_id, lang, source FROM documents),
-         |tagged AS (
-         |  SELECT doc_id, lang, source, CAST(1 AS BIGINT) AS version,
-         |         false AS deleted, 0 AS prov FROM d
-         |  UNION ALL
-         |  SELECT doc_id, 'und', source, 2, false, 1 FROM d
-         |  WHERE doc_id % 5 = 0
-         |  UNION ALL
-         |  SELECT doc_id, lang, source, 3, true, 1 FROM d
-         |  WHERE doc_id % 17 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, lang, source, 1, false, 1 FROM d
-         |  WHERE doc_id % 13 = 0),
-         |won AS (
-         |  SELECT *, row_number() OVER (PARTITION BY doc_id
-         |            ORDER BY version DESC, prov DESC) AS rn
-         |  FROM tagged)
-         |SELECT doc_id, lang, source, version FROM won
-         |WHERE rn = 1 AND NOT deleted ORDER BY doc_id""".stripMargin,
-
-    // identical final state again: the byte-rate-limited drain merges
-    // the same log — batch slicing/bounding is require-enforced
-    // in-face (tombstone retention makes state slicing-independent)
-    "q_streaming_backpressure" ->
-      s"""WITH d AS (SELECT doc_id, lang, source FROM documents),
-         |tagged AS (
-         |  SELECT doc_id, lang, source, CAST(1 AS BIGINT) AS version,
-         |         false AS deleted, 0 AS prov FROM d
-         |  UNION ALL
-         |  SELECT doc_id, 'und', source, 2, false, 1 FROM d
-         |  WHERE doc_id % 5 = 0
-         |  UNION ALL
-         |  SELECT doc_id, lang, source, 3, true, 1 FROM d
-         |  WHERE doc_id % 17 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, lang, source, 1, false, 1 FROM d
-         |  WHERE doc_id % 13 = 0),
-         |won AS (
-         |  SELECT *, row_number() OVER (PARTITION BY doc_id
-         |            ORDER BY version DESC, prov DESC) AS rn
-         |  FROM tagged)
-         |SELECT doc_id, lang, source, version FROM won
-         |WHERE rn = 1 AND NOT deleted ORDER BY doc_id""".stripMargin,
-
-    // mirrors Snapshot.scd2History over the same version log:
-    // version-desc window per id, first-of-version dedup (a no-op on
-    // this collision-free log), valid_to = the successor's version
-    "q_scd2_history" ->
-      s"""WITH d AS (SELECT doc_id, lang, source FROM documents),
-         |log AS (
-         |  SELECT doc_id, lang, source, CAST(1 AS BIGINT) AS version,
-         |         false AS deleted FROM d
-         |  UNION ALL
-         |  SELECT doc_id, 'und', source, 2, false FROM d
-         |  WHERE doc_id % 5 = 0
-         |  UNION ALL
-         |  SELECT doc_id, lang, source, 3, true FROM d
-         |  WHERE doc_id % 17 = 0),
-         |t1 AS (
-         |  SELECT *,
-         |    row_number() OVER (PARTITION BY doc_id
-         |                       ORDER BY version DESC) AS rn,
-         |    lag(version) OVER (PARTITION BY doc_id
-         |                       ORDER BY version DESC) AS pv
-         |  FROM log),
-         |t2 AS (SELECT doc_id, lang, source, version, deleted FROM t1
-         |       WHERE rn = 1 OR pv <> version)
-         |SELECT doc_id, lang, source, version, deleted,
-         |  version AS valid_from,
-         |  lag(version) OVER (PARTITION BY doc_id
-         |                     ORDER BY version DESC) AS valid_to,
-         |  lag(version) OVER (PARTITION BY doc_id
-         |                     ORDER BY version DESC) IS NULL AS is_current
-         |FROM t2 ORDER BY doc_id, valid_from""".stripMargin,
-
-    // same history chain, then the point-in-time probe join: each
-    // (doc_id, t) picks the unique interval with valid_from <= t <
-    // valid_to (null valid_to = open)
-    "q_scd2_asof" ->
-      s"""WITH d AS (SELECT doc_id, lang, source FROM documents),
-         |log AS (
-         |  SELECT doc_id, lang, source, CAST(1 AS BIGINT) AS version,
-         |         false AS deleted FROM d
-         |  UNION ALL
-         |  SELECT doc_id, 'und', source, 2, false FROM d
-         |  WHERE doc_id % 5 = 0
-         |  UNION ALL
-         |  SELECT doc_id, lang, source, 3, true FROM d
-         |  WHERE doc_id % 17 = 0),
-         |t1 AS (
-         |  SELECT *,
-         |    row_number() OVER (PARTITION BY doc_id
-         |                       ORDER BY version DESC) AS rn,
-         |    lag(version) OVER (PARTITION BY doc_id
-         |                       ORDER BY version DESC) AS pv
-         |  FROM log),
-         |t2 AS (SELECT doc_id, lang, source, version, deleted FROM t1
-         |       WHERE rn = 1 OR pv <> version),
-         |hist AS (
-         |  SELECT doc_id, lang, source, version, deleted,
-         |    version AS valid_from,
-         |    lag(version) OVER (PARTITION BY doc_id
-         |                       ORDER BY version DESC) AS valid_to
-         |  FROM t2),
-         |probes AS (
-         |  SELECT doc_id, CAST(unnest([1, 2, 3]) AS BIGINT) AS t FROM d)
-         |SELECT p.doc_id, p.t, h.lang, h.source, h.version, h.deleted
-         |FROM probes p JOIN hist h
-         |  ON h.doc_id = p.doc_id AND h.valid_from <= p.t
-         |  AND (h.valid_to IS NULL OR h.valid_to > p.t)
-         |ORDER BY p.doc_id, p.t""".stripMargin,
-
-    // replays both snapshots (v1 and the upsert result), FULL JOINs
-    // on the id, and keeps only added/removed/changed rows
-    "q_snapshot_diff" ->
-      s"""WITH d AS (SELECT doc_id, lang, source FROM documents),
-         |tagged AS (
-         |  SELECT doc_id, lang, source, CAST(1 AS BIGINT) AS version,
-         |         false AS deleted, 0 AS prov FROM d
-         |  UNION ALL
-         |  SELECT doc_id, 'und', source, 2, false, 1 FROM d
-         |  WHERE doc_id % 5 = 0
-         |  UNION ALL
-         |  SELECT doc_id, lang, source, 3, true, 1 FROM d
-         |  WHERE doc_id % 17 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, lang, source, 1, false, 1 FROM d
-         |  WHERE doc_id % 13 = 0),
-         |won AS (
-         |  SELECT *, row_number() OVER (PARTITION BY doc_id
-         |            ORDER BY version DESC, prov DESC) AS rn
-         |  FROM tagged),
-         |aft AS (SELECT doc_id, lang, source, version FROM won
-         |        WHERE rn = 1 AND NOT deleted),
-         |bef AS (SELECT doc_id, lang, source, CAST(1 AS BIGINT) AS version
-         |        FROM d)
-         |SELECT coalesce(b.doc_id, a.doc_id) AS doc_id,
-         |  CASE WHEN b.doc_id IS NULL THEN 'added'
-         |       WHEN a.doc_id IS NULL THEN 'removed'
-         |       WHEN b.lang IS DISTINCT FROM a.lang
-         |         OR b.source IS DISTINCT FROM a.source
-         |         OR b.version IS DISTINCT FROM a.version THEN 'changed'
-         |  END AS change,
-         |  b.lang AS lang_before, a.lang AS lang_after,
-         |  a.version AS version_after
-         |FROM bef b FULL JOIN aft a ON a.doc_id = b.doc_id
-         |WHERE CASE WHEN b.doc_id IS NULL THEN 'added'
-         |           WHEN a.doc_id IS NULL THEN 'removed'
-         |           WHEN b.lang IS DISTINCT FROM a.lang
-         |             OR b.source IS DISTINCT FROM a.source
-         |             OR b.version IS DISTINCT FROM a.version THEN 'changed'
-         |      END IS NOT NULL
-         |ORDER BY doc_id""".stripMargin,
-
-    // mirrors GraphOps.clusteringCoefficients: canonical edges,
-    // triangles enumerated once at x<y<z, corners credited via UNION
-    // ALL, coeff = one double division of exact integers
-    "q_clustering_coeff" ->
-      """WITH pp AS (
-        |  SELECT DISTINCT a.l_partkey AS lo, b.l_partkey AS hi
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        |dg AS (
-        |  SELECT id, count(*) AS d FROM (
-        |    SELECT lo AS id FROM pp UNION ALL SELECT hi FROM pp)
-        |  GROUP BY id),
-        |tr AS (
-        |  SELECT a.lo AS x, a.hi AS y, b.hi AS z
-        |  FROM pp a JOIN pp b ON b.lo = a.hi
-        |  JOIN pp c ON c.lo = a.lo AND c.hi = b.hi),
-        |tc AS (
-        |  SELECT id, count(*) AS t FROM (
-        |    SELECT x AS id FROM tr UNION ALL SELECT y FROM tr
-        |    UNION ALL SELECT z FROM tr)
-        |  GROUP BY id)
-        |SELECT dg.id, dg.d AS degree,
-        |       coalesce(tc.t, 0) AS n_triangles,
-        |       CASE WHEN dg.d >= 2
-        |            THEN CAST(2 * coalesce(tc.t, 0) AS DOUBLE)
-        |                 / CAST(dg.d * (dg.d - 1) AS DOUBLE)
-        |            ELSE 0.0 END AS clustering_coeff
-        |FROM dg LEFT JOIN tc ON tc.id = dg.id
-        |ORDER BY dg.id""".stripMargin,
-
-    // mirrors Indexing.sparseCosineTopK: df-capped posting self-join,
-    // all-integer dot/norms, cosine as dot/(√na·√nb)
-    "q_sparse_cosine_topk" ->
-      s"""WITH tt AS (
-         |  SELECT doc_id, unnest($toksSql) AS token FROM documents),
-         |tf AS (SELECT doc_id, token AS term, count(*) AS tf FROM tt
-         |       WHERE len(token) > 0 GROUP BY doc_id, token),
-         |dfr AS (SELECT term FROM (
-         |          SELECT term, count(*) AS doc_freq FROM tf GROUP BY term)
-         |        WHERE doc_freq BETWEEN 2 AND 50),
-         |kept AS (SELECT f.doc_id, f.term, f.tf
-         |         FROM tf f JOIN dfr USING (term)),
-         |norms AS (SELECT doc_id, sum(tf * tf) AS n2 FROM kept
-         |          GROUP BY doc_id),
-         |dots AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |                sum(a.tf * b.tf) AS dot
-         |         FROM kept a JOIN kept b
-         |           ON a.term = b.term AND a.doc_id < b.doc_id
-         |         GROUP BY doc_a, doc_b),
-         |sim AS (SELECT doc_a, doc_b,
-         |          CAST(dot AS DOUBLE)
-         |            / (sqrt(CAST(na.n2 AS DOUBLE))
-         |               * sqrt(CAST(nb.n2 AS DOUBLE))) AS cos
-         |        FROM dots
-         |        JOIN norms na ON na.doc_id = doc_a
-         |        JOIN norms nb ON nb.doc_id = doc_b),
-         |sym AS (SELECT doc_a AS doc_id, doc_b AS nbr_id, cos FROM sim
-         |        UNION ALL SELECT doc_b, doc_a, cos FROM sim),
-         |r AS (SELECT doc_id, nbr_id, cos,
-         |        row_number() OVER (PARTITION BY doc_id
-         |                           ORDER BY cos DESC, nbr_id) AS rank
-         |      FROM sym)
-         |SELECT doc_id, rank, nbr_id, cos FROM r
-         |WHERE rank <= 5 ORDER BY doc_id, rank""".stripMargin,
-
-    // mirrors Indexing.invertedIndex: distinct (doc, term) pairs, df
-    // per term, ascending comma-joined postings only under the cap
-    "q_inverted_index" ->
-      s"""WITH dt AS (
-         |  SELECT doc_id, unnest(list_distinct($toksSql)) AS term
-         |  FROM documents)
-         |SELECT term, count(*) AS doc_freq,
-         |  CASE WHEN count(*) <= 40
-         |       THEN array_to_string(list_sort(list(doc_id)), ',') END
-         |    AS postings
-         |FROM dt WHERE len(term) > 0
-         |GROUP BY term ORDER BY term""".stripMargin,
-
-    // mirrors Indexing.corpusShuffle: salted rolling hashes over the
-    // 12-digit-padded id, squared mod P for the nonlinear mix — ':b'
-    // suffix shards, ':o' orders within the shard
-    "q_corpus_shuffle" ->
-      s"""WITH sh0 AS (
-         |  SELECT doc_id,
-         |    ${rhSql("lpad(CAST(doc_id AS VARCHAR), 12, '0') || ':b'")} AS hb,
-         |    ${rhSql("lpad(CAST(doc_id AS VARCHAR), 12, '0') || ':o'")} AS ho
-         |  FROM documents),
-         |sh AS (
-         |  SELECT doc_id,
-         |    CAST((hb * hb) % ${Dedup.P} % 8 AS INTEGER) AS batch_id,
-         |    (ho * ho) % ${Dedup.P} AS oh
-         |  FROM sh0)
-         |SELECT batch_id,
-         |  row_number() OVER (PARTITION BY batch_id ORDER BY oh, doc_id)
-         |    AS seq,
-         |  doc_id
-         |FROM sh ORDER BY batch_id, seq""".stripMargin,
-
-    // mirrors Indexing.ngramFamiliarity: repetitionCte's bigram
-    // contract (raw whitespace tokens, space-joined adjacent pairs,
-    // <2-token docs omitted), DISTINCT per doc, mean corpus df
-    "q_ngram_familiarity" ->
-      s"""WITH ft AS (SELECT doc_id, $toksSql AS toks FROM documents
-         |            WHERE len($toksSql) >= 2),
-         |fb AS (SELECT doc_id, unnest(list_distinct(list_transform(
-         |         range(1, len(toks)),
-         |         i -> array_to_string(list_slice(toks, i, i+1), ' '))))
-         |         AS bigram
-         |       FROM ft),
-         |fdf AS (SELECT bigram, count(*) AS bdf FROM fb GROUP BY bigram)
-         |SELECT b.doc_id,
-         |  count(*) AS n_distinct_bigrams,
-         |  CAST(sum(d.bdf) AS DOUBLE) / count(*) AS familiarity
-         |FROM fb b JOIN fdf d USING (bigram)
-         |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin,
-
-    // mirrors CorpusOps.tfidfTopTerms: tf with multiplicity, doc_freq
-    // as a row count over the tf relation, ratio idf in the same IEEE
-    // order (tf/n_tokens double division, n_docs/doc_freq double
-    // division, one multiply)
-    "q_tfidf_top_terms" ->
-      s"""WITH tt AS (
-         |  SELECT doc_id, token FROM (
-         |    SELECT doc_id, unnest($toksSql) AS token FROM documents)
-         |  WHERE len(token) > 0),
-         |tf AS (SELECT doc_id, token, count(*) AS tf FROM tt
-         |       GROUP BY doc_id, token),
-         |dfq AS (SELECT token, count(*) AS doc_freq FROM tf GROUP BY token),
-         |nd AS (SELECT count(*) AS n_docs FROM documents),
-         |sc AS (
-         |  SELECT f.doc_id, f.token, f.tf, d.doc_freq,
-         |    (CAST(f.tf AS DOUBLE)
-         |       / CAST(CAST(sum(f.tf) OVER (PARTITION BY f.doc_id) AS BIGINT)
-         |              AS DOUBLE))
-         |    * (CAST((SELECT n_docs FROM nd) AS DOUBLE)
-         |       / CAST(d.doc_freq AS DOUBLE)) AS score
-         |  FROM tf f JOIN dfq d USING (token)),
-         |r AS (SELECT doc_id, token, tf, doc_freq, score,
-         |        row_number() OVER (PARTITION BY doc_id
-         |                           ORDER BY score DESC, token) AS rank
-         |      FROM sc)
-         |SELECT doc_id, rank, token, tf, doc_freq, score FROM r
-         |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-
-    // v1's composed funnel + the CorpusOps stages, assembled from the
-    // SAME shared fragments as the stage-level oracles (decontamCte,
-    // repetitionCte) — composed and per-stage forms can't drift
-    "q_corpus_prep_v2" ->
-      s"""WITH RECURSIVE $corpusKeptCtesSql
-         |SELECT CASE WHEN b < 8 THEN 'train' WHEN b = 8 THEN 'val'
-         |            ELSE 'test' END AS split,
-         |       lang, count(*) AS n_docs,
-         |       CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
-         |FROM kept GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // the kept chain (identical to v2's, via the same fragment) + the
-    // boilerplate-span and chunking stages over the kept docs — mirrors
-    // CorpusOps.corpusPrepV3 (constants interpolate from the same
-    // defs as the stage-level q_boilerplate_spans / q_chunk_docs
-    // oracles)
-    "q_corpus_prep_v3" -> {
-      val k = CorpusOps.BoilerplateSpanTokens
-      val nSpans = s"greatest(CAST(ceil(len(toks) / $k.0) AS BIGINT), 1)"
-      val mx = CorpusOps.ChunkMaxTokens
-      val stride = mx - CorpusOps.ChunkOverlap
-      val nChunks = s"1 + (greatest(len(toks) - $mx, 0) + ${stride - 1})" +
-        s" // $stride"
-      val splitCase = "CASE WHEN b < 8 THEN 'train' WHEN b = 8 THEN 'val' " +
-        "ELSE 'test' END"
-      s"""WITH RECURSIVE $corpusKeptCtesSql,
-         |ktk AS (
-         |  SELECT k.doc_id, k.lang, k.n_tokens, k.b, t.toks
-         |  FROM kept k JOIN rt t USING (doc_id)),
-         |vsp0 AS (
-         |  SELECT doc_id,
-         |    unnest(list_transform(range($nSpans),
-         |      i -> array_to_string(list_slice(toks, i*$k + 1, i*$k + $k), ' ')))
-         |      AS span,
-         |    unnest(list_transform(range($nSpans),
-         |      i -> least(len(toks) - i*$k, $k))) AS span_len
-         |  FROM ktk),
-         |vsp AS (SELECT doc_id, span_len, ${rhSql("span")} AS span_hash
-         |        FROM vsp0),
-         |vfr AS (
-         |  SELECT span_hash FROM (
-         |    SELECT span_hash, count(DISTINCT doc_id) AS span_df
-         |    FROM vsp GROUP BY span_hash)
-         |  WHERE span_df >= ${CorpusOps.BoilerplateMinDocs}),
-         |vspan AS (
-         |  SELECT vsp.doc_id, count(*) AS n_spans,
-         |    CAST(sum(CASE WHEN vfr.span_hash IS NOT NULL THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_boiler_spans,
-         |    CAST(sum(CASE WHEN vfr.span_hash IS NULL THEN span_len ELSE 0 END)
-         |      AS BIGINT) AS n_tokens_kept
-         |  FROM vsp LEFT JOIN vfr ON vsp.span_hash = vfr.span_hash
-         |  GROUP BY vsp.doc_id),
-         |vch AS (
-         |  SELECT doc_id,
-         |    unnest(range($nChunks)) AS pos,
-         |    unnest(list_transform(range($nChunks),
-         |      i -> array_to_string(
-         |             list_slice(toks, i*$stride + 1, i*$stride + $mx), ' ')))
-         |      AS chunk
-         |  FROM ktk),
-         |vchh AS (SELECT doc_id, pos, ${rhSql("chunk")} AS chunk_hash FROM vch),
-         |rows_ AS (
-         |  SELECT $splitCase AS split, k.lang, k.n_tokens, v.n_spans,
-         |    v.n_boiler_spans, v.n_tokens_kept, c.pos, c.chunk_hash
-         |  FROM ktk k JOIN vspan v USING (doc_id) JOIN vchh c USING (doc_id))
-         |SELECT split, lang,
-         |  count(CASE WHEN pos = 0 THEN 1 END) AS n_docs,
-         |  CAST(sum(CASE WHEN pos = 0 THEN n_tokens END) AS BIGINT)
-         |    AS sum_tokens,
-         |  CAST(sum(CASE WHEN pos = 0 THEN n_spans END) AS BIGINT) AS n_spans,
-         |  CAST(sum(CASE WHEN pos = 0 THEN n_boiler_spans END) AS BIGINT)
-         |    AS n_boiler_spans,
-         |  CAST(sum(CASE WHEN pos = 0 THEN n_tokens_kept END) AS BIGINT)
-         |    AS sum_tokens_kept,
-         |  count(*) AS n_chunks,
-         |  count(DISTINCT chunk_hash) AS n_distinct_chunks
-         |FROM rows_ GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    },
-
-    "q_boilerplate_spans" -> {
-      val k = CorpusOps.BoilerplateSpanTokens
-      val nSpans = s"greatest(CAST(ceil(len(toks) / $k.0) AS BIGINT), 1)"
-      s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |sp0 AS (
-         |  SELECT doc_id,
-         |    unnest(list_transform(range($nSpans),
-         |      i -> array_to_string(list_slice(toks, i*$k + 1, i*$k + $k), ' ')))
-         |      AS span,
-         |    unnest(list_transform(range($nSpans),
-         |      i -> least(len(toks) - i*$k, $k))) AS span_len
-         |  FROM tk),
-         |sp AS (SELECT doc_id, span_len, ${rhSql("span")} AS span_hash
-         |       FROM sp0),
-         |fr AS (
-         |  SELECT span_hash FROM (
-         |    SELECT span_hash, count(DISTINCT doc_id) AS span_df
-         |    FROM sp GROUP BY span_hash)
-         |  WHERE span_df >= ${CorpusOps.BoilerplateMinDocs})
-         |SELECT sp.doc_id, count(*) AS n_spans,
-         |  CAST(sum(CASE WHEN fr.span_hash IS NOT NULL THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_boiler_spans,
-         |  CAST(sum(span_len) AS BIGINT) AS n_tokens,
-         |  CAST(sum(CASE WHEN fr.span_hash IS NULL THEN span_len ELSE 0 END)
-         |    AS BIGINT) AS n_tokens_kept
-         |FROM sp LEFT JOIN fr ON sp.span_hash = fr.span_hash
-         |GROUP BY sp.doc_id ORDER BY sp.doc_id""".stripMargin
-    },
-
-    "q_lang_mix" -> {
-      val wSum = MixWeights.map(_._2).sum
-      s"""WITH c AS (SELECT lang, count(*) AS stratum_docs
-         |           FROM documents GROUP BY lang),
-         |tot AS (SELECT CAST(sum(stratum_docs) AS BIGINT) AS n_total FROM c),
-         |r AS (
-         |  SELECT lang, stratum_docs,
-         |    (n_total * $MixBudgetPct * ($mixCaseSql)) // (100 * $wSum)
-         |      AS target_docs
-         |  FROM c, tot),
-         |r2 AS (
-         |  SELECT lang, stratum_docs, target_docs,
-         |    least(10000, (10000 * target_docs) // stratum_docs) AS keep_bp
-         |  FROM r)
-         |SELECT d.lang, count(*) AS n_docs,
-         |  CAST(max(r2.target_docs) AS BIGINT) AS target_docs,
-         |  CAST(max(r2.keep_bp) AS BIGINT) AS keep_bp,
-         |  CAST(sum(CASE WHEN ${rhSql("CAST(doc_id AS VARCHAR)")} % 10000
-         |                     < r2.keep_bp THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_sampled
-         |FROM documents d JOIN r2 ON d.lang = r2.lang
-         |GROUP BY d.lang ORDER BY d.lang""".stripMargin
-    },
-
-    "q_chunk_docs" -> {
-      val mx = CorpusOps.ChunkMaxTokens
-      val stride = mx - CorpusOps.ChunkOverlap
-      val nChunks = s"1 + (greatest(len(toks) - $mx, 0) + ${stride - 1})" +
-        s" // $stride"
-      s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |ch AS (
-         |  SELECT doc_id, $nChunks AS n_chunks,
-         |    unnest(range($nChunks)) AS chunk_id,
-         |    unnest(list_transform(range($nChunks),
-         |      i -> least(len(toks) - i*$stride, $mx))) AS chunk_len,
-         |    unnest(list_transform(range($nChunks),
-         |      i -> array_to_string(
-         |             list_slice(toks, i*$stride + 1, i*$stride + $mx), ' ')))
-         |      AS chunk
-         |  FROM tk)
-         |SELECT doc_id, chunk_id, CAST(n_chunks AS BIGINT) AS n_chunks,
-         |  chunk_len, ${rhSql("chunk")} AS chunk_hash
-         |FROM ch ORDER BY doc_id, chunk_id""".stripMargin
-    },
-
-    "q_pii_redact" ->
-      s"""WITH p AS (SELECT doc_id, ${Redaction.piiOverlaySql} AS text2
-         |           FROM documents),
-         |e AS (
-         |  SELECT doc_id,
-         |    CAST(len(regexp_extract_all(text2, '${Redaction.EmailPattern}'))
-         |      AS BIGINT) AS n_emails,
-         |    regexp_replace(text2, '${Redaction.EmailPattern}',
-         |      '${Redaction.EmailToken}', 'g') AS t1
-         |  FROM p),
-         |f AS (
-         |  SELECT doc_id, n_emails,
-         |    CAST(len(regexp_extract_all(t1, '${Redaction.PhonePattern}'))
-         |      AS BIGINT) AS n_phones,
-         |    regexp_replace(t1, '${Redaction.PhonePattern}',
-         |      '${Redaction.PhoneToken}', 'g') AS redacted
-         |  FROM e)
-         |SELECT doc_id, n_emails, n_phones,
-         |  CAST(length(redacted) AS BIGINT) AS red_len,
-         |  md5(redacted) AS red_md5
-         |FROM f ORDER BY doc_id""".stripMargin,
-
-    "q_gdpr_purge" -> {
-      val mx = CorpusOps.ChunkMaxTokens
-      val stride = mx - CorpusOps.ChunkOverlap
-      val nChunks = s"1 + (greatest(len(toks) - $mx, 0) + ${stride - 1})" +
-        s" // $stride"
-      s"""WITH req AS (SELECT doc_id FROM documents WHERE doc_id % 97 = 3),
-         |tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |ch AS (SELECT doc_id, $nChunks AS n_chunks FROM tk),
-         |a AS (
-         |  SELECT 'chunks' AS tbl,
-         |    CAST(sum(n_chunks) AS BIGINT) AS rows_before,
-         |    CAST(sum(CASE WHEN doc_id IN (SELECT doc_id FROM req)
-         |                  THEN n_chunks ELSE 0 END) AS BIGINT) AS purged
-         |  FROM ch
-         |  UNION ALL
-         |  SELECT 'documents', count(*),
-         |    CAST(sum(CASE WHEN doc_id IN (SELECT doc_id FROM req)
-         |                  THEN 1 ELSE 0 END) AS BIGINT)
-         |  FROM documents
-         |  UNION ALL
-         |  SELECT 'embeddings', count(*),
-         |    CAST(sum(CASE WHEN vec_id IN (SELECT doc_id FROM req)
-         |                  THEN 1 ELSE 0 END) AS BIGINT)
-         |  FROM embeddings)
-         |SELECT tbl, rows_before, purged, rows_before - purged AS rows_after
-         |FROM a ORDER BY tbl""".stripMargin
-    },
-
-    // mirrors Redaction.kAnonymize: QI cells, >= k released as-is,
-    // the rest merged into one '*' bucket (absent when no cell is
-    // small — the aggregate-with-no-groups row is HAVING-dropped)
-    "q_k_anonymity" ->
-      s"""WITH g AS (
-         |  SELECT CAST(c_nationkey AS VARCHAR) AS qi_nation,
-         |         c_mktsegment AS qi_segment, count(*) AS n_rows
-         |  FROM customer GROUP BY 1, 2)
-         |SELECT qi_nation, qi_segment, n_rows, false AS suppressed
-         |FROM g WHERE n_rows >= $KAnonymityK
-         |UNION ALL
-         |SELECT '*', '*', CAST(sum(n_rows) AS BIGINT), true
-         |FROM g WHERE n_rows < $KAnonymityK HAVING count(*) > 0
-         |ORDER BY qi_nation, qi_segment""".stripMargin,
-
-    // Layout faces: the oracle sees only the LOGICAL result — the
-    // physical claims (no exchange / pruned dirs / fewer files /
-    // merged footers) are require()-enforced inside each face, and the
-    // hash match proves the layout machinery lost no rows.
-    "q_bucketed_join" ->
-      """SELECT c_mktsegment,
-        |       count(DISTINCT c_custkey) AS n_customers,
-        |       count(*) AS n_orders,
-        |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |         AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-
-    "q_partition_pruned" ->
-      """SELECT strftime(ts, '%Y-%m') AS month,
-        |       count(*) AS n_events,
-        |       count(DISTINCT user_id) AS n_users,
-        |       min(event_id) AS min_event_id,
-        |       max(event_id) AS max_event_id
-        |FROM events WHERE event_type = 'purchase'
-        |GROUP BY 1 ORDER BY month""".stripMargin,
-
-    "q_compaction" ->
-      """SELECT lang, count(*) AS n_docs,
-        |       CAST(sum(n_chars) AS BIGINT) AS chars_sum,
-        |       min(doc_id) AS min_doc_id,
-        |       max(doc_id) AS max_doc_id
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // boundary-independent measures only: the sampled range
-    // boundaries vary, the totals and the rows-at-global-min don't
-    "q_sorted_layout" ->
-      """SELECT count(*) AS n_rows,
-        |       min(n_chars) AS min_chars,
-        |       max(n_chars) AS max_chars,
-        |       CAST(sum(n_chars) AS BIGINT) AS chars_sum,
-        |       count(DISTINCT lang) AS n_langs,
-        |       (SELECT count(*) FROM documents
-        |        WHERE n_chars = (SELECT min(n_chars) FROM documents))
-        |         AS n_at_min
-        |FROM documents""".stripMargin,
-
-    // z-order: boundary-independent global measures (the per-file
-    // span contracts are require-enforced inside the face)
-    "q_zorder_layout" ->
-      """SELECT count(*) AS n_rows,
-        |       count(DISTINCT user_id) AS n_users,
-        |       min(event_id) AS min_event_id,
-        |       max(event_id) AS max_event_id,
-        |       CAST(sum(user_id) AS BIGINT) AS user_sum
-        |FROM events""".stripMargin,
-
-    // boundary-independent global aggregates, like q_zorder_layout;
-    // value_c replays the face's floor(x+0.5) cents key exactly
-    "q_zorder3_layout" ->
-      """SELECT count(*) AS n_rows,
-        |       count(DISTINCT user_id) AS n_users,
-        |       count(DISTINCT CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |         AS n_values,
-        |       min(event_id) AS min_event_id,
-        |       max(event_id) AS max_event_id,
-        |       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-        |         AS value_c_sum
-        |FROM events""".stripMargin,
-
-    // the bloom pre-filter is invisible to the result by construction
-    "q_bloom_join" ->
-      """SELECT p_size, count(*) AS n_items,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-        |         AS qty_sum,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-        |         AS revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE p_size <= 2
-        |GROUP BY p_size ORDER BY p_size""".stripMargin,
-
-    // DPP replay: the partitioned fact copy holds exactly the events
-    // rows, so the oracle runs the same star join over events with
-    // the tier dim as a VALUES list
-    "q_dpp_join" ->
-      """SELECT event_type, count(*) AS n_events,
-        |       count(DISTINCT user_id) AS n_users,
-        |       min(event_id) AS min_event_id,
-        |       max(event_id) AS max_event_id
-        |FROM events
-        |JOIN (VALUES ('purchase','rev'), ('signup','acq'),
-        |             ('click','eng'), ('view','eng'), ('error','ops'))
-        |  AS dim(event_type, tier) USING (event_type)
-        |WHERE tier IN ('rev','acq')
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_schema_evolution" ->
-      """WITH merged AS (
-        |  SELECT doc_id, lang, CAST(NULL AS BIGINT) AS n_chars
-        |  FROM documents WHERE doc_id % 2 = 0
-        |  UNION ALL
-        |  SELECT doc_id, lang, n_chars
-        |  FROM documents WHERE doc_id % 2 = 1)
-        |SELECT lang, count(*) AS n_total,
-        |       count(n_chars) AS n_evolved,
-        |       CAST(sum(n_chars) AS BIGINT) AS chars_sum,
-        |       min(doc_id) AS min_doc_id,
-        |       max(doc_id) AS max_doc_id
-        |FROM merged GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "q_dq_audit" ->
-      """WITH a AS (
-        |  SELECT 'fk_orders_customer' AS rule, count(*) AS checked,
-        |    CAST(sum(CASE WHEN c_custkey IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS violations
-        |  FROM orders LEFT JOIN customer ON o_custkey = c_custkey
-        |  UNION ALL
-        |  SELECT 'fk_lineitem_orders', count(*),
-        |    CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT)
-        |  FROM lineitem LEFT JOIN orders ON l_orderkey = o_orderkey
-        |  UNION ALL
-        |  SELECT 'range_totalprice_positive', count(*),
-        |    CAST(sum(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END)
-        |      AS BIGINT)
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'null_mktsegment', count(*),
-        |    CAST(sum(CASE WHEN c_mktsegment IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT)
-        |  FROM customer
-        |  UNION ALL
-        |  SELECT 'unique_custkey', count(*),
-        |    CAST(sum(CASE WHEN n > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |  FROM (SELECT c_custkey, count(*) AS n FROM customer GROUP BY 1)
-        |  UNION ALL
-        |  SELECT 'ts_in_window', count(*),
-        |    CAST(sum(CASE WHEN ts < TIMESTAMP '2020-01-01 00:00:00'
-        |                    OR ts >= TIMESTAMP '2030-01-01 00:00:00'
-        |                  THEN 1 ELSE 0 END) AS BIGINT)
-        |  FROM events)
-        |SELECT rule, checked, violations FROM a ORDER BY rule""".stripMargin,
-
-    // Good rows = everything outside the corruption overlay; the torn
-    // lines land in exactly one audit row. ASCII: '_' sorts before
-    // the lowercase language codes in both engines' binary collation.
-    "q_jsonl_ingest" ->
-      """SELECT lang, count(*) AS n_docs,
-        |       CAST(sum(n_chars) AS BIGINT) AS chars_sum
-        |FROM documents WHERE doc_id % 37 <> 5
-        |GROUP BY lang
-        |UNION ALL
-        |SELECT '__corrupt__', count(*), CAST(NULL AS BIGINT)
-        |FROM documents WHERE doc_id % 37 = 5
-        |ORDER BY lang""".stripMargin,
-
-    // same quarantine contract as q_jsonl_ingest on the CSV overlay
-    "q_csv_ingest" ->
-      """SELECT lang, count(*) AS n_docs,
-        |       CAST(sum(n_chars) AS BIGINT) AS chars_sum
-        |FROM documents WHERE doc_id % 41 <> 7
-        |GROUP BY lang
-        |UNION ALL
-        |SELECT '__corrupt__', count(*), CAST(NULL AS BIGINT)
-        |FROM documents WHERE doc_id % 41 = 7
-        |ORDER BY lang""".stripMargin,
-
-    // the ORC write/read round-trip is content-preserving; the oracle
-    // is the same filtered aggregate on the parquet original
-    "q_orc_roundtrip" ->
-      """SELECT lang, count(*) AS n_docs,
-        |       CAST(sum(n_chars) AS BIGINT) AS chars_sum,
-        |       count(DISTINCT source) AS n_sources,
-        |       min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id
-        |FROM documents WHERE n_chars > 500
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // the committed v2 snapshot replayed relationally — orphan
-    // invisibility / staging isolation / pointer atomicity are
-    // require-enforced in-face, not oracle-visible
-    "q_manifest_commit" ->
-      """SELECT lang, count(*) AS n_docs,
-        |       CAST(sum(n_chars) AS BIGINT) AS chars_sum,
-        |       min(doc_id) AS min_doc, max(doc_id) AS max_doc
-        |FROM (SELECT doc_id,
-        |             CASE WHEN doc_id % 5 = 0 THEN 'und' ELSE lang END
-        |               AS lang, n_chars
-        |      FROM documents WHERE doc_id % 3 <> 0)
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // the surviving (v2) snapshot replayed relationally — orphan
-    // reclamation / read-stability / manifest expiry are
-    // require-enforced in-face, not oracle-visible
-    "q_manifest_vacuum" ->
-      """SELECT source, count(*) AS n_docs,
-        |       CAST(sum(n_chars) AS BIGINT) AS chars_sum,
-        |       min(doc_id) AS min_doc, max(doc_id) AS max_doc
-        |FROM documents WHERE doc_id % 3 <> 0
-        |GROUP BY source ORDER BY source""".stripMargin,
-
-    // Avro resolution replayed relationally: v1-written slices
-    // (doc_id % 8 <= 3) read the reader's quality DEFAULT -1.0 and
-    // the aliased rename source->source_name; v2 slices carry real
-    // quality = n_chars/1000.0; the torn slice (% 8 == 5) is
-    // quarantined wholesale and absent
-    "q_avro_ingest" ->
-      """SELECT doc_id, lang, source AS source_name,
-        |       CASE WHEN doc_id % 8 IN (4, 6, 7)
-        |            THEN CAST(n_chars AS DOUBLE) / 1000.0
-        |            ELSE -1.0 END AS quality
-        |FROM documents WHERE doc_id % 8 <> 5
-        |ORDER BY doc_id""".stripMargin
-  )
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    faces.map(f => f.name -> f.run).toMap
+
+  val oracleSql: Map[String, String] =
+    faces.map(f => f.name -> f.oracleSql).toMap
+
+  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  def entry(spark: SparkSession): DataFrame =
+    queries("q_bfs_copurchase")(spark, "/root/testdata/sf0.001")
 }

@@ -18,8 +18,20 @@ import org.apache.spark.storage.StorageLevel
   * materializes the checkpoint (a lazy checkpoint persists its blocks
   * inside the probe's own job and truncates lineage at that job's
   * end) and answers the convergence test. Fixed-round loops have no
-  * probe, so their checkpoint is eager. Either way a round costs one
-  * materializing job, never two — `JobCountSpec` pins the totals.
+  * probe, so their checkpoint is eager. What a round costs in jobs
+  * depends on AQE, and `JobCountSpec` pins the totals:
+  *   - AQE off (`aqeOff = true`: Bfs, Sssp, CC propagation,
+  *     `pivotHarmonic`): the checkpoint adds no job of its own — the
+  *     probe's job (or the eager checkpoint) materializes the round.
+  *     Each broadcast the step plans is built by one more job, so a
+  *     round that broadcasts its frontier (Bfs, Sssp, `pivotHarmonic`
+  *     while the frontier is small) pays two jobs.
+  *   - AQE on: `localCheckpoint(eager = false)` calls
+  *     `AdaptiveSparkPlanExec.execute()`, which runs every shuffle and
+  *     broadcast stage of the round's plan at call time, one job each;
+  *     only the final stage is left to the probe. Such a round pays one
+  *     job per exchange in its plan plus the probe's.
+  *
   * Fixed-length lazy chains ([[Loop.chain]]) persist their rounds
   * instead and leave the materializing job to the caller's output
   * checkpoint.

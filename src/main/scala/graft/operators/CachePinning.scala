@@ -120,12 +120,9 @@ private[graft] trait CachePinning {
   def releaseCaches(blocking: Boolean = false): Unit = {
     var d = pins.poll()
     while (d != null) {
-      d.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          d.unpersist(blocking)
-          lr.rdd.unpersist(blocking)
-        case _ => d.unpersist(blocking)
-      }
+      if (GraphOps.isFlatCheckpoint(d))
+        GraphOps.releaseCheckpointedFrame(d, blocking)
+      else d.unpersist(blocking)
       d = pins.poll()
     }
   }

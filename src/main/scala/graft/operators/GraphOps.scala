@@ -131,6 +131,47 @@ object GraphOps {
   def vertices(edges: DataFrame): DataFrame =
     edges.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
 
+  /** The four frames both triangle operators stage, each an eager
+    * local checkpoint: `canon(lo, hi)`, the distinct undirected edges
+    * without self-loops; `deg(id, d)`; `oriented(src, dst)`, each edge
+    * pointing from its lower-(degree, id) endpoint — a total order, so
+    * exactly one direction per edge; and `adjOut(src, nbrs)`, the
+    * sorted out-neighbours. canon feeds FOUR consumers (deg's two
+    * union branches, oriented, n_edges) and deg three (both
+    * orientation joins, n_vertices) — each was re-deriving the full
+    * distinct pass per consumer (r21, JobProbe: four identical 11.5 MB
+    * exchange jobs at ~2.3 s cold apiece on q_clustering_coeff).
+    * Eager local checkpoints compute each ONCE; guide §1.2 "don't
+    * compute things twice". The caller releases all four after its
+    * result materializes. */
+  private def stageOriented(edges: DataFrame)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val canon = edges.filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).cast("long").as("lo"),
+        greatest(col("src"), col("dst")).cast("long").as("hi"))
+      .distinct()
+      .localCheckpoint(true)
+    val deg = canon.select(col("lo").as("id"))
+      .union(canon.select(col("hi").as("id")))
+      .groupBy(col("id")).agg(count(lit(1)).as("d"))
+      .localCheckpoint(true)
+    val oriented = canon
+      .join(deg.select(col("id").as("lo"), col("d").as("d_lo")), "lo")
+      .join(deg.select(col("id").as("hi"), col("d").as("d_hi")), "hi")
+      .select(
+        when(col("d_lo") < col("d_hi") ||
+             (col("d_lo") === col("d_hi") && col("lo") < col("hi")),
+          col("lo")).otherwise(col("hi")).as("src"),
+        when(col("d_lo") < col("d_hi") ||
+             (col("d_lo") === col("d_hi") && col("lo") < col("hi")),
+          col("hi")).otherwise(col("lo")).as("dst"))
+      .localCheckpoint(true)
+    val adjOut = oriented.groupBy(col("src"))
+      .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
+      .localCheckpoint(true)
+    (canon, deg, oriented, adjOut)
+  }
+
   /** Exact triangle count by degree-ordered edge orientation (the
     * node-iterator++ / "compact-forward" formulation — Schank &
     * Wagner 2005; the MapReduce shape is Suri & Vassilvitskii 2011).
@@ -151,36 +192,7 @@ object GraphOps {
     * Returns a single row `(n_vertices, n_edges, n_triangles)` —
     * canonical undirected counts. */
   def triangleCount(edges: DataFrame): DataFrame = {
-    // canon feeds FOUR consumers (deg's two union branches, oriented,
-    // n_edges) and deg three (both orientation joins, n_vertices) —
-    // each was re-deriving the full distinct pass per consumer (r21,
-    // JobProbe: four identical 11.5 MB exchange jobs at ~2.3 s cold
-    // apiece on q_clustering_coeff's twin of this shape). Eager local
-    // checkpoints compute each ONCE; guide §1.2 "don't compute things
-    // twice". Released below after the (single-row) result
-    // materializes.
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).cast("long").as("lo"),
-        greatest(col("src"), col("dst")).cast("long").as("hi"))
-      .distinct()
-      .localCheckpoint(true)
-    val deg = canon.select(col("lo").as("id"))
-      .union(canon.select(col("hi").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("d"))
-      .localCheckpoint(true)
-    // orient: src = lower (degree, id) endpoint — a total order, so
-    // exactly one direction per edge
-    val oriented = canon
-      .join(deg.select(col("id").as("lo"), col("d").as("d_lo")), "lo")
-      .join(deg.select(col("id").as("hi"), col("d").as("d_hi")), "hi")
-      .select(
-        when(col("d_lo") < col("d_hi") ||
-             (col("d_lo") === col("d_hi") && col("lo") < col("hi")),
-          col("lo")).otherwise(col("hi")).as("src"),
-        when(col("d_lo") < col("d_hi") ||
-             (col("d_lo") === col("d_hi") && col("lo") < col("hi")),
-          col("hi")).otherwise(col("lo")).as("dst"))
-      .localCheckpoint(true)
+    val (canon, deg, oriented, adjOut) = stageOriented(edges)
     // closure by sorted-adjacency intersection, not a wedge join: a
     // triangle with rank order a < b < c carries oriented edges a→b,
     // a→c, b→c, so it is counted EXACTLY once — at its (a,b) edge,
@@ -191,9 +203,6 @@ object GraphOps {
     // does the same comparisons inside one codegen'd merge scan
     // (measured ~4x less CPU on the dense co-occurrence graph). The
     // left join keeps sink edges (dst with no out-neighbours).
-    val adjOut = oriented.groupBy(col("src"))
-      .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-      .localCheckpoint(true)
     val nTri = oriented
       .join(adjOut.select(col("src"), col("nbrs").as("nu")), "src")
       .join(adjOut.select(col("src").as("dst"), col("nbrs").as("nv")),
@@ -230,35 +239,7 @@ object GraphOps {
     * of two exact integers, so the oracle replays it bit-for-bit.
     * Degree-0/1 vertices have no closable wedge: coeff = 0. */
   def clusteringCoefficients(edges: DataFrame): DataFrame = {
-    // Staged eager checkpoints, same rationale as [[triangleCount]]
-    // (r21, JobProbe-measured on this face: canon re-derived 4×
-    // (~2.3 s cold each), and the whole oriented⋈adjOut intersect
-    // pipeline TWICE — the old `credits` union's two branches each
-    // re-ran it: two near-identical 16-task jobs at 17 s cold apiece,
-    // 263 task-s run / 130 CPU-s / 29 s GC each. Guide §1.2.)
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).cast("long").as("lo"),
-        greatest(col("src"), col("dst")).cast("long").as("hi"))
-      .distinct()
-      .localCheckpoint(true)
-    val deg = canon.select(col("lo").as("id"))
-      .union(canon.select(col("hi").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("d"))
-      .localCheckpoint(true)
-    val oriented = canon
-      .join(deg.select(col("id").as("lo"), col("d").as("d_lo")), "lo")
-      .join(deg.select(col("id").as("hi"), col("d").as("d_hi")), "hi")
-      .select(
-        when(col("d_lo") < col("d_hi") ||
-             (col("d_lo") === col("d_hi") && col("lo") < col("hi")),
-          col("lo")).otherwise(col("hi")).as("src"),
-        when(col("d_lo") < col("d_hi") ||
-             (col("d_lo") === col("d_hi") && col("lo") < col("hi")),
-          col("hi")).otherwise(col("lo")).as("dst"))
-      .localCheckpoint(true)
-    val adjOut = oriented.groupBy(col("src"))
-      .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-      .localCheckpoint(true)
+    val (canon, deg, oriented, adjOut) = stageOriented(edges)
     // triangles at their (u,v) edge; ws = the third corners — the
     // native sorted merge (adjacency arrays come out of sort_array),
     // not array_intersect's per-row hash set (the q_triangle_count

@@ -94,7 +94,7 @@ object Profile {
     * merge by addition across partitions/days/shards. Compare the
     * exact holistic quantile, which must shuffle and sort the full
     * column. Spark's own approx_percentile is the production default
-    * ([[graft.SparkEntry]] q_sketch_stats); THIS shape exists for
+    * ([[graft.faces.RelationalFaces]] q_sketch_stats); THIS shape exists for
     * the cross-engine-reproducible case (an estimate the oracle can
     * replay exactly, e.g. audit pipelines that pin outputs).
     *

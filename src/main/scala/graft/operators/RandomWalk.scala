@@ -60,7 +60,7 @@ object RandomWalk {
     * scaladoc, minus the string. Bounds: every factor is < P ≈ 1e9, so
     * all products stay < ~2e18 < 2⁶³ in BOTH engines — DuckDB replays
     * this in plain BIGINT arithmetic with no string functions at all.
-    * Constants are `private[graft]` so the SparkEntry oracle SQL
+    * Constants are `private[graft]` so the q_random_walks oracle SQL
     * interpolates the same values — one source, no drift. */
   private[graft] val MixA = 1103515245L // classic LCG multiplier, < P
   private[graft] val MixB = 779359397L // large odd salt multiplier, < P

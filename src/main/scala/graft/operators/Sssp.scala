@@ -35,11 +35,8 @@ object Sssp {
 
   /** @param maxIterations hard stop (Bellman-Ford needs ≤ |V|-1 rounds;
     *                      exceeding the cap throws — a partial fixpoint
-    *                      is silently-wrong distances)
-    * @see [[Bfs.Config]] for the shared knobs */
-  final case class Config(
-      maxIterations: Int = 200,
-      broadcastFrontierRows: Long = 4000000L)
+    *                      is silently-wrong distances) */
+  final case class Config(maxIterations: Int = 200)
 
   /** SSSP over a DIRECTED weighted edge table (columns `src`, `dst`,
     * `w`). For an undirected graph pass symmetrized edges with the
@@ -88,10 +85,10 @@ object Sssp {
         s"SSSP did not converge in ${cfg.maxIterations} rounds — raise " +
           "maxIterations (Bellman-Ford needs at most |V|-1)"
 
+      // frontier rows broadcast up to this many, as Bfs.Config's default
+      val bcGate = 4000000L
       bsp.rounds(init, cfg.maxIterations, capError) { (state, _) =>
-        val f0 =
-          if (frontierRows <= cfg.broadcastFrontierRows) broadcast(frontier)
-          else frontier
+        val f0 = if (frontierRows <= bcGate) broadcast(frontier) else frontier
         val candidates = f0.as("f").join(e.as("e"), col("f.id") === col("e.src"))
           .select(col("e.dst").as("id"), (col("f.dist") + col("e.w")).as("dist"),
             lit(false).as("old"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Bounded-run harness that puts the STREAMING faces of the event
   * family under the driver's correctness gate. Each `q_streaming_*`
-  * entry in [[graft.SparkEntry]] reads `events.parquet` through the
+  * face in [[graft.faces.StreamingFaces]] reads `events.parquet` through the
   * real Structured Streaming file source, runs the same operator the
   * production stream would, drains it to completion, and returns the
   * materialized result as a batch frame the DuckDB oracle can check.

@@ -3,23 +3,23 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards the driver contract itself: entry() smoke (rows > 0 at
-  * sf0.001, exactly the driver's t1 check) and queries/oracleSql key
-  * alignment (an oracle key without a query silently records as "no
-  * spark result" in the driver's correctness gate). */
+  * sf0.001, exactly the driver's t1 check) and the frozen face-name set
+  * (a face dropped or renamed by a registry edit, or an oracle key
+  * without a query, would otherwise surface only in the driver's oracle
+  * run). */
 class SparkEntrySpec extends AnyFunSuite with SparkTestBase {
 
-  test("every oracleSql key has a matching queries entry") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracles without queries: $orphans")
-  }
-
-  test("EVERY query is DuckDB-oracle-gated — zero rows-only entries") {
-    // r13: the last two rows-only queries got hash faces — q_pagerank
-    // via the unrolled fixed-point recurrence, q_sketch_stats via its
-    // bound-satisfaction contract. A new query without an oracle is a
-    // regression of the gate, not a documented exception.
-    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(rowsOnly.isEmpty, s"queries without oracles: $rowsOnly")
+  test("queries and oracleSql each hold exactly the frozen face names") {
+    val src = scala.io.Source.fromInputStream(
+      getClass.getResourceAsStream("/face_names.txt"), "UTF-8")
+    val frozen = try src.getLines().map(_.trim).filter(_.nonEmpty).toSet
+      finally src.close()
+    assert(frozen.size == 197)
+    for ((label, keys) <- Seq("queries" -> SparkEntry.queries.keySet,
+                              "oracleSql" -> SparkEntry.oracleSql.keySet))
+      assert(keys == frozen,
+        s"$label: missing ${(frozen -- keys).toSeq.sorted}, " +
+          s"unexpected ${(keys -- frozen).toSeq.sorted}")
   }
 
   test("entry() returns rows on sf0.001 (driver t1 smoke)") {
